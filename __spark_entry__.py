@@ -30,7 +30,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # Keep that window ADVERSARIAL, not friendly (VERDICT r2 Next-round #2).
 # r14 structure (ADVICE r13 #1 — the old in-comment "budget line" marker was
 # off by one): the window is now its OWN list, so the 50-row budget is a
-# code-level invariant asserted by tests/test_entry_window.py, not a comment.
+# code-level invariant asserted by tests/test_window_ledger.py, not a comment.
 #
 # r14 rotation (VERDICT r13 Next-round #8, mechanically stalest-first):
 # the 5 queries whose physical plan CHANGED this round lead (plan_ledger

@@ -168,12 +168,12 @@ def main() -> None:
     # recurring-workload latency. JVM and OS page cache are warm in both
     # (JVM startup is not the number of interest). Runs BEFORE any table
     # caching so it cannot borrow the steady-state pass's warm state.
-    from duckdb_ner_spark.plans.registry import clear_plan_cache
+    from duckdb_ner_spark.plans import cachereg
 
     cold_spark = spark.newSession()
     for k, v in COLD_CONF.items():
         cold_spark.conf.set(k, v)
-    clear_plan_cache()
+    cachereg.clear()
     cold_warmup(cold_spark)
     # r14: the cold timed action is the noop sink too — a count()-timed cold
     # cell measured a PRUNED first run (q_ner_bert's cold cell read ~0.24 s
@@ -189,7 +189,7 @@ def main() -> None:
     # drop anything the cold pass cached/persisted so the steady-state pass
     # starts from its own documented warm protocol only
     spark.catalog.clearCache()
-    clear_plan_cache()
+    cachereg.clear()
 
     # warm engine state outside the timed region: JVM, parquet footers, and
     # the table cache (the analogue of DuckDB's buffer pool being warm)

@@ -127,9 +127,8 @@ class NerEngine:
     def settings(self):
         """Introspection analogue of DuckDB's duckdb_settings()
         (/root/reference/test/sql/ner.test:15-18)."""
-        from .session import CONF_BATCH_TOKENS
-
-        rows = []
-        for key in (CONF_MODEL_PATH, CONF_TRUNCATE, CONF_BATCH_TOKENS):
-            rows.append((key, self.spark.conf.get(key, None)))
+        rows = [
+            (key, self.spark.conf.get(key, None))
+            for key in (CONF_MODEL_PATH, CONF_TRUNCATE)
+        ]
         return self.spark.createDataFrame(rows, ["name", "value"])

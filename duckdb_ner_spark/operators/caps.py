@@ -6,7 +6,7 @@ dedup.py, multimodal.py, and similarity.py can all import it without cycles
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Salt fan-out for the two-level min-k cap below. 64 salts bound the largest
@@ -21,7 +21,7 @@ def capped_bucket_id_arrays(
     id_col: str,
     cap: int,
     keys: tuple[str, ...] = ("band", "sig"),
-    salt_on=None,
+    salt_on: Column | None = None,
 ) -> DataFrame:
     """Each (band, sig) bucket's `cap` smallest ids as ONE sorted-ascending
     array column ``__ids__`` — BOUNDED-STATE (VERDICT r6 #2, replacing the

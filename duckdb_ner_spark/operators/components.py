@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.cachereg import memoized
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
 from .textprep import sql_shingles
@@ -292,26 +293,17 @@ _TRIANGLES_ORACLE = """
 """
 
 
-# (sf_dir, scanRepartition) -> (session, edges, deg): q_triangles and
-# q_degree_dist audit the SAME first-day co-occurrence graph; building it
-# twice doubled q_degree_dist's exchange count (16 in the r5 plan audit —
-# the heaviest plan in docs/PLANS.md). Both now read one persisted copy.
-# Session compared by identity (the _PLAN_CACHE convention) so a restarted
-# session never serves stale handles; correctness never depends on the
-# persistence — an unpersisted hit just recomputes lineage.
-_GRAPH_CACHE: dict[tuple[str, str], tuple[object, DataFrame, DataFrame]] = {}
-
-
+# q_triangles and q_degree_dist audit the SAME first-day co-occurrence
+# graph; building it twice doubled q_degree_dist's exchange count (16 in the
+# r5 plan audit — the heaviest plan in docs/PLANS.md). Both now read one
+# persisted copy; correctness never depends on the persistence — an
+# unpersisted hit just recomputes lineage.
+@memoized
 def day1_cooccurrence_graph(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(edges, deg) of the first-day user co-occurrence graph (users active
     in the same hour are connected; u < v, deduped), persisted and memoized
     per (session, sf_dir). One co-occurrence dedup shuffle + one self-join +
     one degree aggregate, paid ONCE for the whole graph-audit family."""
-    scan = spark.conf.get("spark.duckdb_ner.scanRepartition", "0")
-    key = (sf_dir, scan)
-    hit = _GRAPH_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
     t = load_tables(spark, sf_dir)
     co = (
         t.events.filter(F.col("ts") < F.expr("TIMESTAMP '2024-01-02 00:00:00'"))
@@ -335,15 +327,12 @@ def day1_cooccurrence_graph(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         .agg(F.count("*").cast("bigint").alias("deg"))
         .persist()
     )
-    _GRAPH_CACHE[key] = (spark, edges, deg)
     return edges, deg
 
 
-# (sf_dir, scanRepartition) -> (session, dirn): the src-partitioned
-# both-direction edge list shared by the iteration families (r8 perf pass).
-_DIRN_CACHE: dict[tuple[str, str], tuple[object, DataFrame]] = {}
-
-
+# The src-partitioned both-direction edge list shared by the iteration
+# families (r8 perf pass).
+@memoized
 def day1_directed_edges(spark, sf_dir: str) -> DataFrame:
     """Both-direction ``(src, dst)`` view of the day-1 graph, hash-
     partitioned by src ONCE and persisted. Every iterative graph query
@@ -354,22 +343,15 @@ def day1_directed_edges(spark, sf_dir: str) -> DataFrame:
     Partition count follows spark.sql.shuffle.partitions (cluster-sized at
     the 100 TB design point, where this is exactly the classic
     partitioned-adjacency layout every Pregel system keeps resident).
-    Memoized per (session, sf_dir); released by cachereg.release_caches."""
-    scan = spark.conf.get("spark.duckdb_ner.scanRepartition", "0")
-    key = (sf_dir, scan)
-    hit = _DIRN_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    Memoized per (session, sf_dir)."""
     edges, _ = day1_cooccurrence_graph(spark, sf_dir)
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    dirn = (
+    return (
         edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         .repartition(nparts, "src")
         .persist()
     )
-    _DIRN_CACHE[key] = (spark, dirn)
-    return dirn
 
 
 @declared("q_triangles", oracle=_TRIANGLES_ORACLE)

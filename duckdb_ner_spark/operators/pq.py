@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.cachereg import memoized
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
 
@@ -642,22 +643,13 @@ _IVFPQ_ORACLE = f"""
 
 
 # One core per (session, sf_dir): both q_ivf_pq and q_nprobe_sweep score
-# over the identical trained index; cleared by cachereg.release_caches.
-_IVFPQ_CORE_CACHE: dict = {}
-
-
+# over the identical trained index.
+@memoized
 def _ivfpq_scores(spark: SparkSession, sf_dir: str):
     """Build (d_res, dqc, top_true) for the IVF-PQ family: trained cells,
     residual codes, per-(query, cell) residual-ADC scores carrying the
     cell, exact query->centroid routing distances, and the exact top-k
     ground truth. See q_ivf_pq's docstring for the scale story."""
-    key = (id(spark), sf_dir)
-    hit = _IVFPQ_CORE_CACHE.get(key)
-    # id() can be reused after GC and a stopped session keeps its id: only
-    # serve a hit whose stored session IS this live object (the _PLAN_CACHE
-    # idiom), else the cached frames may bind a dead SparkContext.
-    if hit is not None and hit[0] is spark:
-        return hit[1]
     t = load_tables(spark, sf_dir)
     emb = t.embeddings
     n = emb.count()
@@ -766,9 +758,7 @@ def _ivfpq_scores(spark: SparkSession, sf_dir: str):
     d_res.unpersist()
     rex.unpersist()
     ex.unpersist()
-    out = tuple(staged)
-    _IVFPQ_CORE_CACHE[key] = (spark, out)
-    return out
+    return tuple(staged)
 
 
 @declared("q_ivf_pq", oracle=_IVFPQ_ORACLE)

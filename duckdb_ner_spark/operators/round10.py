@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.cachereg import memo, memoized
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
 
@@ -368,24 +369,16 @@ def q_substring_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # once and BOTH registry consumers (q_substring_dedup's rollup report,
 # q_substring_scrub's apply) read the staged parquet — exactly the Lee et
 # al. production pipeline shape (inventory job -> apply job). BIGINT
-# columns round-trip bit-exact. Cleared by cachereg.release_caches.
-_SSD_SPANS_CACHE: dict = {}
-
-
+# columns round-trip bit-exact.
+@memoized
 def staged_excise_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    hit = _SSD_SPANS_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
     from .layout_queries import _scratch
 
     t = load_tables(spark, sf_dir)
     spans = substring_excise_spans(t.documents, SSD_K)
     path = _scratch("ssd_spans", sf_dir)
     spans.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-    _SSD_SPANS_CACHE[key] = (spark, out)
-    return out
+    return spark.read.parquet(path)
 
 
 _SUBSTRING_SCRUB_ORACLE = f"""
@@ -706,20 +699,16 @@ def _suffix_rounds_frames(
 # One staged rank chain per (session, sf_dir), extended lazily to the
 # deepest round any family member asks for: q_suffix_rank reads rounds
 # 0-4 (depths 1..16), q_suffix_spans additionally round 5 (depth 32).
-# Cleared by cachereg.release_caches; scratch dirs (sufr_p*) are removed
-# at interpreter exit by layout_queries._cleanup_scratch.
-_SUFR_ROUNDS_CACHE: dict = {}
-
-
+# The memo holds the chain as one list that a deeper request extends in
+# place; scratch dirs (sufr_p*) are removed at interpreter exit by
+# layout_queries._cleanup_scratch.
 def staged_suffix_rounds(
     spark: SparkSession, sf_dir: str, n_rounds: int
 ) -> list:
     from .layout_queries import _scratch
 
-    key = (id(spark), sf_dir)
-    ent = _SUFR_ROUNDS_CACHE.get(key)
-    have = ent[1] if ent is not None and ent[0] is spark else None
-    if have is not None and len(have) > n_rounds:
+    have = memo(spark, sf_dir, staged_suffix_rounds, list)
+    if len(have) > n_rounds:
         return have[: n_rounds + 1]
 
     def stage(i: int, df: DataFrame) -> DataFrame:
@@ -728,11 +717,10 @@ def staged_suffix_rounds(
         return spark.read.parquet(p)
 
     t = load_tables(spark, sf_dir)
-    rounds = _suffix_rounds_frames(
-        t.documents, n_rounds, stage=stage, rounds=have
+    have[:] = _suffix_rounds_frames(
+        t.documents, n_rounds, stage=stage, rounds=have or None
     )
-    _SUFR_ROUNDS_CACHE[key] = (spark, rounds)
-    return rounds[: n_rounds + 1]
+    return have[: n_rounds + 1]
 
 
 def _doubling_ctes(n_rounds: int) -> str:
@@ -1410,22 +1398,14 @@ def suffix_adjacent_lcps(
 # once and every aggregate branch of q_suffix_lcp reads the staged
 # parquet — without this the lifting lineage is COPIED into each of the
 # five consumer branches (measured 156 broadcast nodes in the un-staged
-# plan tree). Cleared by cachereg.release_caches.
-_SUFLCP_CACHE: dict = {}
-
-
+# plan tree).
+@memoized
 def staged_adjacent_lcps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    hit = _SUFLCP_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
     from .layout_queries import _scratch
 
     path = _scratch("suflcp_lcps", sf_dir)
     suffix_adjacent_lcps(spark, sf_dir).write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-    _SUFLCP_CACHE[key] = (spark, out)
-    return out
+    return spark.read.parquet(path)
 
 
 @declared("q_suffix_lcp", oracle=_suffix_lcp_oracle())

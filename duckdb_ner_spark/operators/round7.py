@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.cachereg import memoized
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
 from .components import (
@@ -442,28 +443,17 @@ def label_prop_labels(
     return lab
 
 
-# (sf_dir, scanRepartition) -> (session, lab): q_label_prop and
-# q_modularity consume the SAME propagated (node, lbl) table; sharing one
-# persisted copy runs the LP_ITERS propagation rounds once per session
-# instead of once per query (VERDICT r7 Next-round #6 — "share the
-# propagation core at runtime, not just in code"). Released by
-# cachereg.release_caches; correctness never depends on the memo (a cold
-# miss just recomputes).
-_LP_CACHE: dict[tuple[str, str], tuple[object, DataFrame]] = {}
-
-
+# q_label_prop and q_modularity consume the SAME propagated (node, lbl)
+# table; sharing one persisted copy runs the LP_ITERS propagation rounds
+# once per session instead of once per query (VERDICT r7 Next-round #6 —
+# "share the propagation core at runtime, not just in code"); correctness
+# never depends on the memo (a cold miss just recomputes).
+@memoized
 def day1_propagated_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scan = spark.conf.get("spark.duckdb_ner.scanRepartition", "0")
-    key = (sf_dir, scan)
-    hit = _LP_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
     edges, deg = day1_cooccurrence_graph(spark, sf_dir)
-    lab = label_prop_labels(
+    return label_prop_labels(
         edges, deg, dirn=day1_directed_edges(spark, sf_dir)
     ).persist()
-    _LP_CACHE[key] = (spark, lab)
-    return lab
 
 
 _LABEL_PROP_ORACLE = f"""

@@ -6,19 +6,18 @@ string (``ORACLES[name]``). The driver hash-compares the two at sf0.01
 (SURVEY.md §5.2). Column names/aliases MUST match pairwise — the comparison
 sorts columns by name before hashing.
 
-Plan cache: re-invoking a declared query with the same (session, sf_dir)
-returns the previously constructed DataFrame — the Spark analogue of a
-prepared statement. Building a DataFrame costs Py4J round trips plus
-analyzer work on the driver (measured 40-250 ms per headline query,
-tools/bench_profile.py); the logical plan it yields is deterministic given
-the session and data directory, so re-paying that per invocation is pure
-overhead — on a 1000-executor cluster exactly as on local[32], since plan
-construction is driver-only and data-size-independent. Execution is NOT
-cached: each action on the returned DataFrame re-optimizes (AQE re-plans)
-and re-runs against current data. Queries whose build captures mutable
-engine state (the NER family snapshots the model path into the UDF at build,
-matching the reference's SET semantics) or whose builder performs staging
-side effects that must re-run opt out with ``cache_plan=False``.
+Plan reuse: re-invoking a declared query returns the previously built
+DataFrame — the Spark analogue of a prepared statement — through the one
+session memo (plans/cachereg.py), which serves it only while the session,
+sf_dir, scan conf and data-file stamp all match. Building a DataFrame costs
+Py4J round trips plus analyzer work on the driver (measured 40-250 ms per
+headline query, tools/bench_profile.py) and is driver-only and
+data-size-independent, so re-paying it per invocation is pure overhead.
+Execution is NOT reused: each action on the returned DataFrame
+re-optimizes (AQE re-plans) and re-runs. Queries whose build captures
+mutable engine state (the NER family snapshots the model path into the UDF
+at build, matching the reference's SET semantics) or whose builder performs
+staging side effects that must re-run opt out with ``cache_plan=False``.
 """
 
 from __future__ import annotations
@@ -27,22 +26,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .cachereg import memoized
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-
-# (name, sf_dir, scan-conf) -> (session, DataFrame); session compared by
-# identity so a restarted/replaced SparkSession never serves another
-# session's plan. The scanRepartition conf is part of the key because it is
-# the one session conf that changes the SHAPE of a built plan (catalog-level
-# repartition) rather than how it executes — mirroring _DF_CACHE's key in
-# sources/catalog.py.
-_PLAN_CACHE: dict[tuple[str, str, str], tuple[SparkSession, DataFrame]] = {}
-
-
-def clear_plan_cache() -> None:
-    _PLAN_CACHE.clear()
 
 
 def assert_hashable_schema(df: DataFrame, name: str) -> None:
@@ -81,24 +70,7 @@ def declared(
         if name in QUERIES:
             raise ValueError(f"duplicate declared query {name!r}")
 
-        if cache_plan:
-
-            def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-                scan = spark.conf.get("spark.duckdb_ner.scanRepartition", "0")
-                key = (name, sf_dir, scan)
-                hit = _PLAN_CACHE.get(key)
-                if hit is not None and hit[0] is spark:
-                    return hit[1]
-                df = fn(spark, sf_dir)
-                _PLAN_CACHE[key] = (spark, df)
-                return df
-
-            cached.__name__ = fn.__name__
-            cached.__doc__ = fn.__doc__
-            cached.__wrapped__ = fn  # type: ignore[attr-defined]
-            QUERIES[name] = cached
-        else:
-            QUERIES[name] = fn
+        QUERIES[name] = memoized(fn) if cache_plan else fn
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

@@ -25,7 +25,6 @@ from pyspark.sql import SparkSession
 # /root/reference/src/ner_extension.cpp:215-217).
 CONF_MODEL_PATH = "spark.ner.modelPath"
 CONF_TRUNCATE = "spark.ner.truncate"
-CONF_BATCH_TOKENS = "spark.ner.maxBatchTokens"
 
 
 def default_parallelism() -> int:

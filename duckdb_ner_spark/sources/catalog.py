@@ -19,6 +19,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.cachereg import SCAN_CONF, memo
+
 # table name -> key the 100 TB layout would bucket/partition by
 TABLES: dict[str, str | None] = {
     "region": None,  # 5 rows: always broadcast
@@ -46,15 +48,6 @@ TABLES: dict[str, str | None] = {
 # dimension is pure waste. Explicit scanRepartition=N>0 still applies to
 # every keyed table (the steady-state bench path).
 _FLOOR_TABLES = {"documents", "embeddings"}
-
-
-# (session, sf_dir, table, repartition) → resolved DataFrame. A DataFrame is
-# an immutable logical plan, so reuse across queries is safe; memoizing skips
-# the parquet footer read + schema resolution that `spark.read.parquet` pays
-# on every call (~50-150 ms of driver time per table per query — 35% of the
-# local bench total was this plan-construction tax). Keyed on the session
-# object so a stopped/replaced session never serves stale plans.
-_DF_CACHE: dict[tuple, DataFrame] = {}
 
 
 # (path, mtime, size) → StructType. Metastore-style schema cache: a real
@@ -118,16 +111,13 @@ class Catalog:
     def table(self, name: str) -> DataFrame:
         if name not in TABLES:
             raise KeyError(f"unknown table {name!r}; catalog has {sorted(TABLES)}")
-        n_split = int(self.spark.conf.get("spark.duckdb_ner.scanRepartition", "0"))
-        key = (self.spark, self.sf_dir, name, n_split)
-        cached = _DF_CACHE.get(key)
-        if cached is not None:
-            return cached
-        df = self._build(name, n_split)
-        _DF_CACHE[key] = df
-        return df
+        # Memoized: reuse skips the parquet footer read + schema resolution
+        # that `spark.read.parquet` pays on every call (~50-150 ms of driver
+        # time per table per query).
+        return memo(self.spark, self.sf_dir, ("table", name), lambda: self._build(name))
 
-    def _build(self, name: str, n_split: int) -> DataFrame:
+    def _build(self, name: str) -> DataFrame:
+        n_split = int(self.spark.conf.get(SCAN_CONF, "0"))
         if name == "events":
             # events.parquet stores ts as INT64 TIMESTAMP(NANOS), which Spark's
             # parquet reader rejects (PARQUET_TYPE_ILLEGAL) unless nanos are

@@ -6,7 +6,7 @@ import os
 import pytest
 from pyspark.sql.utils import AnalysisException
 
-from duckdb_ner_spark.session import CONF_MODEL_PATH
+from duckdb_ner_spark.session import CONF_MODEL_PATH, CONF_TRUNCATE
 
 STUB = os.path.join(os.path.dirname(__file__), "fixtures", "stub_model.json")
 
@@ -62,9 +62,10 @@ def test_case6_bad_model_path_silent_fallback(engine):
 
 def test_case7_settings_introspection(engine):
     """ner.test:15-18, 42-45 — settings view shows NULL before SET, the
-    path string after."""
+    path string after. Exactly the reference's two settings are listed."""
     engine.set_model_path(None)
     vals = dict(engine.settings().collect())
+    assert sorted(vals) == sorted([CONF_MODEL_PATH, CONF_TRUNCATE])
     assert vals[CONF_MODEL_PATH] is None
     engine.set_model_path("/tmp/non_existent_model.bin")
     vals = dict(engine.settings().collect())

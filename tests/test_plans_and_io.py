@@ -5,6 +5,7 @@ pruning, broadcasts — a plan regression fails here even while results stay
 correct."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from tests.conftest import SF_SMOKE
 
@@ -37,7 +38,7 @@ def test_flagship_plan_is_single_shuffle(spark):
     retired _agg2's second exchange). Wholestage codegen on."""
     import __spark_entry__ as e
     from duckdb_ner_spark.plans.inspect import plan_report
-    from duckdb_ner_spark.plans.registry import clear_plan_cache
+    from duckdb_ner_spark.plans import cachereg
 
     # plan-SHAPE assertions need a freshly constructed plan: on an already-
     # executed cached DataFrame the AQE-final formatted plan lists each
@@ -48,7 +49,7 @@ def test_flagship_plan_is_single_shuffle(spark):
     # default auto floor adds one round-robin exchange below the partial agg).
     spark.conf.set("spark.duckdb_ner.scanRepartition", "-1")
     try:
-        clear_plan_cache()
+        cachereg.clear()
         df = e.queries()["q_agg_group"](spark, SF_SMOKE)
         rep = plan_report(df)
         assert rep.n_exchanges == 1, rep.summary()
@@ -68,9 +69,9 @@ def test_flagship_plan_is_single_shuffle(spark):
 def test_topk_uses_take_ordered(spark):
     import __spark_entry__ as e
     from duckdb_ner_spark.plans.inspect import formatted_plan
-    from duckdb_ner_spark.plans.registry import clear_plan_cache
+    from duckdb_ner_spark.plans import cachereg
 
-    clear_plan_cache()  # fresh plan (see test_flagship_plan_is_single_shuffle)
+    cachereg.clear()  # fresh plan (see test_flagship_plan_is_single_shuffle)
     df = e.queries()["q_topk"](spark, SF_SMOKE)
     assert "TakeOrderedAndProject" in formatted_plan(df)
 
@@ -89,9 +90,9 @@ def test_bounded_windows_in_fixed_plans(spark):
       window only over per-chunk totals."""
     import __spark_entry__ as e
     from duckdb_ner_spark.plans.inspect import formatted_plan
-    from duckdb_ner_spark.plans.registry import clear_plan_cache
+    from duckdb_ner_spark.plans import cachereg
 
-    clear_plan_cache()
+    cachereg.clear()
     q = e.queries()
 
     fp = formatted_plan(q["q_skew_audit"](spark, SF_SMOKE))
@@ -234,7 +235,7 @@ def test_global_window_ledger(spark):
     hiding in tolerated log noise."""
     import __spark_entry__ as e
     from duckdb_ner_spark.plans.inspect import global_windows
-    from duckdb_ner_spark.plans.registry import clear_plan_cache
+    from duckdb_ner_spark.plans import cachereg
 
     # query -> (count, the bounded input each global window runs over)
     LEDGER = {
@@ -271,7 +272,7 @@ def test_global_window_ledger(spark):
         # frame.
     }
 
-    clear_plan_cache()
+    cachereg.clear()
     qs = e.queries()
     actual = {}
     for name in sorted(qs):
@@ -298,9 +299,9 @@ def test_subquery_reattach_join_broadcasts(spark):
     of the big probe side) may remain anywhere in q_subquery's plan."""
     import __spark_entry__ as e
     from duckdb_ner_spark.plans.inspect import formatted_plan
-    from duckdb_ner_spark.plans.registry import clear_plan_cache
+    from duckdb_ner_spark.plans import cachereg
 
-    clear_plan_cache()  # fresh plan (see test_flagship_plan_is_single_shuffle)
+    cachereg.clear()  # fresh plan (see test_flagship_plan_is_single_shuffle)
     plan = formatted_plan(e.queries()["q_subquery"](spark, SF_SMOKE))
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
@@ -314,29 +315,126 @@ def test_record_linkage_plan_has_no_joins(spark):
     two aggregation exchanges (cluster-scale shape, scanRepartition=-1)."""
     import __spark_entry__ as e
     from duckdb_ner_spark.plans.inspect import formatted_plan, plan_report
-    from duckdb_ner_spark.plans.registry import clear_plan_cache
+    from duckdb_ner_spark.plans import cachereg
 
     spark.conf.set("spark.duckdb_ner.scanRepartition", "-1")
     try:
-        clear_plan_cache()
+        cachereg.clear()
         df = e.queries()["q_record_linkage"](spark, SF_SMOKE)
         plan = formatted_plan(df)
         assert "Join" not in plan, plan[:2000]
         assert plan_report(df).n_exchanges == 2
     finally:
         spark.conf.set("spark.duckdb_ner.scanRepartition", "0")
-        clear_plan_cache()
+        cachereg.clear()
 
 
-def test_label_prop_one_exchange_per_round(spark):
+def test_label_prop_one_exchange_per_round(spark, monkeypatch):
     """r14: the pivoted vote argmax aggregates ONCE per propagation round
     (a count column per label + greatest/CASE argmax) — the retired
     (node,lbl)-keyed count + (node)-keyed max_by pair cost two. max_by must
-    not reappear anywhere in the optimized propagation plan."""
-    from duckdb_ner_spark.operators.components import day1_cooccurrence_graph
-    from duckdb_ner_spark.operators.round7 import label_prop_labels
+    not reappear anywhere in the optimized propagation plan, and each extra
+    round adds exactly one exchange. The count depends on cache state, so
+    the test starts from none and materializes the shared inputs: only then
+    does the planner see their partitioning (before, each round also
+    re-shuffles both sides of its edge join), and no earlier query's
+    persisted labels can stand in for a propagation subplan."""
+    from duckdb_ner_spark.operators import round7
+    from duckdb_ner_spark.operators.components import (
+        day1_cooccurrence_graph,
+        day1_directed_edges,
+    )
+    from duckdb_ner_spark.plans.cachereg import release_caches
+    from duckdb_ner_spark.plans.inspect import plan_report
 
+    release_caches(spark)
     edges, deg = day1_cooccurrence_graph(spark, SF_SMOKE)
-    lab = label_prop_labels(edges, deg)
-    plan = lab._jdf.queryExecution().optimizedPlan().toString()
-    assert "max_by" not in plan.lower()
+    dirn = day1_directed_edges(spark, SF_SMOKE)
+    for df in (edges, deg, dirn):
+        df.count()
+    n_exchanges = []
+    for iters in (1, 2, 3):
+        monkeypatch.setattr(round7, "LP_ITERS", iters)
+        lab = round7.label_prop_labels(edges, deg, dirn)
+        n_exchanges.append(plan_report(lab).n_exchanges)
+        plan = lab._jdf.queryExecution().optimizedPlan().toString()
+        assert "max_by" not in plan.lower()
+    assert [n - n_exchanges[0] for n in n_exchanges] == [0, 1, 2], n_exchanges
+
+
+def _memo_builders():
+    from duckdb_ner_spark.operators.components import day1_cooccurrence_graph
+    from duckdb_ner_spark.plans.registry import QUERIES
+    from duckdb_ner_spark.sources.catalog import load_tables
+
+    return {
+        "q_agg_group": QUERIES["q_agg_group"],
+        "lineitem": lambda s, sf: load_tables(s, sf).table("lineitem"),
+        "day1_graph": day1_cooccurrence_graph,
+    }
+
+
+@pytest.mark.parametrize(
+    "case", ["repeat", "new_session", "scan_conf", "extend_chain", "replaced_file"]
+)
+def test_session_memo_contract(spark, tmp_path, case):
+    """The session memo (plans/cachereg.py) serves the identical object only
+    while session, sf_dir, scan conf and data-file stamp all match. The
+    staged suffix-rank chain extends in place: a deeper request stages only
+    the missing rounds. A data file replaced in place must never be served
+    through a plan, or cached blocks, built over its old contents."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf, copy_function=shutil.copyfile)
+    builders = _memo_builders()
+
+    if case == "repeat":
+        for name, build in builders.items():
+            assert build(spark, sf) is build(spark, sf), name
+    elif case == "new_session":
+        other = spark.newSession()
+        for name, build in builders.items():
+            assert build(other, sf) is not build(spark, sf), name
+    elif case == "scan_conf":
+        first = {name: build(spark, sf) for name, build in builders.items()}
+        spark.conf.set("spark.duckdb_ner.scanRepartition", "3")
+        try:
+            for name, build in builders.items():
+                assert build(spark, sf) is not first[name], name
+        finally:
+            spark.conf.set("spark.duckdb_ner.scanRepartition", "0")
+    elif case == "extend_chain":
+        from duckdb_ner_spark.operators.round10 import staged_suffix_rounds
+
+        short = staged_suffix_rounds(spark, sf, 1)
+        deeper = staged_suffix_rounds(spark, sf, 2)
+        assert len(short) == 2 and len(deeper) == 3
+        assert all(a is b for a, b in zip(short, deeper))
+    else:
+        q1, lineitem = builders["q_agg_group"], builders["lineitem"]
+
+        def by_group(rows):
+            return {(r.l_returnflag, r.l_linestatus): (r.sum_qty, r.count_order)
+                    for r in rows}
+
+        old = by_group(q1(spark, sf).collect())
+        assert lineitem(spark, sf).cache().count() == 6000
+        path = f"{sf}/lineitem.parquet"
+        half = pq.read_table(path).slice(0, 3000)
+        pq.write_table(half, path)
+
+        try:
+            assert lineitem(spark, sf).count() == 3000
+        finally:
+            lineitem(spark, sf).unpersist()
+        pdf = half.to_pandas()
+        pdf = pdf[pdf.l_shipdate <= "1998-09-02"]
+        want = {
+            k: (float(g.l_quantity.sum()), len(g))
+            for k, g in pdf.groupby(["l_returnflag", "l_linestatus"])
+        }
+        got = by_group(q1(spark, sf).collect())
+        assert got == want != old

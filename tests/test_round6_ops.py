@@ -389,9 +389,9 @@ def test_round6_plans_have_no_allpairs_join(spark):
     unbounded sides)."""
     import __spark_entry__ as e
     from duckdb_ner_spark.plans.inspect import formatted_plan
-    from duckdb_ner_spark.plans.registry import clear_plan_cache
+    from duckdb_ner_spark.plans import cachereg
 
-    clear_plan_cache()
+    cachereg.clear()
     q = e.queries()
     for name in ("q_image_dedup", "q_sim_ann", "q_join_interval"):
         fp = formatted_plan(q[name](spark, SF_SMOKE))

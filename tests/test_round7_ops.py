@@ -199,7 +199,7 @@ def test_release_caches_leaves_zero_persistent_rdds(spark):
     # q_substring_scrub: the staged-scratch idiom (r10) — release must
     # also drop the Python-side staged-frame memo, and a re-run restages.
     # q_suffix_rank: the staged suffix-rank chain (r11, sufr_p* scratch +
-    # _SUFR_ROUNDS_CACHE) — release drops the chain memo, a re-run
+    # its chain memo) — release drops the chain memo, a re-run
     # restages all rounds into the same per-pid dirs (atexit-cleaned).
     for q in (
         "q_dedup_near",

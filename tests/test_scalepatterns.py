@@ -63,11 +63,11 @@ def test_skew_salted_two_level_plan_and_parity(spark):
     # cluster-scale plan shape: untouched scan (the default parallelism floor
     # adds one round-robin exchange on these one-split testdata files; at
     # 100 TB it is a no-op — see test_flagship_plan_is_single_shuffle)
-    from duckdb_ner_spark.plans.registry import clear_plan_cache
+    from duckdb_ner_spark.plans import cachereg
 
     spark.conf.set("spark.duckdb_ner.scanRepartition", "-1")
     try:
-        clear_plan_cache()
+        cachereg.clear()
         df = q_skew_salted(spark, SF_SMOKE)
         assert plan_report(df).n_exchanges == 2
     finally:

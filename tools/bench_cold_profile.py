@@ -38,7 +38,7 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from bench import COLD_CONF, HEADLINE, cold_warmup
-    from duckdb_ner_spark.plans.registry import clear_plan_cache
+    from duckdb_ner_spark.plans import cachereg
     from duckdb_ner_spark.session import get_spark
 
     spark = get_spark("bench-cold-profile")
@@ -46,7 +46,7 @@ def main() -> None:
     # identical protocol to bench.py's cold pass: engine defaults + warmup
     for k, v in {**COLD_CONF, **extra}.items():
         cold.conf.set(k, v)
-    clear_plan_cache()
+    cachereg.clear()
     cold_warmup(cold)
 
     qs = entrymod.queries()
