@@ -64,62 +64,9 @@ _DRIVER_WINDOW_50 = [
     "q_grouped_agg_udaf",
 ]
 
-# Below the driver window: prior-round orderings retained (position here has
-# no driver effect — queries() appends every remaining declared query in
-# registration order anyway).
-_DRIVER_WINDOW_TAIL = [
-    "q_maxsim_rerank", "q_langid", "q_quality_score", "q_maxsim_sweep",
-    "q_ndcg_eval", "q_stream_langid", "q_topk_bounds", "q_gopher_repetition",
-    "q_batch_padding", "q_bloom_dedup", "q_rand_response", "q_maxsim_topk",
-    "q_agg_group", "q_join_range", "q_containment", "q_image_dedup",
-    "q_jaccard_est", "q_lsh_recall_audit", "q_lsh_sweep", "q_sim_ann",
-    "q_simhash_sweep", "q_basket_affinity", "q_having", "q_hist_quantile",
-    "q_image_stats", "q_join_cardinality", "q_join_inner", "q_join_interval",
-    "q_join_multi", "q_join_outer", "q_join_semi_anti", "q_kmv_distinct",
-    "q_multimodal", "q_outlier_mad", "q_rollup", "q_shard_shuffle",
-    "q_sim_topk", "q_source_binary", "q_stream_image", "q_window_frame",
-    "q_zipf_slope", "q_apportion", "q_assortativity", "q_auc", "q_benford",
-    "q_bpe_merges", "q_dedup_embed", "q_dedup_near", "q_chi2_independence",
-    "q_fold_split", "q_zorder_prune", "q_rank_eval", "q_rfm_features",
-    "q_cc_incr", "q_stream_bloom", "q_quant_sweep", "q_index_delta",
-    "q_binary_ann", "q_wsample_priority", "q_vocab_diff", "q_quality_gate",
-    "q_rolling_7d", "q_rrf_fusion", "q_seasonal_profile", "q_skew_audit",
-    "q_source_overlap", "q_source_stream", "q_stream_cdc", "q_topk_salted",
-    "q_transitions", "q_velocity_anomaly", "q_vocab_coverage",
-    "q_watermark_sizing", "q_winsorize", "q_agg_filter", "q_agg_global",
-    "q_asof", "q_bloom_prune", "q_cross", "q_cte", "q_dedup_clusters",
-    "q_dedup_exact", "q_dedup_incr", "q_dedup_ngram", "q_dedup_simhash",
-    "q_degree_dist", "q_distinct", "q_embed_cov", "q_embed_join",
-    "q_embed_quant", "q_url_dedup", "q_quantile_sketch", "q_ivf_incr",
-    "q_binary_sweep", "q_max_concurrency", "q_corpus_diff", "q_suffix_spans",
-    "q_substring_packed", "q_substring_incr", "q_suffix_lcp",
-    "q_stream_substring_incr", "q_suffix_rank", "q_substring_dedup",
-    "q_substring_sparse", "q_substring_scrub", "q_activity_gaps",
-    "q_ann_recall", "q_audio_energy", "q_autocorr", "q_bigram_surprisal",
-    "q_bm25", "q_canon_dedup_gain", "q_cdc_chunk", "q_cluster_sizes",
-    "q_column_profile", "q_compaction_plan", "q_decay_sum", "q_dedup_yield",
-    "q_embed_dims", "q_entropy", "q_erasure", "q_first_touch",
-    "q_funnel_timing", "q_heaps_law", "q_histogram2d", "q_kmv_join_est",
-    "q_kmv_merge", "q_lang_confusion", "q_leakage", "q_mixture_diversity",
-    "q_ner_default_empty", "q_normalize_audit", "q_out_of_order",
-    "q_pack_efficiency", "q_phrase_search", "q_memorization", "q_pagerank",
-    "q_textrank", "q_triangles", "q_ivf_pq", "q_nprobe_sweep", "q_fuzzy",
-    "q_grouping_sets", "q_higher_order", "q_histogram", "q_incr_agg",
-    "q_lateral", "q_len_quantile", "q_line_dedup", "q_mix_sample",
-    "q_nullsafe", "q_pack", "q_part_margin", "q_percentile", "q_pii_scrub",
-    "q_pmi", "q_recursive", "q_regex", "q_sessionize", "q_setops_all",
-    "q_split", "q_stats", "q_stats2", "q_string2", "q_supplier_balance",
-    "q_supplier_rev", "q_surprisal", "q_temperature_mix",
-    "q_template_spectrum", "q_time_bucket", "q_token_budget",
-    "q_trycast_format", "q_values", "q_window_dist", "q_window_range",
-    "q_ab_test",
-]
-
-_DRIVER_WINDOW_PRIORITY = _DRIVER_WINDOW_50 + _DRIVER_WINDOW_TAIL
-
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    ordered = {n: QUERIES[n] for n in _DRIVER_WINDOW_PRIORITY}
+    ordered = {n: QUERIES[n] for n in _DRIVER_WINDOW_50}
     ordered.update(QUERIES)  # remainder in registration order; no dupes (dict)
     return ordered
 

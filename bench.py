@@ -2,8 +2,8 @@
 
 Runs the headline declared queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS], forcing full execution via the built-in noop sink
-(guide §1.4; count() — the r01..r13 primary action, kept as the
-"count_queries" legacy series — lets Catalyst prune final expressions).
+(guide §1.4; count() — the r01..r13 action — lets Catalyst prune final
+expressions).
 Prints {"metric", "value", "unit", "queries", "sf"}.
 """
 
@@ -204,35 +204,16 @@ def main() -> None:
     # real deployment), then best of 3 timed runs. Symmetric with the DuckDB
     # baseline methodology (tools/bench_duckdb.py: warmup + best-of-3).
     #
-    # MEASUREMENT FIX (r14, guide §1.4, VERDICT r13 Next-round #1): the
-    # PRIMARY "queries"/"value" numbers are now the NOOP-SINK timings
-    # (df.write.format("noop") — computes every column of every row).
-    # count() lets Catalyst PRUNE final aggregate/projection expressions —
-    # q_agg_group timed via count() executes only its group keys, not the
-    # money sums, and q_ner_bert's count plan drops the entire inference
-    # UDF (verified from the optimized plans, r13) — so the count()-timed
-    # series measured pruned plans for part of the headline. The old
-    # methodology is kept alongside as "count_value"/"count_queries"
-    # (byte-identical timed action to BENCH_r01..r13's "queries"), and the
-    # r13 "noop_value"/"noop_queries" field names stay (now duplicating the
-    # primary, so the r13→r14 noop series is contiguous). Round-over-round:
-    # compare r14 "queries" to r13 "noop_queries" (same action) or r14
-    # "count_queries" to r13 "queries" (same action) — NOT r14 "queries"
-    # to r13 "queries". Each action gets its OWN untimed warmup run
-    # (ADVICE r13 #4: the count warmup warms a pruned plan, so the first
-    # noop run was absorbing full-plan codegen JIT). The DuckDB pair
-    # fetches full result sets, so the primary ratio_steady_o16 is now the
-    # apples-to-apples engine ratio. See OPTIMIZATION_r14.md.
+    # The timed action is the noop sink (df.write.format("noop")), which
+    # computes every column of every row; count() would let Catalyst prune
+    # final aggregate/projection expressions (q_ner_bert's count plan drops
+    # the whole inference UDF). Since r14 "queries"/"value" are noop-sink
+    # timings; BENCH_r01..r13's "queries" were count()-timed, so compare r14+
+    # "queries" to r13 "noop_queries". The DuckDB pair fetches full result
+    # sets, so ratio_steady_o16 is the apples-to-apples engine ratio. See
+    # OPTIMIZATION_r14.md.
     timings: dict[str, float] = {}
-    count_timings: dict[str, float] = {}
     for name in HEADLINE:
-        qs[name](spark, sf_dir).count()
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            best = min(best, time.time() - t0)
-        count_timings[name] = round(best, 3)
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         best = float("inf")
         for _ in range(3):
@@ -242,7 +223,6 @@ def main() -> None:
         timings[name] = round(best, 3)
 
     total = round(sum(timings.values()), 3)
-    count_total = round(sum(count_timings.values()), 3)
 
     # same-run DuckDB pair (VERDICT r5 #5): time the headline oracles in the
     # same process right after the Spark passes, so the artifact carries
@@ -253,10 +233,6 @@ def main() -> None:
     ddb = duckdb_pair(sf_dir, HEADLINE, entrymod.oracle_sql())
     o16_spark = round(
         sum(t for n, t in timings.items() if ddb["queries"].get(n) is not None), 3
-    )
-    o16_count_spark = round(
-        sum(t for n, t in count_timings.items() if ddb["queries"].get(n) is not None),
-        3,
     )
     o16_cold_spark = round(
         sum(t for n, t in cold_timings.items() if ddb["cold_queries"].get(n) is not None),
@@ -274,19 +250,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "timed_action": "noop_sink_since_r14_count_before",
-                # legacy count()-timed series (the BENCH_r01..r13 "queries"
-                # action, kept for trend continuity — compare these to r13's
-                # "queries"):
-                "count_value": count_total,
-                "count_queries": count_timings,
-                # r13 noop field names kept: since r14 they duplicate the
-                # primary series (the r13→r14 noop trend is contiguous).
-                "noop_value": total,
-                "noop_queries": timings,
                 "ratio_steady_noop_o16": ratio,
-                "ratio_steady_count_o16": (
-                    round(o16_count_spark / ddb["value"], 3) if ddb["value"] else None
-                ),
                 "cold_value": cold_total,
                 "cold_queries": cold_timings,
                 "duckdb_value": ddb["value"],

@@ -6,7 +6,7 @@ Layering:
 - ``session``    — SparkSession factory with pinned engine defaults
 - ``sources``    — parquet catalog over the star schema
 - ``operators``  — Tier C relational corpus, as-of join, Tier D pipeline ops
-- ``functions``  — ner()/ner_extract() pandas UDFs + text-analysis functions
+- ``functions``  — ner()/ner_extract() Arrow UDF + text-analysis functions
 - ``ner``        — tokenizer / BIO-decode / model backend (ports of the
                    reference's src/ner_model.cpp + src/ner_extension.cpp)
 - ``plans``      — declared-query registry + dialect helpers
@@ -80,24 +80,11 @@ class NerEngine:
 
         register_ner_functions(self.spark)
 
-    def set_model_path(self, path: str | None, validate: bool = False) -> None:
+    def set_model_path(self, path: str | None) -> None:
         """``SET ner_model_path`` analogue (src/ner_extension.cpp:183-186,
         215-217): record the path and re-snapshot the registered UDFs. Like
         the reference, a bad path never errors here — executors fall back to
-        the empty-result stub on first use (test/sql/ner.test:39-51).
-
-        ``validate=True`` mirrors the reference's SET-time behavior more
-        closely: the reference loads the model synchronously inside the SET
-        callback (driver-side), so a bad file is discovered immediately
-        (though still silently — it logs and later yields ``[]``). With
-        validate on, we eagerly load driver-side and raise ``ValueError`` on
-        an unloadable file — strictly louder than the reference, useful when
-        a silent empty-result fallback would waste a cluster-sized job."""
-        if path is not None and validate:
-            from .ner.model import load_model
-
-            if load_model(path) is None:
-                raise ValueError(f"ner model failed to load: {path!r}")
+        the empty-result stub on first use (test/sql/ner.test:39-51)."""
         if path is None:
             self.spark.conf.unset(CONF_MODEL_PATH)
         else:
@@ -109,15 +96,11 @@ class NerEngine:
         file bytes — the distribution path for clusters where executors
         can't read the driver's filesystem. Weights transfer once per
         executor (BitTorrent-style), then cache in the worker process."""
-        from .functions.ner_udf import make_ner_udf
-        from .session import CONF_TRUNCATE
+        from .functions.ner_udf import register_ner_functions
 
         with open(path, "rb") as f:
             bc = self.spark.sparkContext.broadcast(f.read())
-        default_truncate = (self.spark.conf.get(CONF_TRUNCATE, "true") or "true").lower() == "true"
-        udf = make_ner_udf(None, default_truncate, broadcast=bc)
-        self.spark.udf.register("ner", udf)
-        self.spark.udf.register("ner_extract", udf)
+        register_ner_functions(self.spark, broadcast=bc)
 
     def register_views(self, sf_dir: str) -> None:
         from .sources.catalog import register_views

@@ -1,20 +1,21 @@
-"""``ner()`` / ``ner_extract()`` as Arrow-batched pandas UDFs.
+"""``ner()`` / ``ner_extract()`` as one scalar Arrow UDF.
 
 Spark-first re-expression of the reference's vectorized scalar function
 (/root/reference/src/ner_extension.cpp:49-213):
 
-- DataChunk → Arrow batch: the pandas UDF receives ~2048-row batches
-  (session pins ``spark.sql.execution.arrow.maxRecordsPerBatch``), the exact
-  analogue of DuckDB's vector size (SURVEY.md §2.B B7).
+- DataChunk → Arrow batch: the Arrow UDF receives ~2048-row ``pa.Array``
+  batches (session pins ``spark.sql.execution.arrow.maxRecordsPerBatch``),
+  the exact analogue of DuckDB's vector size (SURVEY.md §2.B B7).
 - ``static global_state`` → per-EXECUTOR lazy model singleton
   (``_MODEL_CACHE``): global state cannot live on the driver; each Python
   worker process loads the model once on first batch (src/ner_extension.cpp:
   16-22, 63-66 analogue).
 - ``SET ner_model_path`` → ``spark.conf.set("spark.ner.modelPath", ...)``;
-  the conf value is snapshotted when the UDF is built/registered (lazy,
-  per-query) whereas DuckDB loads eagerly on the client thread — difference
-  documented in SURVEY.md §3.2; observable behaviors (silent bad-path
-  fallback, settings introspection) match the reference's tests.
+  the conf value is snapshotted by ``session_ner_udf`` — the one place that
+  reads the NER confs — when the UDF is built/registered (lazy, per-query)
+  whereas DuckDB loads eagerly on the client thread — difference documented
+  in SURVEY.md §3.2; observable behaviors (silent bad-path fallback,
+  settings introspection) match the reference's tests.
 - VOLATILE → ``asNondeterministic()`` (src/ner_extension.cpp:201-203): the
   result depends on session model state; Catalyst must not fold or re-order
   calls.
@@ -34,10 +35,11 @@ from __future__ import annotations
 
 from typing import Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..ner.decode import decode_entities
@@ -53,6 +55,7 @@ NER_RESULT_TYPE = ArrayType(
         ]
     )
 )
+_ARROW_RESULT_TYPE = to_arrow_type(NER_RESULT_TYPE)
 
 # Per-worker-process model cache: key -> Backend | None (failed loads cached
 # as None so a bad path stays a silent, cheap fallback — reference A9).
@@ -85,9 +88,9 @@ def _get_model(path: Optional[str], broadcast=None):
     return _MODEL_CACHE[key]
 
 
-def _ner_batch(texts: pd.Series, model, truncate: bool) -> pd.Series:
+def _ner_batch(texts: list, model, truncate: bool) -> list:
     if model is None:
-        return pd.Series([None if v is None else [] for v in texts], dtype=object)
+        return [None if v is None else [] for v in texts]
 
     n_max = model.n_max_tokens
     tokenized: list[list[int] | None] = []
@@ -101,71 +104,58 @@ def _ner_batch(texts: pd.Series, model, truncate: bool) -> pd.Series:
         tokenized.append(token_ids)
 
     # Cross-row batching (the reference evaluates per row — its own noted
-    # inefficiency, SURVEY.md §4.2): if the backend supports it, rows are
-    # grouped by token length and run as one (B, n, d) pass per group, which
-    # is mask-free and therefore bit-identical to per-row evaluation.
-    rows = [(i, t) for i, t in enumerate(tokenized) if t is not None]
-    logits_by_row: dict[int, object] = {}
-    if hasattr(model, "eval_tokens_batch") and rows:
-        all_logits = model.eval_tokens_batch([t for _, t in rows])
-        for (i, _), lg in zip(rows, all_logits):
-            logits_by_row[i] = lg
-    else:
-        for i, t in rows:
-            logits_by_row[i] = model.eval_tokens(t)
-
+    # inefficiency, SURVEY.md §4.2): the backend evaluates every non-null row
+    # of the batch in one call, bit-identical to per-row ``eval_tokens``.
+    logits = iter(model.eval_tokens_batch([t for t in tokenized if t is not None]))
     out = []
-    for i, token_ids in enumerate(tokenized):
+    for token_ids in tokenized:
         if token_ids is None:
             out.append(None)
             continue
-        ents = decode_entities(token_ids, logits_by_row[i], model.vocab.id_to_token)
+        ents = decode_entities(token_ids, next(logits), model.vocab.id_to_token)
         out.append([{"entity": e, "label": lb} for e, lb in ents])
-    return pd.Series(out, dtype=object)
+    return out
 
 
 def make_ner_udf(model_path: Optional[str], default_truncate: bool = True, broadcast=None):
-    """Build the pandas UDF with a conf snapshot (model path + default
-    truncate) taken NOW — per-query semantics, SURVEY.md §3.2. Pass
+    """Build the Arrow UDF for a fixed model path + default truncate. Pass
     ``broadcast`` (a SparkContext broadcast of the model file bytes) to ship
     weights via the torrent-style broadcast channel instead of shared FS."""
 
-    # no type annotations: the optional 2nd arg (SQL overload parity, A2/B2)
-    # needs the legacy SCALAR eval path — hint inference can't express it
-    def ner_fn(texts, truncate=None):
+    def ner_fn(texts: pa.Array, truncate: pa.Array = None) -> pa.Array:
         trunc = default_truncate
-        if truncate is not None and len(truncate) > 0 and truncate.iloc[0] is not None:
+        if truncate is not None and len(truncate) > 0 and truncate[0].is_valid:
             # reference reads row 0 of the chunk only (src/ner_extension.cpp:55-61)
-            trunc = bool(truncate.iloc[0])
+            trunc = bool(truncate[0].as_py())
         model = _get_model(model_path, broadcast)
-        return _ner_batch(texts, model, trunc)
+        return pa.array(_ner_batch(texts.to_pylist(), model, trunc), type=_ARROW_RESULT_TYPE)
 
-    import warnings
-
-    from pyspark.sql.functions import PandasUDFType
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        return pandas_udf(ner_fn, NER_RESULT_TYPE, PandasUDFType.SCALAR).asNondeterministic()
+    return arrow_udf(ner_fn, NER_RESULT_TYPE).asNondeterministic()
 
 
-def register_ner_functions(spark: SparkSession) -> None:
+def session_ner_udf(spark: SparkSession, model_path: Optional[str] = None, broadcast=None):
+    """The one conf snapshot: build the UDF from ``spark.ner.modelPath`` and
+    ``spark.ner.truncate`` as they are NOW (per-query semantics, SURVEY.md
+    §3.2). An explicit ``model_path`` or ``broadcast`` replaces the path conf."""
+    if model_path is None and broadcast is None:
+        model_path = spark.conf.get(CONF_MODEL_PATH, None)
+    default_truncate = (spark.conf.get(CONF_TRUNCATE, "true") or "true").lower() == "true"
+    return make_ner_udf(model_path, default_truncate, broadcast)
+
+
+def register_ner_functions(spark: SparkSession, broadcast=None) -> None:
     """``LOAD ner`` analogue: register ``ner`` + its ``ner_extract`` alias
     (src/ner_extension.cpp:198-213) for both spark.sql and DataFrame use.
     Re-invoke after changing ``spark.ner.modelPath`` to re-snapshot (or use
     NerEngine.set_model_path)."""
-    model_path = spark.conf.get(CONF_MODEL_PATH, None)
-    default_truncate = (spark.conf.get(CONF_TRUNCATE, "true") or "true").lower() == "true"
-    udf = make_ner_udf(model_path, default_truncate)
+    udf = session_ner_udf(spark, broadcast=broadcast)
     spark.udf.register("ner", udf)
     spark.udf.register("ner_extract", udf)
 
 
 def ner(spark: SparkSession, col, truncate=None):
     """DataFrame-API entry: ``df.select(ner(spark, df.text))``."""
-    model_path = spark.conf.get(CONF_MODEL_PATH, None)
-    default_truncate = (spark.conf.get(CONF_TRUNCATE, "true") or "true").lower() == "true"
-    udf = make_ner_udf(model_path, default_truncate)
+    udf = session_ner_udf(spark)
     if truncate is None:
         return udf(col)
     return udf(col, F.lit(truncate) if isinstance(truncate, bool) else truncate)

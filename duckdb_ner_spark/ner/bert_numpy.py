@@ -12,10 +12,10 @@ Matches the reference's numerical choices:
 - token_type is always 0 (src/ner_model.cpp:332-334);
 - scale 1/sqrt(d_head) pre-softmax.
 
-This runs batched rows inside the pandas UDF — unlike the reference, which
-rebuilds a ggml graph per row (SURVEY.md §4.2), we amortize weights across
-the Arrow batch; BLAS underneath numpy provides the intra-op parallelism the
-reference got from 4 ggml threads.
+This runs batched rows inside the ``ner()`` Arrow UDF — unlike the
+reference, which rebuilds a ggml graph per row (SURVEY.md §4.2), we amortize
+weights across the Arrow batch; BLAS underneath numpy provides the intra-op
+parallelism the reference got from 4 ggml threads.
 """
 
 from __future__ import annotations

@@ -20,6 +20,7 @@ reference's 8-byte bundled placeholder fails to load
 
 from __future__ import annotations
 
+import io
 import struct
 from dataclasses import dataclass
 
@@ -99,66 +100,67 @@ def _dequant_q4_0_legacy(raw: bytes, n_elems: int) -> np.ndarray:
     return (inter * scales).reshape(-1)
 
 
-def _read_ggml_with_layout(path: str, q4_legacy: bool) -> GgmlModelFile | None:
-    with open(path, "rb") as f:
-        head = f.read(4)
-        if len(head) < 4 or struct.unpack("<I", head)[0] != MAGIC:
-            return None
-        hp_raw = f.read(4 * 8)
-        if len(hp_raw) < 32:
-            return None
-        hparams = dict(zip(HPARAM_NAMES, struct.unpack("<8i", hp_raw)))
+def _read_ggml_with_layout(data: bytes, q4_legacy: bool) -> GgmlModelFile | None:
+    f = io.BytesIO(data)
+    head = f.read(4)
+    if len(head) < 4 or struct.unpack("<I", head)[0] != MAGIC:
+        return None
+    hp_raw = f.read(4 * 8)
+    if len(hp_raw) < 32:
+        return None
+    hparams = dict(zip(HPARAM_NAMES, struct.unpack("<8i", hp_raw)))
 
-        vocab: list[str] = []
-        for _ in range(hparams["n_vocab"]):
-            (ln,) = struct.unpack("<i", f.read(4))
-            vocab.append(f.read(ln).decode("utf-8", errors="replace"))
+    vocab: list[str] = []
+    for _ in range(hparams["n_vocab"]):
+        (ln,) = struct.unpack("<i", f.read(4))
+        vocab.append(f.read(ln).decode("utf-8", errors="replace"))
 
-        tensors: dict[str, np.ndarray] = {}
-        while True:
-            hdr = f.read(12)
-            if len(hdr) < 12:
-                break
-            n_dims, name_len, ftype = struct.unpack("<3i", hdr)
-            # consistency guard: a mis-framed q4_0 stream (wrong block
-            # layout) lands here with garbage — reject so the caller can
-            # retry with the other layout
-            if not (1 <= n_dims <= 2 and 0 < name_len < 512 and 0 <= ftype <= 2):
-                raise ValueError("tensor stream misframed")
-            dims_rev = struct.unpack(f"<{n_dims}i", f.read(4 * n_dims))
-            if any(d <= 0 or d > 10_000_000 for d in dims_rev):
-                raise ValueError("tensor stream misframed")
-            name = f.read(name_len).decode("utf-8")
-            shape = tuple(reversed(dims_rev))  # back to row-major (rows, cols)
-            n_elems = int(np.prod(shape))
-            if ftype == F32:
-                data = np.frombuffer(f.read(4 * n_elems), dtype="<f4").astype(np.float32)
-            elif ftype == F16:
-                data = np.frombuffer(f.read(2 * n_elems), dtype="<f2").astype(np.float32)
-            elif q4_legacy:
-                data = _dequant_q4_0_legacy(
-                    f.read(n_elems // _Q4_BLOCK * _Q4_BYTES_LEGACY), n_elems
-                )
-            else:
-                data = _dequant_q4_0_modern(
-                    f.read(n_elems // _Q4_BLOCK * _Q4_BYTES_MODERN), n_elems
-                )
-            if data.size != n_elems:
-                raise ValueError("tensor stream misframed")
-            tensors[name] = data.reshape(shape)
-        return GgmlModelFile(hparams, vocab, tensors)
+    tensors: dict[str, np.ndarray] = {}
+    while True:
+        hdr = f.read(12)
+        if len(hdr) < 12:
+            break
+        n_dims, name_len, ftype = struct.unpack("<3i", hdr)
+        # consistency guard: a mis-framed q4_0 stream (wrong block
+        # layout) lands here with garbage — reject so the caller can
+        # retry with the other layout
+        if not (1 <= n_dims <= 2 and 0 < name_len < 512 and 0 <= ftype <= 2):
+            raise ValueError("tensor stream misframed")
+        dims_rev = struct.unpack(f"<{n_dims}i", f.read(4 * n_dims))
+        if any(d <= 0 or d > 10_000_000 for d in dims_rev):
+            raise ValueError("tensor stream misframed")
+        name = f.read(name_len).decode("utf-8")
+        shape = tuple(reversed(dims_rev))  # back to row-major (rows, cols)
+        n_elems = int(np.prod(shape))
+        if ftype == F32:
+            arr = np.frombuffer(f.read(4 * n_elems), dtype="<f4").astype(np.float32)
+        elif ftype == F16:
+            arr = np.frombuffer(f.read(2 * n_elems), dtype="<f2").astype(np.float32)
+        elif q4_legacy:
+            arr = _dequant_q4_0_legacy(
+                f.read(n_elems // _Q4_BLOCK * _Q4_BYTES_LEGACY), n_elems
+            )
+        else:
+            arr = _dequant_q4_0_modern(
+                f.read(n_elems // _Q4_BLOCK * _Q4_BYTES_MODERN), n_elems
+            )
+        if arr.size != n_elems:
+            raise ValueError("tensor stream misframed")
+        tensors[name] = arr.reshape(shape)
+    return GgmlModelFile(hparams, vocab, tensors)
 
 
-def read_ggml(path: str) -> GgmlModelFile | None:
-    """Read with q4_0 layout auto-detection: try the legacy (bert.cpp-era)
-    block first; if the stream misframes, retry with the modern layout.
-    Files without q4_0 tensors parse identically either way."""
+def read_ggml(data: bytes) -> GgmlModelFile | None:
+    """Parse a GGML container held in memory, with q4_0 layout
+    auto-detection: try the legacy (bert.cpp-era) block first; if the stream
+    misframes, parse the same bytes again with the modern layout. Files
+    without q4_0 tensors parse identically either way."""
     try:
-        return _read_ggml_with_layout(path, q4_legacy=True)
+        return _read_ggml_with_layout(data, q4_legacy=True)
     except Exception:
         pass
     try:
-        return _read_ggml_with_layout(path, q4_legacy=False)
+        return _read_ggml_with_layout(data, q4_legacy=False)
     except Exception:
         return None
 

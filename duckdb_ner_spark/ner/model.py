@@ -1,4 +1,5 @@
-"""Model backend protocol + loaders with the reference's failure semantics.
+"""Model backend protocol + the one loader, with the reference's failure
+semantics.
 
 The reference's loader (`ner_load_from_file`,
 /root/reference/src/ner_model.cpp:292-298) returns nullptr on a missing or
@@ -6,17 +7,19 @@ bad file and NEVER raises; its bundled default model is a placeholder whose
 magic check fails, so with no (valid) model configured every ``ner()`` call
 returns ``[]`` for non-null rows (src/include/default_model.hpp:10-15,
 src/ner_extension.cpp:68-76, test/sql/ner.test:21-51). We replicate exactly:
-``load_model(path) -> Backend | None``, silent on every failure.
+``load_model_bytes(data) -> Backend | None`` sniffs the format and builds the
+backend, silent on every failure; ``load_model(path)`` reads the file once
+and hands the bytes to it, so a path and a broadcast load the same way.
 
 Backends:
-- ``StubMapModel`` — a JSON file mapping token → label index; eval() emits
-  one-hot logits per token. Hermetic + deterministic: the test vehicle, and
-  the semantic analogue of the reference's convert-your-own-model flow.
-- A real transformer backend would implement the same protocol with torch /
-  ONNX weights (one instance per executor process; weights fetched from
-  shared storage). Gated behind an import-try since heavy ML deps are not in
-  this environment — the Spark-side plumbing (Arrow batches, per-executor
-  singleton, conf snapshot) is identical and IS tested via the stub.
+- ``GgmlBertModel`` (``bert_numpy.py``) — the real backend: the reference's
+  GGML container (f32 / f16 / q4_0) run as a NumPy BERT token classifier.
+- ``StubMapModel`` — a JSON file mapping token → label index; emits one-hot
+  logits per token. Hermetic + deterministic: the test vehicle, and the
+  semantic analogue of the reference's convert-your-own-model flow.
+
+Both implement ``eval_tokens_batch`` (what the UDF calls) and keep
+``eval_tokens`` as the per-row reference it must match bit for bit.
 """
 
 from __future__ import annotations
@@ -36,6 +39,10 @@ class Backend(Protocol):
 
     def eval_tokens(self, token_ids: list[int]) -> np.ndarray:
         """[n_tokens] ids → [n_tokens, n_labels] float32 logits."""
+        ...
+
+    def eval_tokens_batch(self, token_lists: list[list[int]]) -> list[np.ndarray]:
+        """``eval_tokens`` over many rows, in input order, bit-identical."""
         ...
 
 
@@ -67,26 +74,25 @@ class StubMapModel:
             logits[t, label] = 1.0
         return logits
 
+    def eval_tokens_batch(self, token_lists: list[list[int]]) -> list[np.ndarray]:
+        return [self.eval_tokens(t) for t in token_lists]
+
 
 def load_model_bytes(data: bytes):
-    """Load a model from in-memory bytes (broadcast distribution path — for
-    clusters where executors lack shared-FS access to the model file). Same
-    silent-failure contract as load_model."""
-    import os
-    import tempfile
+    """Silent-failure loader: any problem → None (reference parity:
+    test/sql/ner.test:39-51 expects SET to a bad path to succeed and the next
+    ner() call to return []).
 
+    Formats, sniffed by magic: the reference's GGML container
+    (magic 0x67676d6c LE — a file that merely *spells* 'ggml' in ASCII fails
+    the check, exactly like the reference's bundled placeholder) and the JSON
+    stub format."""
     try:
-        if data[:4] == b"\x6c\x6d\x67\x67":
+        if data[:4] == b"\x6c\x6d\x67\x67":  # struct LE of 0x67676d6c
             from .bert_numpy import GgmlBertModel
             from .ggml_format import read_ggml
 
-            fd, tmp = tempfile.mkstemp(suffix=".bin")
-            try:
-                with os.fdopen(fd, "wb") as f:
-                    f.write(data)
-                mf = read_ggml(tmp)
-            finally:
-                os.unlink(tmp)
+            mf = read_ggml(data)
             return GgmlBertModel(mf) if mf is not None else None
         spec = json.loads(data.decode("utf-8"))
         if spec.get("format") != "ner-stub-v1":
@@ -97,29 +103,13 @@ def load_model_bytes(data: bytes):
 
 
 def load_model(path: str | None):
-    """Silent-failure loader: any problem → None (reference parity:
-    test/sql/ner.test:39-51 expects SET to a bad path to succeed and the next
-    ner() call to return []).
-
-    Formats, sniffed by magic: the reference's GGML container
-    (magic 0x67676d6c LE — a file that merely *spells* 'ggml' in ASCII fails
-    the check, exactly like the reference's bundled placeholder) and the JSON
-    stub format."""
+    """``load_model_bytes`` over the file at ``path``; no path or an
+    unreadable file → None."""
     if not path:
         return None
     try:
         with open(path, "rb") as f:
-            head = f.read(4)
-        if head == b"\x6c\x6d\x67\x67":  # struct LE of 0x67676d6c
-            from .bert_numpy import GgmlBertModel
-            from .ggml_format import read_ggml
-
-            mf = read_ggml(path)
-            return GgmlBertModel(mf) if mf is not None else None
-        with open(path) as f:
-            spec = json.load(f)
-        if spec.get("format") != "ner-stub-v1":
-            return None
-        return StubMapModel.from_dict(spec)
+            data = f.read()
     except Exception:
         return None
+    return load_model_bytes(data)

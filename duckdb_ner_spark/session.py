@@ -11,7 +11,8 @@ Scale notes (100 TB design bar):
 - ``spark.sql.session.timeZone=UTC``: deterministic timestamp semantics and
   oracle (DuckDB) parity; DuckDB timestamps are wall-clock naive.
 - Arrow enabled: every Python-side operator in this engine is Arrow-batched
-  (pandas UDF / mapInPandas) — the analogue of DuckDB's 2048-row DataChunk
+  (the ``ner()`` Arrow UDF, pandas UDFs, mapInPandas) — the analogue of
+  DuckDB's 2048-row DataChunk
   (``/root/reference/src/ner_extension.cpp:49-51``).
 """
 
@@ -55,7 +56,7 @@ def get_spark(
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # DataChunk-sized Arrow batches for pandas UDFs (SURVEY.md §4.2).
+        # DataChunk-sized Arrow batches for Python UDFs (SURVEY.md §4.2).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # Engine option defaults (reference default: truncate=true,
         # /root/reference/src/ner_extension.cpp:53).

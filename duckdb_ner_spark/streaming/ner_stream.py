@@ -1,4 +1,4 @@
-"""Streaming NER: the Tier-A ``ner()`` pandas UDF applied inside Structured
+"""Streaming NER: the Tier-A ``ner()`` Arrow UDF applied inside Structured
 Streaming (beyond-reference surface — the reference extension is batch-only,
 SURVEY.md §2.E; its host DuckDB has no streaming at all).
 
@@ -27,8 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.ner_udf import make_ner_udf
-from ..session import CONF_MODEL_PATH
+from ..functions.ner_udf import session_ner_udf
 
 DOCS_SCHEMA = StructType(
     [
@@ -120,13 +119,12 @@ def entity_label_counts(
     """doc → ner(text) → explode entities → count per label.
 
     One definition serves batch and stream (the aggregation is identical;
-    only the sink differs). The model path defaults to a snapshot of the
-    session conf at plan time — the same lazy-capture semantics as the batch
-    UDF (reference eagerly loads on SET, /root/reference/src/
-    ner_extension.cpp:183-186; the difference is documented in ner_udf.py)."""
-    if model_path is None:
-        model_path = spark.conf.get(CONF_MODEL_PATH, None)
-    udf = make_ner_udf(model_path)
+    only the sink differs). The model path and default truncate are the
+    batch UDF's conf snapshot taken at plan time (``session_ner_udf``;
+    reference eagerly loads on SET, /root/reference/src/
+    ner_extension.cpp:183-186; the difference is documented in ner_udf.py);
+    an explicit ``model_path`` replaces the path conf."""
+    udf = session_ner_udf(spark, model_path)
     ents = docs.select(
         "doc_id", F.explode(udf(F.col("text"))).alias("ent")
     )

@@ -13,6 +13,7 @@ downloaded dslim/bert-base-NER snapshot can flow real weights end-to-end
 without torch."""
 
 import json
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -111,7 +112,7 @@ def test_checkpoint_conversion_weight_exact(checkpoint_dir, tmp_path):
     )
     write_ggml(direct, hp, STUB_VOCAB, clean)
 
-    a, b = read_ggml(out), read_ggml(direct)
+    a, b = (read_ggml(Path(p).read_bytes()) for p in (out, direct))
     assert a.hparams == b.hparams
     assert a.vocab == b.vocab
     assert set(a.tensors) == set(b.tensors)

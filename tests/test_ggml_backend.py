@@ -1,17 +1,20 @@
 """GGML container + NumPy BERT backend tests (A8/A10 parity)."""
 
+import json
 import struct
+from pathlib import Path
 
 import numpy as np
 import pytest
 
 from duckdb_ner_spark.ner.ggml_format import read_ggml, write_ggml
-from duckdb_ner_spark.ner.model import load_model
+from duckdb_ner_spark.ner.model import load_model, load_model_bytes
+from tools.convert_model import STUB_VOCAB
 
 
 @pytest.fixture(scope="module")
 def tiny_model(tmp_path_factory):
-    from tools.convert_model import STUB_VOCAB, random_model
+    from tools.convert_model import random_model
 
     path = str(tmp_path_factory.mktemp("m") / "tiny.bin")
     hp, t = random_model(STUB_VOCAB, n_embd=32, n_head=4, n_layer=2, n_labels=9, n_max_tokens=64)
@@ -21,7 +24,7 @@ def tiny_model(tmp_path_factory):
 
 def test_roundtrip_f32(tiny_model):
     path, hp, t = tiny_model
-    mf = read_ggml(path)
+    mf = read_ggml(Path(path).read_bytes())
     assert mf is not None
     assert mf.hparams["n_embd"] == 32 and mf.hparams["n_labels"] == 9
     assert mf.vocab[0] == "[CLS]"
@@ -33,8 +36,8 @@ def test_roundtrip_f16_lossy(tiny_model, tmp_path):
     path, hp, t = tiny_model
     p16 = str(tmp_path / "tiny16.bin")
     hp16 = dict(hp, ftype=1)
-    write_ggml(p16, hp16, read_ggml(path).vocab, t)
-    mf = read_ggml(p16)
+    write_ggml(p16, hp16, read_ggml(Path(path).read_bytes()).vocab, t)
+    mf = read_ggml(Path(p16).read_bytes())
     w = "encoder.layer.0.attention.self.query.weight"
     np.testing.assert_allclose(mf.tensors[w], t[w], atol=1e-3)
     # 1-D tensors stay f32 exactly (converter rule, convert_ner_to_ggml.py:77-82)
@@ -74,12 +77,12 @@ def test_roundtrip_q4_0_both_layouts(tiny_model, tmp_path):
     original weights (block step = scale; error bound step/2 + f16 scale
     rounding). 1-D tensors stay f32 exactly, as in every ggml converter."""
     path, hp, t = tiny_model
-    vocab = read_ggml(path).vocab
+    vocab = read_ggml(Path(path).read_bytes()).vocab
     w = "encoder.layer.0.attention.self.query.weight"
     for legacy in (False, True):
         pq = str(tmp_path / f"tiny_q4_{legacy}.bin")
         write_ggml(pq, dict(hp, ftype=2), vocab, t, q4_legacy=legacy)
-        mf = read_ggml(pq)
+        mf = read_ggml(Path(pq).read_bytes())
         assert mf is not None, f"auto-detect failed (legacy={legacy})"
         arr = t[w].astype(np.float32)
         step = np.abs(arr.reshape(-1, 32)).max(axis=1) / 7.0  # coarsest scale
@@ -98,7 +101,7 @@ def test_bad_magic_rejected(tmp_path):
     p = str(tmp_path / "placeholder.bin")
     with open(p, "wb") as f:
         f.write(b"ggml\x00\x00\x00\x00")
-    assert read_ggml(p) is None
+    assert read_ggml(Path(p).read_bytes()) is None
     assert load_model(p) is None
     # correct magic but truncated → loader returns None, never raises
     p2 = str(tmp_path / "trunc.bin")
@@ -110,7 +113,7 @@ def test_bad_magic_rejected(tmp_path):
 def test_indivisible_heads_rejected(tmp_path):
     """n_embd % n_head != 0 would silently corrupt the multi-head reshape —
     the loader must map such a model to None (silent-failure contract)."""
-    from tools.convert_model import STUB_VOCAB, random_model
+    from tools.convert_model import random_model
 
     hp, t = random_model(STUB_VOCAB, n_embd=32, n_head=4, n_layer=1, n_labels=9, n_max_tokens=64)
     hp["n_head"] = 5  # 32 % 5 != 0
@@ -159,18 +162,50 @@ def test_ggml_model_through_spark_udf(tiny_model, engine):
     engine.set_model_path(None)
 
 
-def test_set_model_path_validate(tiny_model, engine, tmp_path):
-    """validate=True eagerly loads at SET time (reference loads in the SET
-    callback, src/ner_extension.cpp:183-186) and raises on an unloadable
-    file; default stays silent like the reference."""
-    path, _, _ = tiny_model
-    engine.set_model_path(path, validate=True)  # loadable: no error
-    bad = tmp_path / "bad.bin"
-    bad.write_bytes(b"ggml1234")  # ASCII magic — never loads
-    engine.set_model_path(str(bad))  # silent, reference default
-    with pytest.raises(ValueError, match="failed to load"):
-        engine.set_model_path(str(bad), validate=True)
-    engine.set_model_path(None)
+_LOADABLE = ("f32", "f16", "q4_0_legacy", "q4_0_modern", "stub_json")
+
+
+@pytest.mark.parametrize(
+    "case", _LOADABLE + ("other_json", "bad_magic", "cut_mid_tensor")
+)
+def test_load_model_bytes_matches_load_model(case, tiny_model, tmp_path):
+    """The broadcast path (bytes) and the path loader give the same model —
+    or both None — on every format, quantized and malformed input included."""
+    path, hp, t = tiny_model
+    p = tmp_path / "model.bin"
+    if case == "f32":
+        p.write_bytes(Path(path).read_bytes())
+    elif case == "f16":
+        write_ggml(str(p), dict(hp, ftype=1), STUB_VOCAB, t)
+    elif case.startswith("q4_0"):
+        write_ggml(str(p), dict(hp, ftype=2), STUB_VOCAB, t, q4_legacy=case == "q4_0_legacy")
+    elif case == "stub_json":
+        p.write_bytes((Path(__file__).parent / "fixtures" / "stub_model.json").read_bytes())
+    elif case == "other_json":
+        p.write_text(json.dumps({"format": "ner-stub-v0", "vocab": STUB_VOCAB}))
+    elif case == "bad_magic":
+        p.write_bytes(b"ggml\x00\x00\x00\x00")
+    else:  # cut_mid_tensor
+        data = Path(path).read_bytes()
+        p.write_bytes(data[: len(data) // 2])
+
+    from_bytes, from_path = load_model_bytes(p.read_bytes()), load_model(str(p))
+    if case not in _LOADABLE:
+        assert from_bytes is None and from_path is None
+        return
+    assert from_bytes is not None and from_path is not None
+    dims = ("n_max_tokens", "n_labels", "n_embd", "n_head", "n_layer")
+    assert [getattr(from_bytes, d, None) for d in dims] == [
+        getattr(from_path, d, None) for d in dims
+    ]
+    assert from_bytes.vocab == from_path.vocab
+    ids = from_path.vocab.token_to_id
+    rows = [
+        [ids["[CLS]"], ids["duck"], ids["labs"], ids["[SEP]"]],
+        [ids["[CLS]"], ids["sam"], ids["[SEP]"]],
+    ]
+    for a, b in zip(from_bytes.eval_tokens_batch(rows), from_path.eval_tokens_batch(rows)):
+        np.testing.assert_array_equal(a, b)
 
 
 def test_q4_scale_overflow_raises_not_warns():

@@ -23,7 +23,7 @@ PLANS = "/root/repo/docs/PLANS.md"
 def _window() -> list[str]:
     import __spark_entry__ as entrymod
 
-    return entrymod._DRIVER_WINDOW_PRIORITY[:50]
+    return entrymod._DRIVER_WINDOW_50
 
 
 def _fresh_attest() -> dict:
@@ -39,7 +39,7 @@ def test_stale_plan_queries_are_inside_driver_window():
     assert bad == [], (
         f"plan changed since last driver-green round but query is outside "
         f"the first-50 driver window: {bad} — add to the top of "
-        f"_DRIVER_WINDOW_PRIORITY or re-earn a driver row"
+        f"_DRIVER_WINDOW_50 or re-earn a driver row"
     )
 
 

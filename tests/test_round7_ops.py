@@ -251,12 +251,14 @@ def test_q4_0_dequant_error_within_block_bound(tmp_path):
     quantized tensor of a written model — the foundation the end-to-end
     logit tolerance rests on (reference: ner_model.cpp:194 Q4_0 path;
     converter convert_ner_to_ggml.py:77-82)."""
+    from pathlib import Path
+
     import numpy as np
 
     from duckdb_ner_spark.ner.ggml_format import _Q4_BLOCK, read_ggml
 
     f32p, q4p, orig = _q4_model_pair(tmp_path)
-    mq = read_ggml(q4p)
+    mq = read_ggml(Path(q4p).read_bytes())
     n_quantized = 0
     for name, w in orig.items():
         w = np.asarray(w, dtype=np.float32).squeeze()

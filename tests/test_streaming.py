@@ -244,6 +244,28 @@ def test_ner_stream_matches_batch(spark):
     assert len(expect) > 0  # the stub model does extract entities
 
 
+def test_entity_label_counts_honours_truncate_conf(spark):
+    """The streaming aggregation takes the batch UDF's conf snapshot, so
+    ``spark.ner.truncate=false`` makes an overflowing document raise there
+    too (it used to be hard-coded to truncate)."""
+    import os
+
+    import pytest
+
+    from duckdb_ner_spark.session import CONF_TRUNCATE
+    from duckdb_ner_spark.streaming.ner_stream import entity_label_counts
+
+    stub = os.path.join(os.path.dirname(__file__), "fixtures", "stub_model.json")
+    docs = spark.createDataFrame([(1, " ".join(["new"] * 600))], "doc_id long, text string")
+    spark.conf.set(CONF_TRUNCATE, "false")
+    try:
+        with pytest.raises(Exception, match="token limit"):
+            entity_label_counts(spark, docs, stub).collect()
+    finally:
+        spark.conf.set(CONF_TRUNCATE, "true")
+    assert entity_label_counts(spark, docs, stub).collect()
+
+
 def test_staged_stream_runs_multiple_batches(spark):
     """The staged drain must exercise REAL multi-batch streaming (state and
     watermark across batches), not collapse into one micro-batch."""

@@ -6,7 +6,7 @@ a driver CORRECTNESS row because they were registered below that window.
 This test makes the failure mode structural: every hash-oracled query with
 no green driver row in any git-tracked CORRECTNESS_r*.json MUST sit inside
 the current window, so it is guaranteed a row on the next driver run. Adding
-a new oracle query without front-loading it into _DRIVER_WINDOW_PRIORITY
+a new oracle query without front-loading it into _DRIVER_WINDOW_50
 fails here immediately.
 """
 
@@ -41,7 +41,7 @@ def test_every_unverified_hash_query_is_in_window():
     assert not never_checked, (
         f"hash-oracled queries with no driver CORRECTNESS row sit OUTSIDE the "
         f"first-{DRIVER_WINDOW} window and would go unverified again: "
-        f"{never_checked} — front-load them in _DRIVER_WINDOW_PRIORITY"
+        f"{never_checked} — front-load them in _DRIVER_WINDOW_50"
     )
 
 
@@ -50,7 +50,7 @@ def test_window_has_no_unknown_names():
     silently shrinks the verified set."""
     import __spark_entry__ as e
 
-    missing = [n for n in e._DRIVER_WINDOW_PRIORITY if n not in e.queries()]
+    missing = [n for n in e._DRIVER_WINDOW_50 if n not in e.queries()]
     assert not missing, missing
 
 
@@ -62,9 +62,6 @@ def test_window_list_is_exactly_the_driver_window():
 
     assert len(e._DRIVER_WINDOW_50) == DRIVER_WINDOW
     assert len(set(e._DRIVER_WINDOW_50)) == DRIVER_WINDOW, "duplicates in window"
-    assert not set(e._DRIVER_WINDOW_50) & set(e._DRIVER_WINDOW_TAIL), (
-        "window entries duplicated in the tail"
-    )
     assert list(e.queries())[:DRIVER_WINDOW] == e._DRIVER_WINDOW_50, (
         "queries() first-50 must be exactly _DRIVER_WINDOW_50"
     )

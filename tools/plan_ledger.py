@@ -14,7 +14,7 @@ PQ re-attestation was builder discipline). This tool closes that gap:
 - ``python tools/plan_ledger.py check`` (and the pytest
   tests/test_plan_ledger.py) lists every query whose CURRENT PLANS.md row
   differs from its attested row; each such query MUST sit inside the first-50
-  driver window of ``__spark_entry__._DRIVER_WINDOW_PRIORITY`` so the next
+  driver window of ``__spark_entry__._DRIVER_WINDOW_50`` so the next
   driver round re-earns its row. New hash queries (no attested row yet) must
   be windowed too. Rows-only queries are exempt (they never earn hash rows;
   their exactness is pinned by the ledgered parity pytests).
@@ -149,7 +149,7 @@ def main() -> None:
     sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod
 
-    window = entrymod._DRIVER_WINDOW_PRIORITY[:50]
+    window = entrymod._DRIVER_WINDOW_50
     # Rebuild the ledger in-memory (ADVICE r10 #3): the committed
     # docs/plan_attest.json can be stale; check must match the pytest's
     # self-maintaining path instead of trusting the file.
