@@ -39,6 +39,10 @@ HEADLINE = [
     "q_ner_bert",
 ]
 
+# Timed steady runs per query (after one untimed warmup); bench reports the
+# best of them.
+STEADY_RUNS = 3
+
 
 # Engine-default confs the cold pass pins (a fresh user session's settings —
 # see session.py; the explicit reset also undoes the bench-tuned builder confs
@@ -111,116 +115,35 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from duckdb_ner_spark.session import default_parallelism, get_spark
 
-    # parallelismFirst=false is the recommended large-scale setting (coalesce
-    # to advisory size instead of max parallelism) — and it also trims local
-    # task-scheduling overhead on small SFs
-    cpus = default_parallelism()
-    spark = get_spark(
-        "bench",
-        extra_conf={
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
-            # sf0.1 regime: 600 k-row shuffles across 32 initial partitions
-            # pay ~20 k-row tasks whose launch overhead dominates; 8 initial
-            # partitions measured 5.4 s vs 12.1 s total (tools/bench_profile).
-            # Cluster scale is unaffected: there shuffle.partitions is sized
-            # to data (or AQE-coalesced), not inherited from this bench knob.
-            "spark.sql.shuffle.partitions": "8",
-            # testdata parquet is one row group per table → a raw scan is one
-            # split; spread the cached tables across cores (see catalog.py).
-            # 8 splits beat 32 at this SF for the same task-overhead reason.
-            "spark.duckdb_ner.scanRepartition": str(min(cpus, 8)),
-            # single-host bench: every task is process-local; skipping the
-            # locality wait saves scheduler latency (measured ~4%). On a real
-            # cluster the default matters for storage-local reads — bench-only.
-            "spark.locality.wait": "0ms",
-            # AQE's per-stage materialize-and-replan cycle costs one extra job
-            # submission per shuffle stage; with shuffle.partitions already
-            # sized to the SF (8) there is nothing left for it to re-plan, so
-            # at sf0.1 it is pure overhead (~25% of exec time across the
-            # headline, tools/bench_profile with/without). Bench-only: the
-            # engine default (session.py) keeps AQE + skew-join ON — that is
-            # the 100 TB configuration, where re-planning amortizes over
-            # minutes-long stages and skew handling actually triggers.
-            "spark.sql.adaptive.enabled": "false",
-            # at sf0.1 every dimension side (orders 2.7 MB, part 180 KB)
-            # fits comfortably in a broadcast; raising the threshold converts
-            # the q_subquery/q_topk/q_join_multi shuffle joins to broadcast
-            # joins (measured −10% across the worst-gap queries,
-            # tools/bench_profile). Bench-only knob: on a cluster the engine
-            # default (10 MB) + AQE's runtime size-based join selection make
-            # this decision from real statistics, and a 100 TB orders table
-            # would never qualify.
-            "spark.sql.autoBroadcastJoinThreshold": "64m",
-        },
-    )
-    qs = entrymod.queries()
+    spark = get_spark("bench", extra_conf=steady_conf(default_parallelism()))
 
-    # ---- COLD pass (reported as cold_value/cold_queries): each query timed
-    # on its FIRST run in a fresh session with ENGINE-DEFAULT confs — AQE +
-    # skew handling ON, AQE coalesce-to-advisory-size, default 10 MB
-    # broadcast threshold, the engine-default AUTO scan-parallelism floor
-    # (scanRepartition=0: single-split scans of the compute-per-byte-heavy
-    # corpora documents/embeddings spread to ≤8 partitions; relational
-    # tables scan untouched — catalog.py _FLOOR_TABLES), no plan
-    # cache, no cached/persisted intermediates. This is
-    # the first-run latency a user pays; the steady-state number below is the
-    # recurring-workload latency. JVM and OS page cache are warm in both
-    # (JVM startup is not the number of interest). Runs BEFORE any table
-    # caching so it cannot borrow the steady-state pass's warm state.
-    from duckdb_ner_spark.plans import cachereg
-
-    cold_spark = spark.newSession()
-    for k, v in COLD_CONF.items():
-        cold_spark.conf.set(k, v)
-    cachereg.clear()
-    cold_warmup(cold_spark)
-    # r14: the cold timed action is the noop sink too — a count()-timed cold
-    # cell measured a PRUNED first run (q_ner_bert's cold cell read ~0.24 s
-    # with the whole inference UDF pruned out). One run per query, still its
-    # first-ever execution in this session; the r01..r13 cold series was
+    # ---- COLD pass (reported as cold_value/cold_queries): one run per
+    # query, its first-ever execution in the cold session. r14: the cold
+    # timed action is the noop sink too — a count()-timed cold cell
+    # measured a PRUNED first run (q_ner_bert's cold cell read ~0.24 s with
+    # the whole inference UDF pruned out). The r01..r13 cold series was
     # count()-actioned, so compare cold trends only within r14+.
+    cold_spark = cold_session(spark)
     cold_timings: dict[str, float] = {}
     for name in HEADLINE:
-        t0 = time.time()
-        qs[name](cold_spark, sf_dir).write.format("noop").mode("overwrite").save()
-        cold_timings[name] = round(time.time() - t0, 3)
+        ((b, e),) = time_query(cold_spark, sf_dir, name, 1, False)
+        cold_timings[name] = round(b + e, 3)
     cold_total = round(sum(cold_timings.values()), 3)
-    # drop anything the cold pass cached/persisted so the steady-state pass
-    # starts from its own documented warm protocol only
-    spark.catalog.clearCache()
-    cachereg.clear()
 
-    # warm engine state outside the timed region: JVM, parquet footers, and
-    # the table cache (the analogue of DuckDB's buffer pool being warm)
-    from duckdb_ner_spark.sources.catalog import TABLES, load_tables
-
-    cat = load_tables(spark, sf_dir)
-    for t in TABLES:
-        cat.table(t).cache().count()
-
-    # steady-state timing: one untimed warmup (whole-stage-codegen JIT +
-    # AQE's first-run replanning — one-off costs that amortize away in any
-    # real deployment), then best of 3 timed runs. Symmetric with the DuckDB
-    # baseline methodology (tools/bench_duckdb.py: warmup + best-of-3).
-    #
-    # The timed action is the noop sink (df.write.format("noop")), which
-    # computes every column of every row; count() would let Catalyst prune
-    # final aggregate/projection expressions (q_ner_bert's count plan drops
-    # the whole inference UDF). Since r14 "queries"/"value" are noop-sink
-    # timings; BENCH_r01..r13's "queries" were count()-timed, so compare r14+
+    # ---- steady pass: one untimed warmup (whole-stage-codegen JIT + AQE's
+    # first-run replanning — one-off costs that amortize away in any real
+    # deployment), then best of STEADY_RUNS timed runs. Symmetric with the
+    # DuckDB baseline methodology (tools/bench_duckdb.py: warmup +
+    # best-of-3). Since r14 "queries"/"value" are noop-sink timings;
+    # BENCH_r01..r13's "queries" were count()-timed, so compare r14+
     # "queries" to r13 "noop_queries". The DuckDB pair fetches full result
     # sets, so ratio_steady_o16 is the apples-to-apples engine ratio. See
     # OPTIMIZATION_r14.md.
+    warm_steady(spark, sf_dir)
     timings: dict[str, float] = {}
     for name in HEADLINE:
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        timings[name] = round(best, 3)
+        runs = time_query(spark, sf_dir, name, STEADY_RUNS, True)
+        timings[name] = round(min(b + e for b, e in runs), 3)
 
     total = round(sum(timings.values()), 3)
 
@@ -250,7 +173,6 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "timed_action": "noop_sink_since_r14_count_before",
-                "ratio_steady_noop_o16": ratio,
                 "cold_value": cold_total,
                 "cold_queries": cold_timings,
                 "duckdb_value": ddb["value"],
@@ -265,6 +187,117 @@ def main() -> None:
             }
         )
     )
+
+
+
+def steady_conf(cpus: int) -> dict[str, str]:
+    """Bench-tuned confs of the steady pass (the cold pass resets them to
+    COLD_CONF). Also the planning conf of tools/dump_plans.py. The figures
+    cited below came from the count()-timed profiler of rounds 9–13;
+    ``tools/bench_profile.py --conf k=v`` re-measures one under this
+    protocol."""
+    return {
+        # parallelismFirst=false is the recommended large-scale setting
+        # (coalesce to advisory size instead of max parallelism) — and it
+        # also trims local task-scheduling overhead on small SFs
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
+        # sf0.1 regime: 600 k-row shuffles across 32 initial partitions
+        # pay ~20 k-row tasks whose launch overhead dominates; 8 initial
+        # partitions measured 5.4 s vs 12.1 s total (tools/bench_profile).
+        # Cluster scale is unaffected: there shuffle.partitions is sized
+        # to data (or AQE-coalesced), not inherited from this bench knob.
+        "spark.sql.shuffle.partitions": "8",
+        # testdata parquet is one row group per table → a raw scan is one
+        # split; spread the cached tables across cores (see catalog.py).
+        # 8 splits beat 32 at this SF for the same task-overhead reason.
+        "spark.duckdb_ner.scanRepartition": str(min(cpus, 8)),
+        # single-host bench: every task is process-local; skipping the
+        # locality wait saves scheduler latency (measured ~4%). On a real
+        # cluster the default matters for storage-local reads — bench-only.
+        "spark.locality.wait": "0ms",
+        # AQE's per-stage materialize-and-replan cycle costs one extra job
+        # submission per shuffle stage; with shuffle.partitions already
+        # sized to the SF (8) there is nothing left for it to re-plan, so
+        # at sf0.1 it is pure overhead (~25% of exec time across the
+        # headline, tools/bench_profile with/without). Bench-only: the
+        # engine default (session.py) keeps AQE + skew-join ON — that is
+        # the 100 TB configuration, where re-planning amortizes over
+        # minutes-long stages and skew handling actually triggers.
+        "spark.sql.adaptive.enabled": "false",
+        # at sf0.1 every dimension side (orders 2.7 MB, part 180 KB)
+        # fits comfortably in a broadcast; raising the threshold converts
+        # the q_subquery/q_topk/q_join_multi shuffle joins to broadcast
+        # joins (measured −10% across the worst-gap queries,
+        # tools/bench_profile). Bench-only knob: on a cluster the engine
+        # default (10 MB) + AQE's runtime size-based join selection make
+        # this decision from real statistics, and a 100 TB orders table
+        # would never qualify.
+        "spark.sql.autoBroadcastJoinThreshold": "64m",
+    }
+
+
+def cold_session(spark):
+    """The COLD pass's session: a fresh session with ENGINE-DEFAULT confs —
+    AQE + skew handling ON, AQE coalesce-to-advisory-size, default 10 MB
+    broadcast threshold, the engine-default AUTO scan-parallelism floor
+    (scanRepartition=0: single-split scans of the compute-per-byte-heavy
+    corpora documents/embeddings spread to ≤8 partitions; relational
+    tables scan untouched — catalog.py _FLOOR_TABLES), no plan cache, no
+    cached/persisted intermediates, and the engine warmed by cold_warmup.
+    Each query then times its FIRST run here: the first-run latency a user
+    pays. JVM and OS page cache are warm (JVM startup is not the number of
+    interest). Call it BEFORE warm_steady so the cold pass cannot borrow
+    the steady pass's warm state."""
+    from duckdb_ner_spark.plans import cachereg
+
+    cold = spark.newSession()
+    for k, v in COLD_CONF.items():
+        cold.conf.set(k, v)
+    cachereg.clear()
+    cold_warmup(cold)
+    return cold
+
+
+def warm_steady(spark, sf_dir: str) -> None:
+    """Steady-pass warm state, outside any timed region: drop whatever the
+    cold pass cached/persisted, then cache every table (the analogue of
+    DuckDB's buffer pool being warm)."""
+    from duckdb_ner_spark.plans import cachereg
+    from duckdb_ner_spark.sources.catalog import TABLES, load_tables
+
+    spark.catalog.clearCache()
+    cachereg.clear()
+    cat = load_tables(spark, sf_dir)
+    for t in TABLES:
+        cat.table(t).cache().count()
+
+
+def time_query(
+    spark, sf_dir: str, name: str, runs: int, warmup: bool
+) -> list[tuple[float, float]]:
+    """Time ``runs`` executions of declared query ``name``, after one untimed
+    run if ``warmup``. Returns each timed run's (build_s, exec_s): build is
+    the Python-side DataFrame construction (Py4J round trips + analysis),
+    exec the action (optimize + schedule + run).
+
+    The action is the noop sink (df.write.format("noop")), which computes
+    every column of every row; count() would let Catalyst prune final
+    aggregate/projection expressions (q_ner_bert's count plan drops the
+    whole inference UDF)."""
+    import __spark_entry__ as entrymod
+
+    build = entrymod.queries()[name]
+    if warmup:
+        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    out = []
+    for _ in range(runs):
+        t0 = time.time()
+        df = build(spark, sf_dir)
+        t1 = time.time()
+        df.write.format("noop").mode("overwrite").save()
+        out.append((t1 - t0, time.time() - t1))
+    return out
 
 
 if __name__ == "__main__":

@@ -29,8 +29,6 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import hashlib
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,35 +36,7 @@ from pyspark.sql.window import Window
 
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
-
-
-_SCRATCH_DIRS: set[str] = set()
-
-
-def _cleanup_scratch() -> None:
-    import shutil
-
-    for p in _SCRATCH_DIRS:
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def _scratch(name: str, sf_dir: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    # os.getpid(): staging is re-run per call (cache_plan=False), and two
-    # CONCURRENT processes (pytest + selfcheck on the same sf_dir) must not
-    # overwrite each other's staged files mid-read — observed as a transient
-    # q_schema_evolution failure when the full sweep ran beside the suite.
-    # Per-pid paths would otherwise accumulate across runs (r4 ADVICE), so
-    # every dir this process creates is removed at interpreter exit.
-    path = os.path.join(
-        tempfile.gettempdir(), f"dns_layout_{name}_{tag}_{os.getpid()}"
-    )
-    if not _SCRATCH_DIRS:
-        import atexit
-
-        atexit.register(_cleanup_scratch)
-    _SCRATCH_DIRS.add(path)
-    return path
+from ..sources.writers import scratch_dir
 
 
 # --------------------------------------------------------------------------
@@ -96,7 +66,7 @@ def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ones opened. The oracle runs the same predicate over the raw table —
     identical results prove pruning is a pure access-path optimization."""
     t = load_tables(spark, sf_dir)
-    path = _scratch("orders_by_month", sf_dir)
+    path = scratch_dir("orders_by_month", sf_dir)
     src = t.orders.withColumn("month", F.date_format("o_orderdate", "yyyy-MM"))
     src.write.mode("overwrite").partitionBy("month").parquet(path)
     back = spark.read.parquet(path)
@@ -153,7 +123,7 @@ def q_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .write.mode("overwrite")
                 .bucketBy(N_BUCKETS, key)
                 .sortBy(key)
-                .option("path", _scratch(name, sf_dir))
+                .option("path", scratch_dir(name, sf_dir))
                 .saveAsTable(name, format="parquet")
             )
     li, od = spark.table(li_name), spark.table(od_name)
@@ -186,7 +156,7 @@ def q_source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     including the full text column so string round-tripping is what's
     verified (the CSV twin drops text; ORC is binary-safe)."""
     t = load_tables(spark, sf_dir)
-    path = _scratch("orc_documents", sf_dir)
+    path = scratch_dir("orc_documents", sf_dir)
     t.documents.select("doc_id", "lang", "text", "n_chars").write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("lang").agg(
@@ -339,7 +309,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     time (not a data scan); steady-state clusters pin the merged schema in
     the table catalog instead."""
     t = load_tables(spark, sf_dir)
-    path = _scratch("orders_evolving", sf_dir)
+    path = scratch_dir("orders_evolving", sf_dir)
     old = t.orders.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     new = t.orders.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
@@ -466,7 +436,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     to produce chunk offsets, which broadcast back. Identical cum values,
     bounded window partitions."""
     t = load_tables(spark, sf_dir)
-    path = _scratch("compact_docs", sf_dir)
+    path = scratch_dir("compact_docs", sf_dir)
     (
         t.documents.select(
             "doc_id", (F.col("doc_id") % COMPACT_BUCKETS).alias("bucket")

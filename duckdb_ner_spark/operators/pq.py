@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..plans.cachereg import memoized
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
+from ..sources.writers import scratch_dir
 
 # --------------------------------------------------------------------------
 # Constants — shared by the Spark plans, the oracle SQL, and the tests
@@ -747,11 +748,9 @@ def _ivfpq_scores(spark: SparkSession, sf_dir: str):
     # index SUMMARY, never the corpus) and every consumer branch becomes
     # a parquet scan. Values are BIGINT end-to-end: the round-trip is
     # bit-exact, hashes unchanged (re-attested at all 3 SFs).
-    from .layout_queries import _scratch
-
     staged = []
     for nm, df in (("d_res", d_res), ("dqc", dqc), ("top_true", top_true)):
-        path = _scratch(f"ivfpq_{nm}", sf_dir)
+        path = scratch_dir(f"ivfpq_{nm}", sf_dir)
         df.write.mode("overwrite").parquet(path)
         staged.append(spark.read.parquet(path))
     # the scored stream lives in scratch now — drop the builder persists

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..plans.cachereg import memo, memoized
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
+from ..sources.writers import scratch_dir
 
 SSD_K = 40  # minimum verbatim span length (chars) — q_memorization's K
 # Packs (doc_id, position) into ONE BIGINT so keep-first is a plain MIN
@@ -82,7 +83,6 @@ def substring_excise_spans(
     docs: DataFrame,
     k: int = SSD_K,
     sparse_hex: str | None = None,
-    digest_chars: int = 16,
 ) -> DataFrame:
     """Core transform: per-doc maximal excised spans (1-based char offsets,
     inclusive) for every k-char window whose content occurs elsewhere in
@@ -125,12 +125,9 @@ def substring_excise_spans(
         .select(
             "doc_id",
             "i",
-            # digest_chars=16 (64 bits) matches the oracle; 32 is the full
-            # md5 — the collision-safe width the scale-notes docstring
-            # prescribes for production runs (measured in shuffle_probe).
-            F.substring(
-                F.md5(F.expr(f"substr(text, i, {k})")), 1, digest_chars
-            ).alias("h"),
+            # 16 hex chars (64 bits) matches the oracle; see the
+            # digest-width bound in q_substring_dedup's docstring.
+            F.substring(F.md5(F.expr(f"substr(text, i, {k})")), 1, 16).alias("h"),
         )
     )
     if sparse_hex is not None:
@@ -224,11 +221,11 @@ def _census_excise(keyed: DataFrame, key_cols: list, k: int) -> DataFrame:
     the (doc_id, i, *key) stream shuffles exactly once, vs the
     groupBy-census + enrich-join shape that re-exchanges the stream to
     probe its own census table (measured ~40% less census shuffle,
-    tools/shuffle_probe.py). Skew note: a boilerplate window duplicated
-    10^6 times makes one 10^6-row partition — the same hot-key skew the
-    join-probe shape has (all its occurrences route to one census key
-    either way); per-class work stays linear and the islands merge bounds
-    downstream span counts."""
+    docs/SCALING.md round-11 census table). Skew note: a boilerplate
+    window duplicated 10^6 times makes one 10^6-row partition — the same
+    hot-key skew the join-probe shape has (all its occurrences route to
+    one census key either way); per-class work stays linear and the
+    islands merge bounds downstream span counts."""
     from pyspark.sql import Window
 
     big = SSD_POS_BIG
@@ -372,11 +369,9 @@ def q_substring_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # columns round-trip bit-exact.
 @memoized
 def staged_excise_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .layout_queries import _scratch
-
     t = load_tables(spark, sf_dir)
     spans = substring_excise_spans(t.documents, SSD_K)
-    path = _scratch("ssd_spans", sf_dir)
+    path = scratch_dir("ssd_spans", sf_dir)
     spans.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
@@ -529,13 +524,12 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated md5. At the 100 TB design point (~1e14 windows) birthday
     collisions are CERTAIN (expected ~m^2/2^65 = 2.7e8 colliding pairs),
     and a collision marks a unique span as duplicated — silent deletion
-    of non-duplicated text. Production-scale runs must either widen the
-    key to the full 128-bit md5 (two BIGINT halves or the 32-hex string;
-    expected collisions at 1e14 keys drop to ~1e-11) or use the EXACT
-    suffix-rank path (q_suffix_spans below — rank identity is
-    collision-free by construction). At the shipped SFs (<= ~2e6
-    windows) the 64-bit collision probability is < 1e-7; this FULL
-    md5-window variant remains the audit tool, not the production pass.
+    of non-duplicated text. Production-scale runs use the EXACT path,
+    q_substring_packed (each window's packed CONTENT is the census key, so
+    no collision can exist at any corpus size; the suffix-rank
+    q_suffix_spans is exact too). At the shipped SFs (<= ~2e6 windows)
+    the 64-bit collision probability is < 1e-7; this FULL md5-window
+    variant remains the audit tool, not the production pass.
 
     Cites reference scope: the reference engine has no dedup surface —
     this is beyond-reference (SURVEY.md §2.D dedup family, north-star
@@ -701,18 +695,16 @@ def _suffix_rounds_frames(
 # 0-4 (depths 1..16), q_suffix_spans additionally round 5 (depth 32).
 # The memo holds the chain as one list that a deeper request extends in
 # place; scratch dirs (sufr_p*) are removed at interpreter exit by
-# layout_queries._cleanup_scratch.
+# sources/writers._cleanup_scratch.
 def staged_suffix_rounds(
     spark: SparkSession, sf_dir: str, n_rounds: int
 ) -> list:
-    from .layout_queries import _scratch
-
     have = memo(spark, sf_dir, staged_suffix_rounds, list)
     if len(have) > n_rounds:
         return have[: n_rounds + 1]
 
     def stage(i: int, df: DataFrame) -> DataFrame:
-        p = _scratch(f"sufr_p{i}", sf_dir)
+        p = scratch_dir(f"sufr_p{i}", sf_dir)
         df.write.mode("overwrite").parquet(p)
         return spark.read.parquet(p)
 
@@ -1031,7 +1023,7 @@ def q_substring_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness is structural: tuple equality IS window equality, so no
     collision can ever delete unique text at any corpus size.
 
-    Measured census shuffle (tools/shuffle_probe.py, docs/SCALING.md):
+    Measured census shuffle (docs/SCALING.md round-11 census table):
     the packed census exchanges FEWER bytes than the md5 census despite
     carrying full window content — dense 7-bit-packed text compresses
     under shuffle lz4 (overlapping windows from one doc region share a
@@ -1281,8 +1273,6 @@ def suffix_adjacent_lcps(
 ) -> DataFrame:
     """(a_doc, a_pos, b_doc, b_pos, lcp) for every adjacent pair of the
     total suffix order — the LCP array of the corpus suffix array."""
-    from .layout_queries import _scratch
-
     big = SSD_POS_BIG
     t = load_tables(spark, sf_dir)
     rounds = staged_suffix_rounds(spark, sf_dir, SUFR_LCP_ROUNDS)
@@ -1367,7 +1357,7 @@ def suffix_adjacent_lcps(
         if t_step == 5:
             # stage mid-chain: bounds the lifting plan at ~6 joins per
             # segment instead of 22 in one tree (the r10 staging idiom)
-            p = _scratch("suflcp_mid", sf_dir)
+            p = scratch_dir("suflcp_mid", sf_dir)
             lift.write.mode("overwrite").parquet(p)
             lift = spark.read.parquet(p)
     docs = load_tables(spark, sf_dir).documents
@@ -1401,9 +1391,7 @@ def suffix_adjacent_lcps(
 # plan tree).
 @memoized
 def staged_adjacent_lcps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .layout_queries import _scratch
-
-    path = _scratch("suflcp_lcps", sf_dir)
+    path = scratch_dir("suflcp_lcps", sf_dir)
     suffix_adjacent_lcps(spark, sf_dir).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 

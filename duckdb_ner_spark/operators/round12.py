@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
+from ..sources.writers import scratch_dir
 from .similarity import FX_SCALE, _unit_fx_expr
 
 
@@ -412,9 +413,7 @@ def q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus is hashed once and both halves scan the narrow (ids, pk,
     # pos) summary. Bit-exact round-trip (BIGINT + digest strings) —
     # hashes re-attested at all 3 SFs.
-    from .layout_queries import _scratch
-
-    pos_path = _scratch("blm_pos", sf_dir)
+    pos_path = scratch_dir("blm_pos", sf_dir)
     pos.write.mode("overwrite").parquet(pos_path)
     pos = spark.read.parquet(pos_path)
     filt = pos.filter(F.col("half") == 0).select("pos").distinct()
@@ -1966,9 +1965,7 @@ def q_topk_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus is read once and every branch scans the vocab-sized
     # (source, w, cnt) BIGINT summary. Bit-exact round-trip (BIGINT +
     # strings only) — hashes re-attested at all 3 SFs.
-    from .layout_queries import _scratch
-
-    wc_path = _scratch("tkb_wc", sf_dir)
+    wc_path = scratch_dir("tkb_wc", sf_dir)
     wc.write.mode("overwrite").parquet(wc_path)
     wc = spark.read.parquet(wc_path)
     sw = Window.partitionBy("source")

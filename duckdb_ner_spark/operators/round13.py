@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
+from ..sources.writers import scratch_dir
 from .round12 import _hex_to_int_sql, maxsim_slice_units
 from .similarity import FX_SCALE
 from .textstats import (
@@ -227,9 +228,7 @@ def q_maxsim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inlined, each re-scanned embeddings and re-derived the units;
     # staged, the normalization runs once and every branch scans the
     # (vec_id, s, u) BIGINT summary. Bit-exact round-trip.
-    from .layout_queries import _scratch
-
-    su_path = _scratch("mr_su", sf_dir)
+    su_path = scratch_dir("mr_su", sf_dir)
     su.write.mode("overwrite").parquet(su_path)
     su = spark.read.parquet(su_path)
     # int8 stage-1 codes from the same slice units the exact pass scores
@@ -498,9 +497,7 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from lt — inlined, each re-exploded the training corpus; staged,
     # the corpus is tokenized once for training and the model builds
     # from the summary. Bit-exact round-trip (BIGINT + strings).
-    from .layout_queries import _scratch
-
-    lt_path = _scratch("lid_lt", sf_dir)
+    lt_path = scratch_dir("lid_lt", sf_dir)
     lt.write.mode("overwrite").parquet(lt_path)
     lt = spark.read.parquet(lt_path)
     tl = lt.groupBy("lang").agg(F.sum("c").cast("bigint").alias("t"))
@@ -758,12 +755,10 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # halves (each re-exploded + re-hashed the corpus). Staged, the
     # corpus is tokenized/hashed once and labeled once. Bit-exact
     # round-trip (BIGINT + strings).
-    from .layout_queries import _scratch
-
-    label_path = _scratch("qsc_label", sf_dir)
+    label_path = scratch_dir("qsc_label", sf_dir)
     label.write.mode("overwrite").parquet(label_path)
     label = spark.read.parquet(label_path)
-    tok_path = _scratch("qsc_tok", sf_dir)
+    tok_path = scratch_dir("qsc_tok", sf_dir)
     tok.write.mode("overwrite").parquet(tok_path)
     tok = spark.read.parquet(tok_path)
     bt = (
@@ -942,9 +937,7 @@ def q_maxsim_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     m off this curve and runs stage 1 + bounded stage 2 only."""
     t = load_tables(spark, sf_dir)
     su = maxsim_slice_units(t.embeddings)
-    from .layout_queries import _scratch
-
-    su_path = _scratch("msw_su", sf_dir)
+    su_path = scratch_dir("msw_su", sf_dir)
     su.write.mode("overwrite").parquet(su_path)
     su = spark.read.parquet(su_path)
     q8 = su.select(
@@ -1201,9 +1194,7 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stage the per-vector unit + int8 code frame once (the r10
     # staged-scratch idiom): the exact and int8 censuses plus both query
     # sides otherwise each re-derive it from the embeddings scan.
-    from .layout_queries import _scratch
-
-    base_path = _scratch("ndcg_base", sf_dir)
+    base_path = scratch_dir("ndcg_base", sf_dir)
     base.write.mode("overwrite").parquet(base_path)
     base = spark.read.parquet(base_path)
     q = F.broadcast(

@@ -10,13 +10,13 @@ round-trip (write → parse → types) is what's actually under test.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
+from ..sources.writers import scratch_dir
 
 
 @declared(
@@ -46,30 +46,6 @@ def q_source_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _scratch(name: str, sf_dir: str) -> str:
-    # keyed on the FULL source path (hashed), not the basename — distinct
-    # datasets sharing a dir name must not collide
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    # os.getpid(): staging is re-run per call (cache_plan=False), and two
-    # CONCURRENT processes (pytest + selfcheck on the same sf_dir) must not
-    # overwrite each other's staged files mid-read — observed as a transient
-    # q_schema_evolution failure when the full sweep ran beside the suite.
-    # Per-pid dirs are registered for atexit removal so repeated runs don't
-    # accumulate staging trees in /tmp (r4 ADVICE) — shared registry with
-    # layout_queries.
-    from .layout_queries import _SCRATCH_DIRS, _cleanup_scratch
-
-    path = os.path.join(tempfile.gettempdir(), f"dns_src_{name}_{tag}_{os.getpid()}")
-    if not _SCRATCH_DIRS:
-        import atexit
-
-        atexit.register(_cleanup_scratch)
-    _SCRATCH_DIRS.add(path)
-    return path
-
-
 @declared(
     "q_source_csv",
     cache_plan=False,
@@ -84,7 +60,7 @@ def q_source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import read_csv, write_csv
 
     t = load_tables(spark, sf_dir)
-    path = _scratch("csv_documents", sf_dir)
+    path = scratch_dir("csv_documents", sf_dir)
     docs = t.documents.select("doc_id", "lang", "n_chars")  # text has no commas, but keep it simple
     write_csv(docs, path)
     back = read_csv(spark, path, schema="doc_id BIGINT, lang STRING, n_chars BIGINT")
@@ -108,7 +84,7 @@ def q_source_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import read_json, write_json
 
     t = load_tables(spark, sf_dir)
-    path = _scratch("json_events", sf_dir)
+    path = scratch_dir("json_events", sf_dir)
     ev = t.events.select("event_id", "event_type", "value")
     write_json(ev, path)
     back = read_json(spark, path, schema="event_id BIGINT, event_type STRING, value DOUBLE")
@@ -225,7 +201,7 @@ def q_source_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .multimodal import decode_image, ppm_sample, stage_ppm_files
 
     t = load_tables(spark, sf_dir)
-    path = _scratch("binfile_ppm", sf_dir)
+    path = scratch_dir("binfile_ppm", sf_dir)
     os.makedirs(path, exist_ok=True)
     stage_ppm_files(ppm_sample(t.documents, BINFILE_STEP), path)
 
@@ -290,7 +266,7 @@ def q_source_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.catalog import load_tables as _lt
 
     t = _lt(spark, sf_dir)
-    path = _scratch("text_documents", sf_dir)
+    path = scratch_dir("text_documents", sf_dir)
     lines = t.documents.select(
         F.concat_ws("|", F.col("doc_id"), F.col("lang"), F.col("text")).alias("value")
     )
@@ -341,7 +317,7 @@ def q_sink_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir)
     register_kvtext_source(spark)
-    path = _scratch("kvtext_documents", sf_dir)
+    path = scratch_dir("kvtext_documents", sf_dir)
     docs = t.documents.select("doc_id", "lang", "n_chars")
     docs.write.format("kvtext").option("path", path).mode("append").save()
     back = spark.read.format("kvtext").option("path", path).load()

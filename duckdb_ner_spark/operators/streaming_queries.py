@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import declared
+from ..sources.writers import scratch_dir
 
 _SINK_IDS = itertools.count()
 
@@ -617,10 +618,9 @@ def q_stream_image(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_tables
     from .multimodal import decode_image, ppm_sample, stage_ppm_files
-    from .sources_queries import BINFILE_STEP, _scratch
 
     t_docs = load_tables(spark, sf_dir).documents
-    path = _scratch("stream_ppm", sf_dir)
+    path = scratch_dir("stream_ppm", sf_dir)
     os.makedirs(path, exist_ok=True)
     stage_ppm_files(ppm_sample(t_docs, BINFILE_STEP), path)
 

@@ -10,7 +10,42 @@ partition pruning on date-sliced scans.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
+
+_SCRATCH_DIRS: set[str] = set()
+
+
+def _cleanup_scratch() -> None:
+    import shutil
+
+    for p in _SCRATCH_DIRS:
+        shutil.rmtree(p, ignore_errors=True)
+
+
+def scratch_dir(name: str, sf_dir: str) -> str:
+    """Staging directory ``name`` of a declared query over ``sf_dir``; every
+    name in use is distinct across the registry. Keyed on the FULL source
+    path (hashed), not the basename — distinct datasets sharing a dir name
+    must not collide.
+
+    os.getpid(): staging is re-run per call (cache_plan=False), and two
+    CONCURRENT processes (pytest + selfcheck on the same sf_dir) must not
+    overwrite each other's staged files mid-read — observed as a transient
+    q_schema_evolution failure when the full sweep ran beside the suite.
+    Per-pid paths would otherwise accumulate across runs (r4 ADVICE), so
+    every dir this process creates is removed at interpreter exit."""
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    path = os.path.join(tempfile.gettempdir(), f"dns_{name}_{tag}_{os.getpid()}")
+    if not _SCRATCH_DIRS:
+        import atexit
+
+        atexit.register(_cleanup_scratch)
+    _SCRATCH_DIRS.add(path)
+    return path
 
 
 def write_parquet(

@@ -20,3 +20,16 @@ def engine(spark):
     from duckdb_ner_spark import NerEngine
 
     return NerEngine(spark)
+
+
+@pytest.fixture(scope="module")
+def oracle_con():
+    """DuckDB connection with every sf0.001 table as a view (oracle side)."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in (
+        "region nation customer supplier part orders lineitem events documents embeddings"
+    ).split():
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
+    return con

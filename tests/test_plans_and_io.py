@@ -226,72 +226,6 @@ def test_knn_join_broadcasts_query_side(spark):
     assert not rep.has_python_udf
 
 
-def test_global_window_ledger(spark):
-    """EXACT accounting of every partition-less WindowExec in the registry
-    (VERDICT r6 #4): each global window serializes its input through one
-    task, so each one must be NAMED here with the bounded table it runs
-    over — a new query sneaking a corpus-sized global window in (or a plan
-    change adding one to an existing query) fails this test instead of
-    hiding in tolerated log noise."""
-    import __spark_entry__ as e
-    from duckdb_ner_spark.plans.inspect import global_windows
-    from duckdb_ner_spark.plans import cachereg
-
-    # query -> (count, the bounded input each global window runs over)
-    LEDGER = {
-        "q_compaction_plan": (1, "running sum over per-chunk totals (#chunks rows)"),
-        "q_cte": (1, "rank over the TakeOrdered top-20 customers"),
-        "q_histogram": (1, "cumulative sum over the fixed bucket table"),
-        "q_rrf_fusion": (2, "ranks over the two TakeOrdered RRF_LIST lists"),
-        "q_sim_ivf": (
-            3,
-            "output rank over <=IVF_TOPK rows + two stride-seeding "
-            "row_numbers over the <=N_IVF_CELLS centroid limit",
-        ),
-        "q_skew_audit": (1, "rank inside the TakeOrdered SKEW_TOP_K heap"),
-        "q_skyline": (
-            1,
-            "running max over the <=(price-domain/SKYLINE_BUCKET_CENTS) "
-            "bucket-summary rows",
-        ),
-        "q_ivf_incr": (
-            1,
-            "stride-seeding row_number over the <=IVFI_CELLS centroid limit",
-        ),
-        "q_vocab_coverage": (1, "prefix sum over the <=64-row bit-length band table"),
-        "q_wsample_priority": (
-            3,
-            "one linear chain over the TakeOrdered top-(WS_K+1) rows: "
-            "rank + tau(MIN) + estimator-total(SUM)",
-        ),
-        "q_zipf_slope": (1, "rank over the TakeOrdered ZIPF_TOP=64 words"),
-        # q_batch_padding left this ledger in r13: its arrival batcher now
-        # partitions by a BP_SHARD-doc shard key (VERDICT r12 #2), so NO
-        # query ships a corpus-sized global window any more — every entry
-        # above runs over a TakeOrdered/limit-bounded or constant-sized
-        # frame.
-    }
-
-    cachereg.clear()
-    qs = e.queries()
-    actual = {}
-    for name in sorted(qs):
-        gw = global_windows(qs[name](spark, SF_SMOKE))
-        if gw:
-            actual[name] = len(gw)
-
-    expected = {n: c for n, (c, _why) in LEDGER.items()}
-    unexpected = {n: c for n, c in actual.items() if n not in expected}
-    assert not unexpected, (
-        f"UNLEDGERED global windows {unexpected}: every partition-less "
-        "window must be added to LEDGER with the bounded table it runs over "
-        "— or repartitioned/TakeOrdered away"
-    )
-    assert actual == expected, (
-        f"global-window counts drifted: actual={actual} expected={expected}"
-    )
-
-
 def test_subquery_reattach_join_broadcasts(spark):
     """r14: the decorrelated per-nation aggregate (25 rows at any SF) must
     re-attach via BroadcastHashJoin — the BROADCAST hint inside the scalar

@@ -8,7 +8,8 @@ numpy form ``[ 46 169 220]``, so the value hash can never match.
 ``assert_hashable_schema`` (plans/registry.py) closes the hole; it is wired
 into tools/selfcheck.py and tools/plan_audit.py so every hash-declared query
 is gated every round. These tests pin the guard's behavior on deliberately
-bad fixtures and sweep the live registry's hash corpus.
+bad fixtures; tests/test_registry_sweep.py sweeps the live registry's hash
+corpus.
 """
 
 import pytest
@@ -58,21 +59,3 @@ def test_index_delta_is_string_serialized(spark):
     df = entrymod.queries()["q_index_delta"](spark, SF_SMOKE)
     field = dict((f.name, f.dataType.simpleString()) for f in df.schema.fields)
     assert field["top_merged"] == "string"
-
-
-def test_no_hash_query_ships_complex_columns(spark):
-    """Full-corpus sweep: build every hash-declared query's plan at sf0.001
-    (plan construction only — no execution) and run the gate. This is the
-    pytest half of the selfcheck/plan_audit enforcement."""
-    import __spark_entry__ as entrymod
-    from duckdb_ner_spark.plans.registry import assert_hashable_schema
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    bad = []
-    for name in sorted(oracles):
-        try:
-            assert_hashable_schema(qs[name](spark, SF_SMOKE), name)
-        except TypeError as exc:
-            bad.append(str(exc))
-    assert not bad, "\n".join(bad)

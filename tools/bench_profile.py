@@ -1,30 +1,63 @@
-"""Decompose bench per-query time: DataFrame construction vs execution.
+"""Per-query, per-layer profile of bench.py's own timing protocol.
 
-For each headline query, measures
-- build: Python-side DataFrame construction (Py4J round trips + analysis)
-- exec:  .count() on the already-built DataFrame (optimize + schedule + run)
-both best-of-3 after one warmup, on the same warmed/cached session bench.py
-uses. Prints a table plus totals so conf experiments have a feedback loop.
+Runs bench.py's cold pass (``bench.cold_session``: fresh engine-default
+session, warmed engine, one first run per query) and then its steady pass
+(``bench.warm_steady``: cached tables, one untimed warmup, then
+``bench.STEADY_RUNS`` timed runs per query). Every run goes through
+``bench.time_query``, so the action is bench's noop sink. The session writes
+the Spark event log to a temp dir; each timed ``time_query`` call is tagged
+with ``PHASE_PROPERTY = "<pass>:<query>"`` (warmups stay untagged), and after
+``spark.stop()`` the log is split per tag by ``perfbench/tracing.py``'s
+``event_log_totals``.
+
+Prints one JSON line::
+
+  {"sf", "cpus", "steady_runs", "conf", "loadavg_start", "loadavg_end",
+   "queries": {name: {"cold" | "steady": {"build_s": [per run],
+                                          "exec_s": [per run],
+                                          "layers": {LAYERS...}}}}}
+
+Cold layers cover the single first run; steady layers are the per-run mean.
+Example: ``tools/bench_profile.py q_substring_dedup q_substring_packed
+q_suffix_spans`` compares the three span-inventory algorithms' shuffle
+bytes; the cold pass carries the staging shuffle the steady pass reuses.
 
 Usage: python tools/bench_profile.py [--conf k=v ...] [query ...]
+``--conf`` applies on top of both passes; queries default to bench.HEADLINE.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
-import time
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# Event-log totals reported per query and pass (perfbench/tracing.py names).
+LAYERS = (
+    "jobs",
+    "stages",
+    "tasks",
+    "run_s",
+    "cpu_s",
+    "gc_s",
+    "deserialize_s",
+    "shuffle_write_bytes",
+    "shuffle_fetch_wait_s",
+    "python_init_ms",
+    "python_run_ms",
+    "bytes_to_python",
+    "bytes_from_python",
+)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
-    extra: dict[str, str] = {
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
-    }
+    extra: dict[str, str] = {}
     only: list[str] = []
     args = sys.argv[1:]
     i = 0
@@ -37,48 +70,68 @@ def main() -> None:
             only.append(args[i])
             i += 1
 
-    import __spark_entry__ as entrymod
-    from bench import HEADLINE
+    import bench
     from duckdb_ner_spark.session import default_parallelism, get_spark
-    from duckdb_ner_spark.sources.catalog import TABLES, load_tables
+    from perfbench.tracing import PHASE_PROPERTY, event_log_totals
 
+    loadavg_start = os.getloadavg()
     cpus = default_parallelism()
-    extra.setdefault("spark.duckdb_ner.scanRepartition", str(cpus))
-    spark = get_spark("bench-profile", extra_conf=extra)
-    for k, v in extra.items():
-        try:
-            spark.conf.set(k, v)  # session may be reused; force runtime confs
-        except Exception:
-            pass
+    names = only or bench.HEADLINE
+    times: dict[tuple[str, str], list[tuple[float, float]]] = {}
+    with tempfile.TemporaryDirectory(prefix="bench_profile_eventlog_") as log_dir:
+        spark = get_spark(
+            "bench-profile",
+            extra_conf={
+                **bench.steady_conf(cpus),
+                **extra,
+                "spark.eventLog.enabled": "true",
+                "spark.eventLog.dir": "file://" + log_dir,
+                "spark.eventLog.compress": "false",
+            },
+        )
+        sc = spark.sparkContext
 
-    qs = entrymod.queries()
-    cat = load_tables(spark, sf_dir)
-    for t in TABLES:
-        cat.table(t).cache().count()
+        cold = bench.cold_session(spark)
+        # the cold session inherits every builder conf except COLD_CONF's resets
+        for k in extra.keys() & bench.COLD_CONF.keys():
+            cold.conf.set(k, extra[k])
+        for name in names:
+            sc.setLocalProperty(PHASE_PROPERTY, f"cold:{name}")
+            times["cold", name] = bench.time_query(cold, sf_dir, name, 1, False)
+        sc.setLocalProperty(PHASE_PROPERTY, None)
 
-    names = only or HEADLINE
-    rows = []
-    for name in names:
-        # warmup (codegen JIT)
-        qs[name](spark, sf_dir).count()
-        build = exec_ = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            t1 = time.time()
-            df.count()
-            t2 = time.time()
-            build = min(build, t1 - t0)
-            exec_ = min(exec_, t2 - t1)
-        rows.append((name, build, exec_))
+        bench.warm_steady(spark, sf_dir)
+        for name in names:
+            bench.time_query(spark, sf_dir, name, 0, True)  # untagged warmup
+            sc.setLocalProperty(PHASE_PROPERTY, f"steady:{name}")
+            times["steady", name] = bench.time_query(
+                spark, sf_dir, name, bench.STEADY_RUNS, False
+            )
+            sc.setLocalProperty(PHASE_PROPERTY, None)
+        spark.stop()  # flushes and closes the event log
+        totals = event_log_totals(log_dir)
 
-    print(f"{'query':<18} {'build':>7} {'exec':>7} {'total':>7}")
-    tb = te = 0.0
-    for name, b, e in rows:
-        print(f"{name:<18} {b:>7.3f} {e:>7.3f} {b + e:>7.3f}")
-        tb += b
-        te += e
-    print(f"{'TOTAL':<18} {tb:>7.3f} {te:>7.3f} {tb + te:>7.3f}")
+    queries: dict[str, dict[str, dict]] = {}
+    for (pass_, name), runs in times.items():
+        tot = totals.get(f"{pass_}:{name}", {})
+        queries.setdefault(name, {})[pass_] = {
+            "build_s": [round(b, 4) for b, _ in runs],
+            "exec_s": [round(e, 4) for _, e in runs],
+            "layers": {k: round(tot.get(k, 0.0) / len(runs), 6) for k in LAYERS},
+        }
+    print(
+        json.dumps(
+            {
+                "sf": sf,
+                "cpus": cpus,
+                "steady_runs": bench.STEADY_RUNS,
+                "conf": extra,
+                "loadavg_start": loadavg_start,
+                "loadavg_end": os.getloadavg(),
+                "queries": queries,
+            }
+        )
+    )
 
 
 if __name__ == "__main__":

@@ -7,9 +7,10 @@ key-offset replicas so join structure is preserved and replica texts are
 perturbed so they are not exact near-dups) and times a heavy-query subset
 with the noop sink at two core counts in FRESH processes.
 
-This is a measurement tool, not part of the driver contract: bench.py is
-untouched, queries are unchanged, the scaled corpus is INPUT data generated
-from the testdata parquet on every invocation (no result caching).
+This is a measurement tool, not part of the driver contract: it times
+through bench.time_query (bench's noop-sink action), queries are unchanged,
+the scaled corpus is INPUT data generated from the testdata parquet on
+every invocation (no result caching).
 
 Usage:
   python tools/bench_scale.py            # generate (if absent) + run 32 vs 8
@@ -28,7 +29,6 @@ import os
 import shutil
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, "/root/repo")
 
@@ -110,21 +110,15 @@ def run_pass(scaled_dir: str, runs: int) -> None:
     Engine-default session (AQE on, skew handling on) — at this tier there
     is real data for AQE to size, so the production configuration is the
     honest one; no sf0.1 bench knobs."""
-    import __spark_entry__ as entrymod
+    from bench import time_query
     from duckdb_ner_spark.session import get_spark
 
     spark = get_spark("bench_scale")
-    qs = entrymod.queries()
     timings = {}
     for name in QUERIES:
         spark.sparkContext.setJobDescription(f"scale-tier {name}")
-        qs[name](spark, scaled_dir).write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.time()
-            qs[name](spark, scaled_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        timings[name] = round(best, 3)
+        timed = time_query(spark, scaled_dir, name, runs, True)
+        timings[name] = round(min(b + e for b, e in timed), 3)
     print(json.dumps({"cpus": os.environ.get("SPARK_GRAFT_CPUS"), "queries": timings}))
 
 

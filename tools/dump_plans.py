@@ -4,8 +4,8 @@ Usage: python tools/dump_plans.py <out_dir> <suffix> <query> [query ...]
 
 Writes <out_dir>/<query>_<suffix>.txt for each query, planned at
 $SPARK_GRAFT_SF_DIR (default sf0.1) under the bench steady configuration
-(the same confs bench.py pins for the steady pass), matching the r13
-convention for plans/r*/ dumps.
+(``bench.steady_conf``, the confs bench.py pins for the steady pass),
+matching the r13 convention for plans/r*/ dumps.
 """
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -23,21 +23,10 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
 
     import __spark_entry__ as entrymod
+    from bench import steady_conf
     from duckdb_ner_spark.session import default_parallelism, get_spark
 
-    cpus = default_parallelism()
-    spark = get_spark(
-        "dump_plans",
-        extra_conf={
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
-            "spark.sql.shuffle.partitions": "8",
-            "spark.duckdb_ner.scanRepartition": str(min(cpus, 8)),
-            "spark.locality.wait": "0ms",
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.autoBroadcastJoinThreshold": "64m",
-        },
-    )
+    spark = get_spark("dump_plans", extra_conf=steady_conf(default_parallelism()))
     qs = entrymod.queries()
     for name in names:
         df = qs[name](spark, sf_dir)
