@@ -14,8 +14,10 @@ Matches the reference's numerical choices:
 
 This runs batched rows inside the ``ner()`` Arrow UDF — unlike the
 reference, which rebuilds a ggml graph per row (SURVEY.md §4.2), we amortize
-weights across the Arrow batch; BLAS underneath numpy provides the intra-op
-parallelism the reference got from 4 ggml threads.
+weights across the Arrow batch. Parallelism comes from Spark tasks, not from
+intra-op threads (the reference's 4 ggml threads): Spark starts Python workers
+with ``OMP_NUM_THREADS`` = task cpus (1), which NumPy's OpenBLAS follows when
+``OPENBLAS_NUM_THREADS`` is unset, so each task runs one BLAS thread.
 """
 
 from __future__ import annotations
@@ -36,7 +38,8 @@ def _layernorm(x: np.ndarray, w: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 
 def _gelu_tanh(x: np.ndarray) -> np.ndarray:
-    return 0.5 * x * (1.0 + np.tanh(_GELU_C * (x + 0.044715 * x**3)))
+    # x * x * x, not x**3: NumPy's power() has no fast path for a cube
+    return 0.5 * x * (1.0 + np.tanh(_GELU_C * (x + 0.044715 * (x * x * x))))
 
 
 def _softmax(x: np.ndarray) -> np.ndarray:

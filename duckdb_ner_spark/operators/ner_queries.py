@@ -48,6 +48,15 @@ def q_ner(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# q_ner_bert's model vocabulary: the documents corpus words
+BERT_DOC_VOCAB = [
+    "[CLS]", "[SEP]", "key", "agg", "row", "scan", "slow", "fast", "table",
+    "value", "part", "hash", "a", "the", "batch", "window", "spark", "order",
+    "data", "column", "join", "small", "line", "customer", "query", "merge",
+    "big", "filter", "sort", "stream", "group",
+]
+
+
 @declared("q_ner_bert", cache_plan=False)
 def q_ner_bert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full transformer inference at table scale: a deterministic tiny BERT
@@ -59,27 +68,25 @@ def q_ner_bert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.ner_udf import make_ner_udf
     from ..ner.ggml_format import write_ggml
 
-    doc_vocab = [
-        "[CLS]", "[SEP]", "key", "agg", "row", "scan", "slow", "fast", "table",
-        "value", "part", "hash", "a", "the", "batch", "window", "spark", "order",
-        "data", "column", "join", "small", "line", "customer", "query", "merge",
-        "big", "filter", "sort", "stream", "group",
-    ]
     model_path = os.path.join(tempfile.gettempdir(), "ner_bench_bert_v1.bin")
     if not os.path.exists(model_path):
         from tools.convert_model import random_model
 
         hp, tensors = random_model(
-            doc_vocab, n_embd=32, n_head=4, n_layer=2, n_labels=9, n_max_tokens=128, seed=11
+            BERT_DOC_VOCAB, n_embd=32, n_head=4, n_layer=2, n_labels=9, n_max_tokens=128, seed=11
         )
-        write_ggml(model_path, hp, doc_vocab, tensors)
+        # a killed or racing writer must not leave a truncated file at the
+        # final path: the silent loader would read it as "no model" forever
+        tmp_path = f"{model_path}.{os.getpid()}"
+        write_ggml(tmp_path, hp, BERT_DOC_VOCAB, tensors)
+        os.replace(tmp_path, model_path)
 
     t = load_tables(spark, sf_dir)
     udf = make_ner_udf(model_path, default_truncate=True)
     # REAL-inference regime (unlike stub-model q_ner): the forward pass costs
-    # ~1.8 ms/doc (sf0.1: 9.08 s single-core for 5 000 docs), so stage width
-    # = every core beats the shuffle it costs at any scale — noop-sink A/B
-    # at sf0.1 (r13): 8-wide 1.400 s vs 16-wide 1.118 s vs 32-wide 0.896 s.
+    # ~0.58 ms/doc on one BLAS thread (sf0.1: 2.9 s for 5 000 docs), so stage
+    # width = every core beats its shuffle at any scale — noop-sink A/B at
+    # sf0.1 (r13, before the x*x*x GELU): 8/16/32-wide 1.400/1.118/0.896 s.
     # q_ner's no-repart choice does NOT transfer here; its count()-timed
     # cell never executed the UDF (Catalyst prunes an unreferenced project —
     # OPTIMIZATION_r13.md §bench measurement note).

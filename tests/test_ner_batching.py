@@ -1,5 +1,7 @@
 """Cross-row batched inference + broadcast model distribution tests."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -15,8 +17,29 @@ def ggml_path(tmp_path_factory):
     return path
 
 
-def test_batched_eval_bit_identical_to_per_row(ggml_path):
+def _document_texts(n: int = 200, seed: int = 3) -> list[str]:
+    """Seeded texts over the documents corpus words (incl. ``dup``, which
+    the model vocabulary lacks): the empty text, 1-139 words (past
+    q_ner_bert's 128-token cap), then 20 exact duplicates of earlier rows."""
+    from duckdb_ner_spark.operators.ner_queries import BERT_DOC_VOCAB
+
+    rng = np.random.RandomState(seed)
+    words = np.array(BERT_DOC_VOCAB[2:] + ["dup"])
+    texts = [""] + [
+        " ".join(rng.choice(words, size=rng.randint(1, 140))) for _ in range(n - 21)
+    ]
+    return texts + [texts[i] for i in rng.randint(0, len(texts), size=20)]
+
+
+def test_batched_eval_bit_identical_to_per_row(ggml_path, tmp_path):
+    """q_ner_bert's rows-only pin: eval_tokens_batch equals eval_tokens
+    bitwise, on hand-made rows and on document-length rows through two model
+    shapes (so the GELU runs at two FFN widths)."""
+    from duckdb_ner_spark.ner.ggml_format import write_ggml
     from duckdb_ner_spark.ner.model import load_model
+    from duckdb_ner_spark.ner.tokenizer import tokenize
+    from duckdb_ner_spark.operators.ner_queries import BERT_DOC_VOCAB
+    from tools.convert_model import random_model
 
     m = load_model(ggml_path)
     ids = m.vocab.token_to_id
@@ -29,6 +52,48 @@ def test_batched_eval_bit_identical_to_per_row(ggml_path):
     batched = m.eval_tokens_batch(rows)
     for toks, lg in zip(rows, batched):
         np.testing.assert_array_equal(lg, m.eval_tokens(toks))
+
+    texts = _document_texts()
+    # q_ner_bert's own shape, then a wider FFN
+    for shape in (dict(n_embd=32, n_head=4, seed=11),
+                  dict(n_embd=64, n_head=8, n_intermediate=256, seed=5)):
+        path = str(tmp_path / f"doc_{shape['n_embd']}.bin")
+        hp, t = random_model(BERT_DOC_VOCAB, n_layer=2, n_labels=9, n_max_tokens=128, **shape)
+        write_ggml(path, hp, BERT_DOC_VOCAB, t)
+        m = load_model(path)
+        rows = [tokenize(m.vocab, text, m.n_max_tokens) for text in texts]
+        lengths = {len(r) for r in rows}
+        assert len(lengths) >= 40 and 2 in lengths and m.n_max_tokens in lengths
+        batched = m.eval_tokens_batch(rows)
+        for toks, lg in zip(rows, batched):
+            np.testing.assert_array_equal(lg, m.eval_tokens(toks))
+
+
+def test_gelu_tanh_numerics():
+    """The GELU is the float32 tanh formula: within 5e-7·max(1, |x|) of its
+    float64 evaluation, equal to it at ±inf and NaN, and far enough from the
+    erf GELU (up to 4.7e-4 apart) that swapping it in fails."""
+    import math
+
+    from duckdb_ner_spark.ner.bert_numpy import _GELU_C, _gelu_tanh
+
+    special = [0.0, 1e-30, -1e-30, 1e4, -1e4, np.inf, -np.inf, np.nan]
+    x = np.concatenate([np.linspace(-12, 12, 4801), special]).astype(np.float32)
+    x64 = x.astype(np.float64)
+    with np.errstate(invalid="ignore", over="ignore"):
+        want = 0.5 * x64 * (1.0 + np.tanh(_GELU_C * (x64 + 0.044715 * x64**3)))
+        erf_gelu = 0.5 * x64 * (1.0 + np.vectorize(math.erf)(x64 / math.sqrt(2.0)))
+        got = _gelu_tanh(x)
+    assert got.dtype == np.float32
+    finite = np.isfinite(x64)
+    bound = 5e-7 * np.maximum(1.0, np.abs(x64[finite]))
+
+    def within(y):
+        return bool(np.all(np.abs(y[finite] - want[finite]) <= bound))
+
+    assert within(got.astype(np.float64))
+    np.testing.assert_array_equal(got[~finite], want[~finite])
+    assert not within(erf_gelu)
 
 
 def test_broadcast_model_distribution(engine, ggml_path):
@@ -52,3 +117,33 @@ def test_broadcast_json_stub(engine):
     row = engine.spark.sql("SELECT ner('sam is in new york') AS e").collect()[0]
     assert [(e.entity, e.label) for e in row.e] == [("sam", "PER"), ("new york", "LOC")]
     engine.set_model_path(None)
+
+
+def test_q_ner_bert_model_write_is_atomic(spark, monkeypatch, tmp_path):
+    """A writer killed mid-write leaves no file at q_ner_bert's model path
+    (the loader would read a truncated one as "no model"), and the next
+    build writes a loadable model."""
+    import tempfile
+
+    from duckdb_ner_spark.ner import ggml_format
+    from duckdb_ner_spark.ner.model import load_model
+    from duckdb_ner_spark.operators.ner_queries import q_ner_bert
+    from tests.conftest import SF_SMOKE
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    final = tmp_path / "ner_bench_bert_v1.bin"
+    write_ggml = ggml_format.write_ggml
+
+    def killed_mid_write(path, *args):
+        write_ggml(path, *args)
+        os.truncate(path, os.path.getsize(path) // 2)
+        raise OSError("killed mid-write")
+
+    monkeypatch.setattr(ggml_format, "write_ggml", killed_mid_write)
+    with pytest.raises(OSError, match="killed mid-write"):
+        q_ner_bert(spark, SF_SMOKE)
+    assert not final.exists()
+
+    monkeypatch.setattr(ggml_format, "write_ggml", write_ggml)
+    q_ner_bert(spark, SF_SMOKE)
+    assert load_model(str(final)) is not None
