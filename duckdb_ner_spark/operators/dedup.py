@@ -8,6 +8,9 @@ Operators:
 - n-gram inverted index    — common-shingle join + Jaccard  (q_dedup_ngram)
 - SimHash                  — bitwise majority + banded hamming (q_dedup_simhash)
 - embedding-cosine near-dup— normalized dot over candidates (q_dedup_embed)
+- keep-best collapse, record linkage, prefix-filtered exact set-similarity
+  join, LSH recall audit and sweeps, SimHash sweep, SemDeDup, and URL
+  canonicalization dedup
 
 Scale notes (100 TB):
 - every operator is a constant number of shuffles, each keyed on a
@@ -28,12 +31,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.exprcache import cached_exprs
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
+from .components import clusters_oracle, connected_components
 from .textprep import seeded_md5, shingles_expr, sql_shingles, words_col
 
 # ---------------------------------------------------------------------------
@@ -70,7 +74,7 @@ LSH_BUCKET_CAP = 64
 from .caps import N_CAP_SALTS, capped_bucket_ids, sql_capped_bucket_ctes  # noqa: F401,E402
 
 
-def _minhash_cols() -> list[F.Column]:
+def minhash_cols() -> list[F.Column]:
     """The N_HASHES per-row min-hash columns: array_min over a transform of
     the shingle array — a NARROW expression (no explode, no aggregation, no
     shuffle). The earlier explode→groupBy formulation carried each doc's
@@ -211,7 +215,7 @@ def dedup_near_minhash(
     )
     # One narrow pass: signature AND the shingle array for Jaccard verify in
     # the same persisted frame — per-row expressions, zero pre-join shuffles.
-    sigsh = docs.select(id_col, "shingles", *cached_exprs("minhash_cols", _minhash_cols)).persist()
+    sigsh = docs.select(id_col, "shingles", *cached_exprs("minhash_cols", minhash_cols)).persist()
     cand = lsh_candidate_pairs(sigsh, id_col)
     return jaccard_verify(cand, sigsh.select(id_col, "shingles"), id_col, "shingles", threshold)
 
@@ -227,7 +231,7 @@ def minhash_bands(
         .select(id_col, cached_exprs("shingles_ws3", shingles_expr).alias("shingles"))
         .filter(F.size("shingles") > 0)
     )
-    sigs = docs.select(id_col, *cached_exprs("minhash_cols", _minhash_cols))
+    sigs = docs.select(id_col, *cached_exprs("minhash_cols", minhash_cols))
     band_expr = cached_exprs("minhash_band_sigs", _band_sigs_expr)
     return sigs.select(F.col(id_col), F.posexplode(band_expr).alias("band", "sig"))
 
@@ -640,7 +644,7 @@ def q_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", cached_exprs("shingles_ws3", shingles_expr).alias("shingles"))
         .filter(F.size("shingles") > 0)
     )
-    sigsh = docs.select("doc_id", "shingles", *cached_exprs("minhash_cols", _minhash_cols)).persist()
+    sigsh = docs.select("doc_id", "shingles", *cached_exprs("minhash_cols", minhash_cols)).persist()
     cand = lsh_candidate_pairs(sigsh, "doc_id")
     a = sigsh.select(
         F.col("doc_id").alias("doc_a"),
@@ -895,7 +899,7 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("shingles") > 0)
     )
     sigsh = docs.select(
-        "doc_id", "shingles", *cached_exprs("minhash_cols", _minhash_cols)
+        "doc_id", "shingles", *cached_exprs("minhash_cols", minhash_cols)
     ).persist()
     pairs = lsh_candidate_pairs(sigsh, "doc_id")
     x = sigsh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
@@ -1005,5 +1009,1146 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_b",
             F.expr("n_common * 1e0 / (n_a + n_b - n_common)").alias("jaccard"),
             F.expr("n_common * 1e0 / LEAST(n_a, n_b)").alias("containment"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Quality-aware near-dup collapse (keep the BEST of each cluster, not min-id)
+# --------------------------------------------------------------------------
+
+_KEEP_BEST_ORACLE = (
+    clusters_oracle()
+    + """, best AS (
+        SELECT comp, doc_id, n_chars,
+               ROW_NUMBER() OVER (PARTITION BY comp
+                                  ORDER BY n_chars DESC, doc_id) AS rn
+        FROM comps JOIN documents ON doc_id = node
+    )
+    SELECT CAST(comp AS BIGINT) AS cluster_id,
+           CAST(doc_id AS BIGINT) AS keeper_id,
+           CAST(n_chars AS BIGINT) AS keeper_chars,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM comps c WHERE c.comp = best.comp)
+               AS n_members
+    FROM best WHERE rn = 1
+"""
+)
+
+
+@declared("q_dedup_keep_best", oracle=_KEEP_BEST_ORACLE)
+def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-aware cluster collapse: for every near-dup cluster
+    (q_dedup_clusters' MinHash-LSH + connected components), keep the
+    HIGHEST-QUALITY member — here argmax (n_chars, lowest doc_id as the
+    tiebreak) — instead of collapse_near_dups' min-id convention. This is
+    what production dedup actually ships: when a boilerplate cluster holds
+    one full article and thirty truncated scrapes, min-id keeps an
+    arbitrary member; keep-best keeps the article.
+
+    Engine-exactness: the representative is an integer argmax under a
+    total order — Spark max_by over a (n_chars, -doc_id) struct, DuckDB a
+    partitioned ROW_NUMBER — both resolve ties identically. Scale: the
+    cluster table is pairs-sized (tiny relative to the corpus); the
+    quality join touches only clustered docs (semi-join pushdown)."""
+
+    t = load_tables(spark, sf_dir)
+    pairs = dedup_near_minhash(t.documents, threshold=0.6).select("doc_a", "doc_b")
+    comps = connected_components(pairs)
+    members = comps.join(
+        t.documents.select(F.col("doc_id").alias("node"), "n_chars"), "node"
+    )
+    return (
+        members.groupBy("comp")
+        .agg(
+            F.max_by(
+                F.struct(F.col("node").alias("doc_id"), F.col("n_chars")),
+                F.struct(F.col("n_chars"), (-F.col("node")).alias("tb")),
+            ).alias("best"),
+            F.count("*").cast("bigint").alias("n_members"),
+        )
+        .select(
+            F.col("comp").cast("bigint").alias("cluster_id"),
+            F.col("best.doc_id").cast("bigint").alias("keeper_id"),
+            F.col("best.n_chars").cast("bigint").alias("keeper_chars"),
+            "n_members",
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Blocked record linkage (entity resolution)
+# --------------------------------------------------------------------------
+
+RL_BLOCK_CAP = 64  # records per block entering the pair join (caps.py idiom)
+RL_CLOSE_DIST = 12  # "close pair" threshold on the 5-word part names
+
+
+def _linkage_oracle() -> str:
+
+    return f"""
+    WITH recs AS (
+        SELECT p_partkey, p_name,
+               string_split(p_name, ' ')[1] AS bk
+        FROM part
+    ), bands AS (
+        SELECT 0 AS band, bk AS sig, p_partkey FROM recs
+    ), {sql_capped_bucket_ctes("bands", "p_partkey", RL_BLOCK_CAP)}, kept AS (
+        SELECT c.sig AS bk, c.p_partkey, r.p_name
+        FROM capped c JOIN recs r USING (p_partkey)
+    ), pairs AS (
+        SELECT a.bk, levenshtein(a.p_name, b.p_name) AS d
+        FROM kept a JOIN kept b
+          ON a.bk = b.bk AND a.p_partkey < b.p_partkey
+    )
+    SELECT k.bk AS block_key,
+           CAST(COUNT(DISTINCT k.p_partkey) AS BIGINT) AS n_records,
+           CAST((SELECT COUNT(*) FROM pairs p WHERE p.bk = k.bk) AS BIGINT)
+               AS n_pairs,
+           CAST((SELECT COUNT(*) FROM pairs p
+                 WHERE p.bk = k.bk AND p.d <= {RL_CLOSE_DIST}) AS BIGINT)
+               AS n_close,
+           CAST((SELECT MIN(p.d) FROM pairs p WHERE p.bk = k.bk) AS BIGINT)
+               AS min_dist
+    FROM kept k GROUP BY k.bk
+"""
+
+
+@declared("q_record_linkage", oracle=_linkage_oracle())
+def q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocked record linkage (entity resolution) over part names — the
+    dedup family's STRING-SIMILARITY member: q_fuzzy proves the
+    edit-distance surface on a 25-row dim; this runs it at table scale
+    the only way that scales — BLOCKING. Records block on a cheap key
+    (first name word), each block is capped at {RL_BLOCK_CAP} smallest
+    keys by the shared bounded-state min-k (caps.py — the LSH hot-bucket
+    guard reused verbatim on a 1-band index), and Levenshtein runs ONLY
+    on in-block pairs: O(Σ block²) bounded, never O(n²). Output is the
+    per-block linkage scorecard (records, pairs checked, close pairs,
+    min distance) — the audit that sizes a merge/survivorship pass.
+
+    Engine-exactness: both engines' levenshtein is the classic DP edit
+    distance (q_fuzzy pins hash equality); counts/min are integers; the
+    block cap is deterministic (smallest keys survive) and replayed by
+    the shared SQL fragment.
+
+    Scale notes (100 TB): the blocking key shuffles (key, name) digests of
+    the record set, never full records; since r14 the per-block scorecard
+    is computed INSIDE each block's capped array row — the block self-join
+    (which re-evaluated the whole cap chain per join side, Spark sharing no
+    common subtrees across branches) and the n_records/pair_stats re-attach
+    joins are gone; one cap chain (2 exchanges) is the entire plan. A
+    production pass would follow with union-find over close pairs
+    (components.py) for cluster collapse."""
+    from .caps import capped_bucket_id_arrays
+
+    t = load_tables(spark, sf_dir)
+    # rec = struct(p_partkey, p_name): p_partkey is distinct, so struct
+    # order == key order and the cap's min-k survivor set is EXACTLY the
+    # old min-k over bare p_partkey — the name rides along so Levenshtein
+    # never needs a join back to the record table.
+    bands = t.part.select(
+        F.lit(0).alias("band"),
+        F.split("p_name", " ").getItem(0).alias("sig"),
+        F.struct(F.col("p_partkey"), F.col("p_name")).alias("rec"),
+    )
+    blocks = capped_bucket_id_arrays(
+        bands, "rec", RL_BLOCK_CAP, salt_on=F.col("rec.p_partkey")
+    )
+    # All i<j in-block pair distances as one array per block (sorted array
+    # ⇒ i<j ⇔ key_i<key_j — the exact a<b pair set of the retired
+    # self-join), then the scorecard folds out of that array: no joins.
+    blocks = blocks.select(
+        F.col("sig").alias("block_key"),
+        F.size("__ids__").alias("n_recs_i"),
+        F.expr(
+            "flatten(transform(__ids__, (a, i) -> "
+            "transform(slice(__ids__, i + 2, size(__ids__)), "
+            "b -> levenshtein(a.p_name, b.p_name))))"
+        ).alias("__d__"),
+    )
+    return blocks.select(
+        "block_key",
+        F.col("n_recs_i").cast("bigint").alias("n_records"),
+        F.size("__d__").cast("bigint").alias("n_pairs"),
+        F.size(F.filter("__d__", lambda d: d <= RL_CLOSE_DIST))
+        .cast("bigint")
+        .alias("n_close"),
+        F.array_min("__d__").cast("bigint").alias("min_dist"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Prefix-filtered EXACT set-similarity join (PPJoin-style)
+# --------------------------------------------------------------------------
+
+SETSIM_TAU_N = 7  # Jaccard threshold τ = 7/10 as an exact rational
+SETSIM_TAU_D = 10
+
+
+def _setsim_oracle() -> str:
+    n, d = SETSIM_TAU_N, SETSIM_TAU_D
+    return f"""
+    WITH {sql_setsim_pairs_ctes(n, d)}
+    SELECT doc_a, doc_b, inter_sz, union_sz,
+           CAST((10000 * inter_sz) // union_sz AS BIGINT) AS jaccard_bp
+    FROM ss_pairs
+"""
+
+
+def sql_setsim_pairs_ctes(n: int, d: int, prefix: str = "ss") -> str:
+    """The oracle-side prefix-filtered exact set-similarity chain as ONE
+    shared fragment (the sql_minhash_capped_cand pattern): defines
+    {prefix}_sh / {prefix}_sz / ... / {prefix}_pairs(doc_a, doc_b,
+    inter_sz, union_sz) for Jaccard ≥ n/d over 3-word shingles of
+    ``documents``. Prefixed so it composes with other CTE chains (the
+    recall audit embeds it beside the MinHash replay)."""
+    p = prefix
+    return f"""{p}_w0 AS (
+        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+    ), {p}_s0 AS (
+        SELECT doc_id, {sql_shingles(3)} AS sh FROM {p}_w0
+    ), {p}_sh AS (
+        SELECT doc_id, unnest(sh) AS w FROM {p}_s0 WHERE len(sh) > 0
+    ), {p}_sz AS (
+        SELECT doc_id, CAST(len(sh) AS BIGINT) AS n FROM {p}_s0 WHERE len(sh) > 0
+    ), {p}_dfreq AS (
+        SELECT w, COUNT(*) AS df FROM {p}_sh GROUP BY 1
+    ), {p}_pre AS (
+        SELECT doc_id, w, n, rnk FROM (
+            SELECT t.doc_id, t.w, sz.n,
+                   ROW_NUMBER() OVER (PARTITION BY t.doc_id
+                                      ORDER BY d.df ASC, t.w ASC) AS rnk
+            FROM {p}_sh t JOIN {p}_dfreq d USING (w) JOIN {p}_sz sz USING (doc_id)
+        ) WHERE rnk <= n - ({n} * n + {d - 1}) // {d} + 1
+    ), {p}_cand AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM {p}_pre a JOIN {p}_pre b ON a.w = b.w AND a.doc_id < b.doc_id
+        WHERE {d} * LEAST(a.n, b.n) >= {n} * GREATEST(a.n, b.n)
+          AND 1 + LEAST(a.n - a.rnk, b.n - b.rnk)
+              >= ({n} * (a.n + b.n) + {n + d - 1}) // {n + d}
+    ), {p}_inter AS (
+        SELECT c.doc_a, c.doc_b, CAST(COUNT(*) AS BIGINT) AS inter_sz
+        FROM {p}_cand c
+        JOIN {p}_sh ta ON ta.doc_id = c.doc_a
+        JOIN {p}_sh tb ON tb.doc_id = c.doc_b AND tb.w = ta.w
+        GROUP BY 1, 2
+    ), {p}_pairs AS (
+        SELECT i.doc_a, i.doc_b, i.inter_sz,
+               CAST(a.n + b.n - i.inter_sz AS BIGINT) AS union_sz
+        FROM {p}_inter i JOIN {p}_sz a ON a.doc_id = i.doc_a
+                         JOIN {p}_sz b ON b.doc_id = i.doc_b
+        WHERE {d} * i.inter_sz >= {n} * (a.n + b.n - i.inter_sz)
+    )"""
+
+
+@declared("q_setsim_prefix", oracle=_setsim_oracle())
+def q_setsim_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Prefix-filtered EXACT set-similarity join (the PPJoin/AllPairs
+    family) — the lossless counterpart to MinHash-LSH (q_dedup_near): all
+    document pairs with shingle-set Jaccard ≥ τ={SETSIM_TAU_N}/{SETSIM_TAU_D},
+    with NO false negatives. Prefix-filter lemma: order every document's
+    shingles by ascending global document frequency (rarest first, shingle
+    string tiebreak); if J(x,y) ≥ τ the two prefixes of length
+    |s| − ⌈τ|s|⌉ + 1 must share a token — so only prefixes are indexed,
+    and the inverted-index self-join runs over each document's RAREST
+    shingles (measured at sf0.01: 26 candidates from 124,750 possible
+    pairs, 25 true matches — the filter does the work and the exact verify
+    is near-free). The length filter τ·max(|a|,|b|) ≤ min(|a|,|b|) and
+    PPJoin's POSITIONAL filter (overlap ≤ 1 + min(n−rank) at the matched
+    prefix positions, exactness argument at the cand step below) prune
+    inside the join — measured at sf0.1: 104,502 → 33,389 candidates for
+    the same 256 true matches.
+
+    vs q_dedup_ngram: that query bounds the inverted index by TRUNCATING
+    at a df cap (approximate recall, bounded worst case); this one is
+    EXACT — boundedness comes from rarest-first ordering (a high-df
+    shingle enters a prefix only when a document has nothing rarer, so
+    hot-token buckets shrink as τ grows).
+
+    Engine-exactness: integer set sizes; ⌈τn⌉ = (7n+9)//10 and the τ
+    comparisons cross-multiplied in BIGINT (10·inter ≥ 7·union) — no
+    float thresholds; the prefix rank ordering (df, shingle) is a total
+    order, so ROW_NUMBER is deterministic in both engines.
+
+    Plan shape (100 TB): shingle explode → two map-side-combined
+    aggregates (df, sizes) → partition-bounded rank window (per doc) →
+    inverted-index equi-join on prefix tokens only → distinct candidate
+    pairs → exact verify via array_intersect on the (persisted) shingle
+    arrays. Shuffles carry shingle digests and doc ids, never document
+    text."""
+    t = load_tables(spark, sf_dir)
+    pairs = setsim_exact_pairs(t.documents, SETSIM_TAU_N, SETSIM_TAU_D)
+    return pairs.select(
+        "doc_a",
+        "doc_b",
+        "inter_sz",
+        "union_sz",
+        F.expr("CAST((10000 * inter_sz) div union_sz AS BIGINT)").alias("jaccard_bp"),
+    )
+
+
+def setsim_exact_pairs(documents: DataFrame, n: int, d: int) -> DataFrame:
+    """The q_setsim_prefix core on an arbitrary documents frame → all
+    (doc_a, doc_b, inter_sz, union_sz) with 3-shingle Jaccard ≥ n/d —
+    shared with the LSH recall audit, where it is the exact ground
+    truth."""
+    docs = (
+        documents.select("doc_id", words_col().alias("ws"))
+        .select("doc_id", shingles_expr().alias("sh"))
+        .filter(F.size("sh") > 0)
+        .select("doc_id", "sh", F.size("sh").cast("bigint").alias("n"))
+        .persist()
+    )
+    sh = docs.select("doc_id", "n", F.explode("sh").alias("w"))
+    dfreq = sh.groupBy("w").agg(F.count("*").alias("df"))
+    rk = sh.join(dfreq, "w").select(
+        "doc_id",
+        "w",
+        "n",
+        F.row_number()
+        .over(Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("w")))
+        .alias("rnk"),
+    )
+    pre = rk.filter(
+        F.col("rnk") <= F.col("n") - F.expr(f"({n} * n + {d - 1}) div {d}") + 1
+    ).select("doc_id", "w", "n", "rnk")
+    a = pre.select(
+        F.col("doc_id").alias("doc_a"),
+        "w",
+        F.col("n").alias("n_a"),
+        F.col("rnk").alias("rnk_a"),
+    )
+    b = pre.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("w").alias("w_b"),
+        F.col("n").alias("n_b"),
+        F.col("rnk").alias("rnk_b"),
+    )
+    # positional filter (PPJoin): both prefixes are sorted by the SAME
+    # global (df, w) order, so every common shingle of a candidate pair
+    # sits at-or-after the matched positions — overlap ≤ 1 + min(n_a−i,
+    # n_b−j). The pair's FIRST shared token carries the loosest (and
+    # always valid) bound, so OR-ing the per-token filter through the
+    # DISTINCT keeps exactness while pruning deep-prefix-only matches
+    # (measured at sf0.1: 104,502 → far fewer candidate pairs). Required
+    # overlap α = ⌈τ/(1+τ)·(n_a+n_b)⌉, cross-multiplied in integers.
+    cand = (
+        a.join(b, (F.col("w") == F.col("w_b")) & (F.col("doc_a") < F.col("doc_b")))
+        .filter(
+            (F.lit(d) * F.least("n_a", "n_b") >= F.lit(n) * F.greatest("n_a", "n_b"))
+            & (
+                F.lit(1)
+                + F.least(
+                    F.col("n_a") - F.col("rnk_a"), F.col("n_b") - F.col("rnk_b")
+                )
+                >= F.expr(f"({n} * (n_a + n_b) + {n + d - 1}) div {n + d}")
+            )
+        )
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+    x = docs.select(
+        F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"), F.col("n").alias("na")
+    )
+    y = docs.select(
+        F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"), F.col("n").alias("nb")
+    )
+    return (
+        cand.join(x, "doc_a")
+        .join(y, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint").alias("inter_sz"),
+            F.col("na"),
+            F.col("nb"),
+        )
+        .select(
+            "doc_a",
+            "doc_b",
+            "inter_sz",
+            (F.col("na") + F.col("nb") - F.col("inter_sz"))
+            .cast("bigint")
+            .alias("union_sz"),
+        )
+        .filter(F.lit(d) * F.col("inter_sz") >= F.lit(n) * F.col("union_sz"))
+    )
+
+
+# --------------------------------------------------------------------------
+# LSH recall audit against the EXACT set-similarity ground truth
+# --------------------------------------------------------------------------
+
+
+def _lsh_recall_oracle() -> str:
+
+    return f"""
+    WITH {sql_setsim_pairs_ctes(6, 10)}, docs2 AS (
+        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+    ), sh2 AS (
+        SELECT doc_id, {sql_shingles(3)} AS shingles FROM docs2
+    ), e AS (
+        SELECT doc_id, unnest(shingles) AS s FROM sh2
+    ), {sql_minhash_capped_cand()}, lshp AS (
+        SELECT doc_a, doc_b
+        FROM cand JOIN sh2 x ON x.doc_id = doc_a JOIN sh2 y ON y.doc_id = doc_b
+        WHERE 10 * LEN(LIST_INTERSECT(x.shingles, y.shingles))
+              >= 6 * LEN(LIST_DISTINCT(x.shingles || y.shingles))
+    ), audit AS (
+        SELECT (10000 * p.inter_sz) // p.union_sz // 1000 AS jband,
+               CASE WHEN l.doc_a IS NULL THEN 0 ELSE 1 END AS hit
+        FROM ss_pairs p LEFT JOIN lshp l
+          ON l.doc_a = p.doc_a AND l.doc_b = p.doc_b
+    )
+    SELECT CAST(jband AS BIGINT) AS jband,
+           CAST(COUNT(*) AS BIGINT) AS n_true,
+           CAST(SUM(hit) AS BIGINT) AS n_hit,
+           CAST(COUNT(*) - SUM(hit) AS BIGINT) AS n_missed,
+           CAST((10000 * SUM(hit)) // COUNT(*) AS BIGINT) AS recall_bp
+    FROM audit GROUP BY 1
+"""
+
+
+@declared("q_lsh_recall_audit", oracle=_lsh_recall_oracle())
+def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IN-PLAN recall audit of the MinHash-LSH near-dedup against the
+    EXACT prefix-filtered join — the q_ann_recall pattern applied to the
+    dedup family, now possible because q_setsim_prefix provides lossless
+    ground truth relationally: every τ=0.6 pair the exact join proves,
+    left-joined against the pairs q_dedup_near's banded+capped+verified
+    pipeline actually finds, bucketed by Jaccard decile. High-J pairs
+    should be near-impossible for 4-band/2-hash signatures to miss; the
+    per-band recall readout is the quantitative form of that claim —
+    computed, hash-verified, not asserted.
+
+    Soundness: the LSH verify keeps exactly the float-Jaccard ≥ 0.6
+    pairs; for set sizes below ~10¹⁴ no rational inter/union lies
+    strictly between 3/5 and double(0.6), so the float filter and the
+    audit's BIGINT cross-multiplication (10·inter ≥ 6·union) define the
+    SAME pair set — LSH results are a genuine subset of the exact truth
+    and recall_bp ≤ 10000 by construction.
+
+    Plan shape (100 TB): the two pair generators are the audited
+    operators themselves (both bounded: prefix-filter + caps); the audit
+    adds one doc-pair equi-join and a 5-row aggregate. Run it on a
+    sampled partition in production — the plan is identical."""
+
+    t = load_tables(spark, sf_dir)
+    true_pairs = setsim_exact_pairs(t.documents, 6, 10)
+    lsh = dedup_near_minhash(t.documents, threshold=0.6).select(
+        "doc_a", "doc_b", F.lit(1).alias("hit")
+    )
+    audit = true_pairs.join(lsh, ["doc_a", "doc_b"], "left").select(
+        F.expr("CAST((10000 * inter_sz) div union_sz div 1000 AS BIGINT)").alias(
+            "jband"
+        ),
+        F.coalesce("hit", F.lit(0)).alias("hit"),
+    )
+    return audit.groupBy("jband").agg(
+        F.count("*").cast("bigint").alias("n_true"),
+        F.sum("hit").cast("bigint").alias("n_hit"),
+        (F.count("*") - F.sum("hit")).cast("bigint").alias("n_missed"),
+        F.expr("CAST((10000 * SUM(hit)) div COUNT(*) AS BIGINT)").alias("recall_bp"),
+    )
+
+
+# --------------------------------------------------------------------------
+# SemDeDup: semantic dedup via trained cells + within-cell cosine collapse
+# --------------------------------------------------------------------------
+
+SEMDEDUP_CELLS = 16  # coarse cells (K ∝ corpus size at scale)
+SEMDEDUP_CELL_ITERS = 2
+SEMDEDUP_TAU_FX = 350_000  # cosine ≥ 0.35 ⇒ semantic duplicate
+SEMDEDUP_FX = 1_000_000
+
+
+def _semdedup_oracle() -> str:
+    from .pq import sql_pq_train_ctes
+
+    return f"""
+    WITH ex AS MATERIALIZED (
+        SELECT vec_id, 0 AS m, i - 1 AS i,
+               CAST(ROUND(CAST(x AS DOUBLE) * {SEMDEDUP_FX}) AS BIGINT) AS xi
+        FROM (SELECT vec_id, unnest(embedding) AS x,
+                     generate_subscripts(embedding, 1) AS i
+              FROM embeddings)
+    ), {sql_pq_train_ctes("ex", 0, SEMDEDUP_CELLS, SEMDEDUP_CELL_ITERS, "sd")},
+    assign AS MATERIALIZED (
+        SELECT vec_id, code AS cell FROM (
+            SELECT e.vec_id, cb.code,
+                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                       ORDER BY SUM((e.xi - cb.ci) * (e.xi - cb.ci)) ASC,
+                                cb.code ASC) AS rn
+            FROM ex e JOIN sd_cb{SEMDEDUP_CELL_ITERS} cb ON cb.i = e.i
+            GROUP BY e.vec_id, cb.code
+        ) WHERE rn = 1
+    ), pairs AS MATERIALIZED (
+        SELECT a.vec_id AS va, b.vec_id AS vb
+        FROM assign a JOIN assign b
+          ON a.cell = b.cell AND a.vec_id < b.vec_id
+    ), norms AS MATERIALIZED (
+        SELECT vec_id, SQRT(CAST(SUM(xi * xi) AS DOUBLE)) AS nrm
+        FROM ex GROUP BY vec_id
+    ), dots AS (
+        SELECT p.va, p.vb, CAST(SUM(xa.xi * xb.xi) AS BIGINT) AS dot
+        FROM pairs p
+        JOIN ex xa ON xa.vec_id = p.va
+        JOIN ex xb ON xb.vec_id = p.vb AND xb.i = xa.i
+        GROUP BY 1, 2
+    ), dup AS (
+        SELECT d.vb
+        FROM dots d
+        JOIN norms na ON na.vec_id = d.va
+        JOIN norms nb ON nb.vec_id = d.vb
+        WHERE na.nrm > 0 AND nb.nrm > 0
+          AND CAST(ROUND(CAST(d.dot AS DOUBLE) / (na.nrm * nb.nrm)
+                         * {SEMDEDUP_FX}) AS BIGINT) >= {SEMDEDUP_TAU_FX}
+        GROUP BY 1
+    )
+    SELECT CAST(a.cell AS BIGINT) AS cell,
+           CAST(COUNT(*) AS BIGINT) AS n_members,
+           CAST(COUNT(dup.vb) AS BIGINT) AS n_dropped,
+           CAST((10000 * COUNT(dup.vb)) // COUNT(*) AS BIGINT) AS drop_bp
+    FROM assign a LEFT JOIN dup ON dup.vb = a.vec_id
+    GROUP BY 1
+"""
+
+
+@declared("q_semdedup", oracle=_semdedup_oracle())
+def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup (Abbas et al. 2023) — SEMANTIC deduplication, the
+    embedding-space member of the dedup family (exact: q_dedup_exact;
+    lexical near-dup: q_dedup_near/q_setsim_prefix; embedding-LSH pairs:
+    q_dedup_embed; THIS: cluster-then-collapse): k-means cells from the
+    round-9 trained quantizer (pq.train_pq_codebook, ONE subspace over
+    all dims) bucket the corpus; within each cell every (lower-id,
+    higher-id) pair is scored by exact fixed-point cosine and the
+    higher id is DROPPED when cosine_fx ≥ {SEMDEDUP_TAU_FX} (the
+    keep-first collapse rule of q_dedup_near, no transitive closure).
+    Output is the per-cell census — members, dropped, drop rate — the
+    yield forecast a semantic-dedup pass reports before a corpus-wide
+    collapse (33% at sf0.1, 13% at sf0.01 at τ=0.35).
+
+    Engine-exactness: cell training replays in-oracle (sql_pq_train_ctes);
+    dots are BIGINT sums on the ×{SEMDEDUP_FX} grid; norms are SQRT of
+    exact BIGINT (the one bit-exact transcendental); cosine_fx is ONE
+    double divide+round — the q_sim_ivf idiom.
+
+    Scale notes (100 TB): cells are the unit of parallelism — the
+    within-cell pair join never crosses cells, and K scales with the
+    corpus so cell size (and the per-cell pair count) stays constant;
+    degenerate hot cells would take the caps.py bounded min-k exactly
+    like the LSH buckets. The verify joins carry vectors ONCE per side
+    (norms precomputed per vector, the q_sim_ann prenorm rule); the
+    census is one map-side-combined aggregate."""
+    from .pq import codebook_df, pq_assign_codes, train_pq_codebook
+
+    t = load_tables(spark, sf_dir)
+    emb = t.embeddings
+    n = emb.count()
+    ex1 = emb.select(
+        "vec_id", F.posexplode("embedding").alias("i", "x")
+    ).select(
+        "vec_id",
+        F.lit(0).alias("m"),
+        "i",
+        F.expr(f"CAST(ROUND(CAST(x AS DOUBLE) * {SEMDEDUP_FX}) AS BIGINT)").alias(
+            "xi"
+        ),
+    ).persist()
+    cells = train_pq_codebook(ex1, 0, n, SEMDEDUP_CELLS, SEMDEDUP_CELL_ITERS)
+    assign = pq_assign_codes(ex1, codebook_df(spark, cells)).select(
+        "vec_id", F.col("code").alias("cell")
+    )
+    xiarr = F.expr(
+        f"transform(embedding, v -> CAST(ROUND(CAST(v AS DOUBLE) * {SEMDEDUP_FX})"
+        " AS BIGINT))"
+    )
+    nrm = F.sqrt(
+        F.aggregate(
+            F.zip_with(xiarr, xiarr, lambda x, y: x * y),
+            F.lit(0).cast("bigint"),
+            lambda a, v: a + v,
+        ).cast("double")
+    )
+    vecs = emb.select("vec_id", xiarr.alias("xa"), nrm.alias("na")).join(
+        assign, "vec_id"
+    )
+    a = vecs.select(
+        F.col("vec_id").alias("va"), "cell", "xa", "na"
+    )
+    b = vecs.select(
+        F.col("vec_id").alias("vb"),
+        F.col("cell").alias("cell_b"),
+        F.col("xa").alias("xb"),
+        F.col("na").alias("nb"),
+    )
+    dot = F.aggregate(
+        F.zip_with("xa", "xb", lambda x, y: x * y),
+        F.lit(0).cast("bigint"),
+        lambda acc, v: acc + v,
+    )
+    cos_fx = F.expr(
+        f"CAST(ROUND(CAST(dot AS DOUBLE) / (na * nb) * {SEMDEDUP_FX}) AS BIGINT)"
+    )
+    dup = (
+        a.join(b, (F.col("cell") == F.col("cell_b")) & (F.col("va") < F.col("vb")))
+        # zero-norm guard (ADVICE r9): 0/0 is NaN in Spark but engine-
+        # dependent in DuckDB — excluding degenerate all-zero embeddings
+        # on BOTH sides keeps the cosine hash contract engine-exact even
+        # if a future corpus contains one.
+        .filter((F.col("na") > 0) & (F.col("nb") > 0))
+        .select("va", "vb", "na", "nb", dot.alias("dot"))
+        .select("vb", cos_fx.alias("cos_fx"))
+        .filter(F.col("cos_fx") >= SEMDEDUP_TAU_FX)
+        .select("vb")
+        .distinct()
+    )
+    return (
+        assign.join(dup, assign.vec_id == dup.vb, "left")
+        .groupBy(F.col("cell").cast("bigint").alias("cell"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_members"),
+            F.count("vb").cast("bigint").alias("n_dropped"),
+            F.expr("CAST((10000 * COUNT(vb)) div COUNT(*) AS BIGINT)").alias(
+                "drop_bp"
+            ),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# q_url_dedup — URL canonicalization + keep-first dedup (CommonCrawl ingest)
+# --------------------------------------------------------------------------
+
+# Deterministic messy-URL synthesis (the q_trycast_format precedent: the op
+# under test is the CANONICALIZATION, so the fixture is generated in-query,
+# identically in both engines, from doc_id alone):
+#   - 4 docs per page (doc_id // 4) -> mirrors of one canonical page
+#   - scheme case/http, WWW., trailing slash, tracking params, fragment all
+#     vary by doc_id residues
+#   - doc_id % 11 == 0 docs get a unique path -> singleton groups
+_URL_RAW_TMPL = """
+    CASE WHEN doc_id % 2 = 0 THEN 'http://' ELSE 'HTTPS://' END
+    || CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END
+    || 'Mirror' || CAST((doc_id {idiv} 4) % 25 AS {str_t}) || '.Example.com'
+    || '/articles/'
+    || CASE WHEN doc_id % 11 = 0 THEN 'unique-' || CAST(doc_id AS {str_t})
+            ELSE CAST(doc_id {idiv} 4 AS {str_t}) END
+    || CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END
+    || CASE WHEN doc_id % 5 = 0 THEN '?utm_source=feed&utm_campaign=x'
+            WHEN doc_id % 5 = 1 THEN '?ref=home&utm_medium=social'
+            ELSE '' END
+    || CASE WHEN doc_id % 7 = 0 THEN '#section-2' ELSE '' END
+"""
+
+# Integer division and the string type are the only dialect splits
+# ('//' would also corrupt 'http://' under a blanket replace).
+_URL_RAW_SQL = _URL_RAW_TMPL.format(idiv="//", str_t="VARCHAR")
+_URL_RAW_SPARK = _URL_RAW_TMPL.format(idiv="div", str_t="STRING")
+
+_URL_CANON_STEPS = [
+    (r"#.*$", ""),  # strip fragment
+    (r"^http://", "https://"),  # scheme normalization (post-lower)
+    (r"^https://www\.", "https://"),  # strip www.
+    (r"[?&](utm_[a-z]+|ref)=[^&#]*", ""),  # strip tracking params
+    (r"\?$", ""),  # dangling '?' after param strip
+    (r"/$", ""),  # trailing slash
+]
+
+
+def _canon_sql(col: str) -> str:
+    """DuckDB-side nested canonicalization expression (explicit 'g' flag —
+    Spark's regexp_replace is global by default). The Spark side applies
+    the same _URL_CANON_STEPS through the Python F.regexp_replace API so
+    the patterns never pass through SQL string-literal escaping (Spark's
+    parser would eat the backslashes in `www\\.` / `\\?$`)."""
+    e = f"lower({col})"
+    for pat, rep in _URL_CANON_STEPS:
+        e = f"regexp_replace({e}, '{pat}', '{rep}', 'g')"
+    return e
+
+
+def _canon_col(col: F.Column) -> F.Column:
+    c = F.lower(col)
+    for pat, rep in _URL_CANON_STEPS:
+        c = F.regexp_replace(c, pat, rep)
+    return c
+
+
+_URL_DEDUP_ORACLE = f"""
+    WITH raw AS (
+        SELECT doc_id, n_chars, ({_URL_RAW_SQL}) AS raw_url
+        FROM documents
+    ), canon AS (
+        SELECT doc_id, n_chars,
+               {_canon_sql("raw_url")} AS canonical_url
+        FROM raw
+    )
+    SELECT canonical_url,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(MIN(doc_id) AS BIGINT) AS keeper_doc,
+           CAST(COUNT(*) - 1 AS BIGINT) AS n_dropped,
+           CAST(SUM(n_chars) - MIN(n_chars_of_keeper) AS BIGINT)
+               AS chars_dropped
+    FROM (
+        SELECT canonical_url, doc_id, n_chars,
+               FIRST_VALUE(n_chars) OVER (
+                   PARTITION BY canonical_url ORDER BY doc_id
+               ) AS n_chars_of_keeper
+        FROM canon
+    )
+    GROUP BY canonical_url
+"""
+
+
+@declared("q_url_dedup", oracle=_URL_DEDUP_ORACLE)
+def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL-canonicalization dedup — the CommonCrawl/WARC ingest step that
+    runs BEFORE any text dedup: lowercase, fragment strip, http->https,
+    www. strip, tracking-param (utm_*/ref) strip, trailing-slash strip,
+    then keep-first per canonical URL. Messy URLs are synthesized
+    deterministically from doc_id (4 mirrors per page, residue-driven
+    scheme/www/params/fragment noise, 1-in-11 unique pages), identically
+    in both engines — the op under test is the canonicalization chain and
+    the keep-first accounting, not the fixture. Output: one row per
+    canonical URL with group size, keeper, and dropped-doc/char yield.
+
+    Engine-exactness: the regex chain uses RE2/Java-compatible patterns
+    only (anchors, literal classes, [^&#]); DuckDB replays with the 'g'
+    flag Spark applies by default; keeper = MIN(doc_id); all aggregates
+    CAST to BIGINT.
+
+    Scale notes (100 TB): canonicalization is map-side string work; the
+    dedup is ONE hash-partitioned groupBy on canonical_url (the
+    q_dedup_exact digest-groupBy shape — in production key on
+    md5(canonical_url) so the shuffle carries a fixed-width digest, and
+    the skew point is hot hosts, handled like every census: per-key work
+    is linear). The keeper's n_chars rides the same window the group
+    already needs — no second join back to the corpus."""
+    t = load_tables(spark, sf_dir)
+    canon = t.documents.select(
+        "doc_id",
+        "n_chars",
+        _canon_col(F.expr(_URL_RAW_SPARK)).alias("canonical_url"),
+    )
+    kw = Window.partitionBy("canonical_url").orderBy("doc_id")
+    return (
+        canon.withColumn("n_chars_of_keeper", F.first("n_chars").over(kw))
+        .groupBy("canonical_url")
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.min("doc_id").cast("bigint").alias("keeper_doc"),
+            (F.count("*") - 1).cast("bigint").alias("n_dropped"),
+            (F.sum("n_chars") - F.min("n_chars_of_keeper"))
+            .cast("bigint")
+            .alias("chars_dropped"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# q_lsh_sweep — the MinHash-LSH banding OPERATING CURVE: candidate volume,
+# precision, and recall at every (bands x rows-per-band) split of the same
+# 8 min-hashes, against the EXACT set-similarity ground truth
+# --------------------------------------------------------------------------
+
+LSW_CONFIGS = ((8, 1), (4, 2), (2, 4), (1, 8))  # (n_bands, rows_per_band)
+LSW_TAU_N, LSW_TAU_D = 6, 10  # tau = 0.6, the q_dedup_near threshold
+
+
+def _lsw_band_union_sql() -> str:
+
+    rows = []
+    for nb, rpb in LSW_CONFIGS:
+        for b in range(nb):
+            sig = " || ".join(f"h{b * rpb + r}" for r in range(rpb))
+            rows.append(f"SELECT doc_id, {nb * 100 + b} AS band, {sig} AS sig FROM mh")
+    return " UNION ALL ".join(rows)
+
+
+def _lsh_sweep_oracle() -> str:
+
+    mh_cols = ", ".join(
+        f"MIN(md5('s{k}|' || s)) AS h{k}" for k in range(N_HASHES)
+    )
+    n, d = LSW_TAU_N, LSW_TAU_D
+    return f"""
+    WITH w0 AS (
+        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+    ), s0 AS (
+        SELECT doc_id, {sql_shingles(3)} AS shingles FROM w0
+    ), e AS (
+        SELECT doc_id, unnest(shingles) AS s FROM s0 WHERE len(shingles) > 0
+    ), mh AS (
+        SELECT doc_id, {mh_cols} FROM e GROUP BY doc_id
+    ), bands AS (
+        {_lsw_band_union_sql()}
+    ), {sql_capped_bucket_ctes("bands", "doc_id", LSH_BUCKET_CAP)}, cand AS (
+        SELECT DISTINCT a.band // 100 AS cfg, a.doc_id AS doc_a,
+               b.doc_id AS doc_b
+        FROM capped a JOIN capped b ON a.band = b.band AND a.sig = b.sig
+        WHERE a.doc_id < b.doc_id
+    ), upairs AS (
+        SELECT DISTINCT doc_a, doc_b FROM cand
+    ), ver AS (
+        SELECT u.doc_a, u.doc_b,
+               CASE WHEN {d} * len(list_intersect(a.shingles, b.shingles))
+                    >= {n} * len(list_distinct(a.shingles || b.shingles))
+                    THEN 1 ELSE 0 END AS hit
+        FROM upairs u
+        JOIN s0 a ON a.doc_id = u.doc_a
+        JOIN s0 b ON b.doc_id = u.doc_b
+    ), {sql_setsim_pairs_ctes(n, d)}, truth AS (
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM ss_pairs
+    ), percfg AS (
+        SELECT c.cfg,
+               CAST(COUNT(*) AS BIGINT) AS n_cand,
+               CAST(SUM(v.hit) AS BIGINT) AS n_hit
+        FROM cand c JOIN ver v
+          ON v.doc_a = c.doc_a AND v.doc_b = c.doc_b
+        GROUP BY c.cfg
+    )
+    SELECT CAST(p.cfg AS BIGINT) AS n_bands,
+           CAST({N_HASHES} // p.cfg AS BIGINT) AS rows_per_band,
+           p.n_cand, p.n_hit,
+           (SELECT n_true FROM truth) AS n_true,
+           CAST(10000 * p.n_hit // (SELECT n_true FROM truth) AS BIGINT)
+               AS recall_bp,
+           CAST(10000 * p.n_hit // GREATEST(p.n_cand, 1) AS BIGINT)
+               AS precision_bp
+    FROM percfg p
+    """
+
+
+@declared("q_lsh_sweep", oracle=_lsh_sweep_oracle())
+def q_lsh_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH BANDING CURVE — candidate volume, precision, and recall
+    at every (bands x rows-per-band) split of the SAME 8 min-hashes
+    ({LSW_CONFIGS}), measured against the exact prefix-join ground truth
+    (q_setsim_prefix) at tau = 0.6. This is the table an LSH deployment is
+    tuned from: more bands / shorter signatures -> higher recall, more
+    candidates to verify (the S-curve moves left); the q_nprobe_sweep /
+    q_binary_sweep idiom completing the knob curves for the dedup family
+    (q_lsh_recall_audit fixes the shipped config and audits per decile;
+    THIS varies the config). Signatures are computed once; each config is
+    a different grouping of the same 8 columns, so the sweep costs one
+    15-way band fan-out, not four signature builds. Every config's buckets
+    take the same bounded-state cap (caps.py) keyed on the packed
+    (cfg*100+band) integer, and each candidate pair's exact Jaccard is
+    verified ONCE across configs (distinct pairs), then joined back.
+
+    Engine-exactness: md5 min-hashes, integer cross-multiplied Jaccard
+    (d*inter >= n*union — no float threshold), capped buckets replayed by
+    the shared SQL fragments, bp ratios floor-divided.
+
+    Scale notes (100 TB): the banding fan-out is 15 narrow rows/doc
+    (id + 2-4 hex sigs); buckets are capped so no config can blow up on
+    boilerplate clusters; the exact ground truth is the audit side (run on
+    a sampled partition in production — the q_lsh_recall_audit note)."""
+
+    t = load_tables(spark, sf_dir)
+    sigs = (
+        t.documents.select("doc_id", words_col().alias("ws"))
+        .select(
+            "doc_id", cached_exprs("shingles_ws3", shingles_expr).alias("shingles")
+        )
+        .select("doc_id", *minhash_cols())
+    )
+    entries = []
+    for nb, rpb in LSW_CONFIGS:
+        for b in range(nb):
+            entries.append(
+                F.struct(
+                    F.lit(nb * 100 + b).alias("band"),
+                    F.concat(
+                        *[F.col(f"h{b * rpb + r}") for r in range(rpb)]
+                    ).alias("sig"),
+                )
+            )
+    bands = sigs.select(
+        "doc_id", F.explode(F.array(*entries)).alias("bs")
+    ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+    # pairs from each bucket's capped id array (caps.bucket_array_pairs):
+    # identical (cfg, doc_a, doc_b) set to the old bucket self-join, minus
+    # the second evaluation of the banding+cap chain (r13)
+    from .caps import bucket_array_pairs, capped_bucket_id_arrays
+
+    cand = bucket_array_pairs(
+        capped_bucket_id_arrays(bands, "doc_id", LSH_BUCKET_CAP),
+        "doc_a",
+        "doc_b",
+        carry=((F.col("band") / 100).cast("int").alias("cfg"),),
+    )
+    upairs = cand.select("doc_a", "doc_b").distinct()
+    sh = t.documents.select("doc_id", words_col().alias("ws")).select(
+        "doc_id", cached_exprs("shingles_ws3", shingles_expr).alias("shingles")
+    )
+    ver = (
+        upairs.join(
+            sh.select(
+                F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
+            ),
+            "doc_a",
+        )
+        .join(
+            sh.select(
+                F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
+            ),
+            "doc_b",
+        )
+        .select(
+            "doc_a",
+            "doc_b",
+            (
+                F.lit(LSW_TAU_D) * F.size(F.array_intersect("sh_a", "sh_b"))
+                >= F.lit(LSW_TAU_N) * F.size(F.array_union("sh_a", "sh_b"))
+            )
+            .cast("int")
+            .alias("hit"),
+        )
+    )
+    truth = setsim_exact_pairs(t.documents, LSW_TAU_N, LSW_TAU_D).agg(
+        F.count("*").cast("bigint").alias("n_true")
+    )
+    percfg = (
+        cand.join(F.broadcast(ver), ["doc_a", "doc_b"])
+        .groupBy("cfg")
+        .agg(
+            F.count("*").cast("bigint").alias("n_cand"),
+            F.sum("hit").cast("bigint").alias("n_hit"),
+        )
+    )
+    return percfg.crossJoin(F.broadcast(truth)).select(
+        F.col("cfg").cast("bigint").alias("n_bands"),
+        F.expr(f"CAST({N_HASHES} DIV cfg AS BIGINT)").alias("rows_per_band"),
+        "n_cand",
+        "n_hit",
+        "n_true",
+        F.expr("CAST(10000 * n_hit DIV n_true AS BIGINT)").alias("recall_bp"),
+        F.expr("CAST(10000 * n_hit DIV GREATEST(n_cand, 1) AS BIGINT)").alias(
+            "precision_bp"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# q_simhash_sweep — the SimHash pigeonhole-block operating curve
+# (radius -> blocks -> candidates -> emitted pairs -> semantic recall)
+# --------------------------------------------------------------------------
+
+SHS_SIG_BITS = 60  # simhash_md5 width
+SHS_RADII = (0, 1, 2, 3)  # Hamming radii; r+1 blocks each (pigeonhole)
+SHS_TAU_N, SHS_TAU_D = 1, 2  # semantic truth: exact 3-shingle Jaccard >= 0.5
+
+
+def _shs_cfg(r: int) -> tuple[int, int]:
+    """(n_blocks, block_bits) for radius r: r+1 equal blocks — any pair
+    within Hamming distance r is identical on >= 1 block (pigeonhole), so
+    block-bucket candidates have ZERO false negatives at radius r."""
+    nb = r + 1
+    return nb, SHS_SIG_BITS // nb
+
+
+def _simhash_sweep_oracle() -> str:
+
+    band_selects = []
+    for r in SHS_RADII:
+        nb, bits = _shs_cfg(r)
+        band_selects.append(
+            f"""SELECT {r} AS cfg, doc_id,
+               b.band, (simhash >> CAST(b.band * {bits} AS INT))
+                       & {(1 << bits) - 1} AS sig
+        FROM sim, (SELECT unnest(range({nb})) AS band) b"""
+        )
+    bands = "\n        UNION ALL\n        ".join(band_selects)
+    cfg_rows = ", ".join(
+        f"({r}, {_shs_cfg(r)[0]}, {_shs_cfg(r)[1]})" for r in SHS_RADII
+    )
+    return f"""
+    WITH words AS (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
+    ), h AS (
+        SELECT doc_id, md5(w) AS hx FROM words
+    ), bits AS (
+        SELECT doc_id, b,
+               CASE WHEN ((strpos('0123456789abcdef', substr(hx, 1 + b // 4, 1)) - 1)
+                          >> (3 - (b % 4))) & 1 = 1 THEN 1 ELSE -1 END AS vote
+        FROM h, (SELECT unnest(range({SHS_SIG_BITS})) AS b)
+    ), votes AS (
+        SELECT doc_id, b, SUM(vote) AS v FROM bits GROUP BY doc_id, b
+    ), sim AS (
+        SELECT doc_id,
+               SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT)
+                                         << CAST({SHS_SIG_BITS - 1} - b AS INT))
+                        ELSE CAST(0 AS BIGINT) END) AS simhash
+        FROM votes GROUP BY doc_id
+    ), bands AS (
+        {bands}
+    ), {sql_capped_bucket_ctes("bands", "doc_id", "LSHCAP",
+                               prefix="shcap", keys=("cfg", "band", "sig"))},
+    cand AS (
+        SELECT DISTINCT a.cfg, a.doc_id AS doc_a, b2.doc_id AS doc_b
+        FROM shcap a
+        JOIN shcap b2 ON b2.cfg = a.cfg AND b2.band = a.band
+                     AND b2.sig = a.sig AND a.doc_id < b2.doc_id
+    ), {sql_setsim_pairs_ctes(SHS_TAU_N, SHS_TAU_D)}, scored AS (
+        SELECT c.cfg, c.doc_a, c.doc_b,
+               bit_count(xor(sa.simhash, sb.simhash)) AS ham,
+               CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS is_true
+        FROM cand c
+        JOIN sim sa ON sa.doc_id = c.doc_a
+        JOIN sim sb ON sb.doc_id = c.doc_b
+        LEFT JOIN ss_pairs t ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b
+    ), truth AS (
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM ss_pairs
+    )
+    SELECT CAST(s.cfg AS BIGINT) AS radius,
+           CAST(cf.nb AS BIGINT) AS n_blocks,
+           CAST(cf.bits AS BIGINT) AS block_bits,
+           CAST(COUNT(*) AS BIGINT) AS n_cand,
+           CAST(SUM(CASE WHEN s.ham <= s.cfg THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_emit,
+           CAST(SUM(CASE WHEN s.ham <= s.cfg AND s.is_true = 1
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_sem_hit,
+           (SELECT n_true FROM truth) AS n_true,
+           CAST(10000 * SUM(CASE WHEN s.ham <= s.cfg THEN 1 ELSE 0 END)
+                // GREATEST(COUNT(*), 1) AS BIGINT) AS bucket_yield_bp,
+           CAST(10000 * SUM(CASE WHEN s.ham <= s.cfg AND s.is_true = 1
+                                 THEN 1 ELSE 0 END)
+                // GREATEST((SELECT n_true FROM truth), 1) AS BIGINT)
+               AS sem_recall_bp
+    FROM scored s
+    JOIN (VALUES {cfg_rows}) AS cf(cfg, nb, bits) ON cf.cfg = s.cfg
+    GROUP BY s.cfg, cf.nb, cf.bits
+    """.replace("LSHCAP", str(LSH_BUCKET_CAP))
+
+
+@declared("q_simhash_sweep", oracle=_simhash_sweep_oracle())
+def q_simhash_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SIMHASH OPERATING CURVE — the q_lsh_sweep idiom applied to the
+    other near-dup signature family: for Hamming radius r in {SHS_RADII},
+    split the {SHS_SIG_BITS}-bit SimHash into r+1 equal blocks (PIGEONHOLE:
+    any pair within distance r is identical on >= 1 block, so block-bucket
+    candidate generation has zero false negatives at that radius — pinned
+    by an O(n^2) pytest), bucket-join per block (every (cfg, band, sig)
+    bucket capped by the shared bounded-state min-k), verify the exact
+    Hamming distance on candidates, and score the EMITTED pair set (ham
+    <= r) against the exact 3-shingle-Jaccard >= {SHS_TAU_N}/{SHS_TAU_D}
+    ground truth (setsim_exact_pairs — the prefix-join exact join, zero
+    false negatives). Output per radius: candidate volume (the cost),
+    emitted pairs, bucket yield (emitted/candidates — collapses as r grows
+    because wider radii need shorter blocks = hotter buckets), and
+    semantic recall vs the truth — the table that picks the radius for
+    q_dedup_simhash's production threshold.
+
+    Engine-exactness: signatures are the q_dedup_simhash md5-bit
+    construction replayed bit-for-bit; blocks are shift/mask integer
+    arithmetic; every ratio floor-divided bp with GREATEST guards.
+
+    Scale notes (100 TB): one signature pass serves all 4 configs (the
+    fan-out is 1+2+3+4 = 10 band rows per doc — integer keys only, text
+    never moves); every bucket is capped (caps.py) so a degenerate block
+    value cannot go quadratic; the exact-truth side is the audit
+    (production runs bucket+verify only). The curve's cost column is the
+    number a capacity plan multiplies by corpus size."""
+
+    t = load_tables(spark, sf_dir)
+    sim = simhash_md5(t.documents, "doc_id", "text")
+    band_frames = []
+    for r in SHS_RADII:
+        nb, bits = _shs_cfg(r)
+        keys = [
+            F.shiftright(F.col("simhash"), b * bits)
+            .bitwiseAND(F.lit((1 << bits) - 1))
+            for b in range(nb)
+        ]
+        band_frames.append(
+            sim.select(
+                F.lit(r).alias("cfg"),
+                "doc_id",
+                F.posexplode(F.array(*keys)).alias("band", "sig"),
+            )
+        )
+    bands = band_frames[0]
+    for f in band_frames[1:]:
+        bands = bands.unionByName(f)
+    # pairs from each bucket's capped id array (caps.bucket_array_pairs):
+    # identical (cfg, doc_a, doc_b) set to the old 3-key bucket self-join,
+    # minus the second evaluation of the banding+cap chain (r13)
+    from .caps import bucket_array_pairs, capped_bucket_id_arrays
+
+    cand = bucket_array_pairs(
+        capped_bucket_id_arrays(
+            bands, "doc_id", LSH_BUCKET_CAP, keys=("cfg", "band", "sig")
+        ),
+        "doc_a",
+        "doc_b",
+        carry=("cfg",),
+    )
+    sa = sim.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"))
+    sb = sim.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"))
+    truth_pairs = setsim_exact_pairs(t.documents, SHS_TAU_N, SHS_TAU_D).select(
+        F.col("doc_a").alias("t_a"), F.col("doc_b").alias("t_b")
+    )
+    scored = (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .join(
+            truth_pairs,
+            (F.col("doc_a") == F.col("t_a")) & (F.col("doc_b") == F.col("t_b")),
+            "left",
+        )
+        .select(
+            "cfg",
+            F.expr("bit_count(sim_a ^ sim_b)").alias("ham"),
+            F.when(F.col("t_a").isNotNull(), 1).otherwise(0).alias("is_true"),
+        )
+    )
+    n_true = truth_pairs.agg(F.count("*").cast("bigint").alias("n_true"))
+    import pandas as pd
+
+    cfgtab = F.broadcast(
+        spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "c_cfg": list(SHS_RADII),
+                    "n_blocks": [_shs_cfg(r)[0] for r in SHS_RADII],
+                    "block_bits": [_shs_cfg(r)[1] for r in SHS_RADII],
+                }
+            )
+        )
+    )
+    return (
+        scored.groupBy("cfg")
+        .agg(
+            F.count("*").cast("bigint").alias("n_cand"),
+            F.sum(F.when(F.col("ham") <= F.col("cfg"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_emit"),
+            F.sum(
+                F.when(
+                    (F.col("ham") <= F.col("cfg")) & (F.col("is_true") == 1), 1
+                ).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_sem_hit"),
+        )
+        .join(cfgtab, F.col("cfg") == F.col("c_cfg"))
+        .crossJoin(F.broadcast(n_true))
+        .select(
+            F.col("cfg").cast("bigint").alias("radius"),
+            F.col("n_blocks").cast("bigint").alias("n_blocks"),
+            F.col("block_bits").cast("bigint").alias("block_bits"),
+            "n_cand",
+            "n_emit",
+            "n_sem_hit",
+            "n_true",
+            F.expr(
+                "CAST(10000 * n_emit DIV GREATEST(n_cand, 1) AS BIGINT)"
+            ).alias("bucket_yield_bp"),
+            F.expr(
+                "CAST(10000 * n_sem_hit DIV GREATEST(n_true, 1) AS BIGINT)"
+            ).alias("sem_recall_bp"),
         )
     )

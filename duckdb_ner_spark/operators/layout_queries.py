@@ -24,6 +24,8 @@ Scale notes (100 TB):
   but each partition is huge: the same selection can run as
   rank-within-bucket after a repartition by (lang, salt) with a two-pass
   threshold estimate; documented here, exact window form declared.
+- q_zorder_prune: files touched and read amplification of a 2-D range
+  predicate under z-order vs row-major file assignment.
 """
 
 from __future__ import annotations
@@ -642,5 +644,178 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "(n_pass - n_members) * 1e0"
                 " / NULLIF(n_probe - n_members, 0)"
             ).alias("fp_rate"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# q_zorder_prune — the pruning benefit of z-order layout: files touched
+# and read amplification under z-order vs row-major, for one 2-D predicate
+# --------------------------------------------------------------------------
+
+ZP_BITS = 8  # quantization bits per dimension (x, y in 0..255)
+ZP_FILE_SHIFT = 1 << 10  # 1024 cells per file => 64 files over 16-bit keys
+ZP_LO, ZP_HI = 96, 159  # the centered 64x64 query square (32-aligned)
+
+
+def _zp_interleave(xc: str, yc: str, idiv: str) -> str:
+    """Closed-form Morton interleave of two {ZP_BITS}-bit ints — the SAME
+    formula text rendered for each engine's integer-division keyword
+    (Spark DIV / DuckDB //): bit j of x lands at position 2j, of y at
+    2j+1."""
+    terms = []
+    for j in range(ZP_BITS):
+        terms.append(f"(({xc} {idiv} {1 << j}) % 2) * {1 << (2 * j)}")
+        terms.append(f"(({yc} {idiv} {1 << j}) % 2) * {1 << (2 * j + 1)}")
+    return " + ".join(terms)
+
+
+_ZP_ORACLE = f"""
+    WITH bounds AS (
+        SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_x,
+               CAST(MAX(l_orderkey) AS BIGINT) AS max_x,
+               CAST(MIN(l_partkey) AS BIGINT) AS min_y,
+               CAST(MAX(l_partkey) AS BIGINT) AS max_y
+        FROM lineitem
+    ), pts AS (
+        SELECT ((l_orderkey - b.min_x) * {1 << ZP_BITS})
+                   // (b.max_x - b.min_x + 1) AS x,
+               ((l_partkey - b.min_y) * {1 << ZP_BITS})
+                   // (b.max_y - b.min_y + 1) AS y
+        FROM lineitem, bounds b
+    ), keyed AS (
+        SELECT x, y,
+               ({_zp_interleave("x", "y", "//")}) AS z,
+               CASE WHEN x BETWEEN {ZP_LO} AND {ZP_HI}
+                     AND y BETWEEN {ZP_LO} AND {ZP_HI}
+                    THEN 1 ELSE 0 END AS hit
+        FROM pts
+    ), files AS (
+        SELECT 'zorder' AS layout, z // {ZP_FILE_SHIFT} AS file_id,
+               CAST(COUNT(*) AS BIGINT) AS n_rows,
+               CAST(SUM(hit) AS BIGINT) AS n_hit
+        FROM keyed GROUP BY 1, 2
+        UNION ALL
+        SELECT 'rowmajor' AS layout,
+               (x * {1 << ZP_BITS} + y) // {ZP_FILE_SHIFT} AS file_id,
+               CAST(COUNT(*) AS BIGINT) AS n_rows,
+               CAST(SUM(hit) AS BIGINT) AS n_hit
+        FROM keyed GROUP BY 1, 2
+    )
+    SELECT layout,
+           CAST(COUNT(*) AS BIGINT) AS files_total,
+           CAST(SUM(CASE WHEN n_hit > 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS files_touched,
+           CAST(SUM(n_hit) AS BIGINT) AS rows_matched,
+           CAST(SUM(CASE WHEN n_hit > 0 THEN n_rows ELSE 0 END) AS BIGINT)
+               AS touched_rows,
+           CAST(10000 * SUM(n_hit)
+                // GREATEST(SUM(CASE WHEN n_hit > 0 THEN n_rows
+                                     ELSE 0 END), 1) AS BIGINT)
+               AS read_amp_bp,
+           CAST(10000 * SUM(CASE WHEN n_hit > 0 THEN 1 ELSE 0 END)
+                // COUNT(*) AS BIGINT) AS touch_bp
+    FROM files GROUP BY layout
+"""
+
+
+@declared("q_zorder_prune", oracle=_ZP_ORACLE)
+def q_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PRUNING BENEFIT of z-order layout — the readout that justifies
+    q_zorder's Morton math: quantize (l_orderkey, l_partkey) to
+    {ZP_BITS}-bit grid coordinates, assign every row to a file under TWO
+    layouts — z-order (Morton key ranges) and row-major (x-then-y sort
+    ranges), {ZP_FILE_SHIFT} cells per file — and measure, for one
+    centered 2-D range predicate, the zone-map effect: files touched,
+    rows matched, rows read (touched-file row mass), the read
+    amplification (matched/read in bp — higher is better) and the
+    fraction of files touched. Row-major must read every file whose
+    x-range intersects (all y values ride along); z-order localizes both
+    dimensions, touching ~(query area / file block) files. This is Delta
+    OPTIMIZE ZORDER / Iceberg sort-order planning as a measured, in-plan
+    comparison, not a claim.
+
+    Engine-exactness: the interleave is the SAME generated formula text
+    on both engines (integer div/mod bit extraction — no engine bitwise
+    operators), quantization is exact integer scaling off a broadcast
+    1-row min/max, the predicate square [{ZP_LO}, {ZP_HI}]^2 is 32-aligned
+    so the z-block arithmetic is clean.
+
+    Scale notes (100 TB): per-file stats are ONE map-side-combined
+    aggregate per layout over integer keys (the real write would
+    repartitionByRange on the same key — this query COSTS the layout
+    before paying that shuffle); bounds are a broadcast 1-row aggregate.
+    The readout scales to any file-count by changing {ZP_FILE_SHIFT};
+    the decision it feeds (z-order vs insertion order) is exactly the
+    one a 100 TB table maintenance pass has to make."""
+    t = load_tables(spark, sf_dir)
+    bounds = F.broadcast(
+        t.lineitem.agg(
+            F.min("l_orderkey").cast("bigint").alias("min_x"),
+            F.max("l_orderkey").cast("bigint").alias("max_x"),
+            F.min("l_partkey").cast("bigint").alias("min_y"),
+            F.max("l_partkey").cast("bigint").alias("max_y"),
+        )
+    )
+    pts = t.lineitem.select("l_orderkey", "l_partkey").crossJoin(bounds).select(
+        F.expr(
+            f"(l_orderkey - min_x) * {1 << ZP_BITS} DIV (max_x - min_x + 1)"
+        ).alias("x"),
+        F.expr(
+            f"(l_partkey - min_y) * {1 << ZP_BITS} DIV (max_y - min_y + 1)"
+        ).alias("y"),
+    )
+    keyed = pts.select(
+        "x",
+        "y",
+        F.expr(_zp_interleave("x", "y", "DIV")).alias("z"),
+        F.when(
+            F.col("x").between(ZP_LO, ZP_HI)
+            & F.col("y").between(ZP_LO, ZP_HI),
+            1,
+        )
+        .otherwise(0)
+        .alias("hit"),
+    )
+    fz = keyed.groupBy(
+        F.expr(f"z DIV {ZP_FILE_SHIFT}").alias("file_id")
+    ).agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.sum("hit").cast("bigint").alias("n_hit"),
+    ).select(F.lit("zorder").alias("layout"), "file_id", "n_rows", "n_hit")
+    frm = keyed.groupBy(
+        F.expr(f"(x * {1 << ZP_BITS} + y) DIV {ZP_FILE_SHIFT}").alias(
+            "file_id"
+        )
+    ).agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.sum("hit").cast("bigint").alias("n_hit"),
+    ).select(F.lit("rowmajor").alias("layout"), "file_id", "n_rows", "n_hit")
+    return (
+        fz.unionByName(frm)
+        .groupBy("layout")
+        .agg(
+            F.count("*").cast("bigint").alias("files_total"),
+            F.sum(F.when(F.col("n_hit") > 0, 1).otherwise(0))
+            .cast("bigint")
+            .alias("files_touched"),
+            F.sum("n_hit").cast("bigint").alias("rows_matched"),
+            F.sum(F.when(F.col("n_hit") > 0, F.col("n_rows")).otherwise(0))
+            .cast("bigint")
+            .alias("touched_rows"),
+        )
+        .select(
+            "layout",
+            "files_total",
+            "files_touched",
+            "rows_matched",
+            "touched_rows",
+            F.expr(
+                "CAST(10000 * rows_matched DIV GREATEST(touched_rows, 1)"
+                " AS BIGINT)"
+            ).alias("read_amp_bp"),
+            F.expr(
+                "CAST(10000 * files_touched DIV files_total AS BIGINT)"
+            ).alias("touch_bp"),
         )
     )

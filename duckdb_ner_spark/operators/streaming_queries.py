@@ -823,7 +823,7 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     Kafka deployment keys partitions by event_type so per-key order
     holds); alarms would route append-mode the first time the threshold
     is crossed."""
-    from ..operators.round7d import CUSUM_H_CENTS, CUSUM_K_CENTS
+    from .stats import CUSUM_H_CENTS, CUSUM_K_CENTS
     from ..streaming.events import stream_events
     from ..streaming.stateful import running_cusum
 
@@ -941,7 +941,7 @@ def q_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     index exactly as q_dedup_incr's dedup_incremental returns them."""
     from ..plans.exprcache import cached_exprs
     from ..streaming.ner_stream import stream_documents_sliced
-    from .dedup import N_BANDS, _minhash_cols, minhash_bands
+    from .dedup import N_BANDS, minhash_bands, minhash_cols
     from .textprep import shingles_expr, words_col
     from .textstats import GATE_DISTINCT_DEN, GATE_DISTINCT_NUM, GATE_MIN_WORDS
 
@@ -969,7 +969,7 @@ def q_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigd = feat.select(
         "doc_id", "lang", "n_chars", "n_words", "n_distinct",
-        *cached_exprs("minhash_cols", _minhash_cols),
+        *cached_exprs("minhash_cols", minhash_cols),
     )
     probed = sigd.select(
         "doc_id", "lang", "n_chars", "n_words", "n_distinct",
@@ -1170,7 +1170,7 @@ def q_stream_index_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_substring_incr_oracle() -> str:
-    from .round10 import SSD_K
+    from .substring import SSD_K
 
     return f"""
     WITH c_w AS (
@@ -1230,14 +1230,14 @@ def q_stream_substring_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted batches' distinct tuples back to the index per batch — the
     q_stream_index_growth foreachBatch pattern applies verbatim."""
     from ..streaming.ner_stream import stream_documents_sliced
-    from .round10 import SSD_K, _packed_key_cols, _packed_windows
+    from .substring import SSD_K, packed_key_cols, packed_windows
 
-    key_cols = _packed_key_cols(SSD_K)
+    key_cols = packed_key_cols(SSD_K)
     corpus = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
         F.col("doc_id") % 2 == 0
     )
     idx = (
-        _packed_windows(corpus, SSD_K)
+        packed_windows(corpus, SSD_K)
         .select(*key_cols)
         .distinct()
         .withColumn("hit", F.lit(1))
@@ -1245,7 +1245,7 @@ def q_stream_substring_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_docs = stream_documents_sliced(spark, sf_dir).filter(
         F.col("doc_id") % 2 == 1
     )
-    probe = _packed_windows(new_docs, SSD_K).join(
+    probe = packed_windows(new_docs, SSD_K).join(
         F.broadcast(idx), key_cols, "left"
     )
     score = (
@@ -1282,9 +1282,9 @@ def _stream_bloom_oracle() -> str:
     END TO END is the streaming path itself (in-flight key hashing +
     position fan-out, stream-static broadcast probe, cross-batch
     aggregate state, complete-mode emission)."""
-    from .round12 import _BLOOM_DEDUP_ORACLE
+    from .sketches import BLOOM_DEDUP_ORACLE
 
-    return _BLOOM_DEDUP_ORACLE
+    return BLOOM_DEDUP_ORACLE
 
 
 @declared("q_stream_bloom", cache_plan=False, oracle=_stream_bloom_oracle())
@@ -1315,7 +1315,7 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix-doubling bounded-exchange precedent) because a literal must
     parameterize the in-flight hash."""
     from ..streaming.ner_stream import stream_documents_sliced
-    from .round12 import BLM_BPK, BLM_K, BLM_PREFIX
+    from .sketches import BLM_BPK, BLM_K, BLM_POS_SQL, BLM_PREFIX
 
     keyed_static = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1331,10 +1331,7 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded O(1) exchange: the filter SIZE is a static-index scalar that
     # must appear as a literal inside the streaming expression
     m_bits = BLM_BPK * keyed_static.distinct().count()
-    pos_expr = (
-        "CAST(conv(substr(md5(concat('blm', CAST(j AS STRING), '|', pk)),"
-        f" 1, 8), 16, 10) AS BIGINT) % {m_bits}"
-    )
+    pos_expr = BLM_POS_SQL.format(m_bits=m_bits)
     filt = F.broadcast(
         keyed_static.select(
             "pk",
@@ -1434,9 +1431,9 @@ def _stream_langid_oracle() -> str:
     is the streaming path itself (in-flight tokenization + per-language
     fan-out against the broadcast model, cross-batch per-(doc, lang)
     score state, argmin + census on the drained sink)."""
-    from .round13 import _LANGID_ORACLE
+    from .textstats import LANGID_ORACLE
 
-    return _LANGID_ORACLE
+    return LANGID_ORACLE
 
 
 @declared("q_stream_langid", cache_plan=False, oracle=_stream_langid_oracle())

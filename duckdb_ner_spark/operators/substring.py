@@ -1,12 +1,16 @@
-"""Round-10 operators: substring-span REMOVAL dedup — the production half
-of the q_memorization audit (VERDICT r9 Next-round #2).
+"""Exact-substring dedup (ExactSubstr): score, inventory and excise
+repeated long spans.
 
-q_memorization (round7c.py) SCORES repeated long-substring mass; this
-module EMITS the transform: per-document excised-span inventories for
-every >= SSD_K-char span that occurs more than once in the corpus, with
-the keep-first canonical occurrence retained (Lee et al. 2022,
-"Deduplicating Training Data Makes Language Models Better" — the
-ExactSubstr dedup their suffix-array pipeline applies before training).
+q_memorization SCORES repeated long-substring mass; the rest of this module
+EMITS the transform: per-document excised-span inventories for every
+>= SSD_K-char span that occurs more than once in the corpus, with the
+keep-first canonical occurrence retained (Lee et al. 2022, "Deduplicating
+Training Data Makes Language Models Better" — the ExactSubstr dedup their
+suffix-array pipeline applies before training). The span census comes in
+three forms: windowed md5 digests (q_substring_dedup), digest-free packed
+BIGINT windows (q_substring_packed), and prefix-doubling suffix ranks with
+adjacent-pair LCPs (q_suffix_rank, q_suffix_spans, q_suffix_lcp);
+q_substring_incr probes a new batch against the persistent packed index.
 
 Beyond-reference surface (SURVEY.md §2.D, dedup family).
 """
@@ -20,6 +24,136 @@ from ..plans.cachereg import memo, memoized
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
 from ..sources.writers import scratch_dir
+
+
+# --------------------------------------------------------------------------
+# Memorization audit (repeated long-substring mass, suffix-array proxy)
+# --------------------------------------------------------------------------
+
+MEM_SHINGLE_LEN = 40  # "long" verbatim span: 40 chars (~8 words here)
+MEM_SCALE = 10**6
+
+_MEMORIZATION_ORACLE = f"""
+    WITH pos AS (
+        SELECT doc_id, source, text,
+               unnest(range(1, (n_chars - {MEM_SHINGLE_LEN} + 2)::BIGINT)) AS i
+        FROM documents WHERE n_chars >= {MEM_SHINGLE_LEN}
+    ), sh AS (
+        SELECT doc_id, source,
+               substr(md5(substr(text, i::INT, {MEM_SHINGLE_LEN})), 1, 16) AS h
+        FROM pos
+    ), g AS (
+        SELECT h, CAST(COUNT(*) AS BIGINT) AS n_occ,
+               CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
+               CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources
+        FROM sh GROUP BY h
+    )
+    SELECT s.source,
+           CAST(COUNT(*) AS BIGINT) AS n_shingles,
+           CAST(SUM(CASE WHEN g.n_occ > 1 THEN 1 ELSE 0 END) AS BIGINT)
+               AS dup_occurrences,
+           CAST(SUM(CASE WHEN g.n_docs > 1 THEN 1 ELSE 0 END) AS BIGINT)
+               AS cross_doc_occurrences,
+           CAST(SUM(CASE WHEN g.n_sources > 1 THEN 1 ELSE 0 END) AS BIGINT)
+               AS cross_source_occurrences,
+           CAST(({MEM_SCALE} * SUM(CASE WHEN g.n_occ > 1 THEN 1 ELSE 0 END))
+                // COUNT(*) AS BIGINT) AS dup_rate_fx
+    FROM sh s JOIN g ON g.h = s.h
+    GROUP BY s.source
+"""
+
+
+@declared("q_memorization", oracle=_MEMORIZATION_ORACLE)
+def q_memorization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Memorization-risk audit (the suffix-array substring-dedup proxy from
+    "Deduplicating Training Data Makes Language Models Better", Lee et al.
+    2022): every MEM_SHINGLE_LEN-char window of every document is hashed,
+    and each source is scored by how much of its character mass is verbatim
+    repeated elsewhere — same-corpus duplicate occurrences, cross-document
+    occurrences, and cross-SOURCE occurrences (the strongest leakage
+    signal: the same 40-char span arriving from two ingest feeds), plus a
+    fixed-point duplicate rate.
+
+    Unlike q_dedup_ngram (word shingles -> per-pair Jaccard), this is the
+    position-dense CHARACTER-shingle audit: overlapping windows at every
+    offset, so a duplicated span of length L >= K is detected regardless of
+    word alignment — the property the suffix-array method guarantees.
+
+    Engine-exactness: shingles group on substr(md5(span),1,16) — identical
+    hex in both engines (house md5 trick); all outputs are counts and one
+    floor division of non-negatives.
+
+    Scale notes (100 TB): the corpus never shuffles as text — each doc
+    explodes to 16-char hashes executor-side (map-only), the count table is
+    the canonical combiner aggregate on h, and the enrich join is
+    co-partitioned on the same key as the aggregate that produced it. The
+    census is TWO-LEVEL (r10): a distinct-(h, doc, source) combiner
+    aggregate collapses position multiplicity first, so the one remaining
+    COUNT(DISTINCT source) expands over deduplicated pairs — the raw
+    position-dense stream never reaches a distinct-expand (the sf0.1
+    1 GiB-heap residue VERDICT r9 #3 closed). Position density costs ~K
+    bytes of hash per input byte — production runs sample offsets (every
+    j-th position still catches spans >= K + j - 1) or switch to the true
+    suffix-array job; the per-source scorecard shape is unchanged."""
+    t = load_tables(spark, sf_dir)
+    k = MEM_SHINGLE_LEN
+    sh = (
+        t.documents.filter(F.col("n_chars") >= k)
+        .select(
+            "doc_id", "source",
+            F.explode(F.sequence(F.lit(1), F.col("n_chars") - k + 1)).alias("i"),
+            "text",
+        )
+        .select(
+            "doc_id", "source",
+            F.substring(F.md5(F.expr(f"substr(text, i, {k})")), 1, 16).alias("h"),
+        )
+        # NOT persisted (r9): both consumers — the count table and the
+        # enrich join — shuffle this stream on the SAME key h, so Catalyst
+        # plans one Exchange and a ReusedExchange; caching the ~n_chars
+        # position-dense rows only added a corpus-sized storage footprint
+        # (it nondeterministically OOMed a bare default-heap 1g session at
+        # sf0.1, and at 100 TB you would never cache the exploded stream)
+    )
+    # Two-level census (VERDICT r9 #3): reduce the position-dense stream to
+    # distinct (h, doc_id, source) rows FIRST — a plain map-side-combined
+    # aggregate — so the remaining distinct-expand runs over deduplicated
+    # pairs, never the raw shingle stream (the sf0.1 bare-1g-heap residue).
+    # documents has one row per doc_id, so within an h-group the pre-rows
+    # are distinct doc_ids: n_docs is a plain COUNT(*), and only n_sources
+    # keeps a (tiny, <= n_docs input) distinct aggregate.
+    pre = sh.groupBy("h", "doc_id", "source").agg(F.count("*").alias("c"))
+    g = pre.groupBy("h").agg(
+        F.sum("c").cast("bigint").alias("n_occ"),
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.countDistinct("source").cast("bigint").alias("n_sources"),
+    )
+    dup = F.sum((F.col("n_occ") > 1).cast("bigint"))
+    return (
+        # merge-hint the enrich join: g is the per-h census of the SAME
+        # position-dense stream — corpus-sized, never broadcastable (AQE
+        # was choosing a 184 MiB broadcast at sf0.1, the actual cause of
+        # the bare-1g-session OOM; at 100 TB the h-table IS the corpus).
+        # SMJ on h rides the partitioning g's aggregate already produced.
+        sh.join(g.hint("merge"), "h")
+        .groupBy("source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_shingles"),
+            dup.alias("dup_occurrences"),
+            F.sum((F.col("n_docs") > 1).cast("bigint")).alias("cross_doc_occurrences"),
+            F.sum((F.col("n_sources") > 1).cast("bigint")).alias(
+                "cross_source_occurrences"
+            ),
+            F.expr(f"CAST(({MEM_SCALE} * SUM(CASE WHEN n_occ > 1 THEN 1 ELSE 0 END))"
+                   f" div COUNT(*) AS BIGINT)").alias("dup_rate_fx"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Substring-span REMOVAL: windowed-digest census, sparse/scrub variants, and
+# the keep-first excised-span inventory
+# --------------------------------------------------------------------------
 
 SSD_K = 40  # minimum verbatim span length (chars) — q_memorization's K
 # Packs (doc_id, position) into ONE BIGINT so keep-first is a plain MIN
@@ -556,8 +690,6 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 # --------------------------------------------------------------------------
 # Prefix-doubling suffix ranking (the real suffix-array kernel the
 # q_memorization docstring defers to) + the suffix-rank ExactSubstr span
@@ -949,11 +1081,11 @@ def _packed_window_terms(k: int = SSD_K) -> list:
     return terms
 
 
-def _packed_key_cols(k: int = SSD_K) -> list:
+def packed_key_cols(k: int = SSD_K) -> list:
     return [f"w{n}" for n in range(_n_pack_terms(k))]
 
 
-def _packed_windows(docs: DataFrame, k: int = SSD_K) -> DataFrame:
+def packed_windows(docs: DataFrame, k: int = SSD_K) -> DataFrame:
     """(doc_id, i, w0..w{ceil(k/7)-1}): every eligible window start with
     its content packed map-side. Carries the family's SSD_POS_BIG in-plan
     guard in the explode bound (the packed keep-first consumers depend on
@@ -1006,7 +1138,7 @@ def packed_excise_spans(docs: DataFrame, k: int = SSD_K) -> DataFrame:
     census via the join-free window form (_census_excise), islands-merge.
     One full-corpus exchange total; exact by construction."""
     return _islands_spans(
-        _census_excise(_packed_windows(docs, k), _packed_key_cols(k), k)
+        _census_excise(packed_windows(docs, k), packed_key_cols(k), k)
     )
 
 
@@ -1112,7 +1244,7 @@ def substring_pack_index(corpus: DataFrame, k: int = SSD_K) -> DataFrame:
     columns; appends are the admitted batch's distinct tuples (the
     q_stream_index_growth pattern), GDPR erasure is a keyed anti-join
     (the q_erasure pattern)."""
-    return _packed_windows(corpus, k).select(*_packed_key_cols(k)).distinct()
+    return packed_windows(corpus, k).select(*packed_key_cols(k)).distinct()
 
 
 def substring_ingest_probe(
@@ -1121,9 +1253,9 @@ def substring_ingest_probe(
     """Per-batch-doc admission scorecard against the packed index: window
     counts, duplicated-window count, islands-merged duplicated char mass,
     dup share in bp, and the admit/reject verdict."""
-    key_cols = _packed_key_cols(k)
+    key_cols = packed_key_cols(k)
     dupw = (
-        _packed_windows(batch, k)
+        packed_windows(batch, k)
         .join(index, key_cols, "left_semi")
         .select("doc_id", F.col("i").alias("st"), (F.col("i") + k - 1).alias("en"))
     )

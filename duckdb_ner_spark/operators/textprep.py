@@ -55,3 +55,21 @@ def sql_shingles(n: int = 3) -> str:
     """DuckDB twin of shingles_expr (1-based list indexing)."""
     concat = " || ' ' || ".join(f"ws[i+{k}]" for k in range(n))
     return SQL_SHINGLES.format(n=n, concat=concat, n_minus_2=n - 2)
+
+
+# engine-portable 60-bit hash: Spark conv(hex,16,10) == DuckDB '0x'||hex cast
+SPARK_H60 = "CAST(conv(substr(md5({arg}), 1, 15), 16, 10) AS BIGINT)"
+DUCK_H60 = "CAST(('0x' || substr(md5({arg}), 1, 15)) AS BIGINT)"
+
+
+def hex_to_int_sql(col: str, n: int) -> str:
+    """DuckDB replay of Spark's conv(substr(<hex>,1,n),16,10): positional
+    strpos sum over the first n hex digits of an already-computed hex
+    column (the q_shard_shuffle idiom; compute the md5 once in a prior CTE
+    and pass the COLUMN name here so the digest isn't re-evaluated per
+    digit)."""
+    return " + ".join(
+        f"(strpos('0123456789abcdef', substr({col}, {j + 1}, 1)) - 1)"
+        f" * {16 ** (n - 1 - j)}::BIGINT"
+        for j in range(n)
+    )

@@ -210,7 +210,7 @@ def run_stream_etl_to_parquet(
         .trigger(availableNow=True)
         .start()
     )
-    _await_drain(q)
+    await_drain(q)
 
 
 def dedup_stream(events: DataFrame, keys: list[str] | None = None, watermark: str = "1 hour") -> DataFrame:
@@ -224,7 +224,7 @@ def dedup_stream(events: DataFrame, keys: list[str] | None = None, watermark: st
     return events.dropDuplicates(keys)
 
 
-def _await_drain(q, timeout: int = 300) -> None:
+def await_drain(q, timeout: int = 300) -> None:
     """availableNow queries terminate on their own; a False return means the
     drain did NOT finish — raise instead of silently stopping mid-stream."""
     try:
@@ -246,4 +246,4 @@ def run_stream_to_memory(spark: SparkSession, sf_dir: str, table_name: str = "st
         .trigger(availableNow=True)
         .start()
     )
-    _await_drain(q)
+    await_drain(q)

@@ -142,7 +142,7 @@ def run_ner_stream_to_memory(
     """Drain the documents file source through the NER UDF in availableNow
     micro-batches; entity-label counts land in an in-memory sink (complete
     mode — the label domain is bounded, so complete-mode state is O(labels))."""
-    from .events import _await_drain
+    from .events import await_drain
 
     agg = entity_label_counts(spark, stream_documents(spark, sf_dir), model_path)
     q = (
@@ -152,4 +152,4 @@ def run_ner_stream_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    _await_drain(q)
+    await_drain(q)

@@ -89,9 +89,9 @@ def run_stateful_to_memory(spark, sf_dir: str, table_name: str = "stateful_out")
         .trigger(availableNow=True)
         .start()
     )
-    from .events import _await_drain
+    from .events import await_drain
 
-    _await_drain(q)
+    await_drain(q)
 
 
 # --------------------------------------------------------------------------
@@ -123,7 +123,7 @@ def running_cusum(events: DataFrame, k_cents: int, h_cents: int) -> DataFrame:
     s = max(0, s + cents - k) folded row by row in (ts, event_id) order
     within each micro-batch, with (s, best, argmin-id-at-best, n) carried
     as cross-batch state — the ingest-time twin of the batch q_cusum
-    (operators/round7d.py), whose prefix-min closed form this recursion
+    (operators/stats.py), whose prefix-min closed form this recursion
     must equal exactly (pinned by tests; the staged file source replays
     in event-time order, so cross-batch order matches the batch sort).
 

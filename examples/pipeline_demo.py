@@ -127,13 +127,9 @@ def main() -> None:
     attr = q_attribution(spark, sf_dir)
     print(f"last-touch attribution: {attr.count()} purchases credited to a view")
 
-    print("== corpus monitoring & sketches (round-7 families) ==")
-    from duckdb_ner_spark.operators.round7c import q_hll_registers
-    from duckdb_ner_spark.operators.round7d import (
-        q_consistent_hash,
-        q_cusum,
-        q_ks_drift,
-    )
+    print("== corpus monitoring & sketches ==")
+    from duckdb_ner_spark.operators.sketches import q_consistent_hash, q_hll_registers
+    from duckdb_ner_spark.operators.stats import q_cusum, q_ks_drift
 
     hll = q_hll_registers(spark, sf_dir).collect()[0]
     print(

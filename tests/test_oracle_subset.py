@@ -43,7 +43,7 @@ def test_matches_duckdb_oracle(spark, oracle_con, name):
 
 
 def test_fixedpoint_sum_equals_decimal_sum(spark):
-    """The fixed-point long fast path (operators/relational._fxsum) must be
+    """The fixed-point long fast path (operators/relational.fxsum) must be
     bit-identical to the decimal-sum slow path on arbitrary 2-decimal money
     data — negatives, NULLs, and exact .xx5 rounding midpoints included
     (products of 2-decimal values land exactly on midpoints, where double
@@ -51,7 +51,7 @@ def test_fixedpoint_sum_equals_decimal_sum(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from duckdb_ner_spark.operators.relational import _dec, _dec_rate, _fx100, _fxsum, _r2d
+    from duckdb_ner_spark.operators.relational import _dec, _dec_rate, _r2d, fx100, fxsum
 
     rng = np.random.default_rng(7)
     price = np.round(rng.uniform(-1000, 90000, 5000), 2)
@@ -63,10 +63,10 @@ def test_fixedpoint_sum_equals_decimal_sum(spark):
     rows += [(k, None, None) for k in range(7)]  # NULL money values
     df = spark.createDataFrame(rows, "g int, price double, disc double")
 
-    fx_rev = _fx100("price") * (F.lit(100) - _fx100("disc"))
+    fx_rev = fx100("price") * (F.lit(100) - fx100("disc"))
     fast = df.groupBy("g").agg(
-        _fxsum(_fx100("price"), 2).alias("s_price"),
-        _fxsum(fx_rev, 4).alias("s_rev"),
+        fxsum(fx100("price"), 2).alias("s_price"),
+        fxsum(fx_rev, 4).alias("s_rev"),
     )
     dec_rev = _dec("price") * (F.lit(1).cast("decimal(4,2)") - _dec_rate("disc"))
     slow = df.groupBy("g").agg(

@@ -273,7 +273,7 @@ def test_label_prop_one_exchange_per_round(spark, monkeypatch):
     does the planner see their partitioning (before, each round also
     re-shuffles both sides of its edge join), and no earlier query's
     persisted labels can stand in for a propagation subplan."""
-    from duckdb_ner_spark.operators import round7
+    from duckdb_ner_spark.operators import components
     from duckdb_ner_spark.operators.components import (
         day1_cooccurrence_graph,
         day1_directed_edges,
@@ -288,8 +288,8 @@ def test_label_prop_one_exchange_per_round(spark, monkeypatch):
         df.count()
     n_exchanges = []
     for iters in (1, 2, 3):
-        monkeypatch.setattr(round7, "LP_ITERS", iters)
-        lab = round7.label_prop_labels(edges, deg, dirn)
+        monkeypatch.setattr(components, "LP_ITERS", iters)
+        lab = components.label_prop_labels(edges, deg, dirn)
         n_exchanges.append(plan_report(lab).n_exchanges)
         plan = lab._jdf.queryExecution().optimizedPlan().toString()
         assert "max_by" not in plan.lower()
@@ -341,7 +341,7 @@ def test_session_memo_contract(spark, tmp_path, case):
         finally:
             spark.conf.set("spark.duckdb_ner.scanRepartition", "0")
     elif case == "extend_chain":
-        from duckdb_ner_spark.operators.round10 import staged_suffix_rounds
+        from duckdb_ner_spark.operators.substring import staged_suffix_rounds
 
         short = staged_suffix_rounds(spark, sf, 1)
         deeper = staged_suffix_rounds(spark, sf, 2)

@@ -381,7 +381,7 @@ import re as _re
 
 
 def _canon_py(url: str) -> str:
-    from duckdb_ner_spark.operators.round11 import _URL_CANON_STEPS
+    from duckdb_ner_spark.operators.dedup import _URL_CANON_STEPS
 
     u = url.lower()
     for pat, rep in _URL_CANON_STEPS:
@@ -430,7 +430,7 @@ def test_priority_sample_threshold_property(docs):
     is exactly min(k, n) docs."""
     import hashlib
 
-    from duckdb_ner_spark.operators.round11 import WS_U_SCALE
+    from duckdb_ner_spark.operators.sampling import WS_U_SCALE
 
     k = 5
 

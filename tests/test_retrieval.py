@@ -127,8 +127,8 @@ def test_containment_detects_planted_quote(spark):
     """A short doc fully contained in a long doc: containment ≈ 1 on the
     small side even though Jaccard is far below the near-dup threshold."""
     from duckdb_ner_spark.operators.dedup import (
-        _minhash_cols,
         lsh_candidate_pairs,
+        minhash_cols,
     )
     from duckdb_ner_spark.operators.textprep import shingles_expr, words_col
     from duckdb_ner_spark.plans.exprcache import cached_exprs
@@ -149,7 +149,7 @@ def test_containment_detects_planted_quote(spark):
         .filter(F.size("shingles") > 0)
     )
     sigsh = docs.select(
-        "doc_id", "shingles", *cached_exprs("minhash_cols", _minhash_cols)
+        "doc_id", "shingles", *cached_exprs("minhash_cols", minhash_cols)
     )
     pairs = lsh_candidate_pairs(sigsh, "doc_id")
     x = sigsh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))

@@ -11,7 +11,7 @@ from collections import defaultdict
 import pandas as pd
 
 import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
-from duckdb_ner_spark.operators.round10 import (
+from duckdb_ner_spark.operators.substring import (
     SSD_K,
     substring_excise_spans,
     substring_scrub,
@@ -187,7 +187,7 @@ def test_sparse_spans_subset_and_python_recompute(spark):
     spans equal an independent pure-Python content-defined recompute, and
     every sparse span is contained in a full span of the same doc (the
     subset-by-construction claim in the docstring)."""
-    from duckdb_ner_spark.operators.round10 import SSD_SPARSE_HEX
+    from duckdb_ner_spark.operators.substring import SSD_SPARSE_HEX
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").collect()
     texts = {r.doc_id: r.text for r in docs}
@@ -212,7 +212,7 @@ def test_suffix_rank_matches_bruteforce_prefix_classes(spark):
     convergence curve must be monotone (classes up, dup mass down)."""
     from collections import Counter
 
-    from duckdb_ner_spark.operators.round10 import SUFR_DEPTHS
+    from duckdb_ner_spark.operators.substring import SUFR_DEPTHS
 
     rows = QUERIES["q_suffix_rank"](spark, SF_SMOKE).orderBy("depth").collect()
     assert [r.depth for r in rows] == list(SUFR_DEPTHS)
@@ -256,7 +256,7 @@ def test_suffix_spans_planted_equals_hash_census(spark):
     suffix-rank chain (suffix_excise_spans) emits exactly the spans the
     md5-window census emits — including the keep-first canonical, the
     sentinel-bounded maximal runs, and the untouched unique doc."""
-    from duckdb_ner_spark.operators.round10 import suffix_excise_spans
+    from duckdb_ner_spark.operators.substring import suffix_excise_spans
 
     s1, s2 = _uniq("s1", 72), _uniq("s2", 60)
     pre, mid, post = _uniq("pre", 80), _uniq("mid", 90), _uniq("post", 70)
@@ -305,7 +305,7 @@ def test_pack_guard_raises_on_oversized_doc(spark):
     across docs and the destructive dedup would excise wrong spans)."""
     import pytest
 
-    from duckdb_ner_spark.operators.round10 import SSD_POS_BIG
+    from duckdb_ner_spark.operators.substring import SSD_POS_BIG
 
     big_doc = _uniq("big", SSD_POS_BIG)
     df = _docs_df(spark, {0: big_doc, 1: _uniq("ok", 120)})
@@ -318,7 +318,7 @@ def test_packed_census_equals_hash_census(spark):
     emits exactly the spans the md5 census emits on a planted corpus with
     multi-span docs, full-dup collapse, and an untouched unique doc — and
     a NUL character packs distinctly (cp+1 keeps real chars nonzero)."""
-    from duckdb_ner_spark.operators.round10 import packed_excise_spans
+    from duckdb_ner_spark.operators.substring import packed_excise_spans
 
     s1, s2 = _uniq("s1", 72), _uniq("s2", 60)
     pre, mid, post = _uniq("pre", 80), _uniq("mid", 90), _uniq("post", 70)
@@ -364,7 +364,7 @@ def test_packed_census_rejects_wide_codepoints(spark):
     eligible window (silent misordering would corrupt the census)."""
     import pytest
 
-    from duckdb_ner_spark.operators.round10 import packed_excise_spans
+    from duckdb_ner_spark.operators.substring import packed_excise_spans
 
     texts = {0: _uniq("w", 30) + "é" + _uniq("w2", 30), 1: _uniq("x", 120)}
     df = _docs_df(spark, texts)
@@ -377,7 +377,7 @@ def test_substring_incr_probe_planted(spark):
     corpus span is charged exactly the span's windows/chars, an exact
     mirror of a corpus doc is rejected at 10000 bp, and a unique batch doc
     admits with zeros."""
-    from duckdb_ner_spark.operators.round10 import (
+    from duckdb_ner_spark.operators.substring import (
         SSD_K,
         substring_ingest_probe,
         substring_pack_index,
@@ -501,7 +501,7 @@ def test_suffix_lcp_matches_bruteforce(spark):
     import os
     import tempfile
 
-    from duckdb_ner_spark.operators.round10 import suffix_adjacent_lcps
+    from duckdb_ner_spark.operators.substring import suffix_adjacent_lcps
 
     s1 = _uniq("s1", 80)
     dup = _uniq("dupl", 120)
@@ -551,10 +551,7 @@ def test_suffix_lcp_registry_and_census_crosscheck(spark):
     ExactSubstr census agreeing with the other two."""
     from pyspark.sql import functions as F
 
-    from duckdb_ner_spark.operators.round10 import (
-        _packed_key_cols,
-        _packed_windows,
-    )
+    from duckdb_ner_spark.operators.substring import packed_key_cols, packed_windows
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").collect()
     texts = {r.doc_id: r.text for r in docs}
@@ -568,10 +565,10 @@ def test_suffix_lcp_registry_and_census_crosscheck(spark):
     # more than once (canonical occurrences INCLUDED)
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*_packed_key_cols(SSD_K))
+    w = Window.partitionBy(*packed_key_cols(SSD_K))
     df = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     census_dup = (
-        _packed_windows(df, SSD_K)
+        packed_windows(df, SSD_K)
         .select(F.count("*").over(w).alias("n_occ"))
         .filter(F.col("n_occ") > 1)
         .count()

@@ -17,16 +17,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
-from duckdb_ner_spark.operators.round11 import (
-    BQ_K,
-    BQ_M,
-    BQ_NQ,
-    WS_K,
-    WS_U_SCALE,
-    _URL_CANON_STEPS,
-    _canon_col,
-    binary_signatures,
-)
+from duckdb_ner_spark.operators.dedup import _URL_CANON_STEPS, _canon_col
+from duckdb_ner_spark.operators.retrieval import BQ_K, BQ_M, BQ_NQ, binary_signatures
+from duckdb_ner_spark.operators.sampling import WS_K, WS_U_SCALE
 from duckdb_ner_spark.plans.registry import QUERIES
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -187,7 +180,7 @@ def test_wsample_degenerate_small_corpus(spark, tmp_path):
         assert r["total_w_est"] == r["total_w_true"]
         assert r["err_bp"] == 0
     # oracle replay on the same tiny corpus agrees cell-for-cell
-    from duckdb_ner_spark.operators.round11 import _WSAMPLE_ORACLE
+    from duckdb_ner_spark.operators.sampling import _WSAMPLE_ORACLE
 
     con2 = duckdb.connect()
     con2.execute(
@@ -300,7 +293,7 @@ def test_quantile_sketch_certificate_and_python_replay(spark):
     bucket-containment theorem holds on real data), err stays inside
     [0, QS_W), and the sketch picks match a pure-Python replay of both the
     bucketed walk and the exact rank statistic."""
-    from duckdb_ner_spark.operators.round11 import QS_GRID, QS_W
+    from duckdb_ner_spark.operators.sketches import QS_GRID, QS_W
 
     rows = QUERIES["q_quantile_sketch"](spark, SF_SMOKE).collect()
     con = duckdb.connect()
@@ -338,7 +331,7 @@ def test_quantile_sketch_certificate_and_python_replay(spark):
 def test_quantile_sketch_domain_guard(spark):
     """An out-of-domain n_chars raises in-plan instead of silently growing
     the sketch unboundedly."""
-    from duckdb_ner_spark.operators.round11 import QS_DOMAIN
+    from duckdb_ner_spark.operators.sketches import QS_DOMAIN
 
     pdf = pd.DataFrame(
         {
@@ -368,7 +361,7 @@ def test_ivf_incr_census_invariants(spark):
     exactly, every centroid's own cell contains it (a centroid assigns to
     itself with sqd = 0 => base_avg_sqd of a 1-member cell is 0), growth
     and drift columns agree with their definitions."""
-    from duckdb_ner_spark.operators.round11 import IVFI_CELLS
+    from duckdb_ner_spark.operators.retrieval import IVFI_CELLS
 
     rows = QUERIES["q_ivf_incr"](spark, SF_SMOKE).collect()
     assert 1 <= len(rows) <= IVFI_CELLS
@@ -388,7 +381,7 @@ def test_ivf_incr_routing_matches_numpy(spark):
     replay of the stride seeding and integer spherical argmax."""
     import numpy as np
 
-    from duckdb_ner_spark.operators.round11 import IVFI_CELLS
+    from duckdb_ner_spark.operators.retrieval import IVFI_CELLS
 
     con = duckdb.connect()
     emb = con.execute(
@@ -429,7 +422,7 @@ def test_binary_sweep_curve_invariants(spark):
     cost monotone in M, recall at the largest M at least matches the
     smallest M's (a prefix shortlist can only add candidates), and the
     recall accounting is internally consistent."""
-    from duckdb_ner_spark.operators.round11 import BQS_GRID
+    from duckdb_ner_spark.operators.retrieval import BQS_GRID
 
     rows = sorted(
         QUERIES["q_binary_sweep"](spark, SF_SMOKE).collect(),
@@ -489,7 +482,7 @@ def test_basket_affinity_python_recompute(spark):
     a from-scratch Python recompute over the parquet baskets."""
     from collections import Counter
 
-    from duckdb_ner_spark.operators.round11 import BA_MIN_SUP
+    from duckdb_ner_spark.operators.stats import BA_MIN_SUP
 
     con = duckdb.connect()
     rows = con.execute(
@@ -538,7 +531,7 @@ def test_basket_cap_bounds_megabasket(spark):
     from pyspark.sql import functions as F
 
     from duckdb_ner_spark.operators.caps import capped_bucket_ids
-    from duckdb_ner_spark.operators.round11 import BA_MAX_BASKET
+    from duckdb_ner_spark.operators.stats import BA_MAX_BASKET
 
     mega = spark.range(1000).select(
         F.lit(7).alias("o"), (F.col("id") + 1).alias("p")
@@ -565,7 +558,7 @@ def test_basket_cap_noop_at_tpch(spark):
         f"SELECT MAX(c) FROM (SELECT COUNT(DISTINCT l_partkey) AS c FROM"
         f" '{SF_SMOKE}/lineitem.parquet' GROUP BY l_orderkey)"
     ).fetchone()[0]
-    from duckdb_ner_spark.operators.round11 import BA_MAX_BASKET
+    from duckdb_ner_spark.operators.stats import BA_MAX_BASKET
 
     assert mx < BA_MAX_BASKET
 
@@ -730,7 +723,7 @@ def test_lsh_sweep_curve_and_exact_truth(spark):
     matches an O(n^2) pure-Python exact-Jaccard count; and the shipped
     4x2 config sits on the sweet spot (full recall at a fraction of the
     8x1 candidate volume)."""
-    from duckdb_ner_spark.operators.round11 import LSW_TAU_D, LSW_TAU_N
+    from duckdb_ner_spark.operators.dedup import LSW_TAU_D, LSW_TAU_N
 
     rows = sorted(
         QUERIES["q_lsh_sweep"](spark, SF_SMOKE).collect(),
@@ -783,7 +776,7 @@ def test_index_delta_merge_equals_rebuild(spark):
     posting list matches a pure-Python recompute."""
     from collections import Counter
 
-    from duckdb_ner_spark.operators.round11 import IDX_TERMS, IDX_TOPK
+    from duckdb_ner_spark.operators.retrieval import IDX_TERMS, IDX_TOPK
 
     con = duckdb.connect()
     docs = con.execute(

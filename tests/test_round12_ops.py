@@ -14,20 +14,17 @@ import duckdb
 import pytest
 
 import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
-from duckdb_ner_spark.operators.round12 import (
-    BLM_BPK,
-    BLM_K,
-    BLM_PREFIX,
-    FOLD_N,
-    GR_DUP3_BP,
-    GR_TOP2_BP,
-    RE_NQ,
-    VD_TOPK,
+from duckdb_ner_spark.operators.curation import FOLD_N
+from duckdb_ner_spark.operators.layout_queries import (
     ZP_BITS,
     ZP_FILE_SHIFT,
     ZP_HI,
     ZP_LO,
 )
+from duckdb_ner_spark.operators.retrieval import RE_NQ
+from duckdb_ner_spark.operators.sketches import BLM_BPK, BLM_K, BLM_PREFIX
+from duckdb_ner_spark.operators.textstats import VD_TOPK
+from duckdb_ner_spark.operators.trainprep import GR_DUP3_BP, GR_TOP2_BP
 from duckdb_ner_spark.plans.registry import QUERIES
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -548,7 +545,7 @@ def test_cc_seeded_propagation_planted_merge(spark):
 
 
 def test_rand_response_matches_pure_python_recompute(spark):
-    from duckdb_ner_spark.operators.round12 import RR_P_DEN, RR_P_NUM
+    from duckdb_ner_spark.operators.stats import RR_P_DEN, RR_P_NUM
 
     con = duckdb.connect()
     rows_src = con.execute(
@@ -587,7 +584,7 @@ def test_rand_response_estimator_unbiased_at_scale():
     per-source testdata census can't show (at n = 25 with truth near the
     RR fixed point n/2, estimator variance exceeds the raw bias, which is
     why the query emits BOTH est and raw for the analyst to weigh)."""
-    from duckdb_ner_spark.operators.round12 import RR_P_DEN, RR_P_NUM
+    from duckdb_ner_spark.operators.stats import RR_P_DEN, RR_P_NUM
 
     n, n_true = 100_000, 5_000
     n_rep = 0
@@ -648,7 +645,7 @@ def test_simhash_sweep_pigeonhole_completeness(spark):
     one of the r+1 blocks — so n_emit equals the TRUE count of
     bucket-reachable pairs at each radius (no pair is lost to bucketing,
     only to the explicit cap)."""
-    from duckdb_ner_spark.operators.round12 import SHS_RADII, _shs_cfg
+    from duckdb_ner_spark.operators.dedup import SHS_RADII, _shs_cfg
 
     sigs = {d: _simhash60(t) for d, t, _ in _docs()}
     ids = sorted(sigs)
@@ -697,12 +694,7 @@ def test_simhash_sweep_curve_monotone(spark):
 def test_maxsim_matches_numpy_recompute(spark):
     import numpy as np
 
-    from duckdb_ner_spark.operators.round12 import (
-        MS_K,
-        MS_NQ,
-        MS_SUB,
-        MS_SUBDIM,
-    )
+    from duckdb_ner_spark.operators.retrieval import MS_K, MS_NQ, MS_SUB, MS_SUBDIM
 
     con = duckdb.connect()
     rows = con.execute(
@@ -745,7 +737,7 @@ def test_maxsim_matches_numpy_recompute(spark):
 def test_maxsim_dominates_single_subvector(spark):
     """Sum-of-max over MS_SUB sub-vectors >= any single sub-vector's dot:
     the late-interaction score is an upper envelope by construction."""
-    from duckdb_ner_spark.operators.round12 import MS_SUB
+    from duckdb_ner_spark.operators.retrieval import MS_SUB
 
     rows = QUERIES["q_maxsim_topk"](spark, SF_SMOKE).collect()
     # unit-fx dots are bounded by FX^2 per sub-vector pair
@@ -785,7 +777,7 @@ def _tkb_bounds(shard_counts, m, k):
 
 
 def test_topk_bounds_matches_pure_python_recompute(spark):
-    from duckdb_ner_spark.operators.round12 import TKB_K, TKB_M
+    from duckdb_ner_spark.operators.retrieval import TKB_K, TKB_M
 
     shard_counts = {}
     truth = Counter()
@@ -851,11 +843,7 @@ def test_topk_bounds_unseen_word_keeps_certificate_open():
 
 
 def test_batch_padding_matches_pure_python_recompute(spark):
-    from duckdb_ner_spark.operators.round12 import (
-        BP_BATCH,
-        BP_BUCKET,
-        BP_SHARD,
-    )
+    from duckdb_ner_spark.operators.trainprep import BP_BATCH, BP_BUCKET, BP_SHARD
 
     lens = {d: len(t.split(" ")) for d, t, _ in _docs()}
 
@@ -910,7 +898,7 @@ def test_batch_padding_bucketing_wins(spark):
 def test_quant_sweep_matches_numpy_recompute(spark):
     import numpy as np
 
-    from duckdb_ner_spark.operators.round12 import QS_BITS, RE_NQ
+    from duckdb_ner_spark.operators.retrieval import QS_BITS, RE_NQ
 
     con = duckdb.connect()
     rows = con.execute(

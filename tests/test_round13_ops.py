@@ -5,9 +5,10 @@ Each query is hash-verified against its DuckDB oracle by the driver; these
 tests pin the SEMANTICS with planted fixtures and independent pure-Python /
 NumPy recomputes on shipped testdata (the house test model, SURVEY §5).
 The planted fixtures matter doubly here: the synthetic corpus's lang and
-quality labels carry little token signal (the regime notes in round13.py),
-so the classifiers' LEARNING behavior is pinned on fixtures where signal
-exists, while the corpus tests pin the exact integer arithmetic.
+quality labels carry little token signal (the regime notes in the q_langid
+and q_quality_score docstrings, textstats.py), so the classifiers' LEARNING
+behavior is pinned on fixtures where signal exists, while the corpus tests
+pin the exact integer arithmetic.
 """
 
 import hashlib
@@ -17,15 +18,8 @@ import duckdb
 import numpy as np
 
 import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
-from duckdb_ner_spark.operators.round13 import (
-    MR_K,
-    MR_LEVELS,
-    MR_M,
-    MR_NQ,
-    MR_SUBDIM,
-    QSC_FX,
-    QSC_NB,
-)
+from duckdb_ner_spark.operators.retrieval import MR_K, MR_LEVELS, MR_M, MR_NQ, MR_SUBDIM
+from duckdb_ner_spark.operators.textstats import QSC_FX, QSC_NB
 from duckdb_ner_spark.operators.textstats import (
     GATE_DISTINCT_DEN,
     GATE_DISTINCT_NUM,
@@ -345,7 +339,7 @@ def test_maxsim_sweep_matches_literal_two_stage_replay(spark):
     """Runs the LITERAL two-stage path per m (shortlist by int8 MaxSim,
     re-rank shortlist by exact MaxSim, take top-k, intersect with exact
     top-k) and asserts the query's recall identity census matches."""
-    from duckdb_ner_spark.operators.round13 import MSW_K, MSW_MS
+    from duckdb_ner_spark.operators.retrieval import MSW_K, MSW_MS
 
     ids, su = _slice_units()
     n = len(ids)
@@ -394,11 +388,7 @@ def test_maxsim_sweep_curve_is_monotone(spark):
 
 
 def test_ndcg_matches_numpy_recompute(spark):
-    from duckdb_ner_spark.operators.round13 import (
-        NDCG_IDCG,
-        NDCG_K,
-        NDCG_NQ,
-    )
+    from duckdb_ner_spark.operators.retrieval import NDCG_IDCG, NDCG_K, NDCG_NQ
 
     con = duckdb.connect()
     rows_e = con.execute(
@@ -439,7 +429,7 @@ def test_ndcg_perfect_system_scores_10000():
     """The normalization contract: a system that reproduces the exact
     ranking exactly earns DCG == IDCG (ndcg_bp == 10000), and any
     permutation of the head can only lose."""
-    from duckdb_ner_spark.operators.round13 import NDCG_IDCG, NDCG_K
+    from duckdb_ner_spark.operators.retrieval import NDCG_IDCG, NDCG_K
 
     W = [10000 // ((i + 1).bit_length() - 1) for i in range(1, NDCG_K + 1)]
     perfect = sum((NDCG_K - i) * W[i] for i in range(NDCG_K))

@@ -331,7 +331,7 @@ def test_pagerank_matches_python_recompute(spark):
     from collections import defaultdict
 
     from duckdb_ner_spark.operators.components import day1_cooccurrence_graph
-    from duckdb_ner_spark.operators.round7 import PR_ITERS, PR_SCALE, PR_TOP
+    from duckdb_ner_spark.operators.components import PR_ITERS, PR_SCALE, PR_TOP
     from duckdb_ner_spark.plans.registry import QUERIES
 
     edges, _deg = day1_cooccurrence_graph(spark, SF_SMOKE)
@@ -365,7 +365,7 @@ def test_pagerank_matches_python_recompute(spark):
 def test_k_anonymity_matches_pandas_recompute(spark):
     import pandas as pd  # noqa: F401
 
-    from duckdb_ner_spark.operators.round7 import KANON_K, KANON_LEN_BUCKET
+    from duckdb_ner_spark.operators.stats import KANON_K, KANON_LEN_BUCKET
     from duckdb_ner_spark.plans.registry import QUERIES
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").toPandas()
@@ -455,11 +455,7 @@ def test_label_prop_matches_python_recompute(spark):
     from collections import Counter, defaultdict
 
     from duckdb_ner_spark.operators.components import day1_cooccurrence_graph
-    from duckdb_ner_spark.operators.round7 import (
-        LP_ITERS,
-        LP_N_LABELS,
-        LP_SEED_MOD,
-    )
+    from duckdb_ner_spark.operators.components import LP_ITERS, LP_N_LABELS, LP_SEED_MOD
     from duckdb_ner_spark.plans.registry import QUERIES
 
     edges, _ = day1_cooccurrence_graph(spark, SF_SMOKE)
@@ -513,7 +509,7 @@ def test_hard_negatives_matches_numpy_recompute(spark):
     fixed-point quantization and tiebreak)."""
     import numpy as np
 
-    from duckdb_ner_spark.operators.round7 import HN_N_ANCHORS
+    from duckdb_ner_spark.operators.retrieval import HN_N_ANCHORS
     from duckdb_ner_spark.operators.similarity import FX_SCALE
     from duckdb_ner_spark.plans.registry import QUERIES
 
@@ -554,7 +550,7 @@ def test_bfs_dist_matches_python_recompute(spark):
     from collections import defaultdict
 
     from duckdb_ner_spark.operators.components import day1_cooccurrence_graph
-    from duckdb_ner_spark.operators.round7 import BFS_ROUNDS, BFS_SEED_MOD
+    from duckdb_ner_spark.operators.components import BFS_ROUNDS, BFS_SEED_MOD
     from duckdb_ner_spark.plans.registry import QUERIES
 
     edges, _deg = day1_cooccurrence_graph(spark, SF_SMOKE)
@@ -591,7 +587,7 @@ def test_drift_tvd_matches_python_recompute(spark):
     half-counts, cross-multiplied deviations, single final floor."""
     from collections import defaultdict
 
-    from duckdb_ner_spark.operators.round7 import TVD_SCALE
+    from duckdb_ner_spark.operators.stats import TVD_SCALE
     from duckdb_ner_spark.plans.registry import QUERIES
 
     rows = (
@@ -624,7 +620,7 @@ def test_source_concentration_matches_python_recompute(spark):
     from the raw source counts, including the MAD-identity Gini."""
     from collections import Counter
 
-    from duckdb_ner_spark.operators.round7 import CONC_SCALE
+    from duckdb_ner_spark.operators.stats import CONC_SCALE
     from duckdb_ner_spark.plans.registry import QUERIES
 
     cnt = Counter()
@@ -658,7 +654,7 @@ def test_textrank_matches_python_recompute(spark):
     same tokenization, adjacency, length filter, integer iteration."""
     from collections import defaultdict
 
-    from duckdb_ner_spark.operators.round7 import (
+    from duckdb_ner_spark.operators.components import (
         PR_ITERS,
         PR_SCALE,
         TR_MIN_LEN,
@@ -702,7 +698,7 @@ def test_dp_sensitivity_matches_python_recompute(spark):
     import math
     from collections import Counter
 
-    from duckdb_ner_spark.operators.round7 import DP_CLIP_Q, DP_SCALE
+    from duckdb_ner_spark.operators.stats import DP_CLIP_Q, DP_SCALE
     from duckdb_ner_spark.plans.registry import QUERIES
 
     cells = Counter(
@@ -744,7 +740,7 @@ def test_bpe_merges_matches_true_greedy_recompute(spark):
     replace() application equals real BPE on this corpus's words."""
     from collections import Counter
 
-    from duckdb_ner_spark.operators.round7 import BPE_MERGES
+    from duckdb_ner_spark.operators.trainprep import BPE_MERGES
     from duckdb_ner_spark.plans.registry import QUERIES
 
     wf = Counter()
@@ -812,7 +808,7 @@ def test_span_corruption_matches_python_recompute(spark):
     """Input/target construction recomputed in pure Python with the same
     phase arithmetic; also pins the objective's invariants (masked words
     all appear in target; input+target word multiset == original)."""
-    from duckdb_ner_spark.operators.round7 import SPAN_LEN, SPAN_PERIOD
+    from duckdb_ner_spark.operators.trainprep import SPAN_LEN, SPAN_PERIOD
     from duckdb_ner_spark.plans.registry import QUERIES
 
     docs = {
@@ -888,7 +884,7 @@ def test_apportion_exact_budget_and_python_recompute(spark):
     must sum to the budget EXACTLY and floors must under-fill it."""
     from collections import Counter
 
-    from duckdb_ner_spark.operators.round7 import APPORTION_BUDGET
+    from duckdb_ner_spark.operators.stats import APPORTION_BUDGET
     from duckdb_ner_spark.plans.registry import QUERIES
 
     mass = Counter()
@@ -921,7 +917,7 @@ def test_apportion_exact_budget_and_python_recompute(spark):
 def test_fim_transform_matches_python_recompute(spark):
     """PSM reassembly recomputed in pure Python; segments must partition
     the word list exactly (lossless)."""
-    from duckdb_ner_spark.operators.round7 import FIM_PHASES
+    from duckdb_ner_spark.operators.trainprep import FIM_PHASES
     from duckdb_ner_spark.plans.registry import QUERIES
 
     docs = {
@@ -954,7 +950,7 @@ def test_neyman_alloc_matches_python_recompute(spark):
     import math
     from collections import defaultdict
 
-    from duckdb_ner_spark.operators.round7 import NEYMAN_BUDGET, NEYMAN_W_SCALE
+    from duckdb_ner_spark.operators.stats import NEYMAN_BUDGET, NEYMAN_W_SCALE
     from duckdb_ner_spark.plans.registry import QUERIES
 
     strata = defaultdict(list)
@@ -1001,7 +997,7 @@ def test_grpo_advantage_matches_python_recompute(spark):
     import datetime
     import decimal
 
-    from duckdb_ner_spark.operators.round7 import ADV_SCALE
+    from duckdb_ner_spark.operators.trainprep import ADV_SCALE
     from duckdb_ner_spark.plans.registry import QUERIES
 
     cutoff = datetime.datetime(2024, 1, 2)

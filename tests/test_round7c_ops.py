@@ -25,7 +25,7 @@ def test_rejection_sampling_matches_python_recompute(spark):
     """First-accept semantics recomputed imperatively (the order-dependent
     stopping rule the query expresses order-free): walk each prompt's
     candidates in event_id order, stop at the first reward >= tau."""
-    from duckdb_ner_spark.operators.round7c import RS_TAU_CENTS
+    from duckdb_ner_spark.operators.trainprep import RS_TAU_CENTS
 
     rows = (
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")
@@ -66,7 +66,7 @@ def test_kneser_ney_matches_python_recompute(spark):
     must be the true global top-K under (p_fx DESC, v, w)."""
     from fractions import Fraction
 
-    from duckdb_ner_spark.operators.round7c import KN_SCALE, KN_TOP
+    from duckdb_ner_spark.operators.textstats import KN_SCALE, KN_TOP
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("text").collect()
     pair = Counter()
@@ -113,7 +113,7 @@ def test_curriculum_matches_python_recompute(spark):
     distribution >= p) and a running-total walk."""
     import math
 
-    from duckdb_ner_spark.operators.round7c import CUR_EPOCHS, CUR_SCALE
+    from duckdb_ner_spark.operators.trainprep import CUR_EPOCHS, CUR_SCALE
 
     docs = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -160,7 +160,7 @@ def test_memorization_matches_python_recompute(spark):
     """Character-shingle duplicate mass recomputed from raw text (no md5 —
     the recompute groups on the actual spans, proving the hash grouping
     is collision-free here)."""
-    from duckdb_ner_spark.operators.round7c import MEM_SCALE, MEM_SHINGLE_LEN
+    from duckdb_ner_spark.operators.substring import MEM_SCALE, MEM_SHINGLE_LEN
 
     docs = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -272,7 +272,7 @@ def test_count_min_matches_python_recompute(spark):
     """CMS recomputed imperatively: build the d x w table by summation,
     point-estimate by min-over-rows, and check the query's top-K rows and
     the never-underestimates invariant."""
-    from duckdb_ner_spark.operators.round7c import CMS_D, CMS_TOP, CMS_W
+    from duckdb_ner_spark.operators.sketches import CMS_D, CMS_TOP, CMS_W
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("text").collect()
     wf = Counter()
@@ -299,7 +299,7 @@ def test_hll_registers_matches_python_recompute(spark):
     (register, rest), rho = leading-zeros + 1 via bit_length, registers
     merge by max, and the fixed-point alpha-corrected estimate must match
     the query's single audit row exactly."""
-    from duckdb_ner_spark.operators.round7c import (
+    from duckdb_ner_spark.operators.sketches import (
         HLL_ALPHA_DEN,
         HLL_ALPHA_NUM,
         HLL_M,

@@ -20,7 +20,7 @@ def _h60(arg: str) -> int:
 def test_feature_hashing_matches_python_recompute(spark):
     """Hashing-trick vectors rebuilt cell by cell: signed sums per bucket,
     collision count = distinct words minus occupied cells."""
-    from duckdb_ner_spark.operators.round7d import FH_D
+    from duckdb_ner_spark.operators.sketches import FH_D
 
     docs = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -58,7 +58,7 @@ def test_feature_hashing_matches_python_recompute(spark):
 def test_postings_compression_matches_python_recompute(spark):
     """Delta/vbyte costs recomputed from sorted distinct postings with
     Python int.bit_length (== LENGTH(bin(x)) on positives)."""
-    from duckdb_ner_spark.operators.round7d import PL_TOP
+    from duckdb_ner_spark.operators.retrieval import PL_TOP
 
     docs = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -96,7 +96,7 @@ def test_postings_compression_matches_python_recompute(spark):
 def test_skipgram_matches_python_recompute(spark):
     """Skip-gram pairs regenerated positionally (the imperative double
     loop the query expresses array-side)."""
-    from duckdb_ner_spark.operators.round7d import SG_TOP, SG_WINDOW
+    from duckdb_ner_spark.operators.trainprep import SG_TOP, SG_WINDOW
 
     docs = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -124,7 +124,7 @@ def test_random_projection_matches_python_recompute(spark):
     """JL projection recomputed with the same hash-derived sign matrix in
     exact integer arithmetic; ratios must concentrate near the JL
     expectation (scale factor RP_RATIO_SCALE)."""
-    from duckdb_ner_spark.operators.round7d import RP_FX, RP_K, RP_RATIO_SCALE
+    from duckdb_ner_spark.operators.retrieval import RP_FX, RP_K, RP_RATIO_SCALE
 
     from decimal import ROUND_HALF_EVEN, Decimal
 
@@ -202,7 +202,7 @@ def test_auc_matches_python_recompute(spark):
     AUC over a label-independent score must hover near 5000 bp."""
     from decimal import ROUND_HALF_EVEN, Decimal
 
-    from duckdb_ner_spark.operators.round7d import AUC_FX
+    from duckdb_ner_spark.operators.stats import AUC_FX
 
     vecs = (
         spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
@@ -242,7 +242,7 @@ def test_power_iteration_matches_python_recompute(spark):
     (sign-split truncating division replicated with abs // y)."""
     from decimal import ROUND_HALF_EVEN, Decimal
 
-    from duckdb_ner_spark.operators.round7d import PI_FX
+    from duckdb_ner_spark.operators.components import PI_FX
 
     vecs = (
         spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
@@ -287,7 +287,7 @@ def test_power_iteration_matches_python_recompute(spark):
 def test_consistent_hash_matches_python_recompute(spark):
     """Ring successor assignment recomputed imperatively; the
     minimal-disruption property (old shards gain nothing) must hold."""
-    from duckdb_ner_spark.operators.round7d import CH_SHARDS, CH_VNODES
+    from duckdb_ner_spark.operators.sketches import CH_SHARDS, CH_VNODES
 
     doc_ids = [
         r.doc_id
@@ -332,7 +332,7 @@ def test_consistent_hash_matches_python_recompute(spark):
 def test_merkle_matches_python_recompute(spark):
     """Roots recomputed bottom-up; a one-byte change in any doc must flip
     its source's root and only that root."""
-    from duckdb_ner_spark.operators.round7d import MK_LEAVES
+    from duckdb_ner_spark.operators.sketches import MK_LEAVES
 
     docs = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -379,7 +379,7 @@ def test_moe_router_matches_python_recompute(spark):
     hash-derived expert prototypes; loads must sum to the full slot count."""
     from decimal import ROUND_HALF_EVEN, Decimal
 
-    from duckdb_ner_spark.operators.round7d import MOE_E, MOE_FX
+    from duckdb_ner_spark.operators.trainprep import MOE_E, MOE_FX
 
     vecs = (
         spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
@@ -468,12 +468,8 @@ def test_modularity_matches_python_recompute(spark):
     """Per-community modularity contributions recomputed from the raw
     graph with an imperative label-propagation replay; contributions must
     sum to a Q consistent with the cleared-denominator identity."""
-    from duckdb_ner_spark.operators.round7 import (
-        LP_ITERS,
-        LP_N_LABELS,
-        LP_SEED_MOD,
-    )
-    from duckdb_ner_spark.operators.round7d import MOD_SCALE
+    from duckdb_ner_spark.operators.components import LP_ITERS, LP_N_LABELS, LP_SEED_MOD
+    from duckdb_ner_spark.operators.components import MOD_SCALE
     from duckdb_ner_spark.operators.components import day1_cooccurrence_graph
 
     edges_df, _ = day1_cooccurrence_graph(spark, SF_SMOKE)
@@ -520,7 +516,7 @@ def test_modularity_matches_python_recompute(spark):
 def test_assortativity_matches_python_recompute(spark):
     """Degree-Pearson moments recomputed from the raw edge list; the
     symmetrized-formula result must equal scipy-free brute force."""
-    from duckdb_ner_spark.operators.round7d import MOD_SCALE
+    from duckdb_ner_spark.operators.components import MOD_SCALE
     from duckdb_ner_spark.operators.components import day1_cooccurrence_graph
 
     edges_df, _ = day1_cooccurrence_graph(spark, SF_SMOKE)
@@ -587,7 +583,7 @@ def test_cusum_matches_python_recompute(spark):
     imperatively must equal the query's prefix-min closed form."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    from duckdb_ner_spark.operators.round7d import CUSUM_H_CENTS, CUSUM_K_CENTS
+    from duckdb_ner_spark.operators.stats import CUSUM_H_CENTS, CUSUM_K_CENTS
 
     def _cents(value: float) -> int:
         return int(
@@ -627,7 +623,7 @@ def test_benford_matches_python_recompute(spark):
     sum to exactly 10000 bp and the uniform generator must deviate."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    from duckdb_ner_spark.operators.round7d import BENFORD_BP
+    from duckdb_ner_spark.operators.stats import BENFORD_BP
 
     assert sum(BENFORD_BP) == 10000
     rows = (
@@ -718,7 +714,7 @@ def test_stream_cusum_non_cent_parity(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from duckdb_ner_spark.operators.round7d import CUSUM_H_CENTS, CUSUM_K_CENTS
+    from duckdb_ner_spark.operators.stats import CUSUM_H_CENTS, CUSUM_K_CENTS
 
     # traps (double product just below .5) interleaved with exact cents and
     # agreeing .xx5 values; both event types get drifting sequences so the

@@ -112,7 +112,7 @@ def test_stream_pipeline_matches_batch_recompute(spark):
 def test_lift_curve_matches_python_recompute(spark):
     """q_lift_curve vs a driver-side recompute of buckets, rates, and the
     integer cross-multiplied lift."""
-    from duckdb_ner_spark.operators.round8 import LIFT_MAX_BUCKET, LIFT_SCALE
+    from duckdb_ner_spark.operators.stats import LIFT_MAX_BUCKET, LIFT_SCALE
 
     ev = (
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")
@@ -159,7 +159,7 @@ def test_lift_curve_matches_python_recompute(spark):
 def test_record_linkage_matches_python_recompute(spark):
     """q_record_linkage vs a pure-Python blocked linkage (classic DP edit
     distance) over the same capped blocks."""
-    from duckdb_ner_spark.operators.round8 import RL_BLOCK_CAP, RL_CLOSE_DIST
+    from duckdb_ner_spark.operators.dedup import RL_BLOCK_CAP, RL_CLOSE_DIST
 
     def lev(a: str, b: str) -> int:
         prev = list(range(len(b) + 1))
@@ -209,7 +209,7 @@ def test_bpe_apply_consistent_with_bpe_merges(spark):
     final learned merge must equal q_bpe_merges' own n_tokens_after for
     that merge rank (same corpus, same segmentation), and the character
     baseline must equal sum(freq * len(word)) over the vocabulary."""
-    from duckdb_ner_spark.operators.round7 import BPE_MERGES
+    from duckdb_ner_spark.operators.trainprep import BPE_MERGES
 
     apply_rows = QUERIES["q_bpe_apply"](spark, SF_SMOKE).collect()
     merges = {
@@ -292,11 +292,7 @@ def test_bootstrap_ci_matches_python_recompute(spark):
     nearest-rank-discrete percentiles."""
     import hashlib
 
-    from duckdb_ner_spark.operators.round8 import (
-        BOOT_B,
-        BOOT_FX,
-        BOOT_THRESHOLDS,
-    )
+    from duckdb_ner_spark.operators.stats import BOOT_B, BOOT_FX, BOOT_THRESHOLDS
 
     docs = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -357,7 +353,7 @@ def test_bootstrap_ci_matches_python_recompute(spark):
 def test_dsar_report_matches_python_recompute(spark):
     """q_dsar_report vs a driver-side recompute of the 0/1/2-hop subject
     row inventory and cents checksums."""
-    from duckdb_ner_spark.operators.round8 import DSAR_MOD, DSAR_REM
+    from duckdb_ner_spark.operators.scalepatterns import DSAR_MOD, DSAR_REM
 
     cust = spark.read.parquet(f"{SF_SMOKE}/customer.parquet").collect()
     orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").collect()
@@ -407,7 +403,7 @@ def test_incr_agg_delete_retraction_equals_direct(spark):
     survivors computed INDEPENDENTLY in Spark (the oracle pins the
     cross-engine half), and the retracted accounting must reconcile:
     maintained + retracted == full state per type."""
-    from duckdb_ner_spark.operators.round8 import (
+    from duckdb_ner_spark.operators.scalepatterns import (
         RETRACT_FX,
         RETRACT_MOD,
         RETRACT_REM,
@@ -443,7 +439,7 @@ def test_incr_agg_delete_retraction_equals_direct(spark):
 def test_kcore_matches_python_recompute(spark):
     """q_kcore vs a pure-Python peel over the same day-1 edge list."""
     from duckdb_ner_spark.operators.components import day1_cooccurrence_graph
-    from duckdb_ner_spark.operators.round8 import KCORE_K, KCORE_ROUNDS
+    from duckdb_ner_spark.operators.components import KCORE_K, KCORE_ROUNDS
 
     edges, _ = day1_cooccurrence_graph(spark, SF_SMOKE)
     es = [(r.u, r.v) for r in edges.collect()]

@@ -6,7 +6,7 @@ from collections import defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
-from duckdb_ner_spark.operators.round9 import (
+from duckdb_ner_spark.operators.scalepatterns import (
     MINMAX_BUCKETS,
     MINMAX_MOD,
     MINMAX_REM,
@@ -111,9 +111,9 @@ def test_semdedup_matches_numpy_recompute(spark):
     import duckdb
     import numpy as np
 
-    from duckdb_ner_spark.operators.round9 import (
-        SEMDEDUP_CELL_ITERS,
+    from duckdb_ner_spark.operators.dedup import (
         SEMDEDUP_CELLS,
+        SEMDEDUP_CELL_ITERS,
         SEMDEDUP_FX,
         SEMDEDUP_TAU_FX,
     )

@@ -61,7 +61,7 @@ def test_stream_layout_adaptive_both_ts_layouts(spark, tmp_path):
     from duckdb_ner_spark.streaming.events import (
         stream_events,
         windowed_counts,
-        _await_drain,
+        await_drain,
     )
 
     src = pq.read_table(f"{SF_SMOKE}/events.parquet")
@@ -84,7 +84,7 @@ def test_stream_layout_adaptive_both_ts_layouts(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        _await_drain(q)
+        await_drain(q)
         results[tag] = {
             (r.window_start.strftime("%Y-%m-%d %H:%M:%S"), r.event_type): (r.n, r.total_value)
             for r in spark.table(sink).collect()
@@ -143,7 +143,7 @@ def test_foreach_batch_etl_roundtrip(spark, tmp_path):
 
 def test_streaming_dedup_matches_batch_distinct(spark):
     from duckdb_ner_spark.streaming.events import batch_events, dedup_stream, stream_events
-    from duckdb_ner_spark.streaming.events import _await_drain
+    from duckdb_ner_spark.streaming.events import await_drain
 
     # horizon must cover the dataset's full time span: the staged stream now
     # runs REAL multi-batch drains with an advancing watermark, and
@@ -159,7 +159,7 @@ def test_streaming_dedup_matches_batch_distinct(spark):
         .trigger(availableNow=True)
         .start()
     )
-    _await_drain(q)
+    await_drain(q)
     got = {(r.user_id, r.event_type) for r in spark.table("t_dedup_stream").collect()}
     expect = {
         (r.user_id, r.event_type)
@@ -273,7 +273,7 @@ def test_staged_stream_runs_multiple_batches(spark):
         N_STREAM_PARTS,
         stream_events,
         windowed_counts,
-        _await_drain,
+        await_drain,
     )
 
     q = (
@@ -284,7 +284,7 @@ def test_staged_stream_runs_multiple_batches(spark):
         .trigger(availableNow=True)
         .start()
     )
-    _await_drain(q)
+    await_drain(q)
     data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(data_batches) == N_STREAM_PARTS, [p["numInputRows"] for p in q.recentProgress]
 
@@ -368,7 +368,7 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from duckdb_ner_spark.streaming.events import _await_drain
+    from duckdb_ner_spark.streaming.events import await_drain
 
     src = pq.read_table(f"{SF_SMOKE}/events.parquet")
     per = (src.num_rows + 3) // 4
@@ -394,7 +394,7 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        _await_drain(q)
+        await_drain(q)
 
     write_part(0)
     write_part(1)
@@ -426,7 +426,7 @@ def test_session_boundary_emits_at_exact_watermark_equality(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from duckdb_ner_spark.streaming.events import (
-        _await_drain,
+        await_drain,
         session_counts,
         stream_events,
     )
@@ -454,7 +454,7 @@ def test_session_boundary_emits_at_exact_watermark_equality(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _await_drain(q)
+    await_drain(q)
     emitted = {r.user_id for r in spark.table("t_bnd").collect()}
     assert 1 in emitted  # end == watermark -> emitted (<= semantics)
     assert 2 not in emitted  # still open at end of data

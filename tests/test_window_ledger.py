@@ -10,8 +10,10 @@ a new oracle query without front-loading it into _DRIVER_WINDOW_50
 fails here immediately.
 """
 
+import ast
 import glob
 import json
+import pathlib
 
 DRIVER_WINDOW = 50
 
@@ -65,3 +67,61 @@ def test_window_list_is_exactly_the_driver_window():
     assert list(e.queries())[:DRIVER_WINDOW] == e._DRIVER_WINDOW_50, (
         "queries() first-50 must be exactly _DRIVER_WINDOW_50"
     )
+
+
+# --------------------------------------------------------------------------
+# Package structure (static, AST only): modules are named after their
+# domain, share names only through public imports, and bind each top-level
+# name once — merging two modules must not silently rebind a constant that
+# a query reads
+# --------------------------------------------------------------------------
+PKG = pathlib.Path(__file__).resolve().parent.parent / "duckdb_ner_spark"
+
+
+def _package_modules() -> list[pathlib.Path]:
+    return sorted(PKG.rglob("*.py"))
+
+
+def _bound_names(node: ast.stmt) -> list[str]:
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, (ast.Import, ast.ImportFrom)):
+        return [(a.asname or a.name).split(".")[0] for a in node.names]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
+def test_no_package_module_is_named_after_a_round():
+    rounds = [
+        str(p.relative_to(PKG)) for p in _package_modules() if p.name.startswith("round")
+    ]
+    assert not rounds, f"name these modules after their domain: {rounds}"
+
+
+def test_no_relative_import_of_a_private_name():
+    bad = [
+        f"{p.relative_to(PKG)}:{node.lineno} {alias.name}"
+        for p in _package_modules()
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.ImportFrom) and node.level
+        for alias in node.names
+        if alias.name.startswith("_") and not alias.name.startswith("__")
+    ]
+    assert not bad, f"make these public or keep them in one module: {bad}"
+
+
+def test_no_module_binds_a_top_level_name_twice():
+    bad = []
+    for p in _package_modules():
+        seen: set[str] = set()
+        for node in ast.parse(p.read_text()).body:
+            for name in _bound_names(node):
+                if name in seen:
+                    bad.append(f"{p.relative_to(PKG)}:{node.lineno} {name}")
+                seen.add(name)
+    assert not bad, f"top-level names bound twice: {bad}"

@@ -4,8 +4,7 @@ Usage: python tools/dump_plans.py <out_dir> <suffix> <query> [query ...]
 
 Writes <out_dir>/<query>_<suffix>.txt for each query, planned at
 $SPARK_GRAFT_SF_DIR (default sf0.1) under the bench steady configuration
-(``bench.steady_conf``, the confs bench.py pins for the steady pass),
-matching the r13 convention for plans/r*/ dumps.
+(``bench.steady_conf``, the confs bench.py pins for the steady pass).
 """
 
 from __future__ import annotations
