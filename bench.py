@@ -113,7 +113,7 @@ def main() -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
     import __spark_entry__ as entrymod
-    from duckdb_ner_spark.session import default_parallelism, get_spark
+    from duckdb_ner_spark.session import blas_cores, default_parallelism, get_spark
 
     spark = get_spark("bench", extra_conf=steady_conf(default_parallelism()))
 
@@ -146,6 +146,9 @@ def main() -> None:
         timings[name] = round(min(b + e for b, e in runs), 3)
 
     total = round(sum(timings.values()), 3)
+    # the OpenBLAS kernels behind the NER cells: the driver keeps the one it
+    # loaded, the Python workers load the one get_spark chose
+    blas_core = blas_cores(spark)
 
     # same-run DuckDB pair (VERDICT r5 #5): time the headline oracles in the
     # same process right after the Spark passes, so the artifact carries
@@ -184,6 +187,7 @@ def main() -> None:
                 "ratio_steady_o16": ratio,
                 "ratio_cold_o16": ratio_cold,
                 "sf": sf,
+                "blas_core": blas_core,
             }
         )
     )

@@ -18,6 +18,19 @@ weights across the Arrow batch. Parallelism comes from Spark tasks, not from
 intra-op threads (the reference's 4 ggml threads): Spark starts Python workers
 with ``OMP_NUM_THREADS`` = task cpus (1), which NumPy's OpenBLAS follows when
 ``OPENBLAS_NUM_THREADS`` is unset, so each task runs one BLAS thread.
+
+That thread's GEMM kernel: NumPy's bundled OpenBLAS 0.3.23 does not know
+newer CPUs (an AVX-512 Xeon with ``avx512_fp16``) and falls back to its
+generic SSE3 ``Prescott`` kernel, 4–5× slower on one thread than the
+``SkylakeX`` one. So on local masters ``session.get_spark`` gives the workers
+an ``OPENBLAS_CORETYPE`` the CPU's ISA confirms (``SkylakeX`` or
+``Haswell``), unless the user set one; the driver keeps the kernel it loaded.
+Logits differ across kernels by float32 rounding only, so an entity can
+differ only where a token's top two logits tie within that rounding.
+
+Element-wise steps run in place (``out=`` and augmented assignments): the
+same operations in the same order as the plain expressions, so the logits
+are bit-identical to theirs, without a temporary per step.
 """
 
 from __future__ import annotations
@@ -32,19 +45,44 @@ _GELU_C = 0.7978845608028654  # sqrt(2/pi)
 
 
 def _layernorm(x: np.ndarray, w: np.ndarray, b: np.ndarray) -> np.ndarray:
-    mu = x.mean(axis=-1, keepdims=True)
-    var = ((x - mu) ** 2).mean(axis=-1, keepdims=True)
-    return (x - mu) / np.sqrt(var + _LN_EPS) * w + b
+    """In place: overwrites and returns ``x``."""
+    x -= x.mean(axis=-1, keepdims=True)
+    var = (x * x).mean(axis=-1, keepdims=True)
+    var += _LN_EPS
+    x /= np.sqrt(var, out=var)
+    x *= w
+    x += b
+    return x
 
 
 def _gelu_tanh(x: np.ndarray) -> np.ndarray:
+    """In place: overwrites and returns ``x``."""
     # x * x * x, not x**3: NumPy's power() has no fast path for a cube
-    return 0.5 * x * (1.0 + np.tanh(_GELU_C * (x + 0.044715 * (x * x * x))))
+    t = x * x
+    t *= x
+    t *= 0.044715
+    t += x
+    t *= _GELU_C
+    np.tanh(t, out=t)
+    t += 1.0
+    x *= 0.5
+    x *= t
+    return x
 
 
 def _softmax(x: np.ndarray) -> np.ndarray:
-    e = np.exp(x - x.max(axis=-1, keepdims=True))
-    return e / e.sum(axis=-1, keepdims=True)
+    """In place: overwrites and returns ``x``."""
+    x -= x.max(axis=-1, keepdims=True)
+    np.exp(x, out=x)
+    x /= x.sum(axis=-1, keepdims=True)
+    return x
+
+
+def _linear(x: np.ndarray, wb: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
+    # HF weight layout is (out, in): linear(x) = x @ W.T + b
+    y = x @ wb[0].T
+    y += wb[1]
+    return y
 
 
 class GgmlBertModel:
@@ -92,28 +130,28 @@ class GgmlBertModel:
         a batch has the SAME length, so batched results are bit-identical to
         per-row evaluation (padding would perturb the softmax)."""
         b, n = ids.shape
-        # HF weight layout is (out, in): linear(x) = x @ W.T + b
-        x = self.word_emb[ids] + self.type_emb[0] + self.pos_emb[:n]
+        x = self.word_emb[ids] + self.type_emb[0]
+        x += self.pos_emb[:n]
         x = _layernorm(x, *self.ln_e)
 
         d_head = self.n_embd // self.n_head
         for L in self.layers:
-            q = x @ L["q"][0].T + L["q"][1]
-            k = x @ L["k"][0].T + L["k"][1]
-            v = x @ L["v"][0].T + L["v"][1]
             # (B, n_head, n, d_head)
-            q = q.reshape(b, n, self.n_head, d_head).transpose(0, 2, 1, 3)
-            k = k.reshape(b, n, self.n_head, d_head).transpose(0, 2, 1, 3)
-            v = v.reshape(b, n, self.n_head, d_head).transpose(0, 2, 1, 3)
-            scores = _softmax((q @ k.transpose(0, 1, 3, 2)) / np.sqrt(d_head))
-            ctxv = (scores @ v).transpose(0, 2, 1, 3).reshape(b, n, self.n_embd)
-            att = ctxv @ L["o"][0].T + L["o"][1]
-            x = _layernorm(att + x, *L["ln_att"])
-            ff = _gelu_tanh(x @ L["ff_i"][0].T + L["ff_i"][1])
-            ff = ff @ L["ff_o"][0].T + L["ff_o"][1]
-            x = _layernorm(ff + x, *L["ln_out"])
+            q, k, v = (
+                _linear(x, L[p]).reshape(b, n, self.n_head, d_head).transpose(0, 2, 1, 3)
+                for p in ("q", "k", "v")
+            )
+            scores = q @ k.transpose(0, 1, 3, 2)
+            scores /= np.sqrt(d_head)
+            ctxv = (_softmax(scores) @ v).transpose(0, 2, 1, 3).reshape(b, n, self.n_embd)
+            att = _linear(ctxv, L["o"])
+            att += x
+            x = _layernorm(att, *L["ln_att"])
+            ff = _linear(_gelu_tanh(_linear(x, L["ff_i"])), L["ff_o"])
+            ff += x
+            x = _layernorm(ff, *L["ln_out"])
 
-        return (x @ self.cls[0].T + self.cls[1]).astype(np.float32)
+        return _linear(x, self.cls).astype(np.float32)
 
     def eval_tokens(self, token_ids: list[int]) -> np.ndarray:
         ids = np.asarray(token_ids, dtype=np.int64)[None, :]

@@ -14,11 +14,16 @@ Scale notes (100 TB design bar):
   (the ``ner()`` Arrow UDF, pandas UDFs, mapInPandas) — the analogue of
   DuckDB's 2048-row DataChunk
   (``/root/reference/src/ner_extension.cpp:49-51``).
+- Local Python workers get ``OPENBLAS_CORETYPE`` when NumPy's OpenBLAS does
+  not know the CPU and falls back to its SSE3 kernel (``worker_blas_core``).
 """
 
 from __future__ import annotations
 
+import ctypes
+import functools
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -27,9 +32,81 @@ from pyspark.sql import SparkSession
 CONF_MODEL_PATH = "spark.ner.modelPath"
 CONF_TRUNCATE = "spark.ner.truncate"
 
+CONF_WORKER_BLAS_CORE = "spark.executorEnv.OPENBLAS_CORETYPE"
+# OpenBLAS's generic SSE3 kernel: NumPy's bundled OpenBLAS 0.3.23 picks it on
+# CPUs newer than its core table (a one-thread 1024³ sgemm on a shared AVX-512
+# Xeon VM: 21-29 GFLOP/s, against 90-131 with the SkylakeX kernel).
+_BLAS_FALLBACK_CORE = "Prescott"
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def worker_blas_core(
+    user_core: str | None, corename: str | None, cpu_features: Mapping[str, bool]
+) -> str | None:
+    """The ``OPENBLAS_CORETYPE`` for the Python workers, or ``None`` to set
+    nothing: a user's value always wins, an OpenBLAS that detected its core
+    (or no OpenBLAS at all) is left alone, and a core is named only when
+    NumPy's dispatch table confirms its ISA with OS register support — a
+    core the CPU lacks dies of SIGILL."""
+    if user_core or corename != _BLAS_FALLBACK_CORE:
+        return None
+    if cpu_features.get("AVX512_SKX"):
+        return "SkylakeX"
+    if cpu_features.get("AVX2") and cpu_features.get("FMA3"):
+        return "Haswell"
+    return None
+
+
+def openblas_corename() -> str | None:
+    """Core of the OpenBLAS NumPy mapped into this process, or ``None`` if
+    NumPy's BLAS is not OpenBLAS or the library cannot be asked."""
+    import numpy  # noqa: F401 — maps NumPy's BLAS into this process
+
+    try:
+        with open("/proc/self/maps") as f:
+            paths = sorted({
+                parts[5] for parts in (line.rstrip("\n").split(maxsplit=5) for line in f)
+                if len(parts) == 6 and "openblas" in os.path.basename(parts[5])
+            })
+    except OSError:
+        return None
+    for path in paths:
+        try:
+            lib = ctypes.CDLL(path)
+        except OSError:
+            continue
+        fn = getattr(lib, "openblas_get_corename64_", None) or getattr(
+            lib, "openblas_get_corename", None
+        )
+        if fn is not None:
+            fn.restype = ctypes.c_char_p
+            name = fn()
+            return name.decode() if name else None
+    return None
+
+
+@functools.cache
+def _driver_blas_probe() -> tuple[str | None, dict[str, bool]]:
+    from numpy._core._multiarray_umath import __cpu_features__
+
+    return openblas_corename(), dict(__cpu_features__)
+
+
+def chosen_worker_blas_core(extra_conf: Mapping[str, str]) -> str | None:
+    """``worker_blas_core`` for this driver, with the user's
+    ``OPENBLAS_CORETYPE`` from the environment or from ``extra_conf``."""
+    user_core = os.environ.get("OPENBLAS_CORETYPE") or extra_conf.get(CONF_WORKER_BLAS_CORE)
+    return worker_blas_core(user_core, *_driver_blas_probe())
+
+
+def blas_cores(spark: SparkSession) -> dict[str, str | None]:
+    """The OpenBLAS cores of the driver and of this session's Python workers
+    (the latter by a one-task job)."""
+    workers = spark.sparkContext.parallelize([0], 1).map(lambda _: openblas_corename()).first()
+    return {"driver": openblas_corename(), "workers": workers}
 
 
 def get_spark(
@@ -40,9 +117,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's pinned defaults."""
     cpus = default_parallelism()
+    extra_conf = extra_conf or {}
+    master = extra_conf.get("spark.master", master or f"local[{cpus}]")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
@@ -69,6 +148,12 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    # Local workers run on the driver's CPU, so its dispatch table vouches
+    # for their ISA; the driver's own NumPy keeps the kernel it loaded.
+    if master.startswith("local"):
+        core = chosen_worker_blas_core(extra_conf)
+        if core:
+            builder = builder.config(CONF_WORKER_BLAS_CORE, core)
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -44,3 +44,11 @@ def test_profiler_reports_both_passes_with_layers():
     # the noop sink computes every column, so q_ner_bert's inference UDF
     # really runs; under count() Catalyst prunes it and no bytes come back
     assert q["q_ner_bert"]["steady"]["layers"]["bytes_from_python"] > 0
+
+    # the OpenBLAS kernels behind the NER layers: the driver keeps its own,
+    # the workers load the core get_spark chose (or the same one if none)
+    from duckdb_ner_spark.session import chosen_worker_blas_core, openblas_corename
+
+    driver = openblas_corename()
+    chosen = chosen_worker_blas_core({})
+    assert prof["blas_core"] == {"driver": driver, "workers": chosen or driver}

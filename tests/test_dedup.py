@@ -1,0 +1,51 @@
+"""Dedup-family tests (operators/dedup.py): SemDeDup's census recomputed
+with NumPy, independent of both Spark and the DuckDB oracle."""
+
+import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
+from duckdb_ner_spark.plans.registry import QUERIES
+from tests.conftest import SF_SMOKE
+
+
+def test_semdedup_matches_numpy_recompute(spark):
+    """SemDeDup census recomputed with NumPy: same trained cells (the
+    test_pq_ops trainer twin), within-cell keep-first collapse at the
+    fixed-point cosine threshold."""
+    import duckdb
+    import numpy as np
+
+    from duckdb_ner_spark.operators.dedup import (
+        SEMDEDUP_CELLS,
+        SEMDEDUP_CELL_ITERS,
+        SEMDEDUP_FX,
+        SEMDEDUP_TAU_FX,
+    )
+    from tests.test_pq_ops import _grid, _train_lloyd
+
+    X = _grid(SF_SMOKE)
+    cents = _train_lloyd(X, SEMDEDUP_CELLS, SEMDEDUP_CELL_ITERS)
+    dc = ((X[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+    cell = np.argmin(dc, axis=1)
+    norms = np.sqrt((X.astype(float) ** 2).sum(axis=1))
+    want = {}
+    for c in range(SEMDEDUP_CELLS):
+        sel = np.where(cell == c)[0]
+        if not len(sel):
+            continue
+        dropped = 0
+        V = X[sel].astype(float)
+        G = V @ V.T
+        for j in range(1, len(sel)):
+            cos_fx = np.floor(
+                np.abs(G[:j, j] / (norms[sel[:j]] * norms[sel[j]])) * SEMDEDUP_FX
+                + 0.5
+            ) * np.sign(G[:j, j])
+            if (cos_fx >= SEMDEDUP_TAU_FX).any():
+                dropped += 1
+        want[c] = (len(sel), dropped, 10000 * dropped // len(sel))
+    got = {
+        r.cell: (r.n_members, r.n_dropped, r.drop_bp)
+        for r in QUERIES["q_semdedup"](spark, SF_SMOKE).collect()
+    }
+    assert got == want
+    assert sum(v[0] for v in got.values()) == len(X)  # census covers corpus
+    assert any(v[1] > 0 for v in got.values())  # the collapse found dups

@@ -147,3 +147,118 @@ def test_q_ner_bert_model_write_is_atomic(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(ggml_format, "write_ggml", write_ggml)
     q_ner_bert(spark, SF_SMOKE)
     assert load_model(str(final)) is not None
+
+
+@pytest.mark.parametrize(
+    "user_core, corename, features, want",
+    [
+        ("Haswell", "Prescott", {"AVX512_SKX": True}, None),
+        (None, "Haswell", {"AVX512_SKX": True}, None),
+        (None, "SkylakeX", {"AVX512_SKX": True}, None),
+        (None, None, {"AVX512_SKX": True}, None),
+        (None, "Prescott", {"AVX512_SKX": True, "AVX2": True, "FMA3": True}, "SkylakeX"),
+        (None, "Prescott", {"AVX512_SKX": False, "AVX2": True, "FMA3": True}, "Haswell"),
+        (None, "Prescott", {"AVX2": True, "FMA3": False}, None),
+        (None, "Prescott", {"AVX": True, "FMA3": True}, None),
+        (None, "Prescott", {}, None),
+    ],
+    ids=["user_value_wins", "detected_core", "detected_skylakex", "no_openblas",
+         "avx512_skx", "avx2_fma3", "avx2_without_fma3", "fma3_without_avx2", "no_simd"],
+)
+def test_worker_blas_core_selection(user_core, corename, features, want):
+    from duckdb_ner_spark.session import worker_blas_core
+
+    assert worker_blas_core(user_core, corename, features) == want
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: getOrCreate returns the conf."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, name):
+        return self
+
+    def master(self, url):
+        self.conf["spark.master"] = url
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+@pytest.mark.parametrize(
+    "env_core, extra_conf, probe, want",
+    [
+        (None, {}, ("Prescott", {"AVX512_SKX": True}), "SkylakeX"),
+        ("Haswell", {}, ("Prescott", {"AVX512_SKX": True}), None),
+        (None, {"spark.executorEnv.OPENBLAS_CORETYPE": "Haswell"},
+         ("Prescott", {"AVX512_SKX": True}), "Haswell"),
+        (None, {}, ("SkylakeX", {"AVX512_SKX": True}), None),
+        (None, {"spark.master": "spark://cluster:7077"},
+         ("Prescott", {"AVX512_SKX": True}), None),
+    ],
+    ids=["fallback_core_replaced", "user_env_wins", "user_conf_wins",
+         "detected_core_untouched", "non_local_master"],
+)
+def test_get_spark_sets_worker_blas_core(monkeypatch, env_core, extra_conf, probe, want):
+    """get_spark's wiring of worker_blas_core: the user's environment and
+    conf win, a detected core and a non-local master get nothing."""
+    from duckdb_ner_spark import session
+
+    builder = _RecordingBuilder()
+    monkeypatch.setattr(session.SparkSession, "builder", builder)
+    monkeypatch.setattr(session, "_driver_blas_probe", lambda: probe)
+    if env_core is None:
+        monkeypatch.delenv("OPENBLAS_CORETYPE", raising=False)
+    else:
+        monkeypatch.setenv("OPENBLAS_CORETYPE", env_core)
+    conf = session.get_spark(extra_conf=extra_conf)
+    assert conf.get(session.CONF_WORKER_BLAS_CORE) == want
+
+
+def test_workers_load_the_chosen_blas_core(spark):
+    """The core get_spark picks reaches the Python workers' OpenBLAS."""
+    from duckdb_ner_spark.session import (
+        CONF_WORKER_BLAS_CORE,
+        blas_cores,
+        chosen_worker_blas_core,
+    )
+
+    core = chosen_worker_blas_core({})
+    if core is None:
+        pytest.skip("the driver's OpenBLAS needs no core override here")
+    assert spark.conf.get(CONF_WORKER_BLAS_CORE) == core
+    assert blas_cores(spark)["workers"] == core
+
+
+def test_batched_eval_bit_identical_under_worker_blas_core():
+    """The ledgered pin, rerun in a process whose OpenBLAS loads the core the
+    ner() workers run on."""
+    import subprocess
+    import sys
+
+    from duckdb_ner_spark.session import chosen_worker_blas_core
+
+    core = chosen_worker_blas_core({})
+    if core is None:
+        pytest.skip("the driver's OpenBLAS needs no core override here")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys, pytest\n"
+        "from duckdb_ner_spark.session import openblas_corename\n"
+        f"assert openblas_corename() == {core!r}, openblas_corename()\n"
+        "sys.exit(pytest.main(['-q', '-p', 'no:cacheprovider', "
+        "'tests/test_ner_batching.py::test_batched_eval_bit_identical_to_per_row']))\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=root, capture_output=True, text=True,
+        env={**os.environ, "OPENBLAS_CORETYPE": core, "OMP_NUM_THREADS": "1"},
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
+    assert "1 passed" in proc.stdout

@@ -1,5 +1,8 @@
 """Bucketed range join + merge/upsert (operators/scalepatterns.py)."""
 
+from collections import defaultdict
+from decimal import ROUND_HALF_UP, Decimal
+
 import pyspark.sql.functions as F
 
 from tests.conftest import SF_SMOKE
@@ -405,3 +408,98 @@ def test_activity_gaps_match_python_recompute(spark):
         assert r.span_hours == s[-1] - s[0] + 1
         assert r.max_gap_hours == max_gap
         assert abs(r.coverage - len(s) / (s[-1] - s[0] + 1)) < 1e-15
+
+
+def _fx(value: float) -> int:
+    # shipped testdata values are exact cents, so Decimal HALF_UP equals
+    # the in-plan ROUND(value*1e6) here (the non-cent divergence case is
+    # covered by test_stream_cusum_non_cent_parity)
+    return int(
+        (Decimal(repr(value)) * 1_000_000).quantize(
+            Decimal("1"), rounding=ROUND_HALF_UP
+        )
+    )
+
+
+def test_incr_minmax_matches_python_recompute(spark):
+    """Maintained extrema, clean/dirty census, and the zero proof columns
+    recomputed imperatively: clean buckets' pre-delete partials reused,
+    dirty buckets recomputed from survivors only."""
+    from duckdb_ner_spark.operators.scalepatterns import (
+        MINMAX_BUCKETS,
+        MINMAX_MOD,
+        MINMAX_REM,
+    )
+    from duckdb_ner_spark.plans.registry import QUERIES
+
+    rows = (
+        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+        .select("event_type", "user_id", "value")
+        .collect()
+    )
+    pre = defaultdict(list)  # (type, bucket) -> all fx
+    post = defaultdict(list)  # (type, bucket) -> surviving fx
+    surv = defaultdict(list)  # type -> surviving fx
+    for r in rows:
+        b = r.user_id % MINMAX_BUCKETS
+        fx = _fx(r.value)
+        pre[(r.event_type, b)].append(fx)
+        if r.user_id % MINMAX_MOD != MINMAX_REM:
+            post[(r.event_type, b)].append(fx)
+            surv[r.event_type].append(fx)
+    dirty = {
+        k
+        for k, _v in pre.items()
+        if any(
+            u.user_id % MINMAX_MOD == MINMAX_REM
+            and (u.event_type, u.user_id % MINMAX_BUCKETS) == k
+            for u in rows
+        )
+    }
+    want = {}
+    for et in {k[0] for k in pre}:
+        merged = []
+        n_clean = n_dirty = 0
+        for (t, b), vals in pre.items():
+            if t != et:
+                continue
+            if (t, b) in dirty:
+                n_dirty += 1
+                if post[(t, b)]:
+                    merged.append((min(post[(t, b)]), max(post[(t, b)])))
+            else:
+                n_clean += 1
+                merged.append((min(vals), max(vals)))
+        if not surv[et]:
+            continue
+        mn = min(m for m, _ in merged)
+        mx = max(m for _, m in merged)
+        want[et] = (
+            n_clean,
+            n_dirty,
+            mn,
+            mx,
+            min(surv[et]),
+            max(surv[et]),
+            mn - min(surv[et]),
+            mx - max(surv[et]),
+        )
+    got = {
+        r.event_type: (
+            r.n_clean_buckets,
+            r.n_dirty_buckets,
+            r.min_fx_maint,
+            r.max_fx_maint,
+            r.min_fx_rebuild,
+            r.max_fx_rebuild,
+            r.min_diff,
+            r.max_diff,
+        )
+        for r in QUERIES["q_incr_minmax"](spark, SF_SMOKE).collect()
+    }
+    assert got == want
+    # maintenance must equal rebuild (the whole point), and the delete
+    # path must have actually SAVED work: clean buckets dominate
+    for v in got.values():
+        assert v[6] == 0 and v[7] == 0
+    assert sum(v[0] for v in got.values()) > sum(v[1] for v in got.values())

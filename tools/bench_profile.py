@@ -13,6 +13,7 @@ with ``PHASE_PROPERTY = "<pass>:<query>"`` (warmups stay untagged), and after
 Prints one JSON line::
 
   {"sf", "cpus", "steady_runs", "conf", "loadavg_start", "loadavg_end",
+   "blas_core": {"driver", "workers"},   # OpenBLAS core names, None if not OpenBLAS
    "queries": {name: {"cold" | "steady": {"build_s": [per run],
                                           "exec_s": [per run],
                                           "layers": {LAYERS...}}}}}
@@ -71,7 +72,7 @@ def main() -> None:
             i += 1
 
     import bench
-    from duckdb_ner_spark.session import default_parallelism, get_spark
+    from duckdb_ner_spark.session import blas_cores, default_parallelism, get_spark
     from perfbench.tracing import PHASE_PROPERTY, event_log_totals
 
     loadavg_start = os.getloadavg()
@@ -108,6 +109,7 @@ def main() -> None:
                 spark, sf_dir, name, bench.STEADY_RUNS, False
             )
             sc.setLocalProperty(PHASE_PROPERTY, None)
+        blas_core = blas_cores(spark)
         spark.stop()  # flushes and closes the event log
         totals = event_log_totals(log_dir)
 
@@ -128,6 +130,7 @@ def main() -> None:
                 "conf": extra,
                 "loadavg_start": loadavg_start,
                 "loadavg_end": os.getloadavg(),
+                "blas_core": blas_core,
                 "queries": queries,
             }
         )
