@@ -104,12 +104,12 @@ def load_model_bytes(data: bytes):
 
 def load_model(path: str | None):
     """``load_model_bytes`` over the file at ``path``; no path or an
-    unreadable file → None."""
+    unreadable file (missing, a directory, a NUL in the path) → None."""
     if not path:
         return None
     try:
         with open(path, "rb") as f:
             data = f.read()
-    except Exception:
+    except (OSError, ValueError):
         return None
     return load_model_bytes(data)

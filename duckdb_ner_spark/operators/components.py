@@ -29,6 +29,7 @@ components under appends (q_cc_incr).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,11 +48,11 @@ def _release_checkpoint(df: DataFrame) -> None:
     ContextCleaner to notice the Python reference died — without this,
     every superseded propagation round's full label snapshot lingers in
     executor storage for the rest of the loop (r5 code-review finding).
-    Best-effort: if the plan shape ever changes, GC-driven cleanup still
-    applies."""
+    Best-effort: if the JVM call fails or the frame has no JVM handle,
+    GC-driven cleanup still applies."""
     try:
         df._jdf.queryExecution().toRdd().unpersist(False)
-    except Exception:
+    except (Py4JError, AttributeError):
         pass
 
 

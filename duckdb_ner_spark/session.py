@@ -16,6 +16,10 @@ Scale notes (100 TB design bar):
   (``/root/reference/src/ner_extension.cpp:49-51``).
 - Local Python workers get ``OPENBLAS_CORETYPE`` when NumPy's OpenBLAS does
   not know the CPU and falls back to its SSE3 kernel (``worker_blas_core``).
+- Python workers re-read an import zip's directory only when the archive
+  changed (``install_zip_stat_check``): PySpark invalidates the import caches
+  before every task, and ``ner()``'s workers unpickle a module that imports
+  this one.
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ from __future__ import annotations
 import ctypes
 import functools
 import os
+import zipimport
 from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
@@ -107,6 +112,52 @@ def blas_cores(spark: SparkSession) -> dict[str, str | None]:
     (the latter by a one-task job)."""
     workers = spark.sparkContext.parallelize([0], 1).map(lambda _: openblas_corename()).first()
     return {"driver": openblas_corename(), "workers": workers}
+
+
+def install_zip_stat_check() -> bool:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's directory
+    only when the archive's ``(st_mtime_ns, st_size)`` differs from the last
+    read's, or the shared directory cache dropped it; returns whether it
+    installed.
+
+    CPython ≤ 3.12 re-reads the whole zip directory in pure Python on every
+    call, once per zipimporter of the archive, and PySpark calls
+    ``importlib.invalidate_caches()`` before each task of a reused worker,
+    whose pyspark comes from ``pyspark.zip``. A stdlib with
+    ``zipimporter._get_files`` (3.13+) invalidates lazily and is left alone.
+    Nothing is recorded before an archive's first invalidation, which reads
+    it as the stdlib does: an archive replaced after its importer was made is
+    still re-read."""
+    cls = zipimport.zipimporter
+    original = cls.invalidate_caches
+    if hasattr(cls, "_get_files") or hasattr(original, "__wrapped__"):
+        return False
+    read_stamps: dict[str, tuple[int, int]] = {}
+
+    @functools.wraps(original)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and files is not None and read_stamps.get(self.archive) == stamp:
+            self._files = files
+            return
+        # Stamped before the read: an archive replaced during it reads as
+        # changed next time.
+        original(self)
+        if stamp is not None and self.archive in zipimport._zip_directory_cache:
+            read_stamps[self.archive] = stamp
+        else:
+            read_stamps.pop(self.archive, None)
+
+    cls.invalidate_caches = invalidate_caches
+    return True
+
+
+install_zip_stat_check()
 
 
 def get_spark(

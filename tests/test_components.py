@@ -1,8 +1,23 @@
-"""Connected components / cluster collapse / IVF recall tests."""
+"""Connected components / cluster collapse / IVF recall / SCC tests."""
 
+from collections import defaultdict
+
+import duckdb
 import pyspark.sql.functions as F
 
+import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
+from duckdb_ner_spark.plans.registry import QUERIES
 from tests.conftest import SF_SMOKE
+
+
+def test_release_checkpoint_of_an_uncheckpointed_frame(spark):
+    """Releasing a frame that was never checkpointed neither raises nor
+    breaks the frame."""
+    from duckdb_ner_spark.operators.components import _release_checkpoint
+
+    df = spark.range(5)
+    _release_checkpoint(df)
+    assert df.count() == 5
 
 
 def test_connected_components_chain_and_triangle(spark):
@@ -224,3 +239,62 @@ def test_triangle_stats_on_planted_graphs(spark):
 
     r = run(k4 + [(4, 5)])
     assert (r.n_nodes, r.n_edges, r.n_triangles) == (5, 7, 4)
+
+
+def test_scc_groups_are_certified_mutually_reachable(spark):
+    """Semantic pin, independent of the label-propagation implementation:
+    rebuild the temporal digraph in Python, check (a) the reported groups
+    equal a pure-Python 3-round F/B min-label recompute, and (b) every
+    reported member is REALLY mutually reachable with its seed within 3
+    hops (the certification the operator claims)."""
+    con = duckdb.connect()
+    edges = con.execute(
+        "WITH fe AS (SELECT date_trunc('hour', ts) AS h, user_id, "
+        "            MIN(epoch_us(ts)) AS fts "
+        f"           FROM '{SF_SMOKE}/events.parquet' "
+        "            WHERE ts < TIMESTAMP '2024-01-02 00:00:00' GROUP BY 1,2) "
+        "SELECT DISTINCT a.user_id, b.user_id FROM fe a JOIN fe b "
+        "ON a.h = b.h WHERE (a.fts, a.user_id) < (b.fts, b.user_id)"
+    ).fetchall()
+    out_adj, in_adj = defaultdict(set), defaultdict(set)
+    nodes = set()
+    for s, t in edges:
+        out_adj[s].add(t)
+        in_adj[t].add(s)
+        nodes.update((s, t))
+
+    def prop(adj):
+        lbl = {v: v for v in nodes}
+        for _ in range(3):
+            lbl = {
+                v: min([lbl[v]] + [lbl[u] for u in adj[v]]) for v in nodes
+            }
+        return lbl
+
+    f, b = prop(in_adj), prop(out_adj)
+    settled = {v: f[v] for v in nodes if f[v] == b[v]}
+    groups = defaultdict(list)
+    for v, m in settled.items():
+        groups[m].append(v)
+    expected = {
+        m: (len(vs), sum(vs)) for m, vs in groups.items() if len(vs) >= 2
+    }
+    expected[-1] = (len(nodes) - len(settled), len(nodes))
+    got = {
+        r.scc_seed: (r.n_members, r.member_id_sum)
+        for r in QUERIES["q_scc"](spark, SF_SMOKE).collect()
+    }
+    assert got == expected
+
+    def reach(src, adj, k=3):
+        seen = {src}
+        frontier = {src}
+        for _ in range(k):
+            frontier = {w for u in frontier for w in adj[u]} - seen
+            seen |= frontier
+        return seen
+
+    for v, m in settled.items():
+        if v != m:
+            assert v in reach(m, out_adj), (m, v)
+            assert m in reach(v, out_adj), (v, m)

@@ -1,5 +1,8 @@
 """Dedup-family tests (operators/dedup.py): SemDeDup's census recomputed
-with NumPy, independent of both Spark and the DuckDB oracle."""
+with NumPy and the prefix-filtered set-similarity join against all pairs,
+independent of both Spark and the DuckDB oracle."""
+
+import duckdb
 
 import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
 from duckdb_ner_spark.plans.registry import QUERIES
@@ -10,7 +13,6 @@ def test_semdedup_matches_numpy_recompute(spark):
     """SemDeDup census recomputed with NumPy: same trained cells (the
     test_pq_ops trainer twin), within-cell keep-first collapse at the
     fixed-point cosine threshold."""
-    import duckdb
     import numpy as np
 
     from duckdb_ner_spark.operators.dedup import (
@@ -49,3 +51,34 @@ def test_semdedup_matches_numpy_recompute(spark):
     assert got == want
     assert sum(v[0] for v in got.values()) == len(X)  # census covers corpus
     assert any(v[1] > 0 for v in got.values())  # the collapse found dups
+
+
+def _shingles(text: str, n: int = 3) -> set:
+    ws = text.split(" ")
+    return {" ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)}
+
+
+def test_setsim_prefix_has_no_false_negatives(spark):
+    """The PPJoin lemma in practice: the prefix-filtered join must return
+    EXACTLY the all-pairs τ-Jaccard result — a lossy prefix (wrong ⌈τn⌉
+    arithmetic, wrong global order, wrong length filter) shows up as a
+    missing pair here."""
+    con = duckdb.connect()
+    docs = con.execute(
+        f"SELECT doc_id, text FROM '{SF_SMOKE}/documents.parquet'"
+    ).fetchall()
+    sets = {d: _shingles(t) for d, t in docs if len(_shingles(t)) > 0}
+    ids = sorted(sets)
+    expected = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            inter = len(sets[a] & sets[b])
+            union = len(sets[a]) + len(sets[b]) - inter
+            if union and 10 * inter >= 7 * union:
+                expected[(a, b)] = (inter, union, (10000 * inter) // union)
+    got = {
+        (r.doc_a, r.doc_b): (r.inter_sz, r.union_sz, r.jaccard_bp)
+        for r in QUERIES["q_setsim_prefix"](spark, SF_SMOKE).collect()
+    }
+    assert got == expected
+    assert expected, "smoke corpus must contain at least one τ-similar pair"

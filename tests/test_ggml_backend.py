@@ -110,6 +110,18 @@ def test_bad_magic_rejected(tmp_path):
     assert load_model(p2) is None
 
 
+@pytest.mark.parametrize("case", ["missing", "directory", "nul_in_path"])
+def test_unreadable_model_path_loads_nothing(case, tmp_path):
+    """A path that cannot be read as a file maps to None (open raises
+    OSError, or ValueError for an embedded NUL)."""
+    path = {
+        "missing": str(tmp_path / "absent.bin"),
+        "directory": str(tmp_path),
+        "nul_in_path": str(tmp_path / "model\x00.bin"),
+    }[case]
+    assert load_model(path) is None
+
+
 def test_indivisible_heads_rejected(tmp_path):
     """n_embd % n_head != 0 would silently corrupt the multi-head reshape —
     the loader must map such a model to None (silent-failure contract)."""

@@ -262,3 +262,156 @@ def test_batched_eval_bit_identical_under_worker_blas_core():
     )
     assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "1 passed" in proc.stdout
+
+
+@pytest.fixture
+def zip_hook(monkeypatch):
+    """``install_zip_stat_check`` over a zipimporter that has the stdlib's
+    ``invalidate_caches`` again (restored after the test)."""
+    import zipimport
+
+    from duckdb_ner_spark.session import install_zip_stat_check
+
+    installed = zipimport.zipimporter.invalidate_caches
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        getattr(installed, "__wrapped__", installed))
+    return install_zip_stat_check
+
+
+def _write_zip(path, modules):
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in modules.items():
+            z.writestr(zipfile.ZipInfo(name, date_time=(2020, 1, 1, 0, 0, 0)), src)
+
+
+@pytest.fixture
+def zip_on_path(tmp_path, monkeypatch):
+    """A zip of ``zmod_a`` first on ``sys.path``, and the list of the
+    archive's directory reads (``zipimport._read_directory`` calls)."""
+    import sys
+    import zipimport
+
+    if hasattr(zipimport.zipimporter, "_get_files"):
+        pytest.skip("this stdlib invalidates zip directories lazily")
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"zmod_a.py": "X = 1\n"})
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting(path):
+        if path == archive:
+            reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    monkeypatch.syspath_prepend(archive)
+    yield archive, reads
+    for name in ("zmod_a", "zmod_b"):
+        sys.modules.pop(name, None)
+    sys.path_importer_cache.pop(archive, None)
+    zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_zip_stat_check_skips_unchanged_archive(zip_hook, zip_on_path):
+    import importlib
+
+    archive, reads = zip_on_path
+    assert zip_hook()
+    assert importlib.import_module("zmod_a").X == 1
+    importlib.invalidate_caches()
+    assert reads, "an archive's first invalidation reads it"
+    reads.clear()
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    assert reads == []
+
+
+@pytest.mark.parametrize("change", ["size", "mtime"])
+def test_zip_stat_check_rereads_rewritten_archive(zip_hook, zip_on_path, change):
+    """A rewrite that changes only the size, or only the mtime, is re-read,
+    and the module it adds imports."""
+    import importlib
+
+    archive, reads = zip_on_path
+    zip_hook()
+    importlib.import_module("zmod_a")
+    importlib.invalidate_caches()
+    before = os.stat(archive)
+    if change == "size":
+        _write_zip(archive, {"zmod_a.py": "X = 1\n", "zmod_b.py": "Y = 2\n"})
+        os.utime(archive, ns=(before.st_atime_ns, before.st_mtime_ns))
+    else:  # same-length name and content: same size
+        _write_zip(archive, {"zmod_b.py": "Y = 2\n"})
+        os.utime(archive, ns=(before.st_atime_ns, before.st_mtime_ns + 10**9))
+    after = os.stat(archive)
+    assert (after.st_size == before.st_size) == (change == "mtime")
+    assert (after.st_mtime_ns == before.st_mtime_ns) == (change == "size")
+    reads.clear()
+    importlib.invalidate_caches()
+    assert reads
+    assert importlib.import_module("zmod_b").Y == 2
+
+
+def test_zip_stat_check_installs_once(zip_hook):
+    import zipimport
+
+    original = zipimport.zipimporter.invalidate_caches
+    assert zip_hook()
+    assert not zip_hook()
+    assert zipimport.zipimporter.invalidate_caches.__wrapped__ is original
+
+
+def test_zip_stat_check_leaves_lazy_stdlib_alone(zip_hook, monkeypatch):
+    import zipimport
+
+    monkeypatch.setattr(zipimport.zipimporter, "_get_files", lambda self: {}, raising=False)
+    original = zipimport.zipimporter.invalidate_caches
+    assert not zip_hook()
+    assert zipimport.zipimporter.invalidate_caches is original
+
+
+def test_ner_workers_reuse_unchanged_zip_directories(engine):
+    """In a Python worker that has loaded ner()'s module, a second
+    ``importlib.invalidate_caches()`` (PySpark's per-task call) reads no zip
+    directory."""
+    stub = os.path.join(os.path.dirname(__file__), "fixtures", "stub_model.json")
+    engine.set_model_path(stub)
+    try:
+        engine.spark.sql("SELECT ner('sam is in new york') AS e").collect()
+    finally:
+        engine.set_model_path(None)
+
+    def second_invalidation_reads(_):
+        import importlib
+        import sys
+        import zipfile
+        import zipimport
+
+        # The module ner() unpickles, imported here too: the task may land
+        # on a worker that ran no ner() task.
+        import duckdb_ner_spark.functions.ner_udf  # noqa: F401
+
+        if not any(os.path.isfile(p) and zipfile.is_zipfile(p) for p in sys.path):
+            return None
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return read_directory(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+            reads.clear()
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        return reads
+
+    reads = engine.spark.sparkContext.parallelize([0], 1).map(second_invalidation_reads).first()
+    if reads is None:
+        pytest.skip("the workers import nothing from a zip archive")
+    assert reads == []

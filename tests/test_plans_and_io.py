@@ -372,3 +372,32 @@ def test_session_memo_contract(spark, tmp_path, case):
         }
         got = by_group(q1(spark, sf).collect())
         assert got == want != old
+
+
+def test_kvtext_manifest_ignores_uncommitted_files(spark):
+    """The two-phase-commit contract under test in q_sink_custom: a data
+    file present in the sink directory but absent from the _committed
+    manifest (a failed/speculative task attempt) must be invisible to the
+    reader."""
+    import json
+    import os
+    import tempfile
+    import uuid
+
+    from duckdb_ner_spark.sources.pydatasource import register_kvtext_source
+
+    register_kvtext_source(spark)
+    path = os.path.join(tempfile.gettempdir(), f"kvtext_test_{uuid.uuid4().hex}")
+    df = spark.createDataFrame(
+        [(1, "en", 10), (2, "fr", 20)], "doc_id BIGINT, lang STRING, n_chars BIGINT"
+    )
+    df.write.format("kvtext").option("path", path).mode("append").save()
+    with open(os.path.join(path, "part-99999-stray.kv"), "w") as f:
+        f.write("3\tde\t30\n")  # simulated aborted-attempt leftover
+    back = spark.read.format("kvtext").option("path", path).load().collect()
+    assert sorted((r.doc_id, r.lang, r.n_chars) for r in back) == [
+        (1, "en", 10),
+        (2, "fr", 20),
+    ]
+    manifest = json.load(open(os.path.join(path, "_committed")))
+    assert manifest["rows"] == 2

@@ -1,10 +1,14 @@
-"""Bucketed range join + merge/upsert (operators/scalepatterns.py)."""
+"""Bucketed range join, merge/upsert, skyline, time-weighted average and
+incremental join maintenance (operators/scalepatterns.py)."""
 
 from collections import defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
+import duckdb
 import pyspark.sql.functions as F
 
+import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
+from duckdb_ner_spark.plans.registry import QUERIES
 from tests.conftest import SF_SMOKE
 
 
@@ -132,7 +136,6 @@ def test_scd2_duplicate_ts_ties(spark, tmp_path):
     puts ties both inside a run and exactly at a run boundary."""
     import datetime
 
-    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -503,3 +506,81 @@ def test_incr_minmax_matches_python_recompute(spark):
     for v in got.values():
         assert v[6] == 0 and v[7] == 0
     assert sum(v[0] for v in got.values()) > sum(v[1] for v in got.values())
+
+
+def test_skyline_equals_bruteforce_dominance(spark):
+    """q_skyline's windowed plan must equal the O(n²) dominance
+    definition: keep (price, size) iff no other part has price ≤ and
+    size ≥ with one strict."""
+    con = duckdb.connect()
+    rows = con.execute(
+        "SELECT CAST(ROUND(p_retailprice*100) AS BIGINT), p_size "
+        f"FROM '{SF_SMOKE}/part.parquet'"
+    ).fetchall()
+    pts = defaultdict(int)
+    for pc, s in rows:
+        pts[(pc, s)] += 1
+    expected = {
+        (pc, s): n
+        for (pc, s), n in pts.items()
+        if not any(
+            pc2 <= pc and s2 >= s and (pc2 < pc or s2 > s) for (pc2, s2) in pts
+        )
+    }
+    got = {
+        (r.price_cents, r.size): r.n_parts
+        for r in QUERIES["q_skyline"](spark, SF_SMOKE).collect()
+    }
+    assert got == expected
+
+
+def test_incr_join_proof_columns_are_zero_and_full_agg_is_real(spark):
+    """The in-plan maintenance≡rebuild proof must hold (diff columns all
+    zero) AND the full-join side must match an independent DuckDB
+    recompute — guarding against both paths drifting together."""
+    con = duckdb.connect()
+    expected = dict(
+        con.execute(
+            "SELECT o.o_orderpriority, COUNT(*) "
+            f"FROM '{SF_SMOKE}/orders.parquet' o "
+            f"JOIN '{SF_SMOKE}/lineitem.parquet' l "
+            "ON o.o_orderkey = l.l_orderkey GROUP BY 1"
+        ).fetchall()
+    )
+    rows = QUERIES["q_incr_join"](spark, SF_SMOKE).collect()
+    assert rows
+    for r in rows:
+        assert r.n_diff == 0 and r.cents_diff == 0, r
+        assert r.n_maint == r.n_full
+        assert expected[r.o_orderpriority] == r.n_full
+
+
+def test_twa_equals_python_integration(spark):
+    """Per-user hold-duration integration recomputed in pure Python from
+    the raw events, then bucketed identically."""
+    con = duckdb.connect()
+    rows = con.execute(
+        "SELECT user_id, event_id, epoch_us(ts), CAST(ROUND(value*100) AS BIGINT) "
+        f"FROM '{SF_SMOKE}/events.parquet' "
+        "WHERE ts < TIMESTAMP '2024-01-02 00:00:00'"
+    ).fetchall()
+    by_user = defaultdict(list)
+    for uid, eid, ts_us, cents in rows:
+        by_user[uid].append((ts_us, eid, cents))
+    hist = defaultdict(lambda: [0, 0])
+    for uid, evs in by_user.items():
+        evs.sort()
+        wsum = tsum = 0
+        for (t0, _, c), (t1, _, _) in zip(evs, evs[1:]):
+            wsum += c * (t1 - t0)
+            tsum += t1 - t0
+        if tsum > 0:
+            twa = wsum // tsum
+            hist[twa // 500][0] += 1
+            hist[twa // 500][1] += twa
+    expected = {b: (n, s) for b, (n, s) in hist.items()}
+    got = {
+        r.bucket: (r.n_users, r.twa_cents_sum)
+        for r in QUERIES["q_twa"](spark, SF_SMOKE).collect()
+    }
+    assert got == expected
