@@ -10,12 +10,13 @@ populated by importing the operator modules below.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb_ner_spark.operators  # noqa: F401,E402  (registers declared queries)
 from duckdb_ner_spark.plans.registry import ORACLES, QUERIES  # noqa: E402

@@ -75,12 +75,12 @@ def bucket_array_pairs(
     buckets: DataFrame,
     a_col: str,
     b_col: str,
-    ids_col: str = "__ids__",
     carry: tuple = (),
     dedupe: bool = True,
 ) -> DataFrame:
-    """All (ids[i], ids[j]) i<j pairs from each bucket's sorted id array as
-    (a_col, b_col) rows, deduplicated across buckets.
+    """All (ids[i], ids[j]) i<j pairs from each bucket's sorted ``__ids__``
+    array (capped_bucket_id_arrays) as (a_col, b_col) rows, deduplicated
+    across buckets.
 
     This replaces the bucket SELF-JOIN (a ⨝ b on bucket key, a < b): because
     the cap already materializes each bucket's full membership as one sorted
@@ -97,9 +97,9 @@ def bucket_array_pairs(
     already unique because the id array is distinct."""
     pairs = F.explode(
         F.expr(
-            f"flatten(transform({ids_col}, (a, i) -> "
-            f"transform(slice({ids_col}, i + 2, size({ids_col})), "
-            f"b -> struct(a AS a, b AS b))))"
+            "flatten(transform(__ids__, (a, i) -> "
+            "transform(slice(__ids__, i + 2, size(__ids__)), "
+            "b -> struct(a AS a, b AS b))))"
         )
     ).alias("__p__")
     carry_cols = [F.col(c) if isinstance(c, str) else c for c in carry]

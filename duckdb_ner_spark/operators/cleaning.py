@@ -193,7 +193,7 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_scores(t.documents)
 
 
-def dsir_scores(documents: DataFrame, target_source: str = DSIR_TARGET_SOURCE) -> DataFrame:
+def dsir_scores(documents: DataFrame) -> DataFrame:
     """q_dsir's body on an arbitrary documents frame (doc_id, source, text)."""
     ws = F.col("ws")
     m = F.size(ws) - 1
@@ -212,7 +212,7 @@ def dsir_scores(documents: DataFrame, target_source: str = DSIR_TARGET_SOURCE) -
     )
     bg_tab = inst.groupBy("bucket").agg(
         F.count("*").cast("bigint").alias("bg_cnt"),
-        F.sum(F.when(F.col("source") == target_source, 1).otherwise(0))
+        F.sum(F.when(F.col("source") == DSIR_TARGET_SOURCE, 1).otherwise(0))
         .cast("bigint")
         .alias("t_cnt"),
     )

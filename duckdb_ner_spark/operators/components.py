@@ -611,18 +611,17 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank_ranks(
-    dirn: DataFrame, deg: DataFrame, n: int, iters: int = PR_ITERS
-) -> DataFrame:
-    """The q_pagerank iteration core on an arbitrary directed edge list
-    ``dirn(src, dst)`` + degree table ``deg(node, deg)`` — factored out for
-    the scaling probe and planted-graph tests. USING-joins on renamed key
-    columns throughout: dirn/deg usually descend from one edge list, so
-    expression-id joins would be ambiguous self-joins."""
+def pagerank_ranks(dirn: DataFrame, deg: DataFrame, n: int) -> DataFrame:
+    """The q_pagerank iteration core (PR_ITERS rounds) on an arbitrary
+    directed edge list ``dirn(src, dst)`` + degree table ``deg(node, deg)``
+    — factored out for the scaling probe and planted-graph tests.
+    USING-joins on renamed key columns throughout: dirn/deg usually descend
+    from one edge list, so expression-id joins would be ambiguous
+    self-joins."""
     base = PR_SCALE // n
     tele = (15 * base) // 100
     r = deg.select("node", F.lit(base).cast("bigint").alias("pr"))
-    for _ in range(iters):
+    for _ in range(PR_ITERS):
         shares = (
             r.join(deg.select("node", "deg"), "node")
             .select(F.col("node").alias("src"), F.expr("pr div deg").alias("share"))

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
-from .textprep import hex_to_int_sql, words_col
+from .textprep import fraction_hex, hex_to_int_sql, words_col
 from .textstats import SURPRISAL_DOC_SQL, surprisal_per_doc
 
 # --------------------------------------------------------------------------
@@ -48,13 +48,6 @@ SPLIT_TRAIN = 0.8  # [0.0, 0.8) → train
 SPLIT_VAL = 0.9    # [0.8, 0.9) → val; [0.9, 1.0) → test
 
 
-def _frac_hex(rate: float) -> str:
-    """Fraction → fixed-width 15-hex-digit threshold (same encoding as
-    q_mix_sample): lowercase fixed-width hex compares lexicographically ==
-    numerically, so neither engine converts hex→int."""
-    return format(int(rate * (1 << 60)), "015x")
-
-
 _SPLIT_ORACLE = f"""
     WITH d AS (
         SELECT lang,
@@ -63,8 +56,8 @@ _SPLIT_ORACLE = f"""
                substr(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 15) AS hv
         FROM documents
     )
-    SELECT CASE WHEN hv < '{_frac_hex(SPLIT_TRAIN)}' THEN 'train'
-                WHEN hv < '{_frac_hex(SPLIT_VAL)}' THEN 'val'
+    SELECT CASE WHEN hv < '{fraction_hex(SPLIT_TRAIN)}' THEN 'train'
+                WHEN hv < '{fraction_hex(SPLIT_VAL)}' THEN 'val'
                 ELSE 'test' END AS split,
            lang,
            COUNT(*) AS n_docs,
@@ -89,8 +82,8 @@ def q_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.concat(F.lit("split|"), F.col("doc_id").cast("string"))), 1, 15
     )
     split = (
-        F.when(hv < F.lit(_frac_hex(SPLIT_TRAIN)), "train")
-        .when(hv < F.lit(_frac_hex(SPLIT_VAL)), "val")
+        F.when(hv < F.lit(fraction_hex(SPLIT_TRAIN)), "train")
+        .when(hv < F.lit(fraction_hex(SPLIT_VAL)), "val")
         .otherwise("test")
     )
     return (

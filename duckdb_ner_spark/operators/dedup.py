@@ -34,7 +34,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.exprcache import cached_exprs
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
 from .components import clusters_oracle, connected_components
@@ -80,8 +79,7 @@ def minhash_cols() -> list[F.Column]:
     shuffle). The earlier explode→groupBy formulation carried each doc's
     full shingle array through a ~200× row blowup and a sort-heavy aggregate
     (measured 7-9 s cold at sf0.1 vs ~1 s for this form; identical values —
-    same lexicographic min over the same distinct shingles). Stateless, so
-    built once per JVM via exprcache."""
+    same lexicographic min over the same distinct shingles)."""
     return [
         F.array_min(F.transform(F.col("shingles"), lambda sh: seeded_md5(k, sh))).alias(
             f"h{k}"
@@ -91,7 +89,7 @@ def minhash_cols() -> list[F.Column]:
 
 
 def _band_sigs_expr() -> F.Column:
-    """array(concat(h0,h1), concat(h2,h3), ...) banding expression, cached."""
+    """array(concat(h0,h1), concat(h2,h3), ...) banding expression."""
     per_band = N_HASHES // N_BANDS
     return F.array(
         *[
@@ -123,11 +121,9 @@ def sql_minhash_capped_cand() -> str:
     )"""
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, id_col: str, bucket_cap: int = LSH_BUCKET_CAP
-) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame, id_col: str) -> DataFrame:
     """Band the signatures and self-join per (band, signature) bucket,
-    keeping only each bucket's `bucket_cap` smallest ids as pair sources
+    keeping only each bucket's LSH_BUCKET_CAP smallest ids as pair sources
     (the hot-bucket guard — see LSH_BUCKET_CAP). The cap is the BOUNDED-
     STATE two-level salted min-k aggregate (capped_bucket_ids, VERDICT r6
     #2) — still an aggregate, not a row_number window: the window form's
@@ -149,18 +145,8 @@ def lsh_candidate_pairs(
     set, two aggregation subtrees and one join fewer."""
     from .caps import bucket_array_pairs, capped_bucket_id_arrays
 
-    band_expr = cached_exprs("minhash_band_sigs", _band_sigs_expr)
-    bands = sigs.select(F.col(id_col), F.posexplode(band_expr).alias("band", "sig"))
-    if bucket_cap is None:
-        a = bands.select(F.col(id_col).alias("doc_a"), "band", "sig")
-        b = bands.select(F.col(id_col).alias("doc_b"), "band", "sig")
-        return (
-            a.join(b, ["band", "sig"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-    buckets = capped_bucket_id_arrays(bands, id_col, bucket_cap)
+    bands = sigs.select(F.col(id_col), F.posexplode(_band_sigs_expr()).alias("band", "sig"))
+    buckets = capped_bucket_id_arrays(bands, id_col, LSH_BUCKET_CAP)
     return bucket_array_pairs(buckets, "doc_a", "doc_b")
 
 
@@ -210,41 +196,37 @@ def dedup_near_minhash(
     bucket join)."""
     docs = (
         df.select(id_col, words_col(text_col).alias("ws"))
-        .select(id_col, cached_exprs("shingles_ws3", shingles_expr).alias("shingles"))
+        .select(id_col, shingles_expr().alias("shingles"))
         .filter(F.size("shingles") > 0)
     )
     # One narrow pass: signature AND the shingle array for Jaccard verify in
     # the same persisted frame — per-row expressions, zero pre-join shuffles.
-    sigsh = docs.select(id_col, "shingles", *cached_exprs("minhash_cols", minhash_cols)).persist()
+    sigsh = docs.select(id_col, "shingles", *minhash_cols()).persist()
     cand = lsh_candidate_pairs(sigsh, id_col)
     return jaccard_verify(cand, sigsh.select(id_col, "shingles"), id_col, "shingles", threshold)
 
 
-def minhash_bands(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """LSH bucket memberships (id, band, sig) — the persistent corpus index
-    for incremental dedup. Stored bucketed/partitioned by (band, sig) at
-    production scale so probes are co-located joins."""
+def minhash_bands(df: DataFrame) -> DataFrame:
+    """LSH bucket memberships (doc_id, band, sig) of (doc_id, text) rows —
+    the persistent corpus index for incremental dedup. Stored
+    bucketed/partitioned by (band, sig) at production scale so probes are
+    co-located joins."""
     docs = (
-        df.select(id_col, words_col(text_col).alias("ws"))
-        .select(id_col, cached_exprs("shingles_ws3", shingles_expr).alias("shingles"))
+        df.select("doc_id", words_col("text").alias("ws"))
+        .select("doc_id", shingles_expr().alias("shingles"))
         .filter(F.size("shingles") > 0)
     )
-    sigs = docs.select(id_col, *cached_exprs("minhash_cols", minhash_cols))
-    band_expr = cached_exprs("minhash_band_sigs", _band_sigs_expr)
-    return sigs.select(F.col(id_col), F.posexplode(band_expr).alias("band", "sig"))
+    sigs = docs.select("doc_id", *minhash_cols())
+    return sigs.select(F.col("doc_id"), F.posexplode(_band_sigs_expr()).alias("band", "sig"))
 
 
 def dedup_incremental(
-    new_docs: DataFrame,
-    corpus_bands: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    new_docs: DataFrame, corpus_bands: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Continuous-ingest near-dedup: admit only new docs whose every LSH band
-    misses the existing corpus index; return (survivors, survivor_bands) —
-    union survivor_bands into the index for the next batch.
+    """Continuous-ingest near-dedup: admit only new (doc_id, text) docs
+    whose every LSH band misses the existing corpus index; return
+    (survivors, survivor_bands) — union survivor_bands into the index for
+    the next batch.
 
     Semantics: a band collision = near-dup candidate = rejected (recall-
     oriented, the cheap filter a crawl pipeline wants; add jaccard_verify on
@@ -255,14 +237,14 @@ def dedup_incremental(
     equi-join of the new batch's bands against the (band, sig)-keyed index;
     state lives in the index table, not on the driver; index growth is
     O(N_BANDS) rows per admitted doc."""
-    nb = minhash_bands(new_docs, id_col, text_col).persist()
+    nb = minhash_bands(new_docs).persist()
     hit_ids = (
         nb.join(corpus_bands.select("band", "sig").distinct(), ["band", "sig"])
-        .select(id_col)
+        .select("doc_id")
         .distinct()
     )
-    survivors = new_docs.join(hit_ids, id_col, "left_anti")
-    survivor_bands = nb.join(hit_ids, id_col, "left_anti")
+    survivors = new_docs.join(hit_ids, "doc_id", "left_anti")
+    survivor_bands = nb.join(hit_ids, "doc_id", "left_anti")
     return survivors, survivor_bands
 
 
@@ -449,13 +431,12 @@ NGRAM_DF_CAP = 100  # shingles present in more docs than this never index
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_common: int = 15,
     threshold: float = 0.5,
     df_cap: int = NGRAM_DF_CAP,
 ) -> DataFrame:
-    """Inverted-shingle-index near-dup: (doc_a, doc_b, n_common, jaccard).
+    """Inverted-shingle-index near-dup over (doc_id, text) rows:
+    (doc_a, doc_b, n_common, jaccard).
 
     Candidate generation uses ONLY shingles with document-frequency ≤
     df_cap — stop-shingles ("of the and"-style n-grams appearing in a large
@@ -468,11 +449,11 @@ def ngram_jaccard_pairs(
     — the standard index-pruning trade, replayed identically by the oracle).
     """
     docs = (
-        df.select(id_col, words_col(text_col).alias("ws"))
-        .select(id_col, cached_exprs("shingles_ws3", shingles_expr).alias("shingles"))
+        df.select("doc_id", words_col("text").alias("ws"))
+        .select("doc_id", shingles_expr().alias("shingles"))
         .persist()
     )
-    e = docs.select(F.col(id_col).alias("doc_id"), F.explode("shingles").alias("s"))
+    e = docs.select("doc_id", F.explode("shingles").alias("s"))
     # shingle arrays are distinct per doc, so count(*) per shingle == DF
     ok = e.groupBy("s").agg(F.count("*").alias("df")).filter(F.col("df") <= df_cap)
     ef = e.join(ok.select("s"), "s")
@@ -486,8 +467,8 @@ def ngram_jaccard_pairs(
         .filter(F.col("n_capped") >= min_common)
         .select("doc_a", "doc_b")
     )
-    x = docs.select(F.col(id_col).alias("doc_a"), F.col("shingles").alias("sh_a"))
-    y = docs.select(F.col(id_col).alias("doc_b"), F.col("shingles").alias("sh_b"))
+    x = docs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    y = docs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     n_common = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = n_common * F.lit(1.0) / (F.size("sh_a") + F.size("sh_b") - n_common)
     return (
@@ -641,10 +622,10 @@ def q_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     docs = (
         t.documents.select("doc_id", words_col("text").alias("ws"))
-        .select("doc_id", cached_exprs("shingles_ws3", shingles_expr).alias("shingles"))
+        .select("doc_id", shingles_expr().alias("shingles"))
         .filter(F.size("shingles") > 0)
     )
-    sigsh = docs.select("doc_id", "shingles", *cached_exprs("minhash_cols", minhash_cols)).persist()
+    sigsh = docs.select("doc_id", "shingles", *minhash_cols()).persist()
     cand = lsh_candidate_pairs(sigsh, "doc_id")
     a = sigsh.select(
         F.col("doc_id").alias("doc_a"),
@@ -895,12 +876,10 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     docs = (
         t.documents.select("doc_id", words_col("text").alias("ws"))
-        .select("doc_id", cached_exprs("shingles_ws3", shingles_expr).alias("shingles"))
+        .select("doc_id", shingles_expr().alias("shingles"))
         .filter(F.size("shingles") > 0)
     )
-    sigsh = docs.select(
-        "doc_id", "shingles", *cached_exprs("minhash_cols", minhash_cols)
-    ).persist()
+    sigsh = docs.select("doc_id", "shingles", *minhash_cols()).persist()
     pairs = lsh_candidate_pairs(sigsh, "doc_id")
     x = sigsh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     y = sigsh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
@@ -981,7 +960,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     dg = (
         t.documents.select("source", words_col("text").alias("ws"))
-        .select("source", cached_exprs("shingles_ws3", shingles_expr).alias("shingles"))
+        .select("source", shingles_expr().alias("shingles"))
         .select("source", F.explode("shingles").alias("s"))
         .select("source", F.md5("s").alias("d"))
         .distinct()
@@ -1195,48 +1174,47 @@ def _setsim_oracle() -> str:
 """
 
 
-def sql_setsim_pairs_ctes(n: int, d: int, prefix: str = "ss") -> str:
+def sql_setsim_pairs_ctes(n: int, d: int) -> str:
     """The oracle-side prefix-filtered exact set-similarity chain as ONE
     shared fragment (the sql_minhash_capped_cand pattern): defines
-    {prefix}_sh / {prefix}_sz / ... / {prefix}_pairs(doc_a, doc_b,
-    inter_sz, union_sz) for Jaccard ≥ n/d over 3-word shingles of
-    ``documents``. Prefixed so it composes with other CTE chains (the
-    recall audit embeds it beside the MinHash replay)."""
-    p = prefix
-    return f"""{p}_w0 AS (
+    ss_sh / ss_sz / ... / ss_pairs(doc_a, doc_b, inter_sz, union_sz) for
+    Jaccard ≥ n/d over 3-word shingles of ``documents``. Prefixed so it
+    composes with other CTE chains (the recall audit embeds it beside the
+    MinHash replay)."""
+    return f"""ss_w0 AS (
         SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-    ), {p}_s0 AS (
-        SELECT doc_id, {sql_shingles(3)} AS sh FROM {p}_w0
-    ), {p}_sh AS (
-        SELECT doc_id, unnest(sh) AS w FROM {p}_s0 WHERE len(sh) > 0
-    ), {p}_sz AS (
-        SELECT doc_id, CAST(len(sh) AS BIGINT) AS n FROM {p}_s0 WHERE len(sh) > 0
-    ), {p}_dfreq AS (
-        SELECT w, COUNT(*) AS df FROM {p}_sh GROUP BY 1
-    ), {p}_pre AS (
+    ), ss_s0 AS (
+        SELECT doc_id, {sql_shingles(3)} AS sh FROM ss_w0
+    ), ss_sh AS (
+        SELECT doc_id, unnest(sh) AS w FROM ss_s0 WHERE len(sh) > 0
+    ), ss_sz AS (
+        SELECT doc_id, CAST(len(sh) AS BIGINT) AS n FROM ss_s0 WHERE len(sh) > 0
+    ), ss_dfreq AS (
+        SELECT w, COUNT(*) AS df FROM ss_sh GROUP BY 1
+    ), ss_pre AS (
         SELECT doc_id, w, n, rnk FROM (
             SELECT t.doc_id, t.w, sz.n,
                    ROW_NUMBER() OVER (PARTITION BY t.doc_id
                                       ORDER BY d.df ASC, t.w ASC) AS rnk
-            FROM {p}_sh t JOIN {p}_dfreq d USING (w) JOIN {p}_sz sz USING (doc_id)
+            FROM ss_sh t JOIN ss_dfreq d USING (w) JOIN ss_sz sz USING (doc_id)
         ) WHERE rnk <= n - ({n} * n + {d - 1}) // {d} + 1
-    ), {p}_cand AS (
+    ), ss_cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM {p}_pre a JOIN {p}_pre b ON a.w = b.w AND a.doc_id < b.doc_id
+        FROM ss_pre a JOIN ss_pre b ON a.w = b.w AND a.doc_id < b.doc_id
         WHERE {d} * LEAST(a.n, b.n) >= {n} * GREATEST(a.n, b.n)
           AND 1 + LEAST(a.n - a.rnk, b.n - b.rnk)
               >= ({n} * (a.n + b.n) + {n + d - 1}) // {n + d}
-    ), {p}_inter AS (
+    ), ss_inter AS (
         SELECT c.doc_a, c.doc_b, CAST(COUNT(*) AS BIGINT) AS inter_sz
-        FROM {p}_cand c
-        JOIN {p}_sh ta ON ta.doc_id = c.doc_a
-        JOIN {p}_sh tb ON tb.doc_id = c.doc_b AND tb.w = ta.w
+        FROM ss_cand c
+        JOIN ss_sh ta ON ta.doc_id = c.doc_a
+        JOIN ss_sh tb ON tb.doc_id = c.doc_b AND tb.w = ta.w
         GROUP BY 1, 2
-    ), {p}_pairs AS (
+    ), ss_pairs AS (
         SELECT i.doc_a, i.doc_b, i.inter_sz,
                CAST(a.n + b.n - i.inter_sz AS BIGINT) AS union_sz
-        FROM {p}_inter i JOIN {p}_sz a ON a.doc_id = i.doc_a
-                         JOIN {p}_sz b ON b.doc_id = i.doc_b
+        FROM ss_inter i JOIN ss_sz a ON a.doc_id = i.doc_a
+                         JOIN ss_sz b ON b.doc_id = i.doc_b
         WHERE {d} * i.inter_sz >= {n} * (a.n + b.n - i.inter_sz)
     )"""
 
@@ -1850,9 +1828,7 @@ def q_lsh_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     sigs = (
         t.documents.select("doc_id", words_col().alias("ws"))
-        .select(
-            "doc_id", cached_exprs("shingles_ws3", shingles_expr).alias("shingles")
-        )
+        .select("doc_id", shingles_expr().alias("shingles"))
         .select("doc_id", *minhash_cols())
     )
     entries = []
@@ -1882,7 +1858,7 @@ def q_lsh_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     upairs = cand.select("doc_a", "doc_b").distinct()
     sh = t.documents.select("doc_id", words_col().alias("ws")).select(
-        "doc_id", cached_exprs("shingles_ws3", shingles_expr).alias("shingles")
+        "doc_id", shingles_expr().alias("shingles")
     )
     ver = (
         upairs.join(

@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
 from ..sources.writers import scratch_dir
+from .textprep import fraction_hex
 
 
 # --------------------------------------------------------------------------
@@ -177,23 +178,15 @@ MIX_RATES: dict[str, float] = {"en": 0.5, "es": 0.25, "de": 0.25, "fr": 0.125, "
 MIX_DEFAULT_RATE = 0.1
 
 
-def _rate_hex(rate: float) -> str:
-    """rate → fixed-width 15-hex-digit threshold: keep doc iff the first 15
-    hex chars of md5('mix|'||doc_id) sort below it. Fixed-width lowercase hex
-    compares lexicographically == numerically, so no hex→int conversion is
-    needed on either engine."""
-    return format(int(rate * (1 << 60)), "015x")
-
-
 def _mix_oracle() -> str:
     cases = " ".join(
-        f"WHEN lang = '{k}' THEN '{_rate_hex(v)}'" for k, v in sorted(MIX_RATES.items())
+        f"WHEN lang = '{k}' THEN '{fraction_hex(v)}'" for k, v in sorted(MIX_RATES.items())
     )
     return f"""
     WITH d AS (
         SELECT lang,
                substr(md5('mix|' || CAST(doc_id AS VARCHAR)), 1, 15) AS hv,
-               CASE {cases} ELSE '{_rate_hex(MIX_DEFAULT_RATE)}' END AS thr
+               CASE {cases} ELSE '{fraction_hex(MIX_DEFAULT_RATE)}' END AS thr
         FROM documents
     )
     SELECT lang,
@@ -215,9 +208,9 @@ def q_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents arrive (the property RAND()-sampling lacks). The same keyed-
     hash trick as q_sample_det, stratified per domain."""
     t = load_tables(spark, sf_dir)
-    thr = F.lit(_rate_hex(MIX_DEFAULT_RATE))
+    thr = F.lit(fraction_hex(MIX_DEFAULT_RATE))
     for k, v in sorted(MIX_RATES.items(), reverse=True):
-        thr = F.when(F.col("lang") == k, F.lit(_rate_hex(v))).otherwise(thr)
+        thr = F.when(F.col("lang") == k, F.lit(fraction_hex(v))).otherwise(thr)
     d = t.documents.select(
         "lang",
         F.substring(F.md5(F.concat(F.lit("mix|"), F.col("doc_id").cast("string"))), 1, 15).alias(

@@ -58,10 +58,11 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def attach_media(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Synthesize a binary media column from text (deterministic stand-in
-    for reading real blobs): payload + typed metadata."""
-    payload = F.encode(F.col(text_col), "utf-8")
+def attach_media(df: DataFrame) -> DataFrame:
+    """Synthesize a binary media column from (doc_id, text) rows
+    (deterministic stand-in for reading real blobs): payload + typed
+    metadata."""
+    payload = F.encode(F.col("text"), "utf-8")
     return df.select(
         "doc_id",
         payload.alias("payload"),
@@ -559,9 +560,9 @@ LUMA_SCHEMA = StructType(
 )
 
 
-def image_thumb_lumas(media: DataFrame, grid: int = AHASH_GRID) -> DataFrame:
+def image_thumb_lumas(media: DataFrame) -> DataFrame:
     """REAL-decode feature pass for perceptual hashing: payload → PPM decode
-    → nearest-neighbor grid×grid thumbnail → per-cell integer Rec.709 luma
+    → nearest-neighbor AHASH_GRID² thumbnail → per-cell integer Rec.709 luma
     (row-major). Everything downstream of this mapInPandas is JVM-side."""
     import numpy as np
 
@@ -570,7 +571,7 @@ def image_thumb_lumas(media: DataFrame, grid: int = AHASH_GRID) -> DataFrame:
             ids, lumas = [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 img = decode_image(encode_ppm(bytes(payload))).astype(np.int64)
-                t = image_thumbnail(img, target=grid)
+                t = image_thumbnail(img, target=AHASH_GRID)
                 luma = 2126 * t[:, :, 0] + 7152 * t[:, :, 1] + 722 * t[:, :, 2]
                 ids.append(int(doc_id))
                 lumas.append([int(v) for v in luma.flatten()])

@@ -120,13 +120,13 @@ def sql_pq_train_ctes(train: str, tmin: int, k: int, iters: int, p: str) -> str:
     return "".join(parts)
 
 
-def pq_exploded(emb: DataFrame, subdim: int = PQ_SUBDIM) -> DataFrame:
+def pq_exploded(emb: DataFrame) -> DataFrame:
     """(vec_id, m, i, xi): 0-based global dim index on the ×PQ_FX grid."""
     return emb.select(
         "vec_id", F.posexplode("embedding").alias("i0", "x")
     ).select(
         "vec_id",
-        F.expr(f"i0 div {subdim}").alias("m"),
+        F.expr(f"i0 div {PQ_SUBDIM}").alias("m"),
         F.col("i0").alias("i"),
         F.expr(f"CAST(ROUND(CAST(x AS DOUBLE) * {PQ_FX}) AS BIGINT)").alias("xi"),
     )

@@ -25,13 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.exprcache import cached_exprs
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
-
-
-def _revenue() -> F.Column:
-    return F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
 
 
 # --- decimal-exact money arithmetic -------------------------------------
@@ -41,9 +36,9 @@ def _revenue() -> F.Column:
 # makes every product/sum exact and engine-independent; results are cast back
 # to double at the very end (the nearest-double of an agreed decimal is
 # bit-identical in both engines). SURVEY.md §7.4 hazard #1.
-def _dec(col: str | F.Column, scale: str = "decimal(12,2)") -> F.Column:
+def _dec(col: str | F.Column) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
-    return c.cast(scale)
+    return c.cast("decimal(12,2)")
 
 
 def _dec_rate(col: str) -> F.Column:
@@ -54,13 +49,9 @@ def _revenue_dec() -> F.Column:
     return _dec("l_extendedprice") * (F.lit(1).cast("decimal(4,2)") - _dec_rate("l_discount"))
 
 
-def _r2d(col: F.Column, digits: int = 2) -> F.Column:
-    """round(decimal) → double (exact, engine-portable)."""
-    return F.round(col, digits).cast("double")
-
-
-# SQL twins of the helpers above (DuckDB dialect)
-SQL_REV_DEC = "(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2))))"
+def _r2d(col: F.Column) -> F.Column:
+    """round(decimal, 2) → double (exact, engine-portable)."""
+    return F.round(col, 2).cast("double")
 
 
 # --- fixed-point fast path -------------------------------------------------
@@ -95,9 +86,9 @@ def _fx2dec(sum_col: F.Column, frac_digits: int) -> F.Column:
     return sum_col.cast("decimal(28,0)") / denom
 
 
-def fxsum(fx: F.Column, frac_digits: int, digits: int = 2) -> F.Column:
-    """round(sum(fixed-point long) / 10^frac_digits, digits) → double, exact."""
-    return F.round(_fx2dec(F.sum(fx), frac_digits), digits).cast("double")
+def fxsum(fx: F.Column, frac_digits: int) -> F.Column:
+    """round(sum(fixed-point long) / 10^frac_digits, 2) → double, exact."""
+    return F.round(_fx2dec(F.sum(fx), frac_digits), 2).cast("double")
 
 
 def fx_revenue() -> F.Column:
@@ -105,7 +96,7 @@ def fx_revenue() -> F.Column:
     return fx100("l_extendedprice") * (F.lit(100) - fx100("l_discount"))
 
 
-def _fxsum_big(fx: F.Column, frac_digits: int, digits: int = 2) -> F.Column:
+def _fxsum_big(fx: F.Column, frac_digits: int) -> F.Column:
     """Exact fixed-point sum for LOW-cardinality group keys: accumulate the
     long fixed-point column under decimal(38,0) (cannot wrap at any corpus
     size — 1e38 headroom vs 2^63≈9.2e18), scale down, round, cast double.
@@ -115,7 +106,7 @@ def _fxsum_big(fx: F.Column, frac_digits: int, digits: int = 2) -> F.Column:
     groups that were already partition-local — pure stage overhead)."""
     total = F.sum(fx.cast("decimal(38,0)"))
     denom = F.lit(10**frac_digits).cast(f"decimal({frac_digits + 1},0)")
-    return F.round(total / denom, digits).cast("double")
+    return F.round(total / denom, 2).cast("double")
 
 
 # --------------------------------------------------------------------------
@@ -426,14 +417,12 @@ def q_agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange for groups that were already partition-local (r13)."""
     t = load_tables(spark, sf_dir)
     base = t.lineitem.filter(F.col("l_shipdate") <= "1998-09-02")
-    aggs = cached_exprs("q1_agg1", _q1_exprs)
-    return base.groupBy("l_returnflag", "l_linestatus").agg(*aggs)
+    return base.groupBy("l_returnflag", "l_linestatus").agg(*_q1_exprs())
 
 
 def _q1_exprs() -> list[F.Column]:
-    """Q1's ~20 composite aggregate columns cost ~0.2 s of Py4J round-trips
-    to construct — most of the query's warm latency at small SF. They are
-    stateless unresolved expressions, so build once per JVM (exprcache)."""
+    """Q1's composite aggregate columns: stateless unresolved expressions,
+    built per plan (the session memo serves repeat runs of the plan)."""
     n = F.count("*")
     qty = F.sum("l_quantity")
 

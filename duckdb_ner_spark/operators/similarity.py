@@ -28,14 +28,14 @@ from ..sources.catalog import load_tables
 from .caps import sql_capped_bucket_ctes
 
 
-def _explode_embeddings(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """(id, array<float>) → (id, i, x double) — position-exploded form.
+def _explode_embeddings(df: DataFrame) -> DataFrame:
+    """(vec_id, embedding) → (vec_id, i, x double) — position-exploded form.
 
     posexplode keeps Spark's 0-based positions; +1 matches DuckDB's
     generate_subscripts for oracle replay."""
     return df.select(
-        id_col, F.posexplode("embedding").alias("i0", "xf")
-    ).select(id_col, (F.col("i0") + 1).alias("i"), F.col("xf").cast("double").alias("x"))
+        "vec_id", F.posexplode("embedding").alias("i0", "xf")
+    ).select("vec_id", (F.col("i0") + 1).alias("i"), F.col("xf").cast("double").alias("x"))
 
 
 def cosine_pairs_exploded(df: DataFrame, threshold: float) -> DataFrame:
@@ -164,8 +164,8 @@ def _fx_planes(dim: int) -> np.ndarray:
     return np.rint(rng.randn(N_FX_PLANES, dim) * FX_SCALE).astype(np.int64)
 
 
-def fx_band_sigs(df: DataFrame, dim: int, id_col: str = "vec_id") -> DataFrame:
-    """(id, embedding) → (id, band, sig): banded signed-random-projection
+def fx_band_sigs(df: DataFrame, dim: int) -> DataFrame:
+    """(vec_id, embedding) → (vec_id, band, sig): banded signed-random-projection
     signatures over fixed-point arithmetic.
 
     One projection pass per row, all JVM-side (zip_with/aggregate folds in
@@ -176,7 +176,7 @@ def fx_band_sigs(df: DataFrame, dim: int, id_col: str = "vec_id") -> DataFrame:
     xi = F.expr(
         f"transform(embedding, v -> CAST(ROUND(CAST(v AS DOUBLE) * {FX_SCALE}, 0) AS BIGINT))"
     )
-    w = df.select(F.col(id_col), xi.alias("__xi__"))
+    w = df.select(F.col("vec_id"), xi.alias("__xi__"))
     bits = []
     for p in range(N_FX_PLANES):
         pl = F.array(*[F.lit(int(v)) for v in planes[p]])
@@ -191,15 +191,14 @@ def fx_band_sigs(df: DataFrame, dim: int, id_col: str = "vec_id") -> DataFrame:
         for b in range(FX_BANDS)
     ]
     return w.select(
-        F.col(id_col), F.posexplode(F.array(*band_sigs)).alias("band", "sig")
+        F.col("vec_id"), F.posexplode(F.array(*band_sigs)).alias("band", "sig")
     )
 
 
-def lsh_cosine_pairs(
-    df: DataFrame, dim: int, threshold: float, id_col: str = "vec_id"
-) -> DataFrame:
-    """Near-dup pairs via banded hyperplane LSH: candidates only within a
-    (band, sig) bucket, each bucket capped at its SIM_BUCKET_CAP smallest
+def lsh_cosine_pairs(df: DataFrame, dim: int, threshold: float) -> DataFrame:
+    """Near-dup (vec_a, vec_b, cosine) pairs of (vec_id, embedding) rows via
+    banded hyperplane LSH: candidates only within a (band, sig) bucket,
+    each bucket capped at its SIM_BUCKET_CAP smallest
     ids (bounded-state two-level min-k, caps.py — ADVICE r6 #1), exact
     cosine verify on the candidates. No all-pairs join anywhere — candidate
     volume is cap-bounded even on a degenerate corpus, verify joins
@@ -210,9 +209,7 @@ def lsh_cosine_pairs(
     once per join side (r13)."""
     from .caps import bucket_array_pairs, capped_bucket_id_arrays
 
-    buckets = capped_bucket_id_arrays(
-        fx_band_sigs(df, dim, id_col), id_col, SIM_BUCKET_CAP
-    )
+    buckets = capped_bucket_id_arrays(fx_band_sigs(df, dim), "vec_id", SIM_BUCKET_CAP)
     cands = bucket_array_pairs(buckets, "vec_a", "vec_b")
     dd = F.expr("transform(embedding, v -> CAST(v AS DOUBLE))")
     # per-vector norms computed ONCE on the vector side of the verify joins
@@ -222,12 +219,8 @@ def lsh_cosine_pairs(
     n1 = F.sqrt(
         F.aggregate(F.zip_with(dd, dd, lambda x, y: x * y), F.lit(0.0), lambda a_, v: a_ + v)
     )
-    ea = df.select(
-        F.col(id_col).alias("vec_a"), dd.alias("da"), n1.alias("na")
-    )
-    eb = df.select(
-        F.col(id_col).alias("vec_b"), dd.alias("db"), n1.alias("nb")
-    )
+    ea = df.select(F.col("vec_id").alias("vec_a"), dd.alias("da"), n1.alias("na"))
+    eb = df.select(F.col("vec_id").alias("vec_b"), dd.alias("db"), n1.alias("nb"))
     dot = F.aggregate(
         F.zip_with("da", "db", lambda x, y: x * y), F.lit(0.0), lambda a_, v: a_ + v
     )
@@ -241,7 +234,7 @@ def lsh_cosine_pairs(
     )
 
 
-def _fx_banding_cte(dim: int, cap: int = SIM_BUCKET_CAP) -> str:
+def _fx_banding_cte(dim: int) -> str:
     """The shared oracle prefix replaying fx_band_sigs + the candidate
     bucket join: planes VALUES table, quantized ex/exq, per-plane bits,
     banded sigs, the SIM_BUCKET_CAP hot-bucket min-k (two-level salted,
@@ -275,7 +268,7 @@ def _fx_banding_cte(dim: int, cap: int = SIM_BUCKET_CAP) -> str:
         SELECT vec_id, p // {per_band} AS band,
                SUM(bit * CASE p % {per_band} {sig_weight} END) AS sig
         FROM bits GROUP BY vec_id, p // {per_band}
-    ), {sql_capped_bucket_ctes("sigs", "vec_id", cap)}, cands AS (
+    ), {sql_capped_bucket_ctes("sigs", "vec_id", SIM_BUCKET_CAP)}, cands AS (
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM capped a JOIN capped b
           ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
@@ -800,12 +793,12 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sim_ann_oracle(dim: int = 64, threshold_fx: int = 300_000) -> str:
+def _sim_ann_oracle() -> str:
     """DuckDB twin of q_sim_ann: the shared banding replay
     (_fx_banding_cte) with a fixed-point cosine output (ROUND to integer —
     the safe class) and an integer threshold."""
     return f"""
-    WITH {_fx_banding_cte(dim)}, dots AS (
+    WITH {_fx_banding_cte(64)}, dots AS (
         SELECT c.vec_a, c.vec_b, SUM(ea.xi * eb.xi) AS dot
         FROM cands c
         JOIN exq ea ON ea.vec_id = c.vec_a
@@ -822,7 +815,7 @@ def _sim_ann_oracle(dim: int = 64, threshold_fx: int = 300_000) -> str:
         FROM dots d
         JOIN nfx na ON na.vec_id = d.vec_a
         JOIN nfx nb ON nb.vec_id = d.vec_b
-    ) WHERE cosine_fx >= {threshold_fx}
+    ) WHERE cosine_fx >= 300000
     """
 
 
@@ -1148,16 +1141,16 @@ def fx_cosine_to_query(emb: DataFrame, query_vec_id: int) -> DataFrame:
     )
 
 
-def _ann_recall_oracle(dim: int = 64) -> str:
+def _ann_recall_oracle() -> str:
     """DuckDB twin: replays the fixed-point banded bucketing (same integer
     plane literals as fx_band_sigs) for the query's candidate set, the
     fixed-point cosine, and both top-k lists."""
-    planes = _fx_planes(dim)
+    planes = _fx_planes(64)
     per_band = N_FX_PLANES // FX_BANDS
     values = ",".join(
         f"({p},{i + 1},{int(planes[p, i])})"
         for p in range(N_FX_PLANES)
-        for i in range(dim)
+        for i in range(64)
     )
     sig_weight = " ".join(
         f"WHEN {r} THEN {1 << (per_band - 1 - r)}" for r in range(per_band)

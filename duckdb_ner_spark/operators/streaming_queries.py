@@ -37,6 +37,8 @@ def _drain(df: DataFrame, mode: str) -> str:
     """Run a streaming frame to completion into a fresh memory sink; return
     the sink table name. Unique name per call: memory sinks live for the
     session, and a second drain must not race a stale registration."""
+    from ..streaming.events import await_drain
+
     name = f"dns_sink_{next(_SINK_IDS)}"
     q = (
         df.writeStream.format("memory")
@@ -45,12 +47,7 @@ def _drain(df: DataFrame, mode: str) -> str:
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise TimeoutError("streaming drain did not finish within 300s")
-    finally:
-        q.stop()
+    await_drain(q)
     return name
 
 
@@ -939,7 +936,6 @@ def q_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size; admitted docs could route onward append-mode from the
     same query (foreachBatch), with survivor bands unioned back into the
     index exactly as q_dedup_incr's dedup_incremental returns them."""
-    from ..plans.exprcache import cached_exprs
     from ..streaming.ner_stream import stream_documents_sliced
     from .dedup import N_BANDS, minhash_bands, minhash_cols
     from .textprep import shingles_expr, words_col
@@ -969,7 +965,7 @@ def q_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigd = feat.select(
         "doc_id", "lang", "n_chars", "n_words", "n_distinct",
-        *cached_exprs("minhash_cols", minhash_cols),
+        *minhash_cols(),
     )
     probed = sigd.select(
         "doc_id", "lang", "n_chars", "n_words", "n_distinct",

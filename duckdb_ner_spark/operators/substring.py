@@ -571,10 +571,10 @@ def q_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _scrub_from_spans(t.documents, staged_excise_spans(spark, sf_dir))
 
 
-def substring_scrub(docs: DataFrame, k: int = SSD_K) -> DataFrame:
+def substring_scrub(docs: DataFrame) -> DataFrame:
     """Apply-half core over any (doc_id, text, n_chars) frame — see
     q_substring_scrub. Planted-fixture pytests in test_round10_ops.py."""
-    return _scrub_from_spans(docs, substring_excise_spans(docs, k))
+    return _scrub_from_spans(docs, substring_excise_spans(docs, SSD_K))
 
 
 def _scrub_from_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
@@ -1237,14 +1237,15 @@ _SUBSTRING_INCR_ORACLE = f"""
 """
 
 
-def substring_pack_index(corpus: DataFrame, k: int = SSD_K) -> DataFrame:
-    """The persistent substring index: one row per DISTINCT window content
-    in the corpus (k/8 packed BIGINTs — no digest, no collision). At
+def substring_pack_index(corpus: DataFrame) -> DataFrame:
+    """The persistent substring index: one row per DISTINCT SSD_K-byte
+    window content in the corpus (SSD_K/8 packed BIGINTs — no digest, no
+    collision). At
     production this is a maintained table partitioned on its own key
     columns; appends are the admitted batch's distinct tuples (the
     q_stream_index_growth pattern), GDPR erasure is a keyed anti-join
     (the q_erasure pattern)."""
-    return packed_windows(corpus, k).select(*packed_key_cols(k)).distinct()
+    return packed_windows(corpus, SSD_K).select(*packed_key_cols(SSD_K)).distinct()
 
 
 def substring_ingest_probe(

@@ -62,6 +62,14 @@ SPARK_H60 = "CAST(conv(substr(md5({arg}), 1, 15), 16, 10) AS BIGINT)"
 DUCK_H60 = "CAST(('0x' || substr(md5({arg}), 1, 15)) AS BIGINT)"
 
 
+def fraction_hex(rate: float) -> str:
+    """Fraction → fixed-width 15-hex-digit threshold on the same 60-bit md5
+    prefix: keep a row iff ``substr(md5(key), 1, 15)`` sorts below it.
+    Lowercase fixed-width hex compares lexicographically == numerically, so
+    neither engine converts hex→int."""
+    return format(int(rate * (1 << 60)), "015x")
+
+
 def hex_to_int_sql(col: str, n: int) -> str:
     """DuckDB replay of Spark's conv(substr(<hex>,1,n),16,10): positional
     strpos sum over the first n hex digits of an already-computed hex

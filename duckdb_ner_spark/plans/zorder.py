@@ -47,20 +47,6 @@ def zvalue(cols: list[Column | str], bits: int = 16) -> Column:
     return z
 
 
-def normalize_to_bits(col: Column | str, lo: float, hi: float, bits: int = 16) -> Column:
-    """Affine-map a numeric column with known [lo, hi] range onto the
-    [0, 2^bits) grid required by zvalue (monotone, so z-locality in the grid
-    is locality in the original value)."""
-    c = F.col(col) if isinstance(col, str) else col
-    span = hi - lo
-    if span <= 0:
-        raise ValueError("hi must exceed lo")
-    scaled = (c.cast("double") - F.lit(float(lo))) / F.lit(float(span))
-    return F.floor(
-        F.least(F.greatest(scaled, F.lit(0.0)), F.lit(1.0 - 1e-12)) * (1 << bits)
-    ).cast("long")
-
-
 def cluster_by_zorder(
     df: DataFrame,
     cols: list[Column | str],
@@ -69,7 +55,7 @@ def cluster_by_zorder(
 ) -> DataFrame:
     """Repartition by range on the Morton code and sort within partitions —
     the write-side half of Z-order clustering. Columns must already be
-    non-negative ints on a bounded grid (use normalize_to_bits otherwise)."""
+    non-negative ints on a bounded grid."""
     z = zvalue(cols, bits).alias("__z__")
     out = df.withColumn("__z__", z)
     n = num_partitions or out.sparkSession.sparkContext.defaultParallelism

@@ -162,14 +162,14 @@ install_zip_stat_check()
 
 def get_spark(
     app_name: str = "duckdb-ner-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's pinned defaults."""
+    """Build (or reuse) a SparkSession with the engine's pinned defaults;
+    ``extra_conf["spark.master"]`` overrides the local master."""
     cpus = default_parallelism()
     extra_conf = extra_conf or {}
-    master = extra_conf.get("spark.master", master or f"local[{cpus}]")
+    master = extra_conf.get("spark.master", f"local[{cpus}]")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

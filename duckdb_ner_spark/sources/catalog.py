@@ -212,9 +212,9 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Catalog:
     return Catalog(spark, sf_dir)
 
 
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (``spark.sql`` surface parity with
     the reference's SQL-only test harness, /root/reference/test/sql/ner.test)."""
     cat = Catalog(spark, sf_dir)
     for name in TABLES:
-        cat.table(name).createOrReplaceTempView(prefix + name)
+        cat.table(name).createOrReplaceTempView(name)

@@ -48,24 +48,19 @@ def scratch_dir(name: str, sf_dir: str) -> str:
     return path
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_cols: list[str] | None = None,
-) -> None:
-    w = df.write.mode(mode)
+def write_parquet(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> None:
+    w = df.write.mode("overwrite")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
+def write_json(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").json(path)
 
 
 def write_bucketed(
@@ -82,8 +77,8 @@ def write_bucketed(
     w.saveAsTable(table_name, format="parquet")
 
 
-def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:
-    r = spark.read.option("header", str(header).lower())
+def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
+    r = spark.read.option("header", "true")
     if schema is not None:
         r = r.schema(schema)
     else:

@@ -49,17 +49,14 @@ def _normalize(df: DataFrame) -> DataFrame:
 
 
 def windowed_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    slide: str | None = None,
+    events: DataFrame, window: str = "1 hour", slide: str | None = None
 ) -> DataFrame:
     """Tumbling (or, with ``slide``, hopping) window counts per event_type
-    with a watermark (streaming) — watermark is a no-op under batch, so one
-    definition serves both."""
+    with a 2-hour watermark (streaming) — watermark is a no-op under batch,
+    so one definition serves both."""
     e = events
     if e.isStreaming:
-        e = e.withWatermark("ts", watermark)
+        e = e.withWatermark("ts", "2 hours")
     win = F.window("ts", window, slide) if slide else F.window("ts", window)
     return (
         e.groupBy(win.alias("w"), "event_type")
@@ -161,10 +158,8 @@ def batch_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return Catalog(spark, sf_dir).table("events")
 
 
-def session_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 second"
-) -> DataFrame:
-    """Gap-based session windows per user (session_window) — one definition
+def session_counts(events: DataFrame) -> DataFrame:
+    """30-minute-gap session windows per user (session_window) — one definition
     for batch and stream. Streaming runs in APPEND mode: a session is
     emitted exactly once, when the watermark passes its close (last event +
     gap) — so the drained sink holds every CLOSED session, and sessions
@@ -174,9 +169,9 @@ def session_counts(
     session-window state store."""
     e = events
     if e.isStreaming:
-        e = e.withWatermark("ts", watermark)
+        e = e.withWatermark("ts", "1 second")
     return (
-        e.groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+        e.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -224,13 +219,14 @@ def dedup_stream(events: DataFrame, keys: list[str] | None = None, watermark: st
     return events.dropDuplicates(keys)
 
 
-def await_drain(q, timeout: int = 300) -> None:
+def await_drain(q) -> None:
     """availableNow queries terminate on their own; a False return means the
-    drain did NOT finish — raise instead of silently stopping mid-stream."""
+    drain did NOT finish within 300 s — raise instead of silently stopping
+    mid-stream."""
     try:
-        finished = q.awaitTermination(timeout)
+        finished = q.awaitTermination(300)
         if not finished:
-            raise TimeoutError(f"streaming drain did not finish within {timeout}s")
+            raise TimeoutError("streaming drain did not finish within 300s")
     finally:
         q.stop()
 

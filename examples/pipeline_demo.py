@@ -6,9 +6,11 @@ Run: python examples/pipeline_demo.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pyspark.sql.functions as F  # noqa: E402
 
@@ -37,7 +39,7 @@ def main() -> None:
     ).show()
 
     print("== ner() with the stub model (extension surface) ==")
-    engine.set_model_path("/root/repo/tests/fixtures/stub_model.json")
+    engine.set_model_path(os.path.join(ROOT, "tests", "fixtures", "stub_model.json"))
     spark.sql("SELECT ner('sam is in new york') AS entities").show(truncate=False)
 
     print("== near-dedup: MinHash-LSH pairs -> cluster collapse ==")

@@ -1,8 +1,9 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -27,9 +28,9 @@ def oracle_con():
     """DuckDB connection with every sf0.001 table as a view (oracle side)."""
     import duckdb
 
+    from duckdb_ner_spark.sources.catalog import TABLES
+
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
     return con

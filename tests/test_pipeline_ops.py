@@ -82,7 +82,6 @@ def test_lsh_hot_bucket_cap_bounds_template_cluster(spark):
         minhash_cols,
     )
     from duckdb_ner_spark.operators.textprep import shingles_expr, words_col
-    from duckdb_ner_spark.plans.exprcache import cached_exprs
 
     template = "the quick brown fox jumps over the lazy dog again and again"
     df = spark.createDataFrame(
@@ -90,8 +89,8 @@ def test_lsh_hot_bucket_cap_bounds_template_cluster(spark):
     )
     sigs = (
         df.select("doc_id", words_col("text").alias("ws"))
-        .select("doc_id", cached_exprs("shingles_ws3", shingles_expr).alias("shingles"))
-        .select("doc_id", "shingles", *cached_exprs("minhash_cols", minhash_cols))
+        .select("doc_id", shingles_expr().alias("shingles"))
+        .select("doc_id", "shingles", *minhash_cols())
     )
     n_pairs = lsh_candidate_pairs(sigs, "doc_id").count()
     cap_pairs = LSH_BUCKET_CAP * (LSH_BUCKET_CAP - 1) // 2

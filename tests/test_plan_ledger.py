@@ -11,13 +11,15 @@ attested rows; its green queries are then required in-window, which is where
 a fresh driver round's rows already are.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tools.plan_ledger import _plans_rows, build, violations  # noqa: E402
 
-PLANS = "/root/repo/docs/PLANS.md"
+PLANS = os.path.join(ROOT, "docs", "PLANS.md")
 
 
 def _window() -> list[str]:

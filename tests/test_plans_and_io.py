@@ -192,29 +192,6 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
 
 
-def test_exprcache_identity_and_equivalence(spark):
-    """cached_exprs returns the SAME object per (JVM, key) and the cached
-    expressions produce identical results when applied to a DataFrame."""
-    from pyspark.sql import functions as F
-
-    from duckdb_ner_spark.plans.exprcache import cached_exprs
-
-    build_calls = []
-
-    def build():
-        build_calls.append(1)
-        return [F.sum(F.col("v") * 2).alias("s")]
-
-    a = cached_exprs("test_exprs", build)
-    b = cached_exprs("test_exprs", build)
-    assert a is b and len(build_calls) == 1
-    df = spark.range(5).select(F.col("id").alias("v"))
-    # the same cached Column list works across distinct DataFrames
-    r1 = df.groupBy().agg(*a).collect()[0].s
-    r2 = df.filter("v >= 0").groupBy().agg(*a).collect()[0].s
-    assert r1 == r2 == sum(i * 2 for i in range(5))
-
-
 def test_knn_join_broadcasts_query_side(spark):
     """q_knn_join's retrieval asymmetry: the query set must ride in as a
     broadcast — the corpus is never shuffled for the scoring join."""

@@ -131,7 +131,6 @@ def test_containment_detects_planted_quote(spark):
         minhash_cols,
     )
     from duckdb_ner_spark.operators.textprep import shingles_expr, words_col
-    from duckdb_ner_spark.plans.exprcache import cached_exprs
 
     # Pinned configuration (verified against a pure-Python replay of the md5
     # min-hash banding): this 20-word quote + 30 fillers collides in exactly
@@ -145,12 +144,10 @@ def test_containment_detects_planted_quote(spark):
     df = spark.createDataFrame([(1, long_doc), (2, quote)], ["doc_id", "text"])
     docs = (
         df.select("doc_id", words_col("text").alias("ws"))
-        .select("doc_id", cached_exprs("shingles_ws3", shingles_expr).alias("shingles"))
+        .select("doc_id", shingles_expr().alias("shingles"))
         .filter(F.size("shingles") > 0)
     )
-    sigsh = docs.select(
-        "doc_id", "shingles", *cached_exprs("minhash_cols", minhash_cols)
-    )
+    sigsh = docs.select("doc_id", "shingles", *minhash_cols())
     pairs = lsh_candidate_pairs(sigsh, "doc_id")
     x = sigsh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     y = sigsh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))

@@ -14,13 +14,15 @@ import ast
 import glob
 import json
 import pathlib
+import subprocess
 
 DRIVER_WINDOW = 50
+ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 
 def _driver_green() -> set[str]:
     green = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(str(ROOT / "CORRECTNESS_r*.json"))):
         with open(path) as f:
             rows = json.load(f)
         for name, row in rows.items():
@@ -75,7 +77,7 @@ def test_window_list_is_exactly_the_driver_window():
 # name once — merging two modules must not silently rebind a constant that
 # a query reads
 # --------------------------------------------------------------------------
-PKG = pathlib.Path(__file__).resolve().parent.parent / "duckdb_ner_spark"
+PKG = ROOT / "duckdb_ner_spark"
 
 
 def _package_modules() -> list[pathlib.Path]:
@@ -125,3 +127,41 @@ def test_no_module_binds_a_top_level_name_twice():
                     bad.append(f"{p.relative_to(PKG)}:{node.lineno} {name}")
                 seen.add(name)
     assert not bad, f"top-level names bound twice: {bad}"
+
+
+# --------------------------------------------------------------------------
+# Every entry point imports its own checkout: a tool, test or example run
+# from a second copy must exercise that copy's package, so no tracked file
+# names a checkout's absolute path or puts a literal path on sys.path
+# --------------------------------------------------------------------------
+def _tracked_py_files() -> list[pathlib.Path]:
+    try:
+        out = subprocess.run(
+            ["git", "ls-files", "*.py"], cwd=ROOT, capture_output=True, text=True, check=True
+        ).stdout
+    except (OSError, subprocess.CalledProcessError):  # an exported copy has no .git
+        return sorted(
+            p for p in ROOT.rglob("*.py")
+            if not any(part.startswith(".") for part in p.relative_to(ROOT).parts)
+        )
+    return [ROOT / line for line in out.splitlines()]
+
+
+def test_no_tracked_file_names_its_checkout_path():
+    here = str(ROOT)
+    bad = [str(p.relative_to(ROOT)) for p in _tracked_py_files() if here in p.read_text()]
+    assert not bad, f"derive the checkout root from __file__ instead: {bad}"
+
+
+def test_no_literal_path_is_put_on_sys_path():
+    bad = [
+        f"{p.relative_to(ROOT)}:{node.lineno}"
+        for p in _tracked_py_files()
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("insert", "append")
+        and ast.unparse(node.func.value) == "sys.path"
+        and any(isinstance(a, ast.Constant) and isinstance(a.value, str) for a in node.args)
+    ]
+    assert not bad, f"derive sys.path entries from __file__: {bad}"

@@ -22,9 +22,11 @@ def duckdb_pair(sf_dir: str, headline: list[str], oracles: dict[str, str]) -> di
     ratios trackable round-over-round, VERDICT r5 #5)."""
     import duckdb
 
+    from duckdb_ner_spark.sources.catalog import TABLES
+
     def fresh_con():
         c = duckdb.connect()
-        for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
+        for t in TABLES:
             c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
         return c
 

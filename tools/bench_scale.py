@@ -30,7 +30,7 @@ import shutil
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SRC = "/root/testdata/sf0.1"
 QUERIES = ["q_join_multi", "q_dedup_near", "q_text_stats", "q_fingerprint", "q_ner_bert"]

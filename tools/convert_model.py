@@ -34,7 +34,7 @@ import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from duckdb_ner_spark.ner.ggml_format import HPARAM_NAMES, write_ggml  # noqa: E402
 

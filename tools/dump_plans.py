@@ -23,18 +23,15 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from bench import steady_conf
+    from duckdb_ner_spark.plans.inspect import formatted_plan
     from duckdb_ner_spark.session import default_parallelism, get_spark
 
     spark = get_spark("dump_plans", extra_conf=steady_conf(default_parallelism()))
     qs = entrymod.queries()
     for name in names:
-        df = qs[name](spark, sf_dir)
-        text = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-            df._jdf.queryExecution(), "formatted"
-        )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(text)
+            f.write(formatted_plan(qs[name](spark, sf_dir)))
         print(f"wrote {path}")
 
 

@@ -9,9 +9,11 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -55,7 +57,7 @@ def main() -> None:
             lines.append(f"| {name} | — | — | — | — | ERROR: {type(exc).__name__} |")
             errors.append(f"{name}: {exc}")
 
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote docs/PLANS.md ({len(qs)} queries)")
     if errors:

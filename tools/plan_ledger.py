@@ -23,11 +23,12 @@ PQ re-attestation was builder discipline). This tool closes that gap:
 from __future__ import annotations
 
 import json
+import os
 import re
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ATTEST_PATH = f"{REPO}/docs/plan_attest.json"
 
 

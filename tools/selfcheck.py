@@ -16,11 +16,12 @@ surface here instead of in the round gate.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _numeric_kind(col):
@@ -98,11 +99,10 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
     from duckdb_ner_spark.session import get_spark
+    from duckdb_ner_spark.sources.catalog import TABLES
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if "/" not in a]
-
-    import os
 
     if os.environ.get("VANILLA"):
         # Mimic the driver: a bare session with no engine confs beyond what any
@@ -121,7 +121,7 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
 
     con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events documents embeddings").split():
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     from duckdb_ner_spark.plans.cachereg import persistent_rdd_count, release_caches
