@@ -244,3 +244,51 @@ def write_ggml(
                 f.write(_quant_q4_0_legacy(arr) if q4_legacy else _quant_q4_0_modern(arr))
             else:
                 arr.astype(np.float16 if t_ftype == F16 else np.float32).tofile(f)
+
+
+def random_model(vocab: list[str], n_embd: int, n_head: int, n_layer: int,
+                 n_labels: int, n_max_tokens: int, seed: int = 7,
+                 n_intermediate: int | None = None):
+    """A seeded random BertForTokenClassification in the converter's tensor
+    naming: ``(hparams, tensors)`` ready for ``write_ggml``. For tests,
+    demos and the q_ner_bert benchmark model."""
+    rng = np.random.RandomState(seed)
+    if n_intermediate is None:
+        n_intermediate = n_embd * 4
+
+    def w(*shape):
+        return (rng.randn(*shape) * 0.05).astype(np.float32)
+
+    t = {
+        "embeddings.word_embeddings.weight": w(len(vocab), n_embd),
+        "embeddings.token_type_embeddings.weight": w(2, n_embd),
+        "embeddings.position_embeddings.weight": w(n_max_tokens, n_embd),
+        "embeddings.LayerNorm.weight": np.ones(n_embd, np.float32),
+        "embeddings.LayerNorm.bias": np.zeros(n_embd, np.float32),
+        "classifier.weight": w(n_labels, n_embd),
+        "classifier.bias": np.zeros(n_labels, np.float32),
+    }
+    for i in range(n_layer):
+        base = f"encoder.layer.{i}."
+        t[base + "attention.self.query.weight"] = w(n_embd, n_embd)
+        t[base + "attention.self.query.bias"] = np.zeros(n_embd, np.float32)
+        t[base + "attention.self.key.weight"] = w(n_embd, n_embd)
+        t[base + "attention.self.key.bias"] = np.zeros(n_embd, np.float32)
+        t[base + "attention.self.value.weight"] = w(n_embd, n_embd)
+        t[base + "attention.self.value.bias"] = np.zeros(n_embd, np.float32)
+        t[base + "attention.output.dense.weight"] = w(n_embd, n_embd)
+        t[base + "attention.output.dense.bias"] = np.zeros(n_embd, np.float32)
+        t[base + "attention.output.LayerNorm.weight"] = np.ones(n_embd, np.float32)
+        t[base + "attention.output.LayerNorm.bias"] = np.zeros(n_embd, np.float32)
+        t[base + "intermediate.dense.weight"] = w(n_intermediate, n_embd)
+        t[base + "intermediate.dense.bias"] = np.zeros(n_intermediate, np.float32)
+        t[base + "output.dense.weight"] = w(n_embd, n_intermediate)
+        t[base + "output.dense.bias"] = np.zeros(n_embd, np.float32)
+        t[base + "output.LayerNorm.weight"] = np.ones(n_embd, np.float32)
+        t[base + "output.LayerNorm.bias"] = np.zeros(n_embd, np.float32)
+    hp = dict(
+        n_vocab=len(vocab), n_max_tokens=n_max_tokens, n_embd=n_embd,
+        n_intermediate=n_intermediate, n_head=n_head, n_layer=n_layer,
+        ftype=0, n_labels=n_labels,
+    )
+    return hp, t

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.cachereg import memoized
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
 from ..sources.writers import scratch_dir
@@ -100,19 +101,14 @@ _BUCKET_ORACLE = """
 """
 
 
-@declared("q_bucket_join", cache_plan=False, oracle=_BUCKET_ORACLE)
-def q_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem⋈orders with BOTH sides bucketed by the join key.
-
-    Each side is persisted as an external bucketed table (8 buckets on the
-    orderkey, sorted within buckets); the join then reads co-located buckets
-    — with broadcast disabled the physical plan is a sort-merge join with no
-    Exchange on either side (asserted in tests/test_layout.py). At 100 TB
-    this layout turns every orderkey-family join into a local merge.
-
-    External tables (explicit ``path``) keep the data in scratch space; only
-    metastore entries live in the session catalog, so a vanilla driver
-    session needs no warehouse dir."""
+@memoized
+def staged_bucket_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Write lineitem and orders as external tables bucketed and sorted on
+    the orderkey (8 buckets); return their names. External tables
+    (explicit ``path``) keep the data in scratch space; only metastore
+    entries live in the session catalog, so a vanilla driver session needs
+    no warehouse dir. Served through the session memo, so a replaced table
+    file re-stages both."""
     t = load_tables(spark, sf_dir)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     li_name, od_name = f"li_bkt_{tag}", f"od_bkt_{tag}"
@@ -120,15 +116,27 @@ def q_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (li_name, t.lineitem, "l_orderkey", ["l_orderkey", "l_quantity"]),
         (od_name, t.orders, "o_orderkey", ["o_orderkey", "o_orderpriority"]),
     ):
-        if not spark.catalog.tableExists(name):
-            (
-                df.select(*cols)
-                .write.mode("overwrite")
-                .bucketBy(N_BUCKETS, key)
-                .sortBy(key)
-                .option("path", scratch_dir(name, sf_dir))
-                .saveAsTable(name, format="parquet")
-            )
+        (
+            df.select(*cols)
+            .write.mode("overwrite")
+            .bucketBy(N_BUCKETS, key)
+            .sortBy(key)
+            .option("path", scratch_dir(name, sf_dir))
+            .saveAsTable(name, format="parquet")
+        )
+    return li_name, od_name
+
+
+@declared("q_bucket_join", cache_plan=False, oracle=_BUCKET_ORACLE)
+def q_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem⋈orders with BOTH sides bucketed by the join key.
+
+    Each side is read from its bucketed table (``staged_bucket_tables``);
+    the join then reads co-located buckets — with broadcast disabled the
+    physical plan is a sort-merge join with no Exchange on either side
+    (asserted in tests/test_layout.py). At 100 TB this layout turns every
+    orderkey-family join into a local merge."""
+    li_name, od_name = staged_bucket_tables(spark, sf_dir)
     li, od = spark.table(li_name), spark.table(od_name)
     return (
         li.join(od, li.l_orderkey == od.o_orderkey)

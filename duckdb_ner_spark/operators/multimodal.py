@@ -335,22 +335,26 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(media: DataFrame, frame_size: int = 64, every_n: int = 2) -> DataFrame:
+FRAME_SIZE = 64  # bytes per frame (_FRAMES_ORACLE spells out both)
+FRAME_EVERY = 2  # keep every 2nd frame
+
+
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame-sampling plumbing (video analogue): 1→N mapInPandas that chops
-    the payload into fixed-size 'frames' and keeps every n-th. A real
-    deployment replaces the chop with ffmpeg keyframe extraction; the Spark
-    contract — 1:N batch fan-out, binary chunks, ordered frame index —
-    is identical and is what the tests pin."""
+    the payload into FRAME_SIZE-byte 'frames' and keeps every
+    FRAME_EVERY-th. A real deployment replaces the chop with ffmpeg
+    keyframe extraction; the Spark contract — 1:N batch fan-out, binary
+    chunks, ordered frame index — is identical and is what the tests pin."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, frames, sizes = [], [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 chunks = [
-                    payload[o : o + frame_size] for o in range(0, len(payload), frame_size)
+                    payload[o : o + FRAME_SIZE] for o in range(0, len(payload), FRAME_SIZE)
                 ]
                 for i, ch in enumerate(chunks):
-                    if i % every_n == 0:
+                    if i % FRAME_EVERY == 0:
                         ids.append(doc_id)
                         idxs.append(i)
                         frames.append(ch)
@@ -432,7 +436,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     # catalog scan floor supplies the Python-stage parallelism (see q_multimodal)
     docs = t.documents
-    frames = sample_frames(attach_media(docs), frame_size=64, every_n=2)
+    frames = sample_frames(attach_media(docs))
     return frames.groupBy("doc_id").agg(
         F.count("*").alias("n_frames"),
         F.sum("frame_bytes").alias("total_frame_bytes"),

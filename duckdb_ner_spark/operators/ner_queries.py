@@ -66,12 +66,10 @@ def q_ner_bert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..functions.ner_udf import make_ner_udf
-    from ..ner.ggml_format import write_ggml
+    from ..ner.ggml_format import random_model, write_ggml
 
     model_path = os.path.join(tempfile.gettempdir(), "ner_bench_bert_v1.bin")
     if not os.path.exists(model_path):
-        from tools.convert_model import random_model
-
         hp, tensors = random_model(
             BERT_DOC_VOCAB, n_embd=32, n_head=4, n_layer=2, n_labels=9, n_max_tokens=128, seed=11
         )

@@ -1273,7 +1273,3 @@ def q_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vals.join(t.region, F.col("r_name") == F.col("rname")).select(
         "rname", "weight", "r_regionkey"
     )
-
-
-def register_all() -> None:
-    """Import side effect already registers; kept for explicit bootstrap."""

@@ -22,34 +22,12 @@ Scale notes (100 TB / production):
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import declared
 from ..sources.writers import scratch_dir
-
-_SINK_IDS = itertools.count()
-
-
-def _drain(df: DataFrame, mode: str) -> str:
-    """Run a streaming frame to completion into a fresh memory sink; return
-    the sink table name. Unique name per call: memory sinks live for the
-    session, and a second drain must not race a stale registration."""
-    from ..streaming.events import await_drain
-
-    name = f"dns_sink_{next(_SINK_IDS)}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drain(q)
-    return name
-
+from ..streaming.events import drain_to_memory
 
 _WINDOW_ORACLE = """
     SELECT STRFTIME(TIME_BUCKET(INTERVAL 1 HOUR, ts), '%Y-%m-%d %H:%M:%S') AS window_start,
@@ -71,8 +49,8 @@ def q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     every window is in the sink after the drain."""
     from ..streaming.events import stream_events, windowed_counts
 
-    name = _drain(windowed_counts(stream_events(spark, sf_dir)), mode="complete")
-    return spark.table(name).select(
+    sink = drain_to_memory(windowed_counts(stream_events(spark, sf_dir)), mode="complete")
+    return sink.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n",
@@ -97,10 +75,10 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (state handling + append-mode emission), end to end."""
     from ..streaming.events import dedup_stream, stream_events
 
-    name = _drain(
+    sink = drain_to_memory(
         dedup_stream(stream_events(spark, sf_dir), keys=["event_id"]), mode="append"
     )
-    return spark.table(name).groupBy("event_type").agg(F.count("*").alias("n_unique"))
+    return sink.groupBy("event_type").agg(F.count("*").alias("n_unique"))
 
 
 _HOP_STREAM_ORACLE = """
@@ -131,11 +109,11 @@ def q_stream_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent."""
     from ..streaming.events import stream_events, windowed_counts
 
-    name = _drain(
-        windowed_counts(stream_events(spark, sf_dir), window="1 hour", slide="30 minutes"),
+    sink = drain_to_memory(
+        windowed_counts(stream_events(spark, sf_dir), slide="30 minutes"),
         mode="complete",
     )
-    return spark.table(name).select(
+    return sink.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n",
@@ -179,8 +157,9 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     empirically in tests/test_streaming.py::test_session_boundary)."""
     from ..streaming.events import session_counts, stream_events
 
-    name = _drain(session_counts(stream_events(spark, sf_dir)), mode="append")
-    return spark.table(name)
+    return drain_to_memory(
+        session_counts(stream_events(spark, sf_dir)), mode="append"
+    )
 
 
 _ENRICH_ORACLE = """
@@ -214,10 +193,9 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the STREAMING part under test is the per-batch enrichment join, so
     # drain the enriched rows (append mode — pure join, no agg state) and
     # run the exact rollup on the sink.
-    name = _drain(
+    sink = drain_to_memory(
         enriched.select("c_mktsegment", "user_id", "value"), mode="append"
     )
-    sink = spark.table(name)
     return sink.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
@@ -273,10 +251,9 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("cts") >= F.col("pts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("cts") <= F.col("pts")),
     )
-    name = _drain(joined.select("event_id", "p_user", "cts"), mode="append")
+    sink = drain_to_memory(joined.select("event_id", "p_user", "cts"), mode="append")
     return (
-        spark.table(name)
-        .groupBy("event_id", F.col("p_user").alias("user_id"))
+        sink.groupBy("event_id", F.col("p_user").alias("user_id"))
         .agg(
             F.count("*").alias("n_clicks"),
             F.date_format(F.max("cts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
@@ -348,10 +325,9 @@ def q_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("cts") <= F.col("pts")),
         "left_outer",
     )
-    name = _drain(joined.select("event_id", "p_user", "cts"), mode="append")
+    sink = drain_to_memory(joined.select("event_id", "p_user", "cts"), mode="append")
     return (
-        spark.table(name)
-        .groupBy("event_id", F.col("p_user").alias("user_id"))
+        sink.groupBy("event_id", F.col("p_user").alias("user_id"))
         .agg(
             F.count("cts").alias("n_clicks"),
             F.date_format(F.max("cts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
@@ -372,8 +348,9 @@ def q_stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import stream_events
     from ..streaming.stateful import running_user_stats
 
-    name = _drain(running_user_stats(stream_events(spark, sf_dir)), mode="update")
-    sink = spark.table(name)
+    sink = drain_to_memory(
+        running_user_stats(stream_events(spark, sf_dir)), mode="update"
+    )
     # update-mode sinks append one row per (user, micro-batch) emission —
     # keep each user's LAST emission (max n_events) as the final state
     from pyspark.sql.window import Window
@@ -399,8 +376,9 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.attribution import streaming_attribution
     from ..streaming.events import stream_events
 
-    name = _drain(streaming_attribution(stream_events(spark, sf_dir)), mode="append")
-    return spark.table(name)
+    return drain_to_memory(
+        streaming_attribution(stream_events(spark, sf_dir)), mode="append"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -513,8 +491,7 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    name = _drain(updates, mode="append")
-    sink = spark.table(name)
+    sink = drain_to_memory(updates, mode="append")
     # final CDC table: per key, the row with max (ts_us, event_id) across
     # all emitted upserts — batch-slicing independent by construction
     return (
@@ -547,12 +524,11 @@ def q_stream_ner(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions; aggregate state is O(label domain) = 4 classes + O —
     complete mode is bounded by construction."""
     from ..operators.ner_queries import DOC_STUB_MODEL
-    from ..streaming.ner_stream import run_ner_stream_to_memory
+    from ..streaming.ner_stream import entity_label_counts, stream_documents
 
-    name = f"dns_ner_sink_{next(_SINK_IDS)}"
-    run_ner_stream_to_memory(spark, sf_dir, table_name=name, model_path=DOC_STUB_MODEL)
+    agg = entity_label_counts(spark, stream_documents(spark, sf_dir), DOC_STUB_MODEL)
     return (
-        spark.table(name)
+        drain_to_memory(agg, "complete")
         .select("label", F.col("n").cast("bigint").alias("n"))
         .orderBy("label")
     )
@@ -647,8 +623,8 @@ def q_stream_image(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("px").cast("bigint").alias("total_px"),
         F.sum("ssum").cast("bigint").alias("total_sample_sum"),
     )
-    sink = _drain(agg, "complete")
-    return spark.table(sink).select(
+    sink = drain_to_memory(agg, "complete")
+    return sink.select(
         F.col("height").cast("bigint").alias("height"),
         "n_images",
         "total_px",
@@ -726,8 +702,8 @@ def q_stream_dedup_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("h") == 0)
         .select("doc_id")
     )
-    sink = _drain(admit, "complete")
-    return spark.table(sink).select("doc_id")
+    sink = drain_to_memory(admit, "complete")
+    return sink.select("doc_id")
 
 
 def _stream_gate_oracle() -> str:
@@ -799,8 +775,7 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
     )
-    name = _drain(agg, mode="complete")
-    return spark.table(name)
+    return drain_to_memory(agg, mode="complete")
 
 
 @declared("q_stream_cusum", cache_plan=False, oracle=None)
@@ -827,10 +802,9 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = stream_events(spark, sf_dir).select(
         "event_type", "ts", "event_id", "value"
     )
-    name = _drain(
+    sink = drain_to_memory(
         running_cusum(ev, CUSUM_K_CENTS, CUSUM_H_CENTS), mode="update"
     )
-    sink = spark.table(name)
     # update-mode sinks append one row per (key, micro-batch) emission —
     # keep each type's LAST emission (max n_events) as the final state
     from pyspark.sql.window import Window
@@ -961,7 +935,7 @@ def q_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars",
         F.size("ws").alias("n_words"),
         F.size(F.array_distinct("ws")).alias("n_distinct"),
-        shingles_expr("ws").alias("shingles"),
+        shingles_expr().alias("shingles"),
     )
     sigd = feat.select(
         "doc_id", "lang", "n_chars", "n_words", "n_distinct",
@@ -996,8 +970,8 @@ def q_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").cast("bigint").alias("total_chars"),
         F.sum("doc_id").cast("bigint").alias("id_checksum"),
     )
-    sink = _drain(scorecard, "complete")
-    return spark.table(sink).select(
+    sink = drain_to_memory(scorecard, "complete")
+    return sink.select(
         "lang", "stage", "n_docs", "total_chars", "id_checksum"
     )
 
@@ -1262,8 +1236,7 @@ def q_stream_substring_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("verdict"),
         )
     )
-    sink = _drain(score, "complete")
-    return spark.table(sink)
+    return drain_to_memory(score, "complete")
 
 
 # --------------------------------------------------------------------------
@@ -1367,10 +1340,9 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     perdoc = probe.groupBy("doc_id", "source", "pk").agg(
         F.count("f_pos").cast("bigint").alias("n_hit")
     )
-    sink = _drain(perdoc, "complete")
+    sink = drain_to_memory(perdoc, "complete")
     verdict = (
-        spark.table(sink)
-        .join(truth, F.col("pk") == F.col("t_pk"), "left")
+        sink.join(truth, F.col("pk") == F.col("t_pk"), "left")
         .select(
             "source",
             F.when(F.col("n_hit") == BLM_K, 1).otherwise(0).alias("maybe"),
@@ -1507,13 +1479,12 @@ def q_stream_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     surp = stream.groupBy("doc_id", "u_lang").agg(
         F.sum("wq").cast("bigint").alias("surp")
     )
-    sink = _drain(surp, "complete")
+    sink = drain_to_memory(surp, "complete")
     from pyspark.sql import Window
 
     pw = Window.partitionBy("doc_id").orderBy("surp", "u_lang")
     pred = (
-        spark.table(sink)
-        .withColumn("r", F.row_number().over(pw))
+        sink.withColumn("r", F.row_number().over(pw))
         .filter(F.col("r") == 1)
         .select("doc_id", F.col("u_lang").alias("pred"))
     )

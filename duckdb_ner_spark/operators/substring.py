@@ -213,11 +213,7 @@ _SUBSTRING_DEDUP_ORACLE = f"""
 """
 
 
-def substring_excise_spans(
-    docs: DataFrame,
-    k: int = SSD_K,
-    sparse_hex: str | None = None,
-) -> DataFrame:
+def substring_excise_spans(docs: DataFrame, sparse_hex: str | None = None) -> DataFrame:
     """Core transform: per-doc maximal excised spans (1-based char offsets,
     inclusive) for every k-char window whose content occurs elsewhere in
     the corpus, keep-first canonical occurrence retained.
@@ -244,13 +240,13 @@ def substring_excise_spans(
     # spans. The guard lives in the data path (the explode bound), so
     # Catalyst cannot prune it; it costs one comparison per DOCUMENT.
     last_start = F.expr(
-        f"CASE WHEN n_chars < {big} THEN n_chars - {k} + 1 "
+        f"CASE WHEN n_chars < {big} THEN n_chars - {SSD_K} + 1 "
         f"ELSE raise_error('substring dedup: n_chars >= {big} breaks the"
         f" packed keep-first key (raise SSD_POS_BIG or switch to a"
         f" two-column key)') END"
     )
     sh = (
-        docs.filter(F.col("n_chars") >= k)
+        docs.filter(F.col("n_chars") >= SSD_K)
         .select(
             "doc_id",
             F.explode(F.sequence(F.lit(1), last_start)).alias("i"),
@@ -261,7 +257,7 @@ def substring_excise_spans(
             "i",
             # 16 hex chars (64 bits) matches the oracle; see the
             # digest-width bound in q_substring_dedup's docstring.
-            F.substring(F.md5(F.expr(f"substr(text, i, {k})")), 1, 16).alias("h"),
+            F.substring(F.md5(F.expr(f"substr(text, i, {SSD_K})")), 1, 16).alias("h"),
         )
     )
     if sparse_hex is not None:
@@ -284,7 +280,7 @@ def substring_excise_spans(
             (F.col("n_occ") > 1)
             & (F.col("doc_id") * big + F.col("i") != F.col("first_key"))
         )
-        .select("doc_id", F.col("i").alias("st"), (F.col("i") + k - 1).alias("en"))
+        .select("doc_id", F.col("i").alias("st"), (F.col("i") + SSD_K - 1).alias("en"))
     )
     return _islands_spans(excise)
 
@@ -467,7 +463,7 @@ def q_substring_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     docs = t.documents
     full = staged_excise_spans(spark, sf_dir)
-    sparse = substring_excise_spans(docs, SSD_K, sparse_hex=SSD_SPARSE_HEX)
+    sparse = substring_excise_spans(docs, sparse_hex=SSD_SPARSE_HEX)
     f_doc = full.groupBy("doc_id").agg(
         F.sum("excise_len").cast("bigint").alias("fc")
     )
@@ -504,7 +500,7 @@ def q_substring_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
 @memoized
 def staged_excise_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
-    spans = substring_excise_spans(t.documents, SSD_K)
+    spans = substring_excise_spans(t.documents)
     path = scratch_dir("ssd_spans", sf_dir)
     spans.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
@@ -574,7 +570,7 @@ def q_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def substring_scrub(docs: DataFrame) -> DataFrame:
     """Apply-half core over any (doc_id, text, n_chars) frame — see
     q_substring_scrub. Planted-fixture pytests in test_round10_ops.py."""
-    return _scrub_from_spans(docs, substring_excise_spans(docs, SSD_K))
+    return _scrub_from_spans(docs, substring_excise_spans(docs))
 
 
 def _scrub_from_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
@@ -999,12 +995,12 @@ def suffix_spans_from_ranks(
     return _islands_spans(_census_excise(pairs, ["ra", "rb"], k))
 
 
-def suffix_excise_spans(docs: DataFrame, k: int = SSD_K) -> DataFrame:
+def suffix_excise_spans(docs: DataFrame) -> DataFrame:
     """Fixture-path end-to-end: doubling rounds chained in memory (no
     staging) -> depth-32 ranks -> span inventory. Planted-corpus pytests
     prove equality with substring_excise_spans on the same docs."""
     rounds = _suffix_rounds_frames(docs, SUFR_SPAN_ROUNDS)
-    return suffix_spans_from_ranks(rounds[-1][0], docs, k)
+    return suffix_spans_from_ranks(rounds[-1][0], docs, SSD_K)
 
 
 @declared("q_suffix_spans", oracle=_SUBSTRING_DEDUP_ORACLE)
@@ -1132,13 +1128,13 @@ def packed_windows(docs: DataFrame, k: int = SSD_K) -> DataFrame:
     )
 
 
-def packed_excise_spans(docs: DataFrame, k: int = SSD_K) -> DataFrame:
+def packed_excise_spans(docs: DataFrame) -> DataFrame:
     """Digest-free ExactSubstr inventory core: explode eligible window
     starts, pack each window's CONTENT into ceil(k/7) BIGINTs map-side,
     census via the join-free window form (_census_excise), islands-merge.
     One full-corpus exchange total; exact by construction."""
     return _islands_spans(
-        _census_excise(packed_windows(docs, k), packed_key_cols(k), k)
+        _census_excise(packed_windows(docs, SSD_K), packed_key_cols(SSD_K), SSD_K)
     )
 
 
@@ -1174,7 +1170,7 @@ def q_substring_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparse knob (q_substring_sparse) composes: select on pack mod 16
     instead of an md5 hex digit."""
     t = load_tables(spark, sf_dir)
-    spans = packed_excise_spans(t.documents, SSD_K)
+    spans = packed_excise_spans(t.documents)
     return _span_rollup(spans, t.documents)
 
 
@@ -1248,17 +1244,15 @@ def substring_pack_index(corpus: DataFrame) -> DataFrame:
     return packed_windows(corpus, SSD_K).select(*packed_key_cols(SSD_K)).distinct()
 
 
-def substring_ingest_probe(
-    batch: DataFrame, index: DataFrame, k: int = SSD_K
-) -> DataFrame:
+def substring_ingest_probe(batch: DataFrame, index: DataFrame) -> DataFrame:
     """Per-batch-doc admission scorecard against the packed index: window
     counts, duplicated-window count, islands-merged duplicated char mass,
     dup share in bp, and the admit/reject verdict."""
-    key_cols = packed_key_cols(k)
+    key_cols = packed_key_cols(SSD_K)
     dupw = (
-        packed_windows(batch, k)
+        packed_windows(batch, SSD_K)
         .join(index, key_cols, "left_semi")
-        .select("doc_id", F.col("i").alias("st"), (F.col("i") + k - 1).alias("en"))
+        .select("doc_id", F.col("i").alias("st"), (F.col("i") + SSD_K - 1).alias("en"))
     )
     n_dup = dupw.groupBy("doc_id").agg(F.count("*").alias("n_dup"))
     chars = (
@@ -1272,7 +1266,7 @@ def substring_ingest_probe(
         .join(chars, "doc_id", "left")
         .select(
             "doc_id",
-            F.greatest(F.col("n_chars") - k + 1, F.lit(0))
+            F.greatest(F.col("n_chars") - SSD_K + 1, F.lit(0))
             .cast("bigint")
             .alias("n_windows"),
             F.coalesce(F.col("n_dup"), F.lit(0)).cast("bigint").alias(
@@ -1329,7 +1323,7 @@ def q_substring_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     corpus = t.documents.filter(F.col("doc_id") % 2 == 0)
     batch = t.documents.filter(F.col("doc_id") % 2 == 1)
-    return substring_ingest_probe(batch, substring_pack_index(corpus), SSD_K)
+    return substring_ingest_probe(batch, substring_pack_index(corpus))
 
 
 # --------------------------------------------------------------------------

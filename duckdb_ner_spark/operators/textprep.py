@@ -16,8 +16,9 @@ def words_col(text: str = "text") -> F.Column:
     return F.split(F.col(text), " ")
 
 
-def shingles_expr(words: str = "ws", n: int = 3) -> F.Column:
-    """Distinct n-word shingles, built as a zip_with of n shifted slices.
+def shingles_expr(n: int = 3) -> F.Column:
+    """Distinct n-word shingles of the ``ws`` words column, built as a
+    zip_with of n shifted slices.
 
     Deliberately NO array indexing inside a lambda: the obvious
     ``transform(sequence(0, size(ws)-n), i -> concat_ws(' ', ws[i], ...))``
@@ -28,7 +29,7 @@ def shingles_expr(words: str = "ws", n: int = 3) -> F.Column:
     slice form references ``ws`` a constant n+1 times regardless of
     document length. Guarded: < n words → empty array (slice/zip_with on
     negative lengths would misbehave, and sequence() would descend)."""
-    ws = F.col(words)
+    ws = F.col("ws")
     m = F.size(ws) - (n - 1)  # shingle count
     acc = F.slice(ws, n, m)
     for k in range(n - 1, 0, -1):

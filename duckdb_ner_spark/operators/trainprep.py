@@ -494,7 +494,7 @@ def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     sh = t.documents.select(
         "doc_id", words_col("text").alias("ws")
-    ).select("doc_id", shingles_expr("ws", DECONTAM_N).alias("gs"))
+    ).select("doc_id", shingles_expr(DECONTAM_N).alias("gs"))
     eval_g = (
         sh.filter(F.col("doc_id") % DECONTAM_EVAL_MOD == 0)
         .select(F.explode("gs").alias("g"))

@@ -13,6 +13,8 @@ state, and the (user_id × window) grouping is the shuffle key.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
@@ -48,16 +50,14 @@ def _normalize(df: DataFrame) -> DataFrame:
     return df
 
 
-def windowed_counts(
-    events: DataFrame, window: str = "1 hour", slide: str | None = None
-) -> DataFrame:
-    """Tumbling (or, with ``slide``, hopping) window counts per event_type
-    with a 2-hour watermark (streaming) — watermark is a no-op under batch,
-    so one definition serves both."""
+def windowed_counts(events: DataFrame, slide: str | None = None) -> DataFrame:
+    """Tumbling (or, with ``slide``, hopping) 1-hour window counts per
+    event_type with a 2-hour watermark (streaming) — watermark is a no-op
+    under batch, so one definition serves both."""
     e = events
     if e.isStreaming:
         e = e.withWatermark("ts", "2 hours")
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
+    win = F.window("ts", "1 hour", slide) if slide else F.window("ts", "1 hour")
     return (
         e.groupBy(win.alias("w"), "event_type")
         # decimal-exact sum: micro-batch accumulation must not depend on
@@ -80,71 +80,80 @@ def windowed_counts(
 N_STREAM_PARTS = 4  # staged micro-batch count (events are time-ordered)
 
 
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The file stream source requires a *directory* (it tails new files);
-    the testdata ships one file per table, so stage it into a temp dir —
-    in production the directory IS the landing zone.
+def stage_stream(sf_dir: str, table: str, parts: int) -> str:
+    """Stage ``{sf_dir}/{table}.parquet`` for the file stream source, which
+    tails a *directory* (in production the directory IS the landing zone),
+    and return that directory.
 
-    The source is staged as N_STREAM_PARTS row-range slices with ascending
-    mtimes and ``maxFilesPerTrigger=1``, so an availableNow drain runs N
-    REAL micro-batches — state accumulation, watermark advancement and
-    window merges are exercised across batches, not collapsed into one.
-    The testdata events are globally time-ordered (asserted in tests), so
-    slicing by row range preserves event-time order across batches and no
-    row is ever late relative to the advancing watermark.
+    The table is split into ``parts`` row-range slices with ascending
+    mtimes, so a ``maxFilesPerTrigger=1`` availableNow drain runs that many
+    REAL micro-batches in row order — state accumulation, watermark
+    advancement and window merges are exercised across batches, not
+    collapsed into one. The testdata tables are stored in event-time and
+    doc_id order (asserted in tests), so no row is ever late relative to
+    the advancing watermark.
 
-    The staging dir is DETERMINISTIC per source (hash of sf_dir): re-runs
-    against the same checkpoint see the same source path, so checkpoint
-    resume semantics hold, and temp usage is bounded at one copy per SF.
-    Slices are refreshed whenever the source changes (mtime/size marker) —
-    regenerated testdata at the same path must not leave batch/stream parity
-    comparing different data through a stale copy (ADVICE r1)."""
+    The staging dir is DETERMINISTIC per (sf_dir, table, parts): re-runs
+    against the same checkpoint see the same source path, and temp usage is
+    bounded at one copy per source. A marker holds the source's
+    ``(st_mtime_ns, st_size)`` and ``parts``; the slices are rewritten
+    whenever it differs, so a replaced source file never streams through a
+    stale copy."""
     import hashlib
     import json
     import math
     import os
     import tempfile
 
+    import pyarrow.parquet as pq
+
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"events_stream_{tag}")
+    stage = os.path.join(tempfile.gettempdir(), f"{table}_stream_{parts}_{tag}")
     os.makedirs(stage, exist_ok=True)
-    source = f"{sf_dir}/events.parquet"
+    source = f"{sf_dir}/{table}.parquet"
     marker = os.path.join(stage, "_staged.json")
     s = os.stat(source)
-    want = {"mtime": s.st_mtime, "size": s.st_size, "parts": N_STREAM_PARTS}
-    have = None
-    if os.path.exists(marker):
+    want = {"mtime_ns": s.st_mtime_ns, "size": s.st_size, "parts": parts}
+    try:
         with open(marker) as fh:
             have = json.load(fh)
-    if have != want:
-        import pyarrow.parquet as pq
+    except FileNotFoundError:
+        have = None
+    if have == want:
+        return stage
+    tbl = pq.read_table(source)
+    per = max(1, math.ceil(tbl.num_rows / parts))
+    for f in os.listdir(stage):
+        if f.endswith(".parquet"):
+            os.remove(os.path.join(stage, f))
+    for i in range(parts):
+        sl = tbl.slice(i * per, per)
+        if sl.num_rows == 0:
+            break
+        p = os.path.join(stage, f"part-{i}.parquet")
+        # Pin the parquet format version: the events readStream schema is
+        # OBSERVED from the source file, so the slices must round-trip the
+        # source's physical types exactly (a default format version that
+        # coerces TIMESTAMP(NANOS)→micros would break the nanosAsLong read
+        # path). ADVICE r3.
+        pq.write_table(sl, p, version="2.6")
+        # ascending mtimes pin the file-source processing order to the row
+        # order of the slices
+        mtime_ns = s.st_mtime_ns + i * 1_000_000_000
+        os.utime(p, ns=(mtime_ns, mtime_ns))
+    with open(marker, "w") as fh:
+        json.dump(want, fh)
+    return stage
 
-        tbl = pq.read_table(source)
-        per = max(1, math.ceil(tbl.num_rows / N_STREAM_PARTS))
-        for f in os.listdir(stage):
-            if f.endswith(".parquet"):
-                os.remove(os.path.join(stage, f))
-        base = s.st_mtime
-        for i in range(N_STREAM_PARTS):
-            sl = tbl.slice(i * per, per)
-            if sl.num_rows == 0:
-                break
-            p = os.path.join(stage, f"part-{i}.parquet")
-            # Pin the parquet format version: the readStream schema is
-            # OBSERVED from the source file, so the staged slices must
-            # round-trip the source's physical types exactly (a default
-            # format version that coerces TIMESTAMP(NANOS)→micros would
-            # break the nanosAsLong read path). ADVICE r3.
-            pq.write_table(sl, p, version="2.6")
-            # ascending mtimes pin the file-source processing order to the
-            # event-time order of the slices
-            os.utime(p, (base + i, base + i))
-        with open(marker, "w") as fh:
-            json.dump(want, fh)
+
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a file stream of N_STREAM_PARTS time-ordered
+    micro-batches (see ``stage_stream``)."""
+    source = f"{sf_dir}/events.parquet"
     raw = (
         spark.readStream.schema(_observed_events_schema(spark, source))
         .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+        .parquet(stage_stream(sf_dir, "events", N_STREAM_PARTS))
     )
     return _normalize(raw)
 
@@ -231,15 +240,21 @@ def await_drain(q) -> None:
         q.stop()
 
 
-def run_stream_to_memory(spark: SparkSession, sf_dir: str, table_name: str = "stream_out") -> None:
-    """Drain the whole file source in availableNow micro-batches into an
-    in-memory sink (complete mode), then stop."""
+_SINK_IDS = itertools.count()
+
+
+def drain_to_memory(df: DataFrame, mode: str) -> DataFrame:
+    """Run a streaming frame to completion (availableNow) into a fresh
+    memory sink and return the sink table. Unique name per call: memory
+    sinks live for the session, and a second drain must not race a stale
+    registration."""
+    name = f"dns_sink_{next(_SINK_IDS)}"
     q = (
-        windowed_counts(stream_events(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
         .trigger(availableNow=True)
         .start()
     )
     await_drain(q)
+    return df.sparkSession.table(name)

@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.ner_udf import session_ner_udf
+from .events import stage_stream
 
 DOCS_SCHEMA = StructType(
     [
@@ -41,20 +42,10 @@ DOCS_SCHEMA = StructType(
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over documents (staged into a directory the same
-    deterministic way as streaming.events.stream_events — the file source
-    tails directories, not single files)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"docs_stream_{tag}")
-    os.makedirs(stage, exist_ok=True)
-    target = f"{stage}/documents.parquet"
-    if not os.path.exists(target):
-        shutil.copy(f"{sf_dir}/documents.parquet", target)
+    """File-source stream over documents, staged whole as one micro-batch
+    (``events.stage_stream`` — the file source tails directories, not
+    single files)."""
+    stage = stage_stream(sf_dir, "documents", 1)
     return spark.readStream.schema(DOCS_SCHEMA).parquet(stage)
 
 
@@ -62,54 +53,15 @@ N_DOC_SLICES = 4  # staged micro-batch count for the sliced documents stream
 
 
 def stream_documents_sliced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents staged as N_DOC_SLICES doc_id-ordered row-range slices with
-    ascending mtimes and ``maxFilesPerTrigger=1`` — an availableNow drain
-    runs N REAL micro-batches, so cross-batch aggregate state (and any
-    stream-static join re-executed per batch) is exercised for real instead
-    of collapsing into one batch (the streaming/events.py staging pattern
-    applied to the documents corpus). Marker-refreshed when the source
-    parquet changes; deterministic staging dir per SF."""
-    import hashlib
-    import json
-    import math
-    import os
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    stage = os.path.join(
-        tempfile.gettempdir(), f"docs_stream_sliced_{tag}"
-    )
-    os.makedirs(stage, exist_ok=True)
-    source = f"{sf_dir}/documents.parquet"
-    marker = os.path.join(stage, "_staged.json")
-    s = os.stat(source)
-    want = {"mtime": s.st_mtime, "size": s.st_size, "parts": N_DOC_SLICES}
-    have = None
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            have = json.load(fh)
-    if have != want:
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(source)
-        per = max(1, math.ceil(tbl.num_rows / N_DOC_SLICES))
-        for f in os.listdir(stage):
-            if f.endswith(".parquet"):
-                os.remove(os.path.join(stage, f))
-        base = s.st_mtime
-        for i in range(N_DOC_SLICES):
-            sl = tbl.slice(i * per, per)
-            if sl.num_rows == 0:
-                break
-            p = os.path.join(stage, f"part-{i}.parquet")
-            pq.write_table(sl, p, version="2.6")
-            os.utime(p, (base + i, base + i))
-        with open(marker, "w") as fh:
-            json.dump(want, fh)
+    """Documents staged as N_DOC_SLICES doc_id-ordered slices and read with
+    ``maxFilesPerTrigger=1`` — an availableNow drain runs N REAL
+    micro-batches, so cross-batch aggregate state (and any stream-static
+    join re-executed per batch) is exercised for real instead of collapsing
+    into one batch."""
     return (
         spark.readStream.schema(DOCS_SCHEMA)
         .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+        .parquet(stage_stream(sf_dir, "documents", N_DOC_SLICES))
     )
 
 
@@ -131,25 +83,3 @@ def entity_label_counts(
     return ents.groupBy(F.col("ent.label").alias("label")).agg(
         F.count("*").alias("n")
     )
-
-
-def run_ner_stream_to_memory(
-    spark: SparkSession,
-    sf_dir: str,
-    table_name: str = "ner_stream_out",
-    model_path: str | None = None,
-) -> None:
-    """Drain the documents file source through the NER UDF in availableNow
-    micro-batches; entity-label counts land in an in-memory sink (complete
-    mode — the label domain is bounded, so complete-mode state is O(labels))."""
-    from .events import await_drain
-
-    agg = entity_label_counts(spark, stream_documents(spark, sf_dir), model_path)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drain(q)

@@ -78,22 +78,6 @@ def running_user_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def run_stateful_to_memory(spark, sf_dir: str, table_name: str = "stateful_out") -> None:
-    from .events import stream_events
-
-    q = (
-        running_user_stats(stream_events(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    from .events import await_drain
-
-    await_drain(q)
-
-
 # --------------------------------------------------------------------------
 # Streaming CUSUM (q_cusum's recursion as cross-batch per-key state)
 # --------------------------------------------------------------------------

@@ -298,3 +298,31 @@ def test_scc_groups_are_certified_mutually_reachable(spark):
         if v != m:
             assert v in reach(m, out_adj), (m, v)
             assert m in reach(v, out_adj), (v, m)
+
+
+def test_kcore_matches_python_recompute(spark):
+    """q_kcore vs a pure-Python peel over the same day-1 edge list."""
+    from duckdb_ner_spark.operators.components import day1_cooccurrence_graph
+    from duckdb_ner_spark.operators.components import KCORE_K, KCORE_ROUNDS
+
+    edges, _ = day1_cooccurrence_graph(spark, SF_SMOKE)
+    es = [(r.u, r.v) for r in edges.collect()]
+    alive = {n for e in es for n in e}
+    expect = []
+    for i in range(1, KCORE_ROUNDS + 1):
+        ei = [(u, v) for u, v in es if u in alive and v in alive]
+        deg: dict[int, int] = {}
+        for u, v in ei:
+            deg[u] = deg.get(u, 0) + 1
+            deg[v] = deg.get(v, 0) + 1
+        alive = {n for n, d in deg.items() if d >= KCORE_K}
+        expect.append((i, len(alive), len(ei), sum(alive)))
+    got = [
+        (r.round, r.n_alive, r.n_edges_in, r.alive_id_sum)
+        for r in QUERIES["q_kcore"](spark, SF_SMOKE)
+        .orderBy("round")
+        .collect()
+    ]
+    assert got == expect
+    # peeling must actually remove something on this graph
+    assert expect[-1][1] < len({n for e in es for n in e})

@@ -82,3 +82,51 @@ def test_setsim_prefix_has_no_false_negatives(spark):
     }
     assert got == expected
     assert expected, "smoke corpus must contain at least one τ-similar pair"
+
+
+def test_record_linkage_matches_python_recompute(spark):
+    """q_record_linkage vs a pure-Python blocked linkage (classic DP edit
+    distance) over the same capped blocks."""
+    from duckdb_ner_spark.operators.dedup import RL_BLOCK_CAP, RL_CLOSE_DIST
+
+    def lev(a: str, b: str) -> int:
+        prev = list(range(len(b) + 1))
+        for i, ca in enumerate(a, 1):
+            cur = [i]
+            for j, cb in enumerate(b, 1):
+                cur.append(
+                    min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
+                )
+            prev = cur
+        return prev[-1]
+
+    parts = (
+        spark.read.parquet(f"{SF_SMOKE}/part.parquet")
+        .select("p_partkey", "p_name")
+        .collect()
+    )
+    blocks: dict[str, list] = {}
+    for r in parts:
+        blocks.setdefault(r.p_name.split(" ")[0], []).append(
+            (r.p_partkey, r.p_name)
+        )
+    expect = {}
+    for bk, recs in blocks.items():
+        kept = sorted(recs)[:RL_BLOCK_CAP]
+        ds = [
+            lev(na, nb)
+            for i, (ka, na) in enumerate(kept)
+            for kb, nb in kept[i + 1 :]
+        ]
+        expect[bk] = (
+            len(kept),
+            len(ds),
+            sum(1 for d in ds if d <= RL_CLOSE_DIST),
+            min(ds) if ds else None,
+        )
+    got = {
+        r.block_key: (r.n_records, r.n_pairs, r.n_close, r.min_dist)
+        for r in QUERIES["q_record_linkage"](spark, SF_SMOKE).collect()
+    }
+    assert got == expect
+    assert any(v[1] > 0 for v in got.values()), "need multi-record blocks"

@@ -199,7 +199,7 @@ def test_frame_sampling_plumbing(docs):
     from duckdb_ner_spark.operators.multimodal import attach_media, sample_frames
 
     media = attach_media(docs.limit(10))
-    frames = sample_frames(media, frame_size=64, every_n=2).collect()
+    frames = sample_frames(media).collect()
     src = {r.doc_id: r.text.encode() for r in docs.limit(10).collect()}
     assert frames
     for r in frames:
@@ -476,7 +476,7 @@ def test_decontam_flags_planted_overlap(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     sh = df.select("doc_id", words_col("text").alias("ws")).select(
-        "doc_id", shingles_expr("ws", 8).alias("gs")
+        "doc_id", shingles_expr(8).alias("gs")
     )
     eval_g = (
         sh.filter(F.col("doc_id") % DECONTAM_EVAL_MOD == 0)

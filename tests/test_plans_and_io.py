@@ -286,14 +286,16 @@ def _memo_builders():
 
 
 @pytest.mark.parametrize(
-    "case", ["repeat", "new_session", "scan_conf", "extend_chain", "replaced_file"]
+    "case",
+    ["repeat", "new_session", "scan_conf", "extend_chain", "replaced_file", "replaced_staged"],
 )
 def test_session_memo_contract(spark, tmp_path, case):
     """The session memo (plans/cachereg.py) serves the identical object only
     while session, sf_dir, scan conf and data-file stamp all match. The
     staged suffix-rank chain extends in place: a deeper request stages only
     the missing rounds. A data file replaced in place must never be served
-    through a plan, or cached blocks, built over its old contents."""
+    through a plan, or cached blocks, built over its old contents, nor
+    through a staged copy of it (stream slices, bucketed tables)."""
     import shutil
 
     import pyarrow.parquet as pq
@@ -324,6 +326,25 @@ def test_session_memo_contract(spark, tmp_path, case):
         deeper = staged_suffix_rounds(spark, sf, 2)
         assert len(short) == 2 and len(deeper) == 3
         assert all(a is b for a, b in zip(short, deeper))
+    elif case == "replaced_staged":
+        import duckdb
+
+        from duckdb_ner_spark.plans.registry import ORACLES, QUERIES
+        from duckdb_ner_spark.sources.catalog import TABLES
+        from tools.selfcheck import normalize
+
+        names = ["q_stream_quality_gate", "q_bucket_join"]
+        before = {n: QUERIES[n](spark, sf).toPandas() for n in names}
+        for table, n_rows in (("documents", 100), ("lineitem", 3000)):
+            path = f"{sf}/{table}.parquet"
+            pq.write_table(pq.read_table(path).slice(0, n_rows), path)
+        con = duckdb.connect()
+        for table in TABLES:
+            con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{sf}/{table}.parquet'")
+        for n in names:
+            got = normalize(QUERIES[n](spark, sf).toPandas())
+            assert got == normalize(con.execute(ORACLES[n]).df()), n
+            assert got != normalize(before[n]), n
     else:
         q1, lineitem = builders["q_agg_group"], builders["lineitem"]
 

@@ -65,7 +65,7 @@ def test_substring_dedup_lossless_and_keep_first(spark):
     doc2 = _uniq("solo", 200)
     texts = {0: doc0, 1: doc1, 2: doc2}
     spans = (
-        substring_excise_spans(_docs_df(spark, texts), SSD_K)
+        substring_excise_spans(_docs_df(spark, texts))
         .orderBy("doc_id", "span_seq")
         .collect()
     )
@@ -93,7 +93,7 @@ def test_substring_dedup_merges_overlapping_windows(spark):
     the whole text (every window duplicated, islands merged)."""
     body = _uniq("dupl", 150)
     spans = (
-        substring_excise_spans(_docs_df(spark, {0: body, 1: body}), SSD_K)
+        substring_excise_spans(_docs_df(spark, {0: body, 1: body}))
         .collect()
     )
     assert len(spans) == 1
@@ -196,7 +196,7 @@ def test_sparse_spans_subset_and_python_recompute(spark):
         "doc_id", "text", "n_chars"
     )
     got = defaultdict(list)
-    for r in substring_excise_spans(df, SSD_K, sparse_hex=SSD_SPARSE_HEX).collect():
+    for r in substring_excise_spans(df, sparse_hex=SSD_SPARSE_HEX).collect():
         got[r.doc_id].append((r.excise_start, r.excise_end))
     assert {d: sorted(v) for d, v in got.items()} == want
     full = _python_spans(texts, SSD_K)
@@ -271,8 +271,8 @@ def test_suffix_spans_planted_equals_hash_census(spark):
     }
     df = _docs_df(spark, texts)
     key = lambda r: (r.doc_id, r.span_seq, r.excise_start, r.excise_end)  # noqa: E731
-    got = sorted(map(key, suffix_excise_spans(df, SSD_K).collect()))
-    want = sorted(map(key, substring_excise_spans(df, SSD_K).collect()))
+    got = sorted(map(key, suffix_excise_spans(df).collect()))
+    want = sorted(map(key, substring_excise_spans(df).collect()))
     assert got == want and len(got) == 3  # doc1 x2 spans + doc4 full collapse
 
 
@@ -310,7 +310,7 @@ def test_pack_guard_raises_on_oversized_doc(spark):
     big_doc = _uniq("big", SSD_POS_BIG)
     df = _docs_df(spark, {0: big_doc, 1: _uniq("ok", 120)})
     with pytest.raises(Exception, match="packed keep-first key"):
-        substring_excise_spans(df, SSD_K).collect()
+        substring_excise_spans(df).collect()
 
 
 def test_packed_census_equals_hash_census(spark):
@@ -339,8 +339,8 @@ def test_packed_census_equals_hash_census(spark):
     }
     df = _docs_df(spark, texts)
     key = lambda r: (r.doc_id, r.span_seq, r.excise_start, r.excise_end)  # noqa: E731
-    got = sorted(map(key, packed_excise_spans(df, SSD_K).collect()))
-    want = sorted(map(key, substring_excise_spans(df, SSD_K).collect()))
+    got = sorted(map(key, packed_excise_spans(df).collect()))
+    want = sorted(map(key, substring_excise_spans(df).collect()))
     assert got == want and len(got) == 5
     # doc 5 is canonical (lower id) for the shared fillers; doc 6's two
     # spans are exactly the fillers and EXCLUDE position 61 — the one char
@@ -369,7 +369,7 @@ def test_packed_census_rejects_wide_codepoints(spark):
     texts = {0: _uniq("w", 30) + "é" + _uniq("w2", 30), 1: _uniq("x", 120)}
     df = _docs_df(spark, texts)
     with pytest.raises(Exception, match="non-ASCII window"):
-        packed_excise_spans(df, SSD_K).collect()
+        packed_excise_spans(df).collect()
 
 
 def test_substring_incr_probe_planted(spark):

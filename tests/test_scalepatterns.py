@@ -584,3 +584,89 @@ def test_twa_equals_python_integration(spark):
         for r in QUERIES["q_twa"](spark, SF_SMOKE).collect()
     }
     assert got == expected
+
+
+def test_dsar_report_matches_python_recompute(spark):
+    """q_dsar_report vs a driver-side recompute of the 0/1/2-hop subject
+    row inventory and cents checksums."""
+    from duckdb_ner_spark.operators.scalepatterns import DSAR_MOD, DSAR_REM
+
+    cust = spark.read.parquet(f"{SF_SMOKE}/customer.parquet").collect()
+    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").collect()
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").collect()
+    subs = {r.c_custkey for r in cust if r.c_custkey % DSAR_MOD == DSAR_REM}
+
+    def cents(x):
+        from decimal import ROUND_HALF_UP, Decimal
+
+        return int(
+            (Decimal(repr(float(x))) * 100).quantize(
+                Decimal("1"), rounding=ROUND_HALF_UP
+            )
+        )
+
+    crows = [r for r in cust if r.c_custkey in subs]
+    orows = [r for r in orders if r.o_custkey in subs]
+    okeys = {r.o_orderkey for r in orows}
+    lrows = [r for r in li if r.l_orderkey in okeys]
+    expect = {
+        "customer": (
+            len(crows),
+            sum(r.c_custkey for r in crows),
+            sum(cents(r.c_acctbal) for r in crows),
+        ),
+        "orders": (
+            len(orows),
+            sum(r.o_orderkey for r in orows),
+            sum(cents(r.o_totalprice) for r in orows),
+        ),
+        "lineitem": (
+            len(lrows),
+            sum(r.l_orderkey * 10 + r.l_linenumber for r in lrows),
+            sum(cents(r.l_extendedprice) for r in lrows),
+        ),
+    }
+    got = {
+        r.table_name: (r.n_rows, r.key_checksum, r.cents_checksum)
+        for r in QUERIES["q_dsar_report"](spark, SF_SMOKE).collect()
+    }
+    assert got == expect
+    assert got["lineitem"][0] > 0, "2-hop rows must exist for the subjects"
+
+
+def test_incr_agg_delete_retraction_equals_direct(spark):
+    """The retraction-maintained state must equal a direct aggregate over
+    survivors computed INDEPENDENTLY in Spark (the oracle pins the
+    cross-engine half), and the retracted accounting must reconcile:
+    maintained + retracted == full state per type."""
+    from duckdb_ner_spark.operators.scalepatterns import (
+        RETRACT_FX,
+        RETRACT_MOD,
+        RETRACT_REM,
+    )
+
+    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select(
+        "user_id", "event_type", "value"
+    )
+    fx = F.expr(f"CAST(ROUND(value * {RETRACT_FX}) AS BIGINT)")
+    direct = {
+        r.event_type: (r.n, r.s)
+        for r in ev.filter(F.col("user_id") % RETRACT_MOD != RETRACT_REM)
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n"), F.sum(fx).alias("s"))
+        .collect()
+    }
+    full = {
+        r.event_type: (r.n, r.s)
+        for r in ev.groupBy("event_type")
+        .agg(F.count("*").alias("n"), F.sum(fx).alias("s"))
+        .collect()
+    }
+    got = {
+        r.event_type: (r.n_events, r.total_fx, r.n_retracted, r.retracted_fx)
+        for r in QUERIES["q_incr_agg_delete"](spark, SF_SMOKE).collect()
+    }
+    assert {k: v[:2] for k, v in got.items()} == direct
+    for k, (n, s, nr, sr) in got.items():
+        assert (n + nr, s + sr) == full[k]
+    assert sum(v[2] for v in got.values()) > 0, "no retraction ever fired"

@@ -7,6 +7,10 @@ shared read-path bug cannot self-certify (VERDICT r2 §What's-wrong #2). The
 windowed test is additionally anchored directly to a DuckDB replay of the
 same aggregation."""
 
+from pyspark.sql import functions as F
+
+import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
+from duckdb_ner_spark.plans.registry import QUERIES
 from tests.conftest import SF_SMOKE
 
 
@@ -30,14 +34,15 @@ def _windowed_from_duckdb(events_path):
 def test_stream_matches_batch_and_duckdb(spark):
     from duckdb_ner_spark.streaming.events import (
         batch_events,
-        run_stream_to_memory,
+        drain_to_memory,
+        stream_events,
         windowed_counts,
     )
 
-    run_stream_to_memory(spark, SF_SMOKE, table_name="t_stream_out")
+    sink = drain_to_memory(windowed_counts(stream_events(spark, SF_SMOKE)), "complete")
     got = {
         (r.window_start.strftime("%Y-%m-%d %H:%M:%S"), r.event_type): (r.n, r.total_value)
-        for r in spark.table("t_stream_out").collect()
+        for r in sink.collect()
     }
     # batch_events delegates to the catalog — the independent, oracle-gated path
     expect = {
@@ -173,11 +178,10 @@ def test_stateful_running_stats_matches_batch(spark):
     batch aggregate over the whole table."""
     import pyspark.sql.functions as F
 
-    from duckdb_ner_spark.streaming.events import batch_events
-    from duckdb_ner_spark.streaming.stateful import run_stateful_to_memory
+    from duckdb_ner_spark.streaming.events import batch_events, drain_to_memory, stream_events
+    from duckdb_ner_spark.streaming.stateful import running_user_stats
 
-    run_stateful_to_memory(spark, SF_SMOKE, table_name="t_stateful_out")
-    out = spark.table("t_stateful_out")
+    out = drain_to_memory(running_user_stats(stream_events(spark, SF_SMOKE)), "update")
     # 'update' mode may emit one row per micro-batch per user; keep the last
     final = {
         r.user_id: (r.n_events, r.total_value)
@@ -225,16 +229,15 @@ def test_ner_stream_matches_batch(spark):
     from the micro-batch drain must equal the same aggregation run in batch
     (stub model → deterministic entities)."""
     from duckdb_ner_spark.operators.ner_queries import DOC_STUB_MODEL
+    from duckdb_ner_spark.streaming.events import drain_to_memory
     from duckdb_ner_spark.streaming.ner_stream import (
         DOCS_SCHEMA,
         entity_label_counts,
-        run_ner_stream_to_memory,
+        stream_documents,
     )
 
-    run_ner_stream_to_memory(
-        spark, SF_SMOKE, table_name="t_ner_stream_out", model_path=DOC_STUB_MODEL
-    )
-    got = {(r.label): r.n for r in spark.table("t_ner_stream_out").collect()}
+    agg = entity_label_counts(spark, stream_documents(spark, SF_SMOKE), DOC_STUB_MODEL)
+    got = {(r.label): r.n for r in drain_to_memory(agg, "complete").collect()}
     batch_docs = spark.read.schema(DOCS_SCHEMA).parquet(f"{SF_SMOKE}/documents.parquet")
     expect = {
         (r.label): r.n
@@ -497,3 +500,157 @@ def test_stream_attribution_matches_batch(spark):
         vus = round((r.view_ts - epoch).total_seconds() * 1_000_000)
         batch[r.event_id] = (vus, r.gap_us)
     assert stream == batch
+
+
+def test_sliced_documents_stream_runs_real_microbatches(spark):
+    """stream_documents_sliced must stage N_DOC_SLICES doc_id-ordered
+    slices with ascending mtimes and actually deliver them as SEPARATE
+    micro-batches — the property that makes q_stream_pipeline's aggregate
+    state genuinely cross-batch."""
+    import glob
+    import os
+
+    from duckdb_ner_spark.streaming.events import stage_stream
+    from duckdb_ner_spark.streaming.ner_stream import (
+        N_DOC_SLICES,
+        stream_documents_sliced,
+    )
+
+    stream = stream_documents_sliced(spark, SF_SMOKE)
+    stage = stage_stream(SF_SMOKE, "documents", N_DOC_SLICES)
+    parts = sorted(glob.glob(os.path.join(stage, "*.parquet")))
+    assert len(parts) == N_DOC_SLICES
+    mtimes = [os.stat(p).st_mtime for p in parts]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(mtimes)
+
+    seen = []
+
+    def per_batch(df, epoch_id):
+        seen.append((epoch_id, df.count()))
+
+    q = (
+        stream.writeStream.foreachBatch(per_batch)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    q.stop()
+    assert len(seen) == N_DOC_SLICES, f"expected {N_DOC_SLICES} batches: {seen}"
+    total = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").count()
+    assert sum(n for _, n in seen) == total
+
+
+def test_stream_pipeline_matches_batch_recompute(spark):
+    """The fused stream (dedup probe -> gate -> scorecard across 4
+    micro-batches) must equal an independent BATCH recompute of the same
+    pipeline inside Spark — the in-engine half of the parity contract
+    (the DuckDB oracle pins the cross-engine half)."""
+    from duckdb_ner_spark.operators.dedup import N_BANDS, minhash_bands
+    from duckdb_ner_spark.operators.textprep import shingles_expr, words_col
+    from duckdb_ner_spark.operators.textstats import (
+        GATE_DISTINCT_DEN,
+        GATE_DISTINCT_NUM,
+        GATE_MIN_WORDS,
+    )
+
+    got = {
+        (r.lang, r.stage): (r.n_docs, r.total_chars, r.id_checksum)
+        for r in QUERIES["q_stream_pipeline"](spark, SF_SMOKE).collect()
+    }
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    corpus = docs.filter(F.col("doc_id") % 2 == 0)
+    idx = minhash_bands(corpus).select("band", "sig").distinct()
+    new_bands = minhash_bands(docs.filter(F.col("doc_id") % 2 == 1))
+    dup_ids = {
+        r.doc_id
+        for r in new_bands.join(idx, ["band", "sig"], "left_semi")
+        .select("doc_id")
+        .distinct()
+        .collect()
+    }
+    feat = (
+        docs.filter(F.col("doc_id") % 2 == 1)
+        .select("doc_id", "lang", "n_chars", words_col("text").alias("ws"))
+        .select(
+            "doc_id",
+            "lang",
+            "n_chars",
+            F.size("ws").alias("n_words"),
+            F.size(F.array_distinct("ws")).alias("n_distinct"),
+        )
+        .collect()
+    )
+    expect: dict[tuple, list] = {}
+    for r in feat:
+        if r.doc_id in dup_ids:
+            stage = "dup"
+        elif r.n_words < GATE_MIN_WORDS:
+            stage = "too_short"
+        elif r.n_distinct * GATE_DISTINCT_DEN < GATE_DISTINCT_NUM * r.n_words:
+            stage = "repetitive"
+        else:
+            stage = "keep"
+        acc = expect.setdefault((r.lang, stage), [0, 0, 0])
+        acc[0] += 1
+        acc[1] += r.n_chars
+        acc[2] += r.doc_id
+    assert got == {k: tuple(v) for k, v in expect.items()}
+    # non-vacuity: the pipeline must actually exercise every stage class
+    stages = {s for _, s in got}
+    assert "keep" in stages and ("dup" in stages or "too_short" in stages)
+    assert N_BANDS == 4  # the probe shape the docstring documents
+
+
+def test_stream_index_growth_matches_sequential_recompute(spark):
+    """q_stream_index_growth vs an exact driver-side sequential replay:
+    same bands (Spark-computed, md5-identical), same slice rule, same
+    probe-then-append rounds — pins the foreachBatch state threading
+    (a batch must probe the index AS APPENDED by every earlier batch)."""
+    from duckdb_ner_spark.operators.dedup import minhash_bands
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    n = docs.count()
+    per = (n + 3) // 4
+    band_rows = minhash_bands(docs).collect()
+    bands: dict[int, set] = {}
+    for r in band_rows:
+        bands.setdefault(r.doc_id, set()).add((r.band, r.sig))
+    idx = set()
+    for d, bs in bands.items():
+        if d % 2 == 0:
+            idx |= bs
+    expect = []
+    within_stream_rejects = 0
+    for i in range(4):
+        slice_ids = [
+            d for d in range(i * per, min((i + 1) * per, n)) if d % 2 == 1
+        ]
+        banded = [d for d in slice_ids if d in bands]
+        static_adm = {d for d in banded if not (bands[d] & idx)} if i == 0 else None
+        hits = {d for d in banded if bands[d] & idx}
+        adm = sorted(set(banded) - hits)
+        if i > 0:
+            # how many rejections are due to EARLIER STREAM admissions
+            # (not the static corpus index) — the behavior this query adds
+            base_idx = set()
+            for d, bs in bands.items():
+                if d % 2 == 0:
+                    base_idx |= bs
+            within_stream_rejects += sum(
+                1 for d in hits if not (bands[d] & base_idx)
+            )
+        for d in adm:
+            idx |= bands[d]
+        expect.append(
+            (i, len(slice_ids), len(banded), len(adm), sum(adm), len(idx))
+        )
+    got = [
+        (r.batch_id, r.n_docs, r.n_banded, r.n_admitted, r.admitted_id_sum, r.index_size)
+        for r in QUERIES["q_stream_index_growth"](spark, SF_SMOKE).collect()
+    ]
+    assert got == expect
+    assert sum(e[2] - e[3] for e in expect) > 0, "no rejection ever fired"
+    # the index must actually grow across batches (state really threads)
+    sizes = [e[5] for e in expect]
+    assert sizes == sorted(sizes) and sizes[-1] > sizes[0]

@@ -5,6 +5,8 @@ both Spark and the DuckDB oracle."""
 from collections import defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
+from pyspark.sql import functions as F
+
 import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
 from duckdb_ner_spark.plans.registry import QUERIES
 from tests.conftest import SF_SMOKE
@@ -103,3 +105,31 @@ def test_curriculum_matches_python_recompute(spark):
     # the schedule is monotone and spans the epochs
     starts = [got[s][3] for s in sorted(got)]
     assert starts == sorted(starts) and starts[0] == 0
+
+
+def test_bpe_apply_consistent_with_bpe_merges(spark):
+    """Internal cross-check: the corpus-wide BPE token total after the
+    final learned merge must equal q_bpe_merges' own n_tokens_after for
+    that merge rank (same corpus, same segmentation), and the character
+    baseline must equal sum(freq * len(word)) over the vocabulary."""
+    from duckdb_ner_spark.operators.trainprep import BPE_MERGES
+
+    apply_rows = QUERIES["q_bpe_apply"](spark, SF_SMOKE).collect()
+    merges = {
+        r.merge_rank: r.n_tokens_after
+        for r in QUERIES["q_bpe_merges"](spark, SF_SMOKE).collect()
+    }
+    assert sum(r.bpe_tokens for r in apply_rows) == merges[BPE_MERGES]
+    wf = (
+        spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+        .select(F.explode(F.split("text", " ")).alias("w"))
+        .groupBy("w")
+        .agg(F.count("*").alias("freq"))
+        .collect()
+    )
+    assert sum(r.char_tokens for r in apply_rows) == sum(
+        r.freq * len(r.w) for r in wf
+    )
+    for r in apply_rows:
+        assert r.compression_bp == (10000 * r.bpe_tokens) // r.char_tokens
+        assert r.bpe_tokens <= r.char_tokens

@@ -117,6 +117,24 @@ def test_no_relative_import_of_a_private_name():
     assert not bad, f"make these public or keep them in one module: {bad}"
 
 
+def test_no_package_module_imports_a_repo_script():
+    """The package stands alone: tools/, bench.py and perfbench/ import it,
+    never the reverse."""
+    scripts = ("tools", "bench", "perfbench")
+    bad = [
+        f"{p.relative_to(PKG)}:{node.lineno}"
+        for p in _package_modules()
+        for node in ast.walk(ast.parse(p.read_text()))
+        for mod in (
+            [a.name for a in node.names] if isinstance(node, ast.Import)
+            else [node.module or ""] if isinstance(node, ast.ImportFrom) and not node.level
+            else []
+        )
+        if mod.split(".")[0] in scripts
+    ]
+    assert not bad, f"move what these import into the package: {bad}"
+
+
 def test_no_module_binds_a_top_level_name_twice():
     bad = []
     for p in _package_modules():

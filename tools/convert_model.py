@@ -36,7 +36,7 @@ import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from duckdb_ner_spark.ner.ggml_format import HPARAM_NAMES, write_ggml  # noqa: E402
+from duckdb_ner_spark.ner.ggml_format import HPARAM_NAMES, random_model, write_ggml  # noqa: E402
 
 # safetensors dtype strings -> numpy dtypes (little-endian on disk).
 # BF16 has no numpy dtype: widened via a <<16 bit-shift into float32 below.
@@ -150,51 +150,6 @@ STUB_VOCAB = [
     "[CLS]", "[SEP]", "duck", "##db", "labs", "is", "in", "amsterdam",
     "new", "york", "sam", "spark", "customer", "row", "window", "table",
 ]
-
-
-def random_model(vocab: list[str], n_embd: int, n_head: int, n_layer: int,
-                 n_labels: int, n_max_tokens: int, seed: int = 7,
-                 n_intermediate: int | None = None):
-    rng = np.random.RandomState(seed)
-    if n_intermediate is None:
-        n_intermediate = n_embd * 4
-
-    def w(*shape):
-        return (rng.randn(*shape) * 0.05).astype(np.float32)
-
-    t = {
-        "embeddings.word_embeddings.weight": w(len(vocab), n_embd),
-        "embeddings.token_type_embeddings.weight": w(2, n_embd),
-        "embeddings.position_embeddings.weight": w(n_max_tokens, n_embd),
-        "embeddings.LayerNorm.weight": np.ones(n_embd, np.float32),
-        "embeddings.LayerNorm.bias": np.zeros(n_embd, np.float32),
-        "classifier.weight": w(n_labels, n_embd),
-        "classifier.bias": np.zeros(n_labels, np.float32),
-    }
-    for i in range(n_layer):
-        base = f"encoder.layer.{i}."
-        t[base + "attention.self.query.weight"] = w(n_embd, n_embd)
-        t[base + "attention.self.query.bias"] = np.zeros(n_embd, np.float32)
-        t[base + "attention.self.key.weight"] = w(n_embd, n_embd)
-        t[base + "attention.self.key.bias"] = np.zeros(n_embd, np.float32)
-        t[base + "attention.self.value.weight"] = w(n_embd, n_embd)
-        t[base + "attention.self.value.bias"] = np.zeros(n_embd, np.float32)
-        t[base + "attention.output.dense.weight"] = w(n_embd, n_embd)
-        t[base + "attention.output.dense.bias"] = np.zeros(n_embd, np.float32)
-        t[base + "attention.output.LayerNorm.weight"] = np.ones(n_embd, np.float32)
-        t[base + "attention.output.LayerNorm.bias"] = np.zeros(n_embd, np.float32)
-        t[base + "intermediate.dense.weight"] = w(n_intermediate, n_embd)
-        t[base + "intermediate.dense.bias"] = np.zeros(n_intermediate, np.float32)
-        t[base + "output.dense.weight"] = w(n_embd, n_intermediate)
-        t[base + "output.dense.bias"] = np.zeros(n_embd, np.float32)
-        t[base + "output.LayerNorm.weight"] = np.ones(n_embd, np.float32)
-        t[base + "output.LayerNorm.bias"] = np.zeros(n_embd, np.float32)
-    hp = dict(
-        n_vocab=len(vocab), n_max_tokens=n_max_tokens, n_embd=n_embd,
-        n_intermediate=n_intermediate, n_head=n_head, n_layer=n_layer,
-        ftype=0, n_labels=n_labels,
-    )
-    return hp, t
 
 
 def convert_hf(model_id: str, out: str, ftype: int) -> None:  # pragma: no cover
