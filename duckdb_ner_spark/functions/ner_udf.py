@@ -23,6 +23,25 @@ Spark-first re-expression of the reference's vectorized scalar function
   ``truncate`` read from ROW 0 of the batch only, default true (:53-61);
   ``truncate=false`` + token overflow → error (:112-115).
 
+Batch path: ``ner_fn`` works on each Arrow batch as flat arrays, with no
+per-row or per-token Python loop (``_ner_arrow``):
+
+- tokenize (``tokenizer.tokenize_batch``): Arrow splits the texts on the six
+  ASCII whitespace bytes and dictionary-encodes the words; each DISTINCT
+  word is WordPiece-matched once; offset arithmetic expands the pieces and
+  applies ``([CLS] + pieces)[:n_max-1] + [SEP]`` per row;
+- label (``Backend.token_labels``): the BERT runs one forward pass per
+  length group and keeps only each token's argmax; the JSON stub is one
+  table lookup;
+- decode (``decode.decode_batch``): the BIO merge state is computed for all
+  tokens at once and entity texts are joined with ``pc.binary_join``;
+- the ``ListArray<Struct<entity,label>>`` result is built from offsets.
+
+The per-row functions ``tokenizer.tokenize``, ``decode.decode_entities`` and
+the backends' ``eval_tokens(_batch)`` are the reference port and stay as the
+spec of this path: the tests compare the two row by row, and perfbench's
+``ner/*`` checks compute their expected entities with them.
+
 Scale notes (100 TB): model inference is embarrassingly parallel over rows —
 throughput scales with executors; the model file must sit on shared storage
 (or ship via ``spark.files``); per-executor memory = one model instance
@@ -35,16 +54,18 @@ from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-from ..ner.decode import decode_entities
+from ..ner.decode import decode_batch
 from ..ner.model import load_model
-from ..ner.tokenizer import tokenize
+from ..ner.tokenizer import tokenize_batch
 from ..session import CONF_MODEL_PATH, CONF_TRUNCATE
 
 NER_RESULT_TYPE = ArrayType(
@@ -88,33 +109,31 @@ def _get_model(path: Optional[str], broadcast=None):
     return _MODEL_CACHE[key]
 
 
-def _ner_batch(texts: list, model, truncate: bool) -> list:
+def _entity_lists(texts: pa.Array, entities: pa.Array, labels: pa.Array, row_offsets) -> pa.Array:
+    """``ListArray<Struct<entity, label>>`` from per-row entity offsets; a
+    null text gives a null list."""
+    structs = pa.StructArray.from_arrays(
+        [entities, labels], fields=list(_ARROW_RESULT_TYPE.value_type)
+    )
+    return pa.ListArray.from_arrays(
+        pa.array(row_offsets, pa.int32()), structs, type=_ARROW_RESULT_TYPE,
+        mask=pc.is_null(texts),
+    )
+
+
+def _ner_arrow(texts: pa.Array, model, truncate: bool) -> pa.Array:
+    """The UDF body: one Arrow batch of texts → its entity lists, with no
+    per-row or per-token Python loop."""
     if model is None:
-        return [None if v is None else [] for v in texts]
-
-    n_max = model.n_max_tokens
-    tokenized: list[list[int] | None] = []
-    for v in texts:
-        if v is None:
-            tokenized.append(None)
-            continue
-        token_ids = tokenize(model.vocab, v, n_max)
-        if not truncate and len(token_ids) >= n_max:
-            raise ValueError("Input string exceeds model token limit and truncate=false")
-        tokenized.append(token_ids)
-
-    # Cross-row batching (the reference evaluates per row — its own noted
-    # inefficiency, SURVEY.md §4.2): the backend evaluates every non-null row
-    # of the batch in one call, bit-identical to per-row ``eval_tokens``.
-    logits = iter(model.eval_tokens_batch([t for t in tokenized if t is not None]))
-    out = []
-    for token_ids in tokenized:
-        if token_ids is None:
-            out.append(None)
-            continue
-        ents = decode_entities(token_ids, next(logits), model.vocab.id_to_token)
-        out.append([{"entity": e, "label": lb} for e, lb in ents])
-    return out
+        empty = pa.array([], pa.string())
+        return _entity_lists(texts, empty, empty, np.zeros(len(texts) + 1, np.int64))
+    ids, offsets = tokenize_batch(model.vocab, texts, model.n_max_tokens)
+    lengths = np.diff(offsets)
+    # a null row has no tokens, a text at least [CLS] and [SEP]
+    if not truncate and ((lengths >= model.n_max_tokens) & (lengths > 0)).any():
+        raise ValueError("Input string exceeds model token limit and truncate=false")
+    labels = model.token_labels(ids, offsets)
+    return _entity_lists(texts, *decode_batch(model.vocab, ids, labels, offsets))
 
 
 def make_ner_udf(model_path: Optional[str], default_truncate: bool = True, broadcast=None):
@@ -127,8 +146,7 @@ def make_ner_udf(model_path: Optional[str], default_truncate: bool = True, broad
         if truncate is not None and len(truncate) > 0 and truncate[0].is_valid:
             # reference reads row 0 of the chunk only (src/ner_extension.cpp:55-61)
             trunc = bool(truncate[0].as_py())
-        model = _get_model(model_path, broadcast)
-        return pa.array(_ner_batch(texts.to_pylist(), model, trunc), type=_ARROW_RESULT_TYPE)
+        return _ner_arrow(texts, _get_model(model_path, broadcast), trunc)
 
     return arrow_udf(ner_fn, NER_RESULT_TYPE).asNondeterministic()
 

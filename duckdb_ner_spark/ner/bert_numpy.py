@@ -85,6 +85,16 @@ def _linear(x: np.ndarray, wb: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
     return y
 
 
+def _length_groups(lengths: np.ndarray) -> list[tuple[int, np.ndarray]]:
+    """Row indices grouped by length, each group in row order: the batches
+    of one mask-free forward pass each."""
+    if not len(lengths):
+        return []
+    order = np.argsort(lengths, kind="stable")
+    groups = np.split(order, np.flatnonzero(np.diff(lengths[order])) + 1)
+    return [(int(lengths[g[0]]), g) for g in groups]
+
+
 class GgmlBertModel:
     """Backend-protocol implementation over a parsed GGML file."""
 
@@ -158,15 +168,23 @@ class GgmlBertModel:
         return self._forward(ids)[0]
 
     def eval_tokens_batch(self, token_lists: list[list[int]]) -> list[np.ndarray]:
-        """Cross-row batching: group rows by token length (mask-free), one
-        (B, n, d) pass per group, results re-ordered to the input order."""
-        by_len: dict[int, list[int]] = {}
-        for i, toks in enumerate(token_lists):
-            by_len.setdefault(len(toks), []).append(i)
+        """Cross-row batching: one (B, n, d) pass per length group, results
+        in input order."""
+        lengths = np.fromiter(map(len, token_lists), np.int64, len(token_lists))
         out: list[np.ndarray | None] = [None] * len(token_lists)
-        for n, idxs in by_len.items():
-            ids = np.asarray([token_lists[i] for i in idxs], dtype=np.int64)
-            logits = self._forward(ids)
-            for j, i in enumerate(idxs):
+        for _, rows in _length_groups(lengths):
+            logits = self._forward(np.asarray([token_lists[i] for i in rows], dtype=np.int64))
+            for j, i in enumerate(rows):
                 out[i] = logits[j]
         return out
+
+    def token_labels(self, ids: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+        """Each token's argmax label, row r being ``ids[offsets[r]:offsets[r+1]]``.
+        The non-empty rows form the same length groups, in the same row order,
+        as in ``eval_tokens_batch``, so every forward pass sees the same input."""
+        labels = np.zeros(len(ids), dtype=np.int64)
+        for n, rows in _length_groups(np.diff(offsets)):
+            if n:
+                at = offsets[rows, None] + np.arange(n)
+                labels[at] = self._forward(ids[at]).argmax(axis=-1)
+        return labels

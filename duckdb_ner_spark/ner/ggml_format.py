@@ -150,6 +150,12 @@ def _read_ggml_with_layout(data: bytes, q4_legacy: bool) -> GgmlModelFile | None
     return GgmlModelFile(hparams, vocab, tensors)
 
 
+# What a truncated or corrupted container raises while parsing: a short read
+# (struct.error), a misframed stream or buffer size (ValueError), a tensor
+# name that is not UTF-8 (UnicodeDecodeError, a ValueError).
+_BAD_FILE = (ValueError, struct.error)
+
+
 def read_ggml(data: bytes) -> GgmlModelFile | None:
     """Parse a GGML container held in memory, with q4_0 layout
     auto-detection: try the legacy (bert.cpp-era) block first; if the stream
@@ -157,11 +163,11 @@ def read_ggml(data: bytes) -> GgmlModelFile | None:
     without q4_0 tensors parse identically either way."""
     try:
         return _read_ggml_with_layout(data, q4_legacy=True)
-    except Exception:
+    except _BAD_FILE:
         pass
     try:
         return _read_ggml_with_layout(data, q4_legacy=False)
-    except Exception:
+    except _BAD_FILE:
         return None
 
 

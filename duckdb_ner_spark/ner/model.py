@@ -18,8 +18,9 @@ Backends:
   logits per token. Hermetic + deterministic: the test vehicle, and the
   semantic analogue of the reference's convert-your-own-model flow.
 
-Both implement ``eval_tokens_batch`` (what the UDF calls) and keep
-``eval_tokens`` as the per-row reference it must match bit for bit.
+Both implement ``token_labels`` (what the UDF calls: each token's argmax
+label over a flat batch) and ``eval_tokens_batch``, and keep ``eval_tokens``
+as the per-row reference both must match bit for bit.
 """
 
 from __future__ import annotations
@@ -45,6 +46,11 @@ class Backend(Protocol):
         """``eval_tokens`` over many rows, in input order, bit-identical."""
         ...
 
+    def token_labels(self, ids: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+        """Flat rows (row r is ``ids[offsets[r]:offsets[r+1]]``) → each
+        token's argmax label, equal to ``eval_tokens(row).argmax(-1)``."""
+        ...
+
 
 class StubMapModel:
     """Deterministic token→label model (FIXTURES.md §3 contract)."""
@@ -54,10 +60,17 @@ class StubMapModel:
         self._labels_by_id = labels_by_id
         self.n_max_tokens = n_max_tokens
         self.n_labels = n_labels
+        self._label_of_id: np.ndarray | None = None
 
     @classmethod
     def from_dict(cls, spec: dict) -> "StubMapModel":
-        vocab = Vocab.from_tokens(spec["vocab"])
+        """ValueError or TypeError on a spec of the wrong shape."""
+        tokens = spec.get("vocab")
+        if not isinstance(tokens, list) or not all(isinstance(t, str) for t in tokens):
+            raise ValueError("stub vocab is not a list of strings")
+        if not isinstance(spec.get("labels_by_token", {}), dict):
+            raise ValueError("stub labels_by_token is not an object")
+        vocab = Vocab.from_tokens(tokens)
         n_labels = int(spec.get("n_labels", 9))
         n_max_tokens = int(spec.get("n_max_tokens", 512))
         labels_by_id = {}
@@ -65,6 +78,8 @@ class StubMapModel:
             ids = [i for i, t in enumerate(spec["vocab"]) if t == tok]
             for i in ids:
                 labels_by_id[i] = int(label)
+        if n_labels < 1 or not all(0 <= lb < n_labels for lb in labels_by_id.values()):
+            raise ValueError("stub label outside [0, n_labels)")
         return cls(vocab, labels_by_id, n_max_tokens, n_labels)
 
     def eval_tokens(self, token_ids: list[int]) -> np.ndarray:
@@ -77,28 +92,45 @@ class StubMapModel:
     def eval_tokens_batch(self, token_lists: list[list[int]]) -> list[np.ndarray]:
         return [self.eval_tokens(t) for t in token_lists]
 
+    def token_labels(self, ids: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+        """One table lookup: the argmax of each id's one-hot ``eval_tokens`` row."""
+        if self._label_of_id is None:
+            self._label_of_id = self.eval_tokens(range(len(self.vocab))).argmax(axis=-1)
+        return self._label_of_id[ids]
+
+
+# What a bad stub file raises: not UTF-8 or not JSON (ValueError), nested
+# past the parser's depth (RecursionError), a wrong-shaped spec (ValueError),
+# int() of a count or label that is not a number (TypeError, ValueError,
+# OverflowError for Infinity).
+_BAD_STUB = (ValueError, TypeError, OverflowError, RecursionError)
+
 
 def load_model_bytes(data: bytes):
-    """Silent-failure loader: any problem → None (reference parity:
+    """Silent-failure loader: a bad file → None (reference parity:
     test/sql/ner.test:39-51 expects SET to a bad path to succeed and the next
-    ner() call to return []).
+    ner() call to return []). Only the failure classes a bad file raises are
+    caught; a programming error in a backend propagates.
 
     Formats, sniffed by magic: the reference's GGML container
     (magic 0x67676d6c LE — a file that merely *spells* 'ggml' in ASCII fails
     the check, exactly like the reference's bundled placeholder) and the JSON
     stub format."""
-    try:
-        if data[:4] == b"\x6c\x6d\x67\x67":  # struct LE of 0x67676d6c
-            from .bert_numpy import GgmlBertModel
-            from .ggml_format import read_ggml
+    if data[:4] == b"\x6c\x6d\x67\x67":  # struct LE of 0x67676d6c
+        from .bert_numpy import GgmlBertModel
+        from .ggml_format import read_ggml
 
-            mf = read_ggml(data)
+        mf = read_ggml(data)
+        try:
             return GgmlBertModel(mf) if mf is not None else None
+        except (KeyError, ValueError):  # a tensor missing, heads indivisible
+            return None
+    try:
         spec = json.loads(data.decode("utf-8"))
-        if spec.get("format") != "ner-stub-v1":
+        if not isinstance(spec, dict) or spec.get("format") != "ner-stub-v1":
             return None
         return StubMapModel.from_dict(spec)
-    except Exception:
+    except _BAD_STUB:
         return None
 
 

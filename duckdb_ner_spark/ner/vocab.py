@@ -24,6 +24,8 @@ class Vocab:
     _subword_bytes: dict[bytes, int] | None = field(default=None, repr=False)
     # word → token-id-list memo used by tokenizer._tokenize_word.
     word_cache: dict[str, list[int]] = field(default_factory=dict, repr=False)
+    # per-id arrays built once by decode.decode_batch.
+    decode_tables: tuple | None = field(default=None, repr=False, compare=False)
 
     @property
     def token_bytes_to_id(self) -> dict[bytes, int]:
@@ -49,6 +51,9 @@ class Vocab:
                 v.token_to_id[word] = i
             v._id_to_token[i] = word
         return v
+
+    def __len__(self) -> int:
+        return len(self._id_to_token)
 
     def id_to_token(self, idx: int) -> str:
         return self._id_to_token.get(idx, "[UNK]")

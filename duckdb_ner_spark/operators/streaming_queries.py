@@ -1200,14 +1200,14 @@ def q_stream_substring_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted batches' distinct tuples back to the index per batch — the
     q_stream_index_growth foreachBatch pattern applies verbatim."""
     from ..streaming.ner_stream import stream_documents_sliced
-    from .substring import SSD_K, packed_key_cols, packed_windows
+    from .substring import packed_key_cols, packed_windows
 
-    key_cols = packed_key_cols(SSD_K)
+    key_cols = packed_key_cols()
     corpus = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
         F.col("doc_id") % 2 == 0
     )
     idx = (
-        packed_windows(corpus, SSD_K)
+        packed_windows(corpus)
         .select(*key_cols)
         .distinct()
         .withColumn("hit", F.lit(1))
@@ -1215,7 +1215,7 @@ def q_stream_substring_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_docs = stream_documents_sliced(spark, sf_dir).filter(
         F.col("doc_id") % 2 == 1
     )
-    probe = packed_windows(new_docs, SSD_K).join(
+    probe = packed_windows(new_docs).join(
         F.broadcast(idx), key_cols, "left"
     )
     score = (

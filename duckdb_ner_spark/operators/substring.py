@@ -345,7 +345,7 @@ def _span_rollup(spans: DataFrame, docs: DataFrame) -> DataFrame:
     )
 
 
-def _census_excise(keyed: DataFrame, key_cols: list, k: int) -> DataFrame:
+def _census_excise(keyed: DataFrame, key_cols: list) -> DataFrame:
     """Join-free census: per-window occurrence count and packed keep-first
     key as TWO aggregates over ONE window partitioned by the census key —
     the (doc_id, i, *key) stream shuffles exactly once, vs the
@@ -371,7 +371,7 @@ def _census_excise(keyed: DataFrame, key_cols: list, k: int) -> DataFrame:
             (F.col("n_occ") > 1)
             & (F.col("doc_id") * big + F.col("i") != F.col("first_key"))
         )
-        .select("doc_id", F.col("i").alias("st"), (F.col("i") + k - 1).alias("en"))
+        .select("doc_id", F.col("i").alias("st"), (F.col("i") + SSD_K - 1).alias("en"))
     )
 
 
@@ -943,9 +943,7 @@ def q_suffix_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def suffix_spans_from_ranks(
-    r32: DataFrame, docs: DataFrame, k: int = SSD_K
-) -> DataFrame:
+def suffix_spans_from_ranks(r32: DataFrame, docs: DataFrame) -> DataFrame:
     """ExactSubstr span inventory from depth-32 suffix ranks: a position i
     starts a duplicated k-char window iff its RANK PAIR
     (r32[i], r32[i + (k-32)]) is shared by another eligible position —
@@ -963,9 +961,9 @@ def suffix_spans_from_ranks(
     no enrich join, one exchange — so the spans are provably the SAME
     RELATION q_substring_dedup emits: the oracle is the md5-window SQL
     and the driver hash gate is a cross-ALGORITHM differential test."""
-    assert 32 <= k <= 64, "pair construction covers k in [32, 64]"
+    assert 32 <= SSD_K <= 64, "pair construction covers k in [32, 64]"
     big = SSD_POS_BIG
-    off = k - 32
+    off = SSD_K - 32
     from pyspark.sql import Window
 
     # Positions are dense per doc, so the pair partner rank is LEAD(r, off)
@@ -976,7 +974,7 @@ def suffix_spans_from_ranks(
     w_lead = Window.partitionBy("doc_id").orderBy("pos")
     w_doc = Window.partitionBy("doc_id")
     last_start = F.expr(
-        f"CASE WHEN doc_len < {big} THEN doc_len - {k} + 1 "
+        f"CASE WHEN doc_len < {big} THEN doc_len - {SSD_K} + 1 "
         f"ELSE raise_error('suffix spans: n_chars >= {big} breaks the"
         f" packed keep-first key (raise SSD_POS_BIG or switch to a"
         f" two-column key)') END"
@@ -992,7 +990,7 @@ def suffix_spans_from_ranks(
         .filter(F.col("pos") <= last_start)
         .select("doc_id", F.col("pos").alias("i"), "ra", "rb")
     )
-    return _islands_spans(_census_excise(pairs, ["ra", "rb"], k))
+    return _islands_spans(_census_excise(pairs, ["ra", "rb"]))
 
 
 def suffix_excise_spans(docs: DataFrame) -> DataFrame:
@@ -1000,7 +998,7 @@ def suffix_excise_spans(docs: DataFrame) -> DataFrame:
     staging) -> depth-32 ranks -> span inventory. Planted-corpus pytests
     prove equality with substring_excise_spans on the same docs."""
     rounds = _suffix_rounds_frames(docs, SUFR_SPAN_ROUNDS)
-    return suffix_spans_from_ranks(rounds[-1][0], docs, SSD_K)
+    return suffix_spans_from_ranks(rounds[-1][0], docs)
 
 
 @declared("q_suffix_spans", oracle=_SUBSTRING_DEDUP_ORACLE)
@@ -1032,7 +1030,7 @@ def q_suffix_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     composite), so no corpus-size bound."""
     t = load_tables(spark, sf_dir)
     rounds = staged_suffix_rounds(spark, sf_dir, SUFR_SPAN_ROUNDS)
-    spans = suffix_spans_from_ranks(rounds[-1][0], t.documents, SSD_K)
+    spans = suffix_spans_from_ranks(rounds[-1][0], t.documents)
     return _span_rollup(spans, t.documents)
 
 
@@ -1045,11 +1043,11 @@ def q_suffix_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 SSD_PACK_BYTES = 7  # bytes per BIGINT block: 56 bits, signed-safe under conv
 
 
-def _n_pack_terms(k: int = SSD_K) -> int:
-    return (k + SSD_PACK_BYTES - 1) // SSD_PACK_BYTES  # k=40 -> 6 blocks
+def _n_pack_terms() -> int:
+    return (SSD_K + SSD_PACK_BYTES - 1) // SSD_PACK_BYTES  # k=40 -> 6 blocks
 
 
-def _packed_window_terms(k: int = SSD_K) -> list:
+def _packed_window_terms() -> list:
     """SQL expressions packing the k-char window's BYTES into
     ceil(k/7) BIGINTs: hex-encode the pre-sliced window once, then parse
     each 7-byte (14-hex-char) block with conv(.., 16, 10). The blocks
@@ -1070,31 +1068,31 @@ def _packed_window_terms(k: int = SSD_K) -> list:
     production UTF-8 corpus keys on the byte-window instead: same conv
     blocks over ceil(max_bytes/7) terms)."""
     terms = []
-    for b in range(_n_pack_terms(k)):
+    for b in range(_n_pack_terms()):
         lo = b * SSD_PACK_BYTES * 2 + 1
-        ln = min(SSD_PACK_BYTES * 2, k * 2 - (lo - 1))
+        ln = min(SSD_PACK_BYTES * 2, SSD_K * 2 - (lo - 1))
         terms.append(f"CAST(conv(substr(hexw, {lo}, {ln}), 16, 10) AS BIGINT)")
     return terms
 
 
-def packed_key_cols(k: int = SSD_K) -> list:
-    return [f"w{n}" for n in range(_n_pack_terms(k))]
+def packed_key_cols() -> list:
+    return [f"w{n}" for n in range(_n_pack_terms())]
 
 
-def packed_windows(docs: DataFrame, k: int = SSD_K) -> DataFrame:
+def packed_windows(docs: DataFrame) -> DataFrame:
     """(doc_id, i, w0..w{ceil(k/7)-1}): every eligible window start with
     its content packed map-side. Carries the family's SSD_POS_BIG in-plan
     guard in the explode bound (the packed keep-first consumers depend on
     it; probe-only consumers inherit it as a cheap invariant check)."""
     big = SSD_POS_BIG
     last_start = F.expr(
-        f"CASE WHEN n_chars < {big} THEN n_chars - {k} + 1 "
+        f"CASE WHEN n_chars < {big} THEN n_chars - {SSD_K} + 1 "
         f"ELSE raise_error('substring dedup: n_chars >= {big} breaks the"
         f" packed keep-first key (raise SSD_POS_BIG or switch to a"
         f" two-column key)') END"
     )
     return (
-        docs.filter(F.col("n_chars") >= k)
+        docs.filter(F.col("n_chars") >= SSD_K)
         .select(
             "doc_id",
             F.explode(F.sequence(F.lit(1), last_start)).alias("i"),
@@ -1103,7 +1101,7 @@ def packed_windows(docs: DataFrame, k: int = SSD_K) -> DataFrame:
         .select(
             "doc_id",
             "i",
-            F.expr(f"substr(text, CAST(i AS INT), {k})").alias("win"),
+            F.expr(f"substr(text, CAST(i AS INT), {SSD_K})").alias("win"),
         )
         .select(
             "doc_id",
@@ -1112,7 +1110,7 @@ def packed_windows(docs: DataFrame, k: int = SSD_K) -> DataFrame:
                 f"CASE WHEN octet_length(win) = char_length(win)"
                 f" THEN hex(encode(win, 'UTF-8'))"
                 f" ELSE raise_error('packed census: non-ASCII window"
-                f" (octet_length != char_length) — the fixed {k}-byte"
+                f" (octet_length != char_length) — the fixed {SSD_K}-byte"
                 f" block layout covers single-byte chars only; key on"
                 f" the byte-window for wide text') END"
             ).alias("hexw"),
@@ -1122,7 +1120,7 @@ def packed_windows(docs: DataFrame, k: int = SSD_K) -> DataFrame:
             "i",
             *[
                 F.expr(t).alias(f"w{n}")
-                for n, t in enumerate(_packed_window_terms(k))
+                for n, t in enumerate(_packed_window_terms())
             ],
         )
     )
@@ -1134,7 +1132,7 @@ def packed_excise_spans(docs: DataFrame) -> DataFrame:
     census via the join-free window form (_census_excise), islands-merge.
     One full-corpus exchange total; exact by construction."""
     return _islands_spans(
-        _census_excise(packed_windows(docs, SSD_K), packed_key_cols(SSD_K), SSD_K)
+        _census_excise(packed_windows(docs), packed_key_cols())
     )
 
 
@@ -1241,16 +1239,16 @@ def substring_pack_index(corpus: DataFrame) -> DataFrame:
     columns; appends are the admitted batch's distinct tuples (the
     q_stream_index_growth pattern), GDPR erasure is a keyed anti-join
     (the q_erasure pattern)."""
-    return packed_windows(corpus, SSD_K).select(*packed_key_cols(SSD_K)).distinct()
+    return packed_windows(corpus).select(*packed_key_cols()).distinct()
 
 
 def substring_ingest_probe(batch: DataFrame, index: DataFrame) -> DataFrame:
     """Per-batch-doc admission scorecard against the packed index: window
     counts, duplicated-window count, islands-merged duplicated char mass,
     dup share in bp, and the admit/reject verdict."""
-    key_cols = packed_key_cols(SSD_K)
+    key_cols = packed_key_cols()
     dupw = (
-        packed_windows(batch, SSD_K)
+        packed_windows(batch)
         .join(index, key_cols, "left_semi")
         .select("doc_id", F.col("i").alias("st"), (F.col("i") + SSD_K - 1).alias("en"))
     )

@@ -39,7 +39,12 @@ def scratch_dir(name: str, sf_dir: str) -> str:
     Per-pid paths would otherwise accumulate across runs (r4 ADVICE), so
     every dir this process creates is removed at interpreter exit."""
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"dns_{name}_{tag}_{os.getpid()}")
+    return remove_at_exit(os.path.join(tempfile.gettempdir(), f"dns_{name}_{tag}_{os.getpid()}"))
+
+
+def remove_at_exit(path: str) -> str:
+    """Register the directory ``path`` for removal at interpreter exit and
+    return it."""
     if not _SCRATCH_DIRS:
         import atexit
 

@@ -93,12 +93,17 @@ def stage_stream(sf_dir: str, table: str, parts: int) -> str:
     doc_id order (asserted in tests), so no row is ever late relative to
     the advancing watermark.
 
-    The staging dir is DETERMINISTIC per (sf_dir, table, parts): re-runs
-    against the same checkpoint see the same source path, and temp usage is
-    bounded at one copy per source. A marker holds the source's
-    ``(st_mtime_ns, st_size)`` and ``parts``; the slices are rewritten
-    whenever it differs, so a replaced source file never streams through a
-    stale copy."""
+    The staging dir is DETERMINISTIC per (sf_dir, table, parts) within a
+    process: re-runs against the same checkpoint see the same source path,
+    and temp usage is bounded at one copy per source. A marker holds the
+    source's ``(st_mtime_ns, st_size)`` and ``parts``; the slices are
+    rewritten whenever it differs, so a replaced source file never streams
+    through a stale copy. The dir is per pid and removed at interpreter
+    exit, like ``writers.scratch_dir``: no staged copy outlives its process,
+    and no process removes a copy that another one is streaming. So a
+    checkpoint kept past its process would see the next process's copy as
+    new files; the staged stream is a stand-in for a landing zone, and its
+    checkpoints live as long as the process."""
     import hashlib
     import json
     import math
@@ -107,8 +112,12 @@ def stage_stream(sf_dir: str, table: str, parts: int) -> str:
 
     import pyarrow.parquet as pq
 
+    from ..sources.writers import remove_at_exit
+
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"{table}_stream_{parts}_{tag}")
+    stage = remove_at_exit(
+        os.path.join(tempfile.gettempdir(), f"{table}_stream_{parts}_{tag}_{os.getpid()}")
+    )
     os.makedirs(stage, exist_ok=True)
     source = f"{sf_dir}/{table}.parquet"
     marker = os.path.join(stage, "_staged.json")

@@ -220,6 +220,81 @@ def test_load_model_bytes_matches_load_model(case, tiny_model, tmp_path):
         np.testing.assert_array_equal(a, b)
 
 
+_BAD_STUBS = {
+    "not_an_object": b"[1,2]",
+    "not_utf8": b'{"format": "ner-stub-v1", "vocab": ["\xff"]}',
+    "too_deep": b"[" * 100_000,
+    "no_vocab": b'{"format": "ner-stub-v1"}',
+    "vocab_not_list": b'{"format": "ner-stub-v1", "vocab": 5}',
+    "vocab_not_strings": b'{"format": "ner-stub-v1", "vocab": [[1, 2, 3]]}',
+    "labels_not_object": b'{"format": "ner-stub-v1", "vocab": ["a"], "labels_by_token": [1]}',
+    "label_not_number": b'{"format": "ner-stub-v1", "vocab": ["a"], "labels_by_token": {"a": "x"}}',
+    "label_a_list": b'{"format": "ner-stub-v1", "vocab": ["a"], "labels_by_token": {"a": [1]}}',
+    "n_labels_infinite": b'{"format": "ner-stub-v1", "vocab": ["a"], "n_labels": Infinity}',
+    "n_labels_null": b'{"format": "ner-stub-v1", "vocab": ["a"], "n_labels": null}',
+    "label_out_of_range": b'{"format": "ner-stub-v1", "vocab": ["a"], "labels_by_token": {"a": 9}}',
+    "label_negative": b'{"format": "ner-stub-v1", "vocab": ["a"], "labels_by_token": {"a": -1}}',
+    "no_labels": b'{"format": "ner-stub-v1", "vocab": ["a"], "n_labels": 0}',
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_STUBS))
+def test_bad_stub_file_loads_nothing(case):
+    assert load_model_bytes(_BAD_STUBS[case]) is None
+
+
+@pytest.mark.parametrize("ftype, legacy", [(0, True), (1, True), (2, True), (2, False)],
+                         ids=["f32", "f16", "q4_0_legacy", "q4_0_modern"])
+def test_cut_or_bit_flipped_model_never_raises(ftype, legacy, tiny_model, tmp_path):
+    """Every prefix (at a stride) and 300 seeded single-bit flips of a valid
+    file either load or give None: the loader's narrowed handlers catch all
+    that a bad file raises (short reads, misframes, missing tensors)."""
+    import random
+
+    _, hp, t = tiny_model
+    p = tmp_path / "m.bin"
+    write_ggml(str(p), dict(hp, ftype=ftype), STUB_VOCAB, t, q4_legacy=legacy)
+    data = p.read_bytes()
+    rng = random.Random(ftype * 2 + legacy)
+    variants = [data[:i] for i in range(0, len(data), len(data) // 200)]
+    for _ in range(300):
+        b = bytearray(data)
+        b[rng.randrange(len(b))] ^= 1 << rng.randrange(8)
+        variants.append(bytes(b))
+    loaded = [load_model_bytes(v) is not None for v in variants]
+    assert 0 < sum(loaded) < len(variants)
+
+
+def test_backend_programming_error_propagates(tiny_model, monkeypatch):
+    """Only a bad file maps to None: an error of another class inside a
+    backend constructor reaches the caller."""
+    from duckdb_ner_spark.ner import bert_numpy
+    from duckdb_ner_spark.ner.model import StubMapModel
+
+    path, _, _ = tiny_model
+
+    def broken(*args, **kwargs):
+        raise AttributeError("backend bug")
+
+    monkeypatch.setattr(bert_numpy.GgmlBertModel, "__init__", broken)
+    with pytest.raises(AttributeError, match="backend bug"):
+        load_model(path)
+    monkeypatch.setattr(StubMapModel, "from_dict", broken)
+    with pytest.raises(AttributeError, match="backend bug"):
+        load_model(str(Path(__file__).parent / "fixtures" / "stub_model.json"))
+
+
+def test_bad_model_file_gives_empty_lists_in_sql(engine, tmp_path):
+    p = tmp_path / "list.json"
+    p.write_bytes(_BAD_STUBS["not_an_object"])
+    engine.set_model_path(str(p))
+    try:
+        row = engine.spark.sql("SELECT ner('sam is in new york') AS e").collect()[0]
+    finally:
+        engine.set_model_path(None)
+    assert row.e == []
+
+
 def test_q4_scale_overflow_raises_not_warns():
     """f32->f16 scale overflow must raise explicitly (VERDICT r11 #7) —
     previously it emitted a numpy RuntimeWarning and stored inf, which the

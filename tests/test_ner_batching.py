@@ -69,6 +69,125 @@ def test_batched_eval_bit_identical_to_per_row(ggml_path, tmp_path):
             np.testing.assert_array_equal(lg, m.eval_tokens(toks))
 
 
+def _spec_entities(texts, model, truncate):
+    """The per-row reference port: tokenize, eval_tokens and
+    decode_entities of each text (None for a null text)."""
+    from duckdb_ner_spark.ner.decode import decode_entities
+    from duckdb_ner_spark.ner.tokenizer import tokenize
+
+    out = []
+    for text in texts:
+        if text is None:
+            out.append(None)
+            continue
+        ids = tokenize(model.vocab, text, model.n_max_tokens)
+        if not truncate and len(ids) >= model.n_max_tokens:
+            raise ValueError("Input string exceeds model token limit and truncate=false")
+        out.append(decode_entities(ids, model.eval_tokens(ids), model.vocab.id_to_token))
+    return out
+
+
+def _flat_entities(texts, model, truncate, offset=0):
+    """The UDF body over ``texts`` as an Arrow batch (sliced at ``offset``)."""
+    import pyarrow as pa
+
+    from duckdb_ner_spark.functions.ner_udf import _ARROW_RESULT_TYPE, _ner_arrow
+
+    arr = pa.array([None] * offset + list(texts), pa.string()).slice(offset)
+    got = _ner_arrow(arr, model, truncate)
+    assert got.type == _ARROW_RESULT_TYPE and len(got) == len(texts)
+    return [None if row is None else [(e["entity"], e["label"]) for e in row]
+            for row in got.to_pylist()]
+
+
+def _one_piece_word(vocab):
+    from duckdb_ner_spark.ner.tokenizer import tokenize
+
+    return next(w for w in vocab.token_to_id
+                if w not in ("[CLS]", "[SEP]") and len(tokenize(vocab, w, 8)) == 3)
+
+
+@pytest.fixture(scope="module")
+def flat_models(ggml_path, tmp_path_factory):
+    """q_ner_bert's model, a tiny random model, the two stub files and a
+    stub that exercises the BIO merge rules."""
+    from duckdb_ner_spark.ner.ggml_format import write_ggml
+    from duckdb_ner_spark.ner.model import StubMapModel, load_model
+    from duckdb_ner_spark.operators.ner_queries import BERT_DOC_VOCAB
+    from tools.convert_model import STUB_VOCAB, random_model
+
+    bert = str(tmp_path_factory.mktemp("bert") / "q_ner_bert.bin")
+    hp, t = random_model(BERT_DOC_VOCAB, n_embd=32, n_head=4, n_layer=2,
+                         n_labels=9, n_max_tokens=128, seed=11)
+    write_ggml(bert, hp, BERT_DOC_VOCAB, t)
+    here = os.path.dirname(os.path.abspath(__file__))
+    paths = {
+        "q_ner_bert": bert,
+        "tiny": ggml_path,
+        "doc_stub": os.path.join(here, "..", "duckdb_ner_spark", "resources", "doc_stub_model.json"),
+        "stub": os.path.join(here, "fixtures", "stub_model.json"),
+    }
+    models = {name: load_model(p) for name, p in paths.items()}
+    # B-tags on a subword (merged), on consecutive words (split) and a bare
+    # I-tag after O (starts an entity)
+    models["bio_stub"] = StubMapModel.from_dict({
+        "format": "ner-stub-v1", "vocab": STUB_VOCAB, "n_max_tokens": 32,
+        "labels_by_token": {"duck": 5, "##db": 5, "labs": 6, "sam": 3,
+                            "new": 7, "york": 7, "amsterdam": 8},
+    })
+    return models
+
+
+_EDGE_ROWS = [
+    None, "", "   ", " \t\n\r\x0b\x0c ", "\x0b",
+    "€", "café naïve € duck", "x\u00a0y duck\u2003labs",     # non-ASCII; unicode spaces do not split
+    "sam [CLS] new york [SEP] labs", "[SEP] [CLS]",
+    "##db duck ##db ##  ## ##x", "duckdb ##spark",
+    "x\x0by\x0cz w", "sam duckdb labs new york in amsterdam duckdb",
+]
+
+
+@pytest.mark.parametrize("name", ["q_ner_bert", "tiny", "doc_stub", "stub", "bio_stub"])
+def test_flat_udf_body_matches_per_row_spec(flat_models, name):
+    """The Arrow-batch UDF body equals the per-row spec row by row over the
+    sf0.01 documents and edge rows; rows of n_max-3 .. n_max-1 pieces, and
+    the documents, also with truncate off (the same ValueError)."""
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_SMOKE
+
+    model = flat_models[name]
+    docs_path = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01", "documents.parquet")
+    docs = pq.read_table(docs_path, columns=["text"]).column("text").to_pylist()
+    word = _one_piece_word(model.vocab)
+    n_max = model.n_max_tokens
+    at_cap = {p: " ".join([word] * p) for p in (n_max - 3, n_max - 2, n_max - 1)}
+    texts = _EDGE_ROWS + list(at_cap.values()) + docs
+    want = _spec_entities(texts, model, True)
+    assert sum(map(len, filter(None, want))) > (0 if name.endswith("stub") else 100)
+    assert _flat_entities(texts, model, True) == want
+    assert _flat_entities(texts[:40], model, True, offset=3) == want[:40]
+
+    fits = _EDGE_ROWS + [at_cap[n_max - 3]]
+    assert _flat_entities(fits, model, False) == _spec_entities(fits, model, False)
+    for rows in ([at_cap[n_max - 2]], [None, at_cap[n_max - 1]]):
+        for body in (_spec_entities, _flat_entities):
+            with pytest.raises(ValueError, match="exceeds model token limit"):
+                body(rows, model, False)
+    try:
+        want = _spec_entities(docs, model, False)
+    except ValueError:
+        with pytest.raises(ValueError, match="exceeds model token limit"):
+            _flat_entities(docs, model, False)
+    else:
+        assert _flat_entities(docs, model, False) == want
+
+
+def test_flat_udf_body_without_a_model():
+    """No model: [] per non-null row, null per null row."""
+    assert _flat_entities([None, "", "sam"], None, True) == [None, [], []]
+
+
 def test_gelu_tanh_numerics():
     """The GELU is the float32 tanh formula: within 5e-7·max(1, |x|) of its
     float64 evaluation, equal to it at ±inf and NaN, and far enough from the

@@ -69,6 +69,47 @@ def test_decode_all_O_yields_no_entities(token_ids):
     assert decode_entities(token_ids, logits, V.id_to_token) == []
 
 
+_word_texts = st.lists(
+    st.tuples(st.sampled_from(TOKENS + ["##", "##x", "duckdb", "€", "naïve", "xyz", ""]),
+              st.sampled_from([" ", "\t", "\n", "\r", "\x0b", "\x0c", "  ", "\u00a0"])),
+    max_size=12,
+).map(lambda pairs: "".join(w + sep for w, sep in pairs))
+
+
+@given(
+    st.lists(st.none() | texts | _word_texts, max_size=6),
+    st.integers(min_value=0, max_value=20),
+    st.data(),
+)
+@settings(max_examples=300, deadline=None)
+def test_flat_tokenize_and_decode_match_per_row(batch, n_max, data):
+    """The UDF's flat batch path equals the per-row spec: tokenize_batch
+    gives each row's ``tokenize`` ids, and decode_batch over random labels
+    gives each row's ``decode_entities``."""
+    import pyarrow as pa
+
+    from duckdb_ner_spark.ner.decode import decode_batch
+    from duckdb_ner_spark.ner.tokenizer import tokenize_batch
+
+    ids, offsets = tokenize_batch(V, pa.array(batch, pa.string()), n_max)
+    labels = np.array(
+        data.draw(st.lists(st.integers(0, 8), min_size=len(ids), max_size=len(ids))),
+        dtype=np.int64,
+    )
+    entities, names, row_offsets = decode_batch(V, ids, labels, offsets)
+    entities, names = entities.to_pylist(), names.to_pylist()
+    for r, text in enumerate(batch):
+        row = slice(offsets[r], offsets[r + 1])
+        got = list(zip(entities[row_offsets[r]:row_offsets[r + 1]],
+                       names[row_offsets[r]:row_offsets[r + 1]]))
+        if text is None:
+            assert row.start == row.stop and got == []
+            continue
+        assert ids[row].tolist() == tokenize(V, text, n_max)
+        logits = np.eye(9, dtype=np.float32)[labels[row]]
+        assert got == decode_entities(ids[row].tolist(), logits, V.id_to_token)
+
+
 @given(st.integers(min_value=4, max_value=40))
 @settings(max_examples=50, deadline=None)
 def test_truncation_monotone(cap):

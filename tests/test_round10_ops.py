@@ -565,10 +565,10 @@ def test_suffix_lcp_registry_and_census_crosscheck(spark):
     # more than once (canonical occurrences INCLUDED)
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*packed_key_cols(SSD_K))
+    w = Window.partitionBy(*packed_key_cols())
     df = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     census_dup = (
-        packed_windows(df, SSD_K)
+        packed_windows(df)
         .select(F.count("*").over(w).alias("n_occ"))
         .filter(F.col("n_occ") > 1)
         .count()

@@ -540,6 +540,43 @@ def test_sliced_documents_stream_runs_real_microbatches(spark):
     assert sum(n for _, n in seen) == total
 
 
+def test_stage_stream_dirs_are_removed_at_exit(tmp_path):
+    """Staging a tmp copy of the testdata reuses one dir within a process
+    (the marker is not rewritten) and leaves no staging dir once that
+    process exits."""
+    import glob
+    import hashlib
+    import os
+    import shutil
+    import subprocess
+    import sys
+    import tempfile
+
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    shutil.copy(f"{SF_SMOKE}/documents.parquet", sf_dir)
+    script = (
+        "import os, sys\n"
+        "from duckdb_ner_spark.streaming.events import stage_stream\n"
+        "stage = stage_stream(sys.argv[1], 'documents', 4)\n"
+        "marker = os.path.join(stage, '_staged.json')\n"
+        "written = os.stat(marker).st_mtime_ns\n"
+        "assert stage_stream(sys.argv[1], 'documents', 4) == stage\n"
+        "assert os.stat(marker).st_mtime_ns == written\n"
+        "print(stage, sum(f.endswith('.parquet') for f in os.listdir(stage)))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", script, str(sf_dir)], cwd=root, capture_output=True, text=True
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    stage, n_parts = proc.stdout.split()
+    assert n_parts == "4"
+    tag = hashlib.md5(str(sf_dir).encode()).hexdigest()[:12]
+    assert os.path.basename(stage).startswith(f"documents_stream_4_{tag}")
+    assert glob.glob(os.path.join(tempfile.gettempdir(), f"*_stream_*_{tag}*")) == []
+
+
 def test_stream_pipeline_matches_batch_recompute(spark):
     """The fused stream (dedup probe -> gate -> scorecard across 4
     micro-batches) must equal an independent BATCH recompute of the same
